@@ -430,20 +430,26 @@ _PA_TYPE_BY_SPARK = {
     "boolean": "bool_",
 }
 _SAFE_PART_VAL = re.compile(r"^[A-Za-z0-9_.\-]+$")
+_PART_TYPES = {"byte", "short", "integer", "long", "string"}
 
 
 def _rows_local_plan(schema, partition_cols: list[str]):
-    """(data_fields, part_idx, pa_schema) when the row set is writable
-    driver-side, else None (caller falls back to the Spark path)."""
+    """(schema, data_fields, part_idx, pa_schema) when the row set is
+    writable driver-side, else None (caller falls back to the Spark
+    path).  Partition columns must be integer or string typed: those are
+    the only types whose Python ``str()`` is Spark's hive dir name —
+    a bool, float or null value would name a dir Spark never writes
+    (``k=True`` for ``k=true``), splitting one partition in two."""
     import pyarrow as pa
 
     from pyspark.sql.types import StructType
 
     if isinstance(schema, str):
         schema = StructType.fromDDL(schema)
-    names = [f.name for f in schema.fields]
-    if not set(partition_cols) <= set(names):
+    types = {f.name: f.dataType.typeName() for f in schema.fields}
+    if any(types.get(c) not in _PART_TYPES for c in partition_cols):
         return None
+    names = [f.name for f in schema.fields]
     data_fields = [f for f in schema.fields if f.name not in partition_cols]
     pa_fields = []
     for f in data_fields:
@@ -472,7 +478,7 @@ def _commit_rows_local(
 
     plan = _rows_local_plan(schema, partition_cols)
     fallback_vals = plan is None or any(
-        not _SAFE_PART_VAL.match(str(r[i]))
+        r[i] is None or not _SAFE_PART_VAL.match(str(r[i]))
         for r in rows
         for i in (plan[2] if plan else [])
     )
@@ -620,8 +626,6 @@ def read_table(
     stats — legacy commits, or columns whose stats were non-portable —
     are always read.
     """
-    import re as _re
-
     man = manifest_at(root, version)
     dir_files = man.get("dir_files", {})
     # ONE file-source scan over every selected path (round 14): the
@@ -662,19 +666,28 @@ def read_table(
         # by name with null fill (same semantics the unionByName chain
         # had).  Single-commit reads skip the footer-merge pass.
         reader = reader.option("mergeSchema", "true")
-    out = reader.parquet(*paths)
-    # _metadata.file_path is a URI: the on-disk directory name (which
-    # is what the manifest keys and the old per-dir injection carried)
-    # comes back percent-encoded (' ' → %20).  url_decode recovers it;
-    # '+' is pre-protected because URI paths keep it literal while
-    # url_decode would turn it into a space.
+    return _with_path_partitions(
+        reader.parquet(*paths), man.get("partition_cols", [])
+    )
+
+
+def _with_path_partitions(df: DataFrame, partition_cols: list[str]) -> DataFrame:
+    """Recover each partition column from its hive ``col=value`` segment
+    of the row's file path — the LAST ``/<col>=`` segment, i.e. the one
+    below the table root, so a table rooted under a hive-style ancestor
+    dir (``…/epoch=9/t``) reads its own values, not the ancestor's.
+    ``_metadata.file_path`` is a URI: the on-disk directory name (which
+    is what the manifest keys carry) comes back percent-encoded
+    (' ' → %20).  url_decode recovers it; '+' is pre-protected because
+    URI paths keep it literal while url_decode would turn it into a
+    space."""
     fpath = F.col("_metadata.file_path")
-    for col in man.get("partition_cols", []):
-        seg = F.regexp_extract(fpath, "/" + _re.escape(col) + "=([^/]+)/", 1)
-        out = out.withColumn(
+    for col in partition_cols:
+        seg = F.regexp_extract(fpath, ".*/" + re.escape(col) + "=([^/]+)/", 1)
+        df = df.withColumn(
             col, F.url_decode(F.regexp_replace(seg, r"\+", "%2B"))
         )
-    return out
+    return df
 
 
 def files_selected(
@@ -771,15 +784,12 @@ def compact_partitions(
     )
     one_job = plain and (bool(sort_by) or max(n_files.values()) == 1)
     if one_job:
-        merged = spark.read.option("mergeSchema", "true").parquet(
-            *[os.path.join(root, rel) for pkey in targets for rel in targets[pkey]]
+        merged = _with_path_partitions(
+            spark.read.option("mergeSchema", "true").parquet(
+                *[os.path.join(root, rel) for pkey in targets for rel in targets[pkey]]
+            ),
+            pcols,
         )
-        fpath = F.col("_metadata.file_path")
-        for col in pcols:
-            seg = F.regexp_extract(fpath, "/" + re.escape(col) + "=([^/]+)/", 1)
-            merged = merged.withColumn(
-                col, F.url_decode(F.regexp_replace(seg, r"\+", "%2B"))
-            )
         total = sum(n_files.values())
         if sort_by:
             # Sort-on-compact (linear Z-order): range-split + sort on

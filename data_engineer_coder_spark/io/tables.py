@@ -34,6 +34,7 @@ TABLES = (
 )
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+_NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
 
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -53,7 +54,7 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")
     path = os.path.join(sf_dir, f"{name}.parquet")
     if name == "events":
-        with _nanos_as_long(spark):
+        with conf_scope(spark, _NANOS_AS_LONG, "true"):
             df = spark.read.parquet(path)
         ts_type = dict(df.dtypes).get("ts")
         if ts_type == "bigint":
@@ -65,14 +66,17 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 
 @contextmanager
-def _nanos_as_long(spark: SparkSession):
-    """Scope ``nanosAsLong`` to one read: the conf is captured when the
-    relation is defined, so restoring it afterwards doesn't affect this
-    DataFrame but keeps later TIMESTAMP(NANOS) reads in the shared session
-    from silently degrading to bigint."""
-    key = "spark.sql.legacy.parquet.nanosAsLong"
+def conf_scope(spark: SparkSession, key: str, value):
+    """Set the session conf ``key`` to ``value`` for the body only, then
+    restore the previous setting (or unset it).  Typical scopes: the
+    ``nanosAsLong`` read in :func:`table` — the conf is captured when the relation
+    is defined, so restoring it afterwards doesn't affect this DataFrame
+    but keeps later TIMESTAMP(NANOS) reads in the shared session from
+    silently degrading to bigint — and a stream's shuffle partitions,
+    which must stay set until the query finishes (micro-batch planning
+    reads the conf after ``start()`` returns)."""
     prev = spark.conf.get(key, None)
-    spark.conf.set(key, "true")
+    spark.conf.set(key, str(value))
     try:
         yield
     finally:

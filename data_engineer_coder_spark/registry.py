@@ -79,32 +79,36 @@ _loaded = False
 _FORCE_RECHECK: tuple[str, ...] = (
     # (round-13 cohort — rag_chunk_pipeline rank-normalization + the
     # nprobe=12 served re-pin — pruned: all 5 re-proven green in
-    # CORRECTNESS_r13.)
-    # round 14: the compaction audit now covers all three lexical
-    # tables (oracle re-derived: tbl column + forward/tokstats dir
-    # ledgers), and the delete audit routes through
-    # propagate_retrieval_delete (tokstats df corrections, layout from
-    # table metadata) — implementations/oracles changed post-green.
-    "bm25_index_compaction_audit",
-    "retrieval_index_delete_audit",
-    # round 14: the two-stage serve's stage-0 dfreq now drops df<=0
-    # tokens and reads the persisted tokstats layout; the retention
-    # gate shares the path.
-    "bm25_longdoc_two_stage_served",
-    "bm25_two_stage_retention_check",
-    # round 14: served/standing-index reads derive bucket layouts from
-    # table _config.json (VERDICT r13 #1) and the curation gate commits
-    # its BM25 ledger last (ADVICE r13) — recorded hashes predate that.
-    "bm25_topk_served",
-    "bm25_rm3_expansion_served",
+    # CORRECTNESS_r13.  Round-14 cohort — compaction/delete audits,
+    # two-stage serves, layout-from-metadata serves, adaptive nprobe —
+    # pruned: all 10 re-proven green in CORRECTNESS_r14 and r15.)
+    # round 16: every ingest-gate drill now runs through one gate runner
+    # (shuffle-partition conf scope, loud timeout, checkpoint cleanup),
+    # and the gates share one contaminated-id probe, one fused epoch
+    # stats job, one eval-index build and one epoch-membership guard.
+    "stream_rollup_matview",
+    "stream_neardup_ingest",
+    "stream_neardup_ingest_capped",
+    "stream_neardup_ingest_cms",
+    "stream_neardup_probe_prune_audit",
+    "stream_neardup_index_compaction_audit",
+    "stream_decontaminate_ingest",
+    "stream_ann_index_ingest",
     "stream_bm25_index_ingest",
+    "bm25_index_compaction_audit",
+    "stream_curation_ingest",
     "stream_curation_searchable",
-    # round 14: the served ANN pools now probe adaptively
-    # (similarity.served_nprobe; VERDICT r13 #2) — identical to the old
-    # literal at driver scales by construction, but the implementation
-    # changed post-green, so re-prove the two verdict-named gates.
-    "hybrid_served_recall_check",
-    "retrieval_rank_metrics_served",
+    "retrieval_lifecycle_audit",
+    # round 16: run_to_memory scopes its shuffle partitions through the
+    # shared conf scope and deletes its checkpoint.
+    "streaming_tumbling_events",
+    "stream_dedup_within_watermark",
+    "stream_trending_topk",
+    "streaming_user_counters",
+    "streaming_sequence_packing",
+    "stream_stream_join",
+    "stream_stream_left_outer_join",
+    "stream_static_enrich",
 )
 
 # (The round-3/4 _CHECK_FIRST backlog queue is gone: every registered query

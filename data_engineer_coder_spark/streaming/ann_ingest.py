@@ -109,7 +109,7 @@ def stream_ann_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         _qvec,
     )
     from .core import write_stream_ann_index_gate
-    from .windows import _await_gate, _ordered_epoch_stream
+    from .windows import _check_epoch_membership, _ordered_epoch_stream, _run_gate
 
     emb = table(spark, sf_dir, "embeddings").select(
         "vec_id", _qvec("embedding").alias("qv")
@@ -137,36 +137,17 @@ def stream_ann_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         replace_partitions(cb_entries, roots["codebook"], ["s"], "quantizer-build")
 
         sdf = _ordered_epoch_stream(spark, strm, tmp, key="vec_id")
-        key = "spark.sql.shuffle.partitions"
-        prev = spark.conf.get(key)
-        spark.conf.set(key, "8")
-        try:
-            q = write_stream_ann_index_gate(
-                sdf, roots["cents"], roots["codebook"],
-                roots["index"], roots["stats"],
-            )
-            _await_gate(q)
-        finally:
-            spark.conf.set(key, prev)
+        _run_gate(spark, lambda ck: write_stream_ann_index_gate(
+            sdf, roots["cents"], roots["codebook"],
+            roots["index"], roots["stats"], checkpoint=ck,
+        ))
 
         ledger = [
             (int(r["epoch"]), r["n_arrived"], r["arrived_id_sum"],
              r["n_cells_touched"], r["code_checksum"])
             for r in read_table(spark, roots["stats"]).collect()
         ]
-        # Loud determinism guard: epoch membership must match the
-        # vec_id % 3 split of the streamed slice.
-        want = {
-            int(r["e"]): (r["n"], int(r["ids"] or 0))
-            for r in strm.groupBy(F.pmod("vec_id", F.lit(3)).alias("e"))
-            .agg(F.count("*").alias("n"), F.sum("vec_id").alias("ids"))
-            .collect()
-        }
-        got = {e: (na, ids) for e, na, ids, _, _ in ledger}
-        if got != want:
-            raise RuntimeError(
-                f"epoch membership drifted from the vec_id%3 split: {got} != {want}"
-            )
+        _check_epoch_membership(strm, "vec_id", ledger)
         idx = read_table(spark, roots["index"]).select(
             F.col("vec_id").cast("long").alias("vec_id"),
             F.col("centroid_id").cast("long").alias("centroid_id"),

@@ -129,7 +129,7 @@ def stream_bm25_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..io.acid_table import read_table
     from .core import write_stream_bm25_index_gate
-    from .windows import _await_gate, _ordered_epoch_stream
+    from .windows import _ordered_epoch_stream, _run_gate
 
     docs = table(spark, sf_dir, "documents").select("doc_id", "text")
     tmp = tempfile.mkdtemp(prefix="bm25gate_")
@@ -139,17 +139,10 @@ def stream_bm25_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             for nm in ("postings", "forward", "stats", "tokstats")
         }
         sdf = _ordered_epoch_stream(spark, docs, tmp, key="doc_id")
-        key = "spark.sql.shuffle.partitions"
-        prev = spark.conf.get(key)
-        spark.conf.set(key, "8")
-        try:
-            q = write_stream_bm25_index_gate(
-                sdf, roots["postings"], roots["forward"], roots["stats"],
-                tokstats_root=roots["tokstats"],
-            )
-            _await_gate(q)
-        finally:
-            spark.conf.set(key, prev)
+        _run_gate(spark, lambda ck: write_stream_bm25_index_gate(
+            sdf, roots["postings"], roots["forward"], roots["stats"],
+            checkpoint=ck, tokstats_root=roots["tokstats"],
+        ))
 
         ledger = {
             int(r["epoch"]): (
@@ -366,6 +359,21 @@ def _probe_qt(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.explode(F.split("text", " ")).alias("tok"),
         )
         .distinct()
+    )
+
+
+def _keyword_probe(docs: DataFrame) -> DataFrame:
+    """The deterministic 3-keyword probe (pid 0 — the short-query
+    serving shape): the three smallest distinct tokens of the docs with
+    doc_id < 5, materialized as (pid, tok)."""
+    return (
+        docs.filter(F.col("doc_id") < 5)
+        .select(F.explode(F.split("text", " ")).alias("tok"))
+        .distinct()
+        .orderBy("tok")
+        .limit(3)
+        .select(F.lit(0).cast("long").alias("pid"), "tok")
+        .localCheckpoint()
     )
 
 
@@ -861,7 +869,7 @@ def bm25_index_compaction_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         table_history,
     )
     from .core import write_stream_bm25_index_gate
-    from .windows import _await_gate, _ordered_epoch_stream
+    from .windows import _ordered_epoch_stream, _run_gate
 
     docs = table(spark, sf_dir, "documents").select("doc_id", "text")
     tmp = tempfile.mkdtemp(prefix="bm25compact_")
@@ -871,17 +879,10 @@ def bm25_index_compaction_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             for nm in ("postings", "forward", "stats", "tokstats")
         }
         sdf = _ordered_epoch_stream(spark, docs, tmp, key="doc_id")
-        key = "spark.sql.shuffle.partitions"
-        prev = spark.conf.get(key)
-        spark.conf.set(key, "8")
-        try:
-            q = write_stream_bm25_index_gate(
-                sdf, roots["postings"], roots["forward"], roots["stats"],
-                tokstats_root=roots["tokstats"],
-            )
-            _await_gate(q)
-        finally:
-            spark.conf.set(key, prev)
+        _run_gate(spark, lambda ck: write_stream_bm25_index_gate(
+            sdf, roots["postings"], roots["forward"], roots["stats"],
+            checkpoint=ck, tokstats_root=roots["tokstats"],
+        ))
 
         def _chk(root: str, version=None, cols=("doc_id", "tok", "tf", "epoch")):
             df = read_table(spark, root, version=version)
@@ -902,16 +903,7 @@ def bm25_index_compaction_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).collect()
             return sorted((int(r["pid"]), int(r["id"]), int(r["bm25_e9"])) for r in rows)
 
-        # deterministic 3-keyword probe (the short-query serving shape)
-        qk = (
-            docs.filter(F.col("doc_id") < 5)
-            .select(F.explode(F.split("text", " ")).alias("tok"))
-            .distinct()
-            .orderBy("tok")
-            .limit(3)
-            .select(F.lit(0).cast("long").alias("pid"), "tok")
-            .localCheckpoint()
-        )
+        qk = _keyword_probe(docs)
         toks = sorted(r["tok"] for r in qk.collect())
         # the whole-doc probes: the TWO-STAGE serve reads all three
         # tables (tokstats stage 0, postings stage 1, forward stage 2)

@@ -14,13 +14,15 @@ is a pure ``DataFrame → DataFrame`` — callers pass either
 from __future__ import annotations
 
 import os
+import shutil
 import tempfile
 import uuid
+from contextlib import nullcontext
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..io.tables import _nanos_as_long
+from ..io.tables import _NANOS_AS_LONG, conf_scope
 
 
 def _ckpt_dir() -> str:
@@ -58,7 +60,7 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     schema from a static read and convert ts to a real timestamp.
     """
     path = os.path.join(sf_dir, "events.parquet")
-    with _nanos_as_long(spark):
+    with conf_scope(spark, _NANOS_AS_LONG, "true"):
         raw_schema = spark.read.parquet(path).schema
         sdf = _stream_parquet(spark, sf_dir, "events.parquet", raw_schema)
     ts_type = dict((f.name, f.dataType.simpleString()) for f in raw_schema.fields).get("ts")
@@ -95,34 +97,38 @@ def run_to_memory(
     name = f"mem_{uuid.uuid4().hex[:12]}"
     ckpt = _ckpt_dir()
     spark = sdf.sparkSession
-    key = "spark.sql.shuffle.partitions"
-    prev = spark.conf.get(key)
-    if shuffle_partitions is not None:
-        spark.conf.set(key, str(shuffle_partitions))
+    scope = (
+        nullcontext() if shuffle_partitions is None
+        else conf_scope(spark, "spark.sql.shuffle.partitions", shuffle_partitions)
+    )
     try:
-        q = (
-            sdf.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        finished = q.awaitTermination(timeout_s)
+        # The scope closes only after the query finished (or timed out):
+        # micro-batch planning is asynchronous and reads the conf after
+        # start() returns.
+        with scope:
+            q = (
+                sdf.writeStream.format("memory")
+                .queryName(name)
+                .outputMode(output_mode)
+                .option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+                .start()
+            )
+            finished = q.awaitTermination(timeout_s)
+        if not finished:
+            # Timed out: reading the sink now would silently return a
+            # partial (or empty) mid-stream snapshot. Stop the query and
+            # fail loudly.
+            q.stop()
+            err = q.exception()
+            raise TimeoutError(
+                f"streaming query {name!r} did not finish within {timeout_s}s"
+                + (f"; underlying error: {err}" if err else "")
+            )
     finally:
-        # Restore only after the query finished (or timed out): micro-batch
-        # planning is asynchronous and reads the conf after start() returns.
-        if shuffle_partitions is not None:
-            spark.conf.set(key, prev)
-    if not finished:
-        # Timed out: reading the sink now would silently return a partial
-        # (or empty) mid-stream snapshot. Stop the query and fail loudly.
-        q.stop()
-        err = q.exception()
-        raise TimeoutError(
-            f"streaming query {name!r} did not finish within {timeout_s}s"
-            + (f"; underlying error: {err}" if err else "")
-        )
+        # the sink rows live in driver memory; the stopped query's
+        # checkpoint is dead weight on tmpfs
+        shutil.rmtree(ckpt, ignore_errors=True)
     return spark.table(name)
 
 
@@ -602,6 +608,63 @@ def _df_table_buckets(df_root: str, requested: int) -> int:
     return int(requested)
 
 
+def _epoch_stats(
+    batch: DataFrame, counts: dict, sums: dict | None = None
+) -> dict[str, tuple[int, int]]:
+    """ONE stats job for all of an epoch's single-row aggregates, as
+    ``{key: (n, v)}``: ``"arr"`` is the batch's arrival checksum (rows,
+    doc_id sum), each ``counts`` frame contributes its row count as
+    ``(n, 0)`` (None frames are skipped), and each ``sums`` entry
+    ``key: (frame, col)`` its column sum as ``(0, v)``.  Every input but
+    the batch is a materialized localCheckpoint in the gates, so fusing
+    them into one unioned collect keeps the compute the same and pays
+    the per-job fixed scheduling/commit overhead once instead of once
+    per number (guide §1.2)."""
+    zero = F.lit(0).cast("long")
+    stat = batch.agg(
+        F.count("*").alias("n"),
+        F.coalesce(F.sum("doc_id"), F.lit(0)).alias("v"),
+    ).select(F.lit("arr").alias("k"), "n", "v")
+    for k, df_ in counts.items():
+        if df_ is not None:
+            stat = stat.unionByName(
+                df_.agg(F.count("*").alias("n")).select(
+                    F.lit(k).alias("k"), "n", zero.alias("v")
+                )
+            )
+    for k, (df_, col) in (sums or {}).items():
+        stat = stat.unionByName(
+            df_.agg(F.coalesce(F.sum(col), F.lit(0)).alias("v")).select(
+                F.lit(k).alias("k"), zero.alias("n"), "v"
+            )
+        )
+    return {r["k"]: (int(r["n"]), int(r["v"])) for r in stat.collect()}
+
+
+def _contaminated_ids(spark, docs: DataFrame, eval_root: str) -> DataFrame:
+    """The decontamination probe shared by the T8h and curation gates:
+    ``docs``' word 8-grams (``ngram_array`` — the exact construction the
+    batch report and its oracle use) semi-joined against the
+    ``broadcast()`` standing eval index, so the batch never shuffles.
+    Returns the distinct contaminated doc ids — a tiny id list each
+    gate references several times (count, split, quarantine, verdicts),
+    so it is materialized and the batch grams are built once."""
+    from ..io.acid_table import read_table
+    from ..operators.textops import _DECON_N, ngram_array
+
+    ev = read_table(spark, eval_root).select("g")
+    occ = docs.select(
+        "doc_id",
+        F.explode(ngram_array(F.split("text", " "), _DECON_N)).alias("g"),
+    )
+    return (
+        occ.join(F.broadcast(ev), "g", "left_semi")
+        .select("doc_id")
+        .distinct()
+        .localCheckpoint()
+    )
+
+
 def write_stream_neardup_gate(
     sdf: DataFrame,
     sig_root: str,
@@ -841,31 +904,11 @@ def write_stream_neardup_gate(
         )
         rejected = rej_batch if rej_index is None else rej_index.unionByName(rej_batch)
         accepted = batch.join(rejected, "doc_id", "left_anti").localCheckpoint()
-        # ONE stats job for the epoch's four single-row aggregates (the
-        # reject counts, accepted count, arrival checksum) — every input
-        # but the batch is a materialized localCheckpoint, so fusing them
-        # into one unioned collect pays the per-job fixed scheduling
-        # overhead once instead of four times (guide §1.2).
-
-        def _cnt(df_, k):
-            return df_.agg(F.count("*").alias("n")).select(
-                F.lit(k).alias("k"), "n", F.lit(0).cast("long").alias("v")
-            )
-
-        stat = batch.agg(
-            F.count("*").alias("n"),
-            F.coalesce(F.sum("doc_id"), F.lit(0)).alias("ids"),
-        ).select(F.lit("arr").alias("k"), "n", F.col("ids").alias("v"))
-        stat = stat.unionByName(_cnt(rej_batch, "rb")).unionByName(
-            _cnt(accepted, "acc")
+        st = _epoch_stats(
+            batch, {"rb": rej_batch, "acc": accepted, "ri": rej_index}
         )
-        if rej_index is not None:
-            stat = stat.unionByName(_cnt(rej_index, "ri"))
-        srows = {r["k"]: r for r in stat.collect()}
-        n_rej_index = int(srows["ri"]["n"]) if rej_index is not None else 0
-        n_rej_batch = int(srows["rb"]["n"])
-        n_accepted = int(srows["acc"]["n"])
-        arrived = {"n": int(srows["arr"]["n"]), "ids": int(srows["arr"]["v"])}
+        n_rej_index = st.get("ri", (0, 0))[0]
+        n_rej_batch, n_accepted = st["rb"][0], st["acc"][0]
 
         append_partitions(accepted, docs_root, ["epoch"], txid)
         acc_sig = accepted.select("doc_id", "epoch").join(sig, "doc_id")
@@ -880,9 +923,8 @@ def write_stream_neardup_gate(
         # (guide §1.2 — the per-epoch job count is the audit-tier floor).
         append_rows(
             spark,
-            [(int(epoch_id), int(arrived["n"]), int(arrived["ids"] or 0),
-              int(n_capped), int(n_rej_index), int(n_rej_batch),
-              int(n_accepted))],
+            [(int(epoch_id), *st["arr"], int(n_capped), n_rej_index,
+              n_rej_batch, n_accepted)],
             "epoch int, n_arrived long, arrived_id_sum long, "
             "n_capped_shingles long, n_rejected_index long, "
             "n_rejected_batch long, n_accepted long",
@@ -1056,63 +1098,24 @@ def write_stream_decontam_gate(
     """
     from pyspark.sql import functions as F
 
-    from ..io.acid_table import append_partitions, append_rows, read_table
-    from ..operators.textops import _DECON_N, ngram_array
+    from ..io.acid_table import append_partitions, append_rows
 
     def _commit_batch(df: DataFrame, epoch_id: int) -> None:
         spark = df.sparkSession
         txid = f"epoch-{epoch_id}"
         batch = df.withColumn("epoch", F.lit(int(epoch_id)))
-        ev = read_table(spark, eval_root).select("g")
-        occ = batch.select(
-            "doc_id",
-            F.explode(
-                ngram_array(F.split("text", " "), _DECON_N)
-            ).alias("g"),
-        )
-        contam_ids = (
-            occ.join(F.broadcast(ev), "g", "left_semi")
-            .select("doc_id")
-            .distinct()
-            # tiny id list, referenced 3x (count, split, quarantine):
-            # materialize so the batch grams are built once
-            .localCheckpoint()
-        )
+        contam_ids = _contaminated_ids(spark, batch, eval_root)
         accepted = batch.join(contam_ids, "doc_id", "left_anti")
         quarantined = batch.join(contam_ids, "doc_id", "left_semi")
-        # ONE stats job for the epoch's two single-row aggregates
-        # (arrival checksum + contaminated count) — guide §1.2.
-        srows = {
-            r["k"]: r
-            for r in batch.agg(
-                F.count("*").alias("n_arrived"),
-                F.coalesce(F.sum("doc_id"), F.lit(0)).alias("arrived_id_sum"),
-            )
-            .select(F.lit("arr").alias("k"), "n_arrived", "arrived_id_sum")
-            .unionByName(
-                contam_ids.agg(F.count("*").alias("n_arrived")).select(
-                    F.lit("q").alias("k"),
-                    "n_arrived",
-                    F.lit(0).cast("long").alias("arrived_id_sum"),
-                )
-            )
-            .collect()
-        }
-        agg = srows["arr"]
-        n_contam = int(srows["q"]["n_arrived"])
+        st = _epoch_stats(batch, {"q": contam_ids})
+        (n_arrived, id_sum), n_contam = st["arr"], st["q"][0]
         append_partitions(accepted, docs_root, ["epoch"], txid)
         if quarantine_root is not None and n_contam:
             append_partitions(quarantined, quarantine_root, ["epoch"], txid)
         # one-row ledger: driver-side commit, no Spark job (guide §1.2)
         append_rows(
             spark,
-            [(
-                int(epoch_id),
-                int(agg["n_arrived"]),
-                int(agg["arrived_id_sum"]),
-                int(n_contam),
-                int(agg["n_arrived"]) - int(n_contam),
-            )],
+            [(int(epoch_id), n_arrived, id_sum, n_contam, n_arrived - n_contam)],
             "epoch int, n_arrived long, arrived_id_sum long, "
             "n_contaminated long, n_accepted long",
             stats_root, ["epoch"], txid,
@@ -1206,14 +1209,8 @@ def write_stream_curation_gate(
     """
     from pyspark.sql import functions as F
 
-    from ..io.acid_table import (
-        append_partitions,
-        append_rows,
-        read_table,
-        version_before_txid,
-    )
+    from ..io.acid_table import append_partitions, append_rows, version_before_txid
     from ..operators.dedup import minhash_from_hashes, shingle_hashes
-    from ..operators.textops import _DECON_N, ngram_array
 
     if bands_root is None:
         bands_root = sig_root.rstrip("/") + "_bands"
@@ -1258,61 +1255,23 @@ def write_stream_curation_gate(
         survivors = batch.join(rejected, "doc_id", "left_anti")
 
         # 2. decontamination of the survivors (T8h core)
-        ev = read_table(spark, eval_root).select("g")
-        occ = survivors.select(
-            "doc_id",
-            F.explode(ngram_array(F.split("text", " "), _DECON_N)).alias("g"),
-        )
-        contam_ids = (
-            occ.join(F.broadcast(ev), "g", "left_semi")
-            .select("doc_id")
-            .distinct()
-            .localCheckpoint()
-        )
+        contam_ids = _contaminated_ids(spark, survivors, eval_root)
         quarantined = survivors.join(contam_ids, "doc_id", "left_semi")
         accepted = survivors.join(contam_ids, "doc_id", "left_anti").localCheckpoint()
         if search_roots is not None:
             fr = bm25_index_batch_frames(
                 accepted.select("doc_id", "text"), s_tokb, s_fwdb
             )
-        # ONE stats job for ALL the epoch's single-row aggregates — the
-        # four verdict counts, the arrival checksum, and (searchable)
-        # the accepted doc-length sum ride one unioned collect instead
-        # of five-six driver round-trips; every input but the batch is a
-        # materialized localCheckpoint, so the fused job's compute is
-        # the same, only the per-job fixed scheduling/commit overhead is
-        # paid once (guide §1.2).
-
-        def _cnt(df_, k):
-            return df_.agg(F.count("*").alias("n")).select(
-                F.lit(k).alias("k"), "n", F.lit(0).cast("long").alias("v")
-            )
-
-        stat = batch.agg(
-            F.count("*").alias("n"),
-            F.coalesce(F.sum("doc_id"), F.lit(0)).alias("ids"),
-        ).select(F.lit("arr").alias("k"), "n", F.col("ids").alias("v"))
-        stat = (
-            stat.unionByName(_cnt(rej_batch, "rb"))
-            .unionByName(_cnt(contam_ids, "q"))
-            .unionByName(_cnt(accepted, "acc"))
+        # the four verdict counts, the arrival checksum, and
+        # (searchable) the accepted doc-length sum: one fused job
+        st = _epoch_stats(
+            batch,
+            {"rb": rej_batch, "q": contam_ids, "acc": accepted, "ri": rej_index},
+            {"dl": (fr["dl"], "len")} if search_roots is not None else None,
         )
-        if rej_index is not None:
-            stat = stat.unionByName(_cnt(rej_index, "ri"))
-        if search_roots is not None:
-            stat = stat.unionByName(
-                fr["dl"]
-                .agg(F.coalesce(F.sum("len"), F.lit(0)).alias("v"))
-                .select(
-                    F.lit("dl").alias("k"), F.lit(0).cast("long").alias("n"), "v"
-                )
-            )
-        srows = {r["k"]: r for r in stat.collect()}
-        n_rej_index = int(srows["ri"]["n"]) if rej_index is not None else 0
-        n_rej_batch = int(srows["rb"]["n"])
-        n_quarantined = int(srows["q"]["n"])
-        n_accepted = int(srows["acc"]["n"])
-        arrived = {"n": int(srows["arr"]["n"]), "ids": int(srows["arr"]["v"])}
+        n_rej_index = st.get("ri", (0, 0))[0]
+        n_rej_batch, n_quarantined = st["rb"][0], st["q"][0]
+        n_accepted = st["acc"][0]
 
         # 3. commits — every table under the SAME epoch txid
         append_partitions(accepted, docs_root, ["epoch"], txid)
@@ -1331,7 +1290,7 @@ def write_stream_curation_gate(
             from ..operators.similarity import _two_level_assign
 
             sp = shuffle_parts(spark)
-            acc_lens = int(srows["dl"]["v"])
+            acc_lens = st["dl"][1]
             if n_accepted:
                 # Tokenize the accepted batch ONCE per epoch: checkpoint
                 # the postings rows (Θ(batch tokens), batch-bounded) and
@@ -1358,16 +1317,7 @@ def write_stream_curation_gate(
                     ),
                     search_roots["forward"], ["doc_bucket"], txid,
                 )
-            cents_v = version_before_txid(search_roots["cents"], txid)
-            cents = read_table(
-                spark, search_roots["cents"], version=cents_v
-            ).select(
-                F.col("centroid_id").cast("long").alias("centroid_id"),
-                F.col("cqv").cast("array<bigint>").alias("cqv"),
-                F.col("cnrm").cast("long").alias("cnrm"),
-                F.col("stride").cast("long").alias("stride"),
-                F.col("cstride").cast("long").alias("cstride"),
-            ).localCheckpoint(eager=False)
+            cents = _pinned_cents(spark, search_roots["cents"], txid)
             ann = (
                 _two_level_assign(
                     accepted.filter(F.col("qv").isNotNull()).select(
@@ -1423,9 +1373,8 @@ def write_stream_curation_gate(
         # one-row epoch ledger: driver-side commit, no Spark job
         append_rows(
             spark,
-            [(int(epoch_id), int(arrived["n"]), int(arrived["ids"]),
-              int(n_rej_index), int(n_rej_batch), int(n_quarantined),
-              int(n_accepted))],
+            [(int(epoch_id), *st["arr"], n_rej_index, n_rej_batch,
+              n_quarantined, n_accepted)],
             "epoch int, n_arrived long, arrived_id_sum long, "
             "n_rejected_index long, n_rejected_batch long, "
             "n_quarantined long, n_accepted long",
@@ -1435,6 +1384,24 @@ def write_stream_curation_gate(
     return write_foreach_batch(
         sdf, _commit_batch, checkpoint=checkpoint, output_mode="append"
     )
+
+
+def _pinned_cents(spark, cents_root: str, txid: str) -> DataFrame:
+    """The standing IVF quantizer as an epoch's assignment reads it:
+    PINNED to the last version committed before ``txid``
+    (``version_before_txid``), so a crash-replayed epoch sees the same
+    centroids even if a retrain landed mid-stream."""
+    from ..io.acid_table import read_table, version_before_txid
+
+    return read_table(
+        spark, cents_root, version=version_before_txid(cents_root, txid)
+    ).select(
+        F.col("centroid_id").cast("long").alias("centroid_id"),
+        F.col("cqv").cast("array<bigint>").alias("cqv"),
+        F.col("cnrm").cast("long").alias("cnrm"),
+        F.col("stride").cast("long").alias("stride"),
+        F.col("cstride").cast("long").alias("cstride"),
+    ).localCheckpoint(eager=False)
 
 
 def write_stream_ann_index_gate(
@@ -1505,19 +1472,8 @@ def write_stream_ann_index_gate(
     def _commit_batch(df: DataFrame, epoch_id: int) -> None:
         spark = df.sparkSession
         txid = f"epoch-{epoch_id}"
-        cents_v = version_before_txid(cents_root, txid)
         cb_v = version_before_txid(cb_root, txid)
-        cents = (
-            read_table(spark, cents_root, version=cents_v)
-            .select(
-                F.col("centroid_id").cast("long").alias("centroid_id"),
-                F.col("cqv").cast("array<bigint>").alias("cqv"),
-                F.col("cnrm").cast("long").alias("cnrm"),
-                F.col("stride").cast("long").alias("stride"),
-                F.col("cstride").cast("long").alias("cstride"),
-            )
-            .localCheckpoint(eager=False)
-        )
+        cents = _pinned_cents(spark, cents_root, txid)
         cb_row = _cb_row_from_entries(
             read_table(spark, cb_root, version=cb_v).select(
                 F.col("s").cast("int").alias("s"),

@@ -260,67 +260,36 @@ def stream_curation_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from ..io.acid_table import read_table, replace_partitions
-    from ..operators.textops import _DECON_MOD, _DECON_N, ngram_array
+    from ..io.acid_table import read_table
     from .core import write_stream_curation_gate
-    from .windows import _await_gate, _ordered_epoch_stream
+    from .windows import (
+        _check_epoch_membership,
+        _eval_index_split,
+        _ordered_epoch_stream,
+        _run_gate,
+    )
 
     docs = table(spark, sf_dir, "documents").select("doc_id", "text")
-    is_eval = F.pmod("doc_id", F.lit(_DECON_MOD)) == 0
-    train = docs.filter(~is_eval)
     tmp = tempfile.mkdtemp(prefix="crgate_")
     try:
-        # the standing eval index, built once before the stream starts
-        # (hash-bucketed build; whole-table broadcast per epoch — an
-        # eval set is small by construction)
-        ev = (
-            docs.filter(is_eval)
-            .select(
-                F.explode(
-                    ngram_array(F.split("text", " "), _DECON_N)
-                ).alias("g")
-            )
-            .distinct()
-            .withColumn("b", F.pmod(F.xxhash64("g"), F.lit(8)))
-        )
         roots = {
             n: os.path.join(tmp, n)
             for n in ("eval", "sigs", "docs", "quarantine", "verdicts", "stats")
         }
-        replace_partitions(
-            ev.repartition(F.col("b")), roots["eval"], ["b"], "eval-build"
-        )
+        train = _eval_index_split(docs, roots["eval"])
         sdf = _ordered_epoch_stream(spark, train, tmp)
-        key = "spark.sql.shuffle.partitions"
-        prev = spark.conf.get(key)
-        spark.conf.set(key, "8")
-        try:
-            q = write_stream_curation_gate(
-                sdf, roots["eval"], roots["sigs"], roots["docs"],
-                roots["quarantine"], roots["verdicts"], roots["stats"],
-            )
-            _await_gate(q)
-        finally:
-            spark.conf.set(key, prev)
+        _run_gate(spark, lambda ck: write_stream_curation_gate(
+            sdf, roots["eval"], roots["sigs"], roots["docs"],
+            roots["quarantine"], roots["verdicts"], roots["stats"],
+            checkpoint=ck,
+        ))
         ledger = [
             (int(r["epoch"]), r["n_arrived"], r["arrived_id_sum"],
              r["n_rejected_index"], r["n_rejected_batch"],
              r["n_quarantined"], r["n_accepted"])
             for r in read_table(spark, roots["stats"]).collect()
         ]
-        # Loud determinism guard: epoch membership must match the
-        # doc_id % 3 split of the TRAIN slice.
-        want = {
-            int(r["e"]): (r["n"], int(r["ids"] or 0))
-            for r in train.groupBy(F.pmod("doc_id", F.lit(3)).alias("e"))
-            .agg(F.count("*").alias("n"), F.sum("doc_id").alias("ids"))
-            .collect()
-        }
-        got = {e: (n, ids) for e, n, ids, _, _, _, _ in ledger}
-        if got != want:
-            raise RuntimeError(
-                f"epoch membership drifted from the doc_id%3 split: {got} != {want}"
-            )
+        _check_epoch_membership(train, "doc_id", ledger)
         # CONSERVATION: each epoch's four verdict buckets partition its
         # arrivals, and the standing tables reconcile with the ledger.
         for e, n, _, ri, rb, nq, na in ledger:
@@ -398,22 +367,16 @@ def stream_curation_searchable(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..io.acid_table import current_manifest, read_table, replace_partitions
     from ..operators._helpers import md5_bucket16
     from ..operators.similarity import _dot, _ivf_cents, _qvec
-    from ..operators.textops import _DECON_MOD, _DECON_N, _bm25_scores, ngram_array
-    from .bm25_ingest import _served_scores
+    from ..operators.textops import _bm25_scores
+    from .bm25_ingest import _keyword_probe, _served_scores
     from .core import write_stream_curation_gate
-    from .windows import _await_gate, _ordered_epoch_stream
+    from .windows import _eval_index_split, _ordered_epoch_stream, _run_gate
 
     docs = table(spark, sf_dir, "documents").select("doc_id", "text")
-    is_eval = F.pmod("doc_id", F.lit(_DECON_MOD)) == 0
     emb = (
         table(spark, sf_dir, "embeddings")
         .select("vec_id", _qvec("embedding").alias("qv"))
         .select("vec_id", "qv", _dot(F.col("qv"), F.col("qv")).alias("nrm"))
-    )
-    train = (
-        docs.filter(~is_eval)
-        .join(emb, docs["doc_id"] == emb["vec_id"], "left")
-        .select("doc_id", "text", "qv", "nrm")
     )
     tmp = tempfile.mkdtemp(prefix="crsearch_")
     try:
@@ -423,17 +386,10 @@ def stream_curation_searchable(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         roots = {n: os.path.join(tmp, n) for n in names}
         roots["bands"] = roots["sigs"] + "_bands"
-        # standing eval 8-gram index (the decontamination probe)
-        ev = (
-            docs.filter(is_eval)
-            .select(
-                F.explode(ngram_array(F.split("text", " "), _DECON_N)).alias("g")
-            )
-            .distinct()
-            .withColumn("b", F.pmod(F.xxhash64("g"), F.lit(8)))
-        )
-        replace_partitions(
-            ev.repartition(F.col("b")), roots["eval"], ["b"], "eval-build"
+        train = (
+            _eval_index_split(docs, roots["eval"])
+            .join(emb, docs["doc_id"] == emb["vec_id"], "left")
+            .select("doc_id", "text", "qv", "nrm")
         )
         # standing IVF quantizer: hash-seeded centroids from the
         # deterministic vec_id % 10 = 0 bootstrap of the train-slice
@@ -452,18 +408,12 @@ def stream_curation_searchable(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         def _run_stream(src_tmp: str, copy_from: str | None = None):
             sdf = _ordered_epoch_stream(spark, train, src_tmp, copy_from=copy_from)
-            key = "spark.sql.shuffle.partitions"
-            prev = spark.conf.get(key)
-            spark.conf.set(key, "8")
-            try:
-                q = write_stream_curation_gate(
-                    sdf, roots["eval"], roots["sigs"], roots["docs"],
-                    roots["quarantine"], roots["verdicts"], roots["stats"],
-                    bands_root=roots["bands"], search_roots=search_roots,
-                )
-                _await_gate(q)
-            finally:
-                spark.conf.set(key, prev)
+            _run_gate(spark, lambda ck: write_stream_curation_gate(
+                sdf, roots["eval"], roots["sigs"], roots["docs"],
+                roots["quarantine"], roots["verdicts"], roots["stats"],
+                checkpoint=ck, bands_root=roots["bands"],
+                search_roots=search_roots,
+            ))
 
         _run_stream(tmp)
 
@@ -495,15 +445,7 @@ def stream_curation_searchable(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("doc_id").cast("long").alias("doc_id"),
             F.col("text").cast("string").alias("text"),
         ).localCheckpoint(eager=False)
-        qk = (
-            docs.filter(F.col("doc_id") < 5)
-            .select(F.explode(F.split("text", " ")).alias("tok"))
-            .distinct()
-            .orderBy("tok")
-            .limit(3)
-            .select(F.lit(0).cast("long").alias("pid"), "tok")
-            .localCheckpoint()
-        )
+        qk = _keyword_probe(docs)
         sroots = {"postings": roots["postings"], "stats": roots["bm25_stats"]}
         served = _served_scores(
             spark, sroots, qk.withColumn("w", F.lit(1.0)), "bm25_e9"
@@ -818,24 +760,17 @@ def retrieval_lifecycle_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         _two_level_assign,
         served_nprobe,
     )
-    from ..operators.textops import _DECON_MOD, _DECON_N, ngram_array
-    from ..streaming.bm25_ingest import _served_scores
+    from .bm25_ingest import _keyword_probe, _served_scores
     from .core import write_stream_curation_gate
-    from .windows import _await_gate
+    from .windows import _eval_index_split, _run_gate
 
     from pyspark.sql import Window
 
     docs = table(spark, sf_dir, "documents").select("doc_id", "text")
-    is_eval = F.pmod("doc_id", F.lit(_DECON_MOD)) == 0
     emb = (
         table(spark, sf_dir, "embeddings")
         .select("vec_id", _qvec("embedding").alias("qv"))
         .select("vec_id", "qv", _dot(F.col("qv"), F.col("qv")).alias("nrm"))
-    )
-    train = (
-        docs.filter(~is_eval)
-        .join(emb, docs["doc_id"] == emb["vec_id"], "left")
-        .select("doc_id", "text", "qv", "nrm")
     )
     tmp = tempfile.mkdtemp(prefix="lifecycle_")
     try:
@@ -845,16 +780,10 @@ def retrieval_lifecycle_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         roots = {n: os.path.join(tmp, n) for n in names}
         roots["bands"] = roots["sigs"] + "_bands"
-        ev = (
-            docs.filter(is_eval)
-            .select(
-                F.explode(ngram_array(F.split("text", " "), _DECON_N)).alias("g")
-            )
-            .distinct()
-            .withColumn("b", F.pmod(F.xxhash64("g"), F.lit(8)))
-        )
-        replace_partitions(
-            ev.repartition(F.col("b")), roots["eval"], ["b"], "eval-build"
+        train = (
+            _eval_index_split(docs, roots["eval"])
+            .join(emb, docs["doc_id"] == emb["vec_id"], "left")
+            .select("doc_id", "text", "qv", "nrm")
         )
         nvt = train.filter(F.col("qv").isNotNull()).select(
             F.col("doc_id").alias("vec_id"), "qv", "nrm"
@@ -898,29 +827,22 @@ def retrieval_lifecycle_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             shutil.copy(part_files[e], dst)
             os.utime(dst, (now + 30 * e, now + 30 * e))
 
-        def _run_gate() -> None:
+        def _run_stream() -> None:
             sdf = (
                 spark.readStream.schema(schema)
                 .option("maxFilesPerTrigger", "1")
                 .parquet(src_dir)
             )
-            key = "spark.sql.shuffle.partitions"
-            prev = spark.conf.get(key)
-            spark.conf.set(key, "8")
-            try:
-                q = write_stream_curation_gate(
-                    sdf, roots["eval"], roots["sigs"], roots["docs"],
-                    roots["quarantine"], roots["verdicts"], roots["stats"],
-                    bands_root=roots["bands"], search_roots=search_roots,
-                    checkpoint=ckpt,
-                )
-                _await_gate(q)
-            finally:
-                spark.conf.set(key, prev)
+            _run_gate(spark, lambda ck: write_stream_curation_gate(
+                sdf, roots["eval"], roots["sigs"], roots["docs"],
+                roots["quarantine"], roots["verdicts"], roots["stats"],
+                checkpoint=ck, bands_root=roots["bands"],
+                search_roots=search_roots,
+            ), checkpoint=ckpt)
 
         _feed(0)
         _feed(1)
-        _run_gate()
+        _run_stream()
 
         # ---- the TAKEDOWN, between epochs: deterministic slice of the
         # so-far-accepted corpus, deleted from EVERY standing table
@@ -1009,7 +931,7 @@ def retrieval_lifecycle_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         # ---- epoch 2 resumes the SAME stream off the SAME checkpoint
         _feed(2)
-        _run_gate()
+        _run_stream()
 
         # ---- replays: the delete txid AND the full stream are no-ops
         all_roots = {n: roots[n] for n in names + ("bands",)}
@@ -1029,7 +951,7 @@ def retrieval_lifecycle_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             ann_root=roots["ann"], del_cell_buckets=cell_buckets,
         )
         shutil.rmtree(ckpt)  # fresh engine state; table txids carry exactly-once
-        _run_gate()
+        _run_stream()
         after = {n: current_manifest(all_roots[n])["version"] for n in vers}
         if after != vers:
             raise RuntimeError(
@@ -1037,15 +959,7 @@ def retrieval_lifecycle_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
 
         # ---- final serves off the standing artifacts
-        qk = (
-            docs.filter(F.col("doc_id") < 5)
-            .select(F.explode(F.split("text", " ")).alias("tok"))
-            .distinct()
-            .orderBy("tok")
-            .limit(3)
-            .select(F.lit(0).cast("long").alias("pid"), "tok")
-            .localCheckpoint()
-        )
+        qk = _keyword_probe(docs)
         sroots = {"postings": roots["postings"], "stats": roots["bm25_stats"]}
         bsc = _served_scores(
             spark, sroots, qk.withColumn("w", F.lit(1.0)), "bm25_e9"

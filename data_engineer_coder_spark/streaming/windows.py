@@ -14,12 +14,15 @@ runs.  Session windows merge within the (user) partition only.
 
 from __future__ import annotations
 
+import shutil
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..io.tables import table
+from ..io.tables import conf_scope, table
 from ..operators._helpers import dsum, sql_dsum, ts_str
 from ..registry import register
+from . import core
 from .core import run_to_memory, stream_events
 
 # --------------------------------------------------------------------------
@@ -381,17 +384,9 @@ def stream_rollup_matview(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(src_dir)
         )
         root = os.path.join(tmp, "t")
-        # size the per-epoch merge shuffles to the keyspace (~150
-        # (day,type) rows), not the batch-session default — the
-        # run_to_memory state-partitioning rule
-        key = "spark.sql.shuffle.partitions"
-        prev = spark.conf.get(key)
-        spark.conf.set(key, "8")
-        try:
-            q = write_stream_rollup_merge(sdf, root)
-            q.awaitTermination(300)
-        finally:
-            spark.conf.set(key, prev)
+        # the per-epoch merge shuffles are sized to the keyspace (~150
+        # (day,type) rows) by the gate runner
+        _run_gate(spark, lambda ck: write_stream_rollup_merge(sdf, root, checkpoint=ck))
         if len(current_manifest(root)["txids"]) < 2:
             raise RuntimeError("matview stream produced fewer than 2 epochs")
         rows = (
@@ -585,6 +580,69 @@ def _await_gate(q) -> None:
         )
 
 
+# Every gate drill's epochs are batch-bounded: size their per-epoch
+# shuffles (and any stream state) to that, not to the batch-session
+# default — the run_to_memory state-partitioning rule.
+_GATE_SHUFFLE_PARTITIONS = 8
+
+
+def _run_gate(spark, start, checkpoint: str | None = None) -> None:
+    """The one gate-driving harness: ``start(ckpt)`` builds and starts a
+    gate stream on checkpoint ``ckpt``; this pins the gate's shuffle
+    partitions until the query finishes, fails loudly on timeout
+    (``_await_gate``), and deletes the checkpoint it created once the
+    query has stopped.  A caller-owned ``checkpoint`` (a drill resuming
+    one stream across runs) is used as is and kept."""
+    ckpt = checkpoint or core._ckpt_dir()
+    try:
+        with conf_scope(
+            spark, "spark.sql.shuffle.partitions", _GATE_SHUFFLE_PARTITIONS
+        ):
+            _await_gate(start(ckpt))
+    finally:
+        if checkpoint is None:
+            shutil.rmtree(ckpt, ignore_errors=True)
+
+
+def _eval_index_split(docs: DataFrame, eval_root: str) -> DataFrame:
+    """Commit the standing eval 8-gram index of ``docs``' held-out slice
+    (``doc_id % _DECON_MOD == 0``, the ``ngram_decontaminate`` split) to
+    ``eval_root`` before a decontaminating stream starts, and return the
+    TRAIN slice that streams.  The index is hash-bucketed so the build
+    parallelizes; gates read it whole and broadcast it per epoch (an
+    eval set is small by construction)."""
+    from ..io.acid_table import replace_partitions
+    from ..operators.textops import _DECON_MOD, _DECON_N, ngram_array
+
+    is_eval = F.pmod("doc_id", F.lit(_DECON_MOD)) == 0
+    ev = (
+        docs.filter(is_eval)
+        .select(F.explode(ngram_array(F.split("text", " "), _DECON_N)).alias("g"))
+        .distinct()
+        .withColumn("b", F.pmod(F.xxhash64("g"), F.lit(8)))
+    )
+    replace_partitions(ev.repartition(F.col("b")), eval_root, ["b"], "eval-build")
+    return docs.filter(~is_eval)
+
+
+def _check_epoch_membership(src: DataFrame, key: str, ledger) -> None:
+    """Loud determinism guard: every epoch must have seen EXACTLY the
+    ``key % 3`` group of ``src`` (file-order violations would silently
+    flip gate decisions — fail here, not at the oracle).  ``ledger``
+    rows start (epoch, n_arrived, arrived_id_sum, ...)."""
+    want = {
+        int(r["e"]): (r["n"], int(r["ids"] or 0))
+        for r in src.groupBy(F.pmod(key, F.lit(3)).alias("e"))
+        .agg(F.count("*").alias("n"), F.sum(key).alias("ids"))
+        .collect()
+    }
+    got = {e: (n, ids) for e, n, ids, *_ in ledger}
+    if got != want:
+        raise RuntimeError(
+            f"epoch membership drifted from the {key}%3 split: {got} != {want}"
+        )
+
+
 def _ordered_epoch_stream(spark, df, tmp, n_epochs: int = 3, key: str = "doc_id",
                           copy_from: str | None = None):
     """Deterministic epoch split (``{key} % n_epochs``) of ``df`` as a
@@ -669,39 +727,19 @@ def _run_neardup_gate(
     try:
         sdf = _ordered_epoch_stream(spark, docs, tmp)
         roots = {n: os.path.join(tmp, n) for n in ("sigs", "docs", "stats", "dfs")}
-        key = "spark.sql.shuffle.partitions"
-        prev = spark.conf.get(key)
-        spark.conf.set(key, "8")
-        try:
-            q = write_stream_neardup_gate(
-                sdf, roots["sigs"], roots["docs"], roots["stats"],
-                df_cap=df_cap, df_root=roots["dfs"] if df_cap else None,
-                df_buckets=df_buckets, compact_every=compact_every,
-                df_mode=df_mode,
-            )
-            _await_gate(q)
-        finally:
-            spark.conf.set(key, prev)
+        _run_gate(spark, lambda ck: write_stream_neardup_gate(
+            sdf, roots["sigs"], roots["docs"], roots["stats"],
+            df_cap=df_cap, df_root=roots["dfs"] if df_cap else None,
+            checkpoint=ck, df_buckets=df_buckets,
+            compact_every=compact_every, df_mode=df_mode,
+        ))
         stats = [
             (int(r["epoch"]), r["n_arrived"], r["arrived_id_sum"],
              r["n_capped_shingles"], r["n_rejected_index"],
              r["n_rejected_batch"], r["n_accepted"])
             for r in read_table(spark, roots["stats"]).collect()
         ]
-        # Loud determinism guard: every epoch must have seen EXACTLY the
-        # doc_id % 3 == epoch group (file-order violations would
-        # silently flip gate decisions — fail here, not at the oracle).
-        want = {
-            int(r["e"]): (r["n"], int(r["ids"] or 0))
-            for r in docs.groupBy(F.pmod("doc_id", F.lit(3)).alias("e"))
-            .agg(F.count("*").alias("n"), F.sum("doc_id").alias("ids"))
-            .collect()
-        }
-        got = {e: (n, ids) for e, n, ids, _, _, _, _ in stats}
-        if got != want:
-            raise RuntimeError(
-                f"epoch membership drifted from the doc_id%3 split: {got} != {want}"
-            )
+        _check_epoch_membership(docs, "doc_id", stats)
         if audit == "probe":
             # scratch dir is deleted in finally: checkpoint the audit rows
             return _neardup_probe_audit(
@@ -1226,47 +1264,22 @@ def stream_decontaminate_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from ..io.acid_table import read_table, replace_partitions
-    from ..operators.textops import _DECON_MOD, _DECON_N, ngram_array
+    from ..io.acid_table import read_table
     from .core import write_stream_decontam_gate
 
     docs = table(spark, sf_dir, "documents").select("doc_id", "text")
-    is_eval = F.pmod("doc_id", F.lit(_DECON_MOD)) == 0
-    train = docs.filter(~is_eval)
     tmp = tempfile.mkdtemp(prefix="dcgate_")
     try:
-        # the standing eval index, built once before the stream starts —
-        # hash-bucketed so the build parallelizes; read whole + broadcast
-        # per epoch (an eval set is small by construction)
-        ev = (
-            docs.filter(is_eval)
-            .select(
-                F.explode(
-                    ngram_array(F.split("text", " "), _DECON_N)
-                ).alias("g")
-            )
-            .distinct()
-            .withColumn("b", F.pmod(F.xxhash64("g"), F.lit(8)))
-        )
         roots = {
             n: os.path.join(tmp, n)
             for n in ("eval", "docs", "stats", "quarantine")
         }
-        replace_partitions(
-            ev.repartition(F.col("b")), roots["eval"], ["b"], "eval-build"
-        )
+        train = _eval_index_split(docs, roots["eval"])
         sdf = _ordered_epoch_stream(spark, train, tmp)
-        key = "spark.sql.shuffle.partitions"
-        prev = spark.conf.get(key)
-        spark.conf.set(key, "8")
-        try:
-            q = write_stream_decontam_gate(
-                sdf, roots["eval"], roots["docs"], roots["stats"],
-                quarantine_root=roots["quarantine"],
-            )
-            _await_gate(q)
-        finally:
-            spark.conf.set(key, prev)
+        _run_gate(spark, lambda ck: write_stream_decontam_gate(
+            sdf, roots["eval"], roots["docs"], roots["stats"],
+            quarantine_root=roots["quarantine"], checkpoint=ck,
+        ))
         stats = [
             (int(r["epoch"]), r["n_arrived"], r["arrived_id_sum"],
              r["n_contaminated"], r["n_accepted"])
@@ -1275,17 +1288,7 @@ def stream_decontaminate_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         # Loud determinism guards: epoch membership must match the
         # doc_id % 3 split of the TRAIN slice, and the standing tables
         # must reconcile with the ledger (docs + quarantine == arrived).
-        want = {
-            int(r["e"]): (r["n"], int(r["ids"] or 0))
-            for r in train.groupBy(F.pmod("doc_id", F.lit(3)).alias("e"))
-            .agg(F.count("*").alias("n"), F.sum("doc_id").alias("ids"))
-            .collect()
-        }
-        got = {e: (n, ids) for e, n, ids, _, _ in stats}
-        if got != want:
-            raise RuntimeError(
-                f"epoch membership drifted from the doc_id%3 split: {got} != {want}"
-            )
+        _check_epoch_membership(train, "doc_id", stats)
         n_acc = read_table(spark, roots["docs"]).count()
         try:
             n_quar = read_table(spark, roots["quarantine"]).count()

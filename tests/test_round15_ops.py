@@ -90,6 +90,23 @@ def test_append_rows_falls_back_on_unsafe_values(spark, tmp_path):
     )
     rows = read_table(spark, root).collect()
     assert [(r["k"], int(r["n"])) for r in rows] == [("a b", 1)]
+    # bool, null and float partition values: Python's str() is not
+    # Spark's dir name (True vs true, None vs __HIVE_DEFAULT_PARTITION__,
+    # 1e+20 vs 1.0E20) — the manifest keys must be the ones the Spark
+    # write path produces for the same rows
+    cases = [
+        ("k boolean, n long", [(True, 1), (False, 2)]),
+        ("k long, n long", [(None, 3), (4, 4)]),
+        ("k string, n long", [(None, 5), ("x", 6)]),
+        ("k double, n long", [(1e20, 7)]),
+    ]
+    for i, (ddl, data) in enumerate(cases):
+        local, ref = str(tmp_path / f"rows{i}"), str(tmp_path / f"spark{i}")
+        append_rows(spark, data, ddl, local, ["k"], "t1")
+        append_partitions(spark.createDataFrame(data, ddl), ref, ["k"], "t1")
+        assert sorted(current_manifest(local)["partitions"]) == sorted(
+            current_manifest(ref)["partitions"]
+        ), ddl
 
 
 def test_append_rows_crash_before_commit_is_invisible(spark, tmp_path):
