@@ -86,6 +86,8 @@ _FORCE_RECHECK: tuple[str, ...] = (
     # (shuffle-partition conf scope, loud timeout, checkpoint cleanup),
     # and the gates share one contaminated-id probe, one fused epoch
     # stats job, one eval-index build and one epoch-membership guard.
+    # Round 17: every ACID sink commits through one epoch transaction
+    # (pinned reads, aligned appends, ledgers last).
     "stream_rollup_matview",
     "stream_neardup_ingest",
     "stream_neardup_ingest_capped",

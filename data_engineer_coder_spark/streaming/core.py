@@ -22,7 +22,10 @@ from contextlib import nullcontext
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..io import acid_table as at
+from ..io import layout
 from ..io.tables import _NANOS_AS_LONG, conf_scope
+from ..operators._helpers import md5_bucket16, shuffle_parts
 
 
 def _ckpt_dir() -> str:
@@ -156,6 +159,106 @@ def write_foreach_batch(
     )
 
 
+class EpochTxn:
+    """One micro-batch's exactly-once transaction over the ACID tables an
+    ACID stream sink writes — the one place the epoch's commit rules
+    live.
+
+    ``foreachBatch`` is at-least-once: after a crash between the batch
+    function and the checkpoint commit, Spark replays the epoch.  Every
+    commit therefore carries the epoch's txid (``epoch-N``), which each
+    table's manifest records, so a replayed commit is a no-op on every
+    table at once.  Every standing-table READ is pinned to the last
+    version committed before that txid (``version_before_txid`` — the
+    live head on the normal path), so a replay sees the exact pre-epoch
+    snapshot and its decisions and ledger bytes repeat (ADVICE r9).  The
+    one-row ledgers commit LAST: a ledger is the epoch's audit and
+    serving-pin anchor (``latest_consistent_version``), so the first
+    ledger closes the transaction and a later table commit raises.
+
+    Commits go through ``acid_table``/``layout`` looked up at call time,
+    so fault-injection tests can patch them by name."""
+
+    def __init__(self, spark: SparkSession, epoch_id: int):
+        self.spark = spark
+        self.epoch_id = int(epoch_id)
+        self.txid = f"epoch-{self.epoch_id}"
+        self._closed = False
+
+    def with_epoch(self, df: DataFrame) -> DataFrame:
+        """``df`` tagged with this epoch's ``epoch`` column."""
+        return df.withColumn("epoch", F.lit(self.epoch_id))
+
+    def pinned_version(self, root: str) -> int:
+        return at.version_before_txid(root, self.txid)
+
+    def read(self, root: str, partition_filter=None, stats_filter=None):
+        """``root`` as it stood before this epoch, or None when the pinned
+        version (after the manifest and footer filters) selects nothing."""
+        try:
+            return at.read_table(
+                self.spark, root, partition_filter=partition_filter,
+                version=self.pinned_version(root), stats_filter=stats_filter,
+            )
+        except ValueError:
+            return None
+
+    def _check_open(self) -> None:
+        if self._closed:
+            raise RuntimeError(f"{self.txid}: table commit after the epoch ledger")
+
+    def append(self, df: DataFrame, root: str, partition_cols: list[str]) -> None:
+        self._check_open()
+        at.append_partitions(df, root, partition_cols, self.txid)
+
+    def append_aligned(
+        self, df: DataFrame, root: str, bucket_cols: list[str], sort_cols: list[str]
+    ) -> None:
+        """Bucket-aligned append (``align_epoch_append``): one staged file
+        per TOUCHED bucket per epoch, not one per (task × bucket) — the
+        difference between Θ(buckets) and Θ(tasks · buckets) small files
+        per epoch at corpus-scaled layouts."""
+        self.append(
+            layout.align_epoch_append(
+                df, bucket_cols, sort_cols, shuffle_parts(self.spark)
+            ),
+            root, bucket_cols,
+        )
+
+    def replace(
+        self, df: DataFrame, root: str, partition_cols: list[str], drop_parts=None
+    ) -> None:
+        self._check_open()
+        at.replace_partitions(
+            df, root, partition_cols, self.txid, drop_parts=drop_parts
+        )
+
+    def ledger(self, root: str, schema: str, *values: int) -> None:
+        """Commit the one-row ledger ``(epoch, *values)`` (``schema``
+        names the value columns) and close the transaction to table
+        commits.  The row is already collected, so it commits
+        driver-side (``append_rows``): same manifest/txid protocol, no
+        Spark job (guide §1.2 — the per-epoch job count is the
+        audit-tier floor)."""
+        self._closed = True
+        at.append_rows(
+            self.spark, [(self.epoch_id, *map(int, values))],
+            "epoch int, " + schema, root, ["epoch"], self.txid,
+        )
+
+
+def _acid_sink(sdf: DataFrame, body, checkpoint: str | None = None):
+    """Run ``body(df, txn)`` on every micro-batch, with ``txn`` the
+    batch's :class:`EpochTxn` — the one driver of every ACID stream
+    sink."""
+    return write_foreach_batch(
+        sdf,
+        lambda df, epoch_id: body(df, EpochTxn(df.sparkSession, epoch_id)),
+        checkpoint=checkpoint,
+        output_mode="append",
+    )
+
+
 def stream_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``readStream`` over the documents table (micro-batch parquet
     source).  No temporal columns, so unlike :func:`stream_events` no
@@ -192,13 +295,8 @@ def write_stream_exactly_once(
     silently replacing the earlier epochs' rows
     (tests/test_streaming.py runs a 2-epoch stream to prove it).
     """
-    from ..io.acid_table import append_partitions
-
-    def _commit_batch(df: DataFrame, epoch_id: int) -> None:
-        append_partitions(df, root, partition_cols, f"epoch-{epoch_id}")
-
-    return write_foreach_batch(
-        sdf, _commit_batch, checkpoint=checkpoint, output_mode="append"
+    return _acid_sink(
+        sdf, lambda df, txn: txn.append(df, root, partition_cols), checkpoint
     )
 
 
@@ -220,13 +318,8 @@ def write_stream_with_quarantine(
     — the production "bad rows must not poison the table, but must not
     vanish either" contract.
     """
-    from functools import reduce
 
-    from pyspark.sql import functions as F
-
-    from ..io.acid_table import append_partitions
-
-    def _commit_batch(df: DataFrame, epoch_id: int) -> None:
+    def _epoch(df: DataFrame, txn: EpochTxn) -> None:
         flagged = df.withColumn(
             "_failed",
             F.array_compact(
@@ -242,12 +335,10 @@ def write_stream_with_quarantine(
         bad = flagged.filter(F.size("_failed") > 0).withColumn(
             "failed_rules", F.array_join("_failed", ",")
         ).drop("_failed")
-        append_partitions(good, good_root, partition_cols, f"epoch-{epoch_id}")
-        append_partitions(bad, quarantine_root, partition_cols, f"epoch-{epoch_id}")
+        txn.append(good, good_root, partition_cols)
+        txn.append(bad, quarantine_root, partition_cols)
 
-    return write_foreach_batch(
-        sdf, _commit_batch, checkpoint=checkpoint, output_mode="append"
-    )
+    return _acid_sink(sdf, _epoch, checkpoint)
 
 
 def write_stream_rollup_merge(
@@ -266,7 +357,8 @@ def write_stream_rollup_merge(
 
     1. partial-aggregates the batch by (day, event_type);
     2. reads the standing rollup rows for ONLY the days the batch
-       touched (manifest partition pruning — history stays unread);
+       touched (manifest partition pruning — history stays unread),
+       pinned to the version before the epoch's txid;
     3. unions + re-aggregates (decimal sums: order-free, exact);
     4. ``replace_partitions`` of those days with txid = epoch id —
        exactly-once under replay, atomic under crash, like every other
@@ -276,10 +368,6 @@ def write_stream_rollup_merge(
     of table history — the difference between a dashboard that rescans
     a year per hour and one that merges a few hundred rows.
     """
-    from pyspark.sql import functions as F
-
-    from ..io.acid_table import current_manifest, read_table, replace_partitions
-
     DEC = "decimal(38,6)"
 
     def _partial(df: DataFrame) -> DataFrame:
@@ -291,7 +379,7 @@ def write_stream_rollup_merge(
             F.max("value").alias("mx"),
         )
 
-    def _commit_batch(df: DataFrame, epoch_id: int) -> None:
+    def _epoch(df: DataFrame, txn: EpochTxn) -> None:
         batch = _partial(
             df.select(
                 F.date_format("ts", "yyyy-MM-dd").alias("day"), "event_type", "value"
@@ -301,17 +389,12 @@ def write_stream_rollup_merge(
         if not days:
             return
         merged = batch
-        if current_manifest(root)["partitions"]:
-            try:
-                standing = read_table(
-                    spark=df.sparkSession,
-                    root=root,
-                    partition_filter=lambda kv: kv.get("day") in days,
-                ).select("day", "event_type", "n", "n_val", "sv", "mn", "mx")
-                standing = standing.withColumn("sv", F.col("sv").cast(DEC))
-                merged = batch.unionByName(standing)
-            except ValueError:
-                pass  # no standing rows for these days yet
+        standing = txn.read(root, partition_filter=lambda kv: kv.get("day") in days)
+        if standing is not None:  # None: no standing rows for these days yet
+            merged = batch.unionByName(
+                standing.select("day", "event_type", "n", "n_val", "sv", "mn", "mx")
+                .withColumn("sv", F.col("sv").cast(DEC))
+            )
         merged = merged.groupBy("day", "event_type").agg(
             F.sum("n").alias("n"),
             F.sum("n_val").alias("n_val"),
@@ -319,11 +402,9 @@ def write_stream_rollup_merge(
             F.min("mn").alias("mn"),
             F.max("mx").alias("mx"),
         )
-        replace_partitions(merged, root, ["day"], f"epoch-{epoch_id}")
+        txn.replace(merged, root, ["day"])
 
-    return write_foreach_batch(
-        sdf, _commit_batch, checkpoint=checkpoint, output_mode="append"
-    )
+    return _acid_sink(sdf, _epoch, checkpoint)
 
 
 def stream_progress_report(spark, query) -> DataFrame:
@@ -403,13 +484,19 @@ def band_range_hits(sorted_vals):
     return flt
 
 
+def _capped_range_hits(vals: list, col: str, cap: int):
+    """``band_range_hits`` over ``vals`` on ``col`` — or None (read every
+    file) past ``cap``: the bound on the probe's driver-side key list is
+    ENFORCED, and the unpruned fallback decides identically, it only
+    reads more files."""
+    return None if len(vals) > cap else band_range_hits(sorted(vals))(col)
+
+
 def _neardup_screen(
-    spark,
+    txn: EpochTxn,
     sig: DataFrame,
     sig_root: str,
     bands_root: str,
-    sig_v: int,
-    bands_v: int,
     min_agree: int,
     prune_key_cap: int,
 ):
@@ -423,9 +510,6 @@ def _neardup_screen(
     accepted subset to the index), ``rej_index`` is None when the index
     is empty, and ``rej_batch`` already excludes index-rejected docs so
     the two ledger counts partition the rejected set."""
-    from pyspark.sql import functions as F
-
-    from ..io.acid_table import manifest_at, read_table
     from ..operators.dedup import _K, band_key_array
 
     mcols = [f"m{j}" for j in range(_K)]
@@ -440,71 +524,70 @@ def _neardup_screen(
 
     bands = sig.select("doc_id", F.explode(band_key_array()).alias("band_key"))
 
+    key_hits = []
+
+    def batch_key_hit(stats: dict) -> bool:
+        # The batch band-key set (≤ 8 × batch docs, a driver-side sorted
+        # list for the per-file bisect) is collected when the pinned
+        # read tests its first index file, so an empty index costs no
+        # job.  ONE bounded job instead of count-then-collect:
+        # limit(cap+1) returns every key when the batch is under the cap
+        # and cap+1 rows (→ unpruned fallback, the identical decision)
+        # when it is not — driver memory stays bounded either way
+        # (guide §2.4).
+        if not key_hits:
+            rows = bands.select("band_key").distinct().limit(prune_key_cap + 1).collect()
+            key_hits.append(
+                _capped_range_hits([r["band_key"] for r in rows], "band_key", prune_key_cap)
+            )
+        return key_hits[0] is None or key_hits[0](stats)
+
     rej_index = None
-    if manifest_at(bands_root, bands_v)["partitions"]:
-        # batch band-key set: bounded by 8 × batch docs (driver-side
-        # sorted list for the per-file bisect).  The bound is ENFORCED:
-        # past ``prune_key_cap`` keys the probe falls back to the
-        # unpruned scan — decisions identical, only more files read.
-        # ONE bounded job instead of count-then-collect: limit(cap+1)
-        # returns every key when the batch is under the cap and cap+1
-        # rows (→ unpruned fallback, the identical decision) when it is
-        # not — driver memory stays bounded either way (guide §2.4).
-        key_rows = (
-            bands.select("band_key").distinct().limit(prune_key_cap + 1).collect()
+    idx_bands = txn.read(bands_root, stats_filter=batch_key_hit)
+    # None: the index is empty, or every index file was pruned — no
+    # collisions either way
+    if idx_bands is not None:
+        # broadcast the (small) batch side: surviving index files
+        # are scanned once, map-side — never shuffled or broadcast
+        cand_i = (
+            idx_bands.select(F.col("doc_id").alias("idx_id"), "band_key")
+            .join(F.broadcast(bands), "band_key")
+            # defense in depth: the pinned reads already exclude this
+            # epoch's own replayed signatures
+            .where(F.col("idx_id") != F.col("doc_id"))
+            .select("doc_id", "idx_id")
+            .distinct()
+            # tiny pair list (LSH collisions only), referenced
+            # below for the id set AND the verify join
+            .localCheckpoint()
         )
-        hit = None
-        if len(key_rows) <= prune_key_cap:
-            batch_keys = sorted(r["band_key"] for r in key_rows)
-            hit = band_range_hits(batch_keys)("band_key")
-        try:
-            idx_bands = read_table(
-                spark, bands_root, version=bands_v, stats_filter=hit
-            ).select(F.col("doc_id").alias("idx_id"), "band_key")
-        except ValueError:
-            idx_bands = None  # every index file pruned: no collisions
-        if idx_bands is not None:
-            # broadcast the (small) batch side: surviving index files
-            # are scanned once, map-side — never shuffled or broadcast
-            cand_i = (
-                idx_bands.join(F.broadcast(bands), "band_key")
-                # defense in depth: sig_v/bands_v pinning already
-                # excludes this epoch's own replayed signatures
-                .where(F.col("idx_id") != F.col("doc_id"))
-                .select("doc_id", "idx_id")
+        cand_rows = (
+            cand_i.select("idx_id").distinct().limit(prune_key_cap + 1).collect()
+        )
+        if cand_rows:
+            # second pruned read: only sig files whose doc_id footer
+            # range contains a candidate id are opened — same enforced
+            # cap + unpruned fallback as above, fused into one bounded
+            # job like the key probe
+            index_sig = txn.read(
+                sig_root,
+                stats_filter=_capped_range_hits(
+                    [r["idx_id"] for r in cand_rows], "doc_id", prune_key_cap
+                ),
+            ).select("doc_id", *mcols)
+            rej_index = (
+                cand_i.join(sig.alias("a"), "doc_id")
+                .join(
+                    index_sig.alias("b"),
+                    F.col("idx_id") == F.col("b.doc_id"),
+                )
+                .where(_agree("a", "b") >= F.lit(min_agree))
+                .select("a.doc_id")
                 .distinct()
-                # tiny pair list (LSH collisions only), referenced
-                # below for the id set AND the verify join
+                # tiny id list, referenced 3× (count, anti-join,
+                # union): materialize once
                 .localCheckpoint()
             )
-            cand_rows = (
-                cand_i.select("idx_id").distinct().limit(prune_key_cap + 1).collect()
-            )
-            if cand_rows:
-                # second pruned read: only sig files whose doc_id
-                # footer range contains a candidate id are opened —
-                # same enforced cap + unpruned fallback as above,
-                # fused into one bounded job like the key probe
-                idf = None
-                if len(cand_rows) <= prune_key_cap:
-                    cand_ids = sorted(r["idx_id"] for r in cand_rows)
-                    idf = band_range_hits(cand_ids)("doc_id")
-                index_sig = read_table(
-                    spark, sig_root, version=sig_v, stats_filter=idf
-                ).select("doc_id", *mcols)
-                rej_index = (
-                    cand_i.join(sig.alias("a"), "doc_id")
-                    .join(
-                        index_sig.alias("b"),
-                        F.col("idx_id") == F.col("b.doc_id"),
-                    )
-                    .where(_agree("a", "b") >= F.lit(min_agree))
-                    .select("a.doc_id")
-                    .distinct()
-                    # tiny id list, referenced 3× (count, anti-join,
-                    # union): materialize once
-                    .localCheckpoint()
-                )
 
     cand_b = (
         bands.alias("x")
@@ -538,16 +621,13 @@ def _append_neardup_index(
     files sorted by doc_id; band-partitioned key files sorted by
     band_key) is exactly what the pruned probe depends on.  Shared by
     the T8e gate and the r11 curation gate."""
-    from pyspark.sql import functions as F
-
-    from ..io.acid_table import append_partitions
     from ..operators.dedup import band_key_array
 
     # signatures: partitioned by an id bucket (NOT epoch — so
     # multi-epoch appends accumulate per partition and compaction has
     # something to collapse), files sorted by doc_id for the
     # candidate-id pruned verify read
-    append_partitions(
+    at.append_partitions(
         acc_sig.withColumn("sb", F.pmod("doc_id", F.lit(8)))
         .repartition(F.col("sb"))
         .sortWithinPartitions("doc_id"),
@@ -580,7 +660,7 @@ def _append_neardup_index(
         staged_bands = acc_bands.repartition(
             F.col("bj")
         ).sortWithinPartitions("band_key")
-    append_partitions(staged_bands, bands_root, ["bj"], txid)
+    at.append_partitions(staged_bands, bands_root, ["bj"], txid)
 
 
 def _df_table_buckets(df_root: str, requested: int) -> int:
@@ -615,29 +695,37 @@ def _epoch_stats(
     ``{key: (n, v)}``: ``"arr"`` is the batch's arrival checksum (rows,
     doc_id sum), each ``counts`` frame contributes its row count as
     ``(n, 0)`` (None frames are skipped), and each ``sums`` entry
-    ``key: (frame, col)`` its column sum as ``(0, v)``.  Every input but
-    the batch is a materialized localCheckpoint in the gates, so fusing
+    ``key: (frame, col)`` its column sum as ``(0, v)`` — or, when
+    ``col`` is an aggregate Column (e.g. a ``countDistinct``), that
+    aggregate's value.  Entries over the same frame share one aggregate,
+    so each frame is scanned and shuffled once.  Every input but the
+    batch is a materialized localCheckpoint in the gates, so fusing
     them into one unioned collect keeps the compute the same and pays
     the per-job fixed scheduling/commit overhead once instead of once
     per number (guide §1.2)."""
     zero = F.lit(0).cast("long")
-    stat = batch.agg(
-        F.count("*").alias("n"),
-        F.coalesce(F.sum("doc_id"), F.lit(0)).alias("v"),
-    ).select(F.lit("arr").alias("k"), "n", "v")
+    cells: dict[int, tuple[DataFrame, list]] = {}
+
+    def add(df_: DataFrame, k: str, n, v) -> None:
+        cells.setdefault(id(df_), (df_, []))[1].append(
+            F.struct(F.lit(k).alias("k"), n.alias("n"), v.cast("long").alias("v"))
+        )
+
+    add(batch, "arr", F.count("*"), F.coalesce(F.sum("doc_id"), F.lit(0)))
     for k, df_ in counts.items():
         if df_ is not None:
-            stat = stat.unionByName(
-                df_.agg(F.count("*").alias("n")).select(
-                    F.lit(k).alias("k"), "n", zero.alias("v")
-                )
-            )
+            add(df_, k, F.count("*"), zero)
     for k, (df_, col) in (sums or {}).items():
-        stat = stat.unionByName(
-            df_.agg(F.coalesce(F.sum(col), F.lit(0)).alias("v")).select(
-                F.lit(k).alias("k"), zero.alias("n"), "v"
-            )
+        add(df_, k, zero,
+            F.coalesce(F.sum(col), F.lit(0)) if isinstance(col, str) else col)
+    stat = None
+    for df_, row in cells.values():
+        part = (
+            df_.agg(F.array(*row).alias("s"))
+            .select(F.explode("s").alias("s"))
+            .select("s.*")
         )
+        stat = part if stat is None else stat.unionByName(part)
     return {r["k"]: (int(r["n"]), int(r["v"])) for r in stat.collect()}
 
 
@@ -649,10 +737,9 @@ def _contaminated_ids(spark, docs: DataFrame, eval_root: str) -> DataFrame:
     Returns the distinct contaminated doc ids — a tiny id list each
     gate references several times (count, split, quarantine, verdicts),
     so it is materialized and the batch grams are built once."""
-    from ..io.acid_table import read_table
     from ..operators.textops import _DECON_N, ngram_array
 
-    ev = read_table(spark, eval_root).select("g")
+    ev = at.read_table(spark, eval_root).select("g")
     occ = docs.select(
         "doc_id",
         F.explode(ngram_array(F.split("text", " "), _DECON_N)).alias("g"),
@@ -727,9 +814,9 @@ def write_stream_neardup_gate(
     4. appends the survivors' rows to the docs table, their signatures
        + band keys to the index tables, and a one-row (arrived /
        rejected-vs-index / rejected-within-batch / accepted) ledger to
-       the stats table — all through ``append_partitions`` with
-       txid = epoch id, so a replayed epoch is a no-op on every table
-       (exactly-once).  Every standing-table READ is pinned to the last
+       the stats table, LAST — all through the epoch transaction
+       (``EpochTxn``) with txid = epoch id, so a replayed epoch is a
+       no-op on every table (exactly-once).  Every standing-table READ is pinned to the last
        version committed BEFORE this txid (``version_before_txid``), so
        a crash-replay sees the exact pre-epoch snapshot and the
        accept/reject decisions AND the ledger's index-vs-batch split
@@ -799,17 +886,6 @@ def write_stream_neardup_gate(
     accept/reject decisions stay byte-identical (pruning only chooses
     which files to READ, never which candidates to consider).
     """
-    from pyspark.sql import functions as F
-
-    from ..io.acid_table import (
-        append_partitions,
-        append_rows,
-        compact_partitions,
-        manifest_at,
-        read_table,
-        replace_partitions,
-        version_before_txid,
-    )
     from ..operators.dedup import minhash_from_hashes, shingle_hashes
 
     if (df_cap is None) != (df_root is None):
@@ -817,18 +893,28 @@ def write_stream_neardup_gate(
     if bands_root is None:
         bands_root = sig_root.rstrip("/") + "_bands"
 
-    def _commit_batch(df: DataFrame, epoch_id: int) -> None:
-        spark = df.sparkSession
-        txid = f"epoch-{epoch_id}"
-        # Crash-replay anchor: every standing-table READ in this epoch is
-        # pinned to the last version committed BEFORE this epoch's txid
-        # (= the live head on the normal path).
-        sig_v = version_before_txid(sig_root, txid)
-        bands_v = version_before_txid(bands_root, txid)
-        df_v = version_before_txid(df_root, txid) if df_root else 0
-        batch = df.withColumn("epoch", F.lit(int(epoch_id)))
+    def _cms_cells(h, *extra):
+        # the shingle hash's d count-min cells (j, bucket, *extra)
+        return F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(j).alias("j"),
+                        _gate_cms_bucket(j, h).alias("bucket"),
+                        *extra,
+                    )
+                    for j in range(_GATE_CMS_D)
+                ]
+            )
+        )
+
+    def _epoch(df: DataFrame, txn: EpochTxn) -> None:
+        batch = txn.with_epoch(df)
         hashed = shingle_hashes(batch.select("doc_id", "text"))
         n_capped = 0
+        if df_cap is not None:
+            hashed = hashed.localCheckpoint()
+        hashed_eff = hashed
         if df_cap is not None and df_mode == "cms":
             # COUNT-MIN path: the standing state is a FIXED-SIZE sketch
             # (d×w non-zero cells, ≤ _GATE_CMS_D·_GATE_CMS_W rows no
@@ -837,28 +923,14 @@ def write_stream_neardup_gate(
             # shape.  The estimate is one-sided (≥ exact df), so the cap
             # can only fire EARLIER than the exact matview — the
             # documented sketch trade, replayed exactly by the oracle.
-            hashed = hashed.localCheckpoint()
-            hashed_eff = hashed
-            df_man = manifest_at(df_root, df_v)
-            if df_man["partitions"]:
-                cms = read_table(spark, df_root, version=df_v)
-                bh = hashed.select("h").distinct()
-                probes = bh.select(
-                    "h",
-                    F.explode(
-                        F.array(
-                            *[
-                                F.struct(
-                                    F.lit(j).alias("j"),
-                                    _gate_cms_bucket(j, F.col("h")).alias(
-                                        "bucket"
-                                    ),
-                                )
-                                for j in range(_GATE_CMS_D)
-                            ]
-                        )
-                    ).alias("jb"),
-                ).select("h", F.col("jb.j").alias("j"), F.col("jb.bucket").alias("bucket"))
+            cms = txn.read(df_root)
+            if cms is not None:
+                probes = (
+                    hashed.select("h")
+                    .distinct()
+                    .select("h", _cms_cells(F.col("h")).alias("jb"))
+                    .select("h", F.col("jb.j").alias("j"), F.col("jb.bucket").alias("bucket"))
+                )
                 excl = (
                     probes.join(F.broadcast(cms), ["j", "bucket"], "left")
                     .groupBy("h")
@@ -870,24 +942,13 @@ def write_stream_neardup_gate(
                 n_capped = excl.count()
                 hashed_eff = hashed.join(F.broadcast(excl), "h", "left_anti")
         elif df_cap is not None:
-            hashed = hashed.localCheckpoint()
-            hashed_eff = hashed
-            df_man = manifest_at(df_root, df_v)
-            has_hot = any(
-                pkey.startswith("tier=hot/") for pkey in df_man["partitions"]
-            )
-            if has_hot:
-                # the hot set: shingles past the cap in STRICTLY earlier
-                # epochs — read ONLY the hot-tier dirs (tiny by
-                # construction — broadcast); the cold bulk is never read
-                excl = (
-                    read_table(
-                        spark, df_root, version=df_v,
-                        partition_filter=lambda kv: kv["tier"] == "hot",
-                    )
-                    .filter(F.col("df") > df_cap)  # belt-and-braces: hot IS df>cap
-                    .select("h")
-                )
+            # the hot set: shingles past the cap in STRICTLY earlier
+            # epochs — read ONLY the hot-tier dirs (tiny by construction
+            # — broadcast); the cold bulk is never read
+            hot = txn.read(df_root, partition_filter=lambda kv: kv["tier"] == "hot")
+            if hot is not None:
+                # belt-and-braces: hot IS df>cap
+                excl = hot.filter(F.col("df") > df_cap).select("h")
                 n_capped = (
                     hashed.select("h")
                     .distinct()
@@ -895,125 +956,78 @@ def write_stream_neardup_gate(
                     .count()
                 )
                 hashed_eff = hashed.join(F.broadcast(excl), "h", "left_anti")
-        else:
-            hashed_eff = hashed
         sig = minhash_from_hashes(hashed_eff).localCheckpoint()
         _, rej_index, rej_batch = _neardup_screen(
-            spark, sig, sig_root, bands_root, sig_v, bands_v,
-            min_agree, prune_key_cap,
+            txn, sig, sig_root, bands_root, min_agree, prune_key_cap
         )
         rejected = rej_batch if rej_index is None else rej_index.unionByName(rej_batch)
         accepted = batch.join(rejected, "doc_id", "left_anti").localCheckpoint()
         st = _epoch_stats(
             batch, {"rb": rej_batch, "acc": accepted, "ri": rej_index}
         )
-        n_rej_index = st.get("ri", (0, 0))[0]
-        n_rej_batch, n_accepted = st["rb"][0], st["acc"][0]
 
-        append_partitions(accepted, docs_root, ["epoch"], txid)
+        txn.append(accepted, docs_root, ["epoch"])
         acc_sig = accepted.select("doc_id", "epoch").join(sig, "doc_id")
         _append_neardup_index(
-            acc_sig, sig_root, bands_root, txid, index_file_rows
-        )
-        # arrived_id_sum: a content checksum of WHICH docs this epoch
-        # saw — lets auditors (and the registry oracle) pin batch
-        # membership, not just cardinality.  The one-row ledger commits
-        # DRIVER-SIDE (append_rows): same manifest/txid protocol, no
-        # Spark job for a row whose values are already collected
-        # (guide §1.2 — the per-epoch job count is the audit-tier floor).
-        append_rows(
-            spark,
-            [(int(epoch_id), *st["arr"], int(n_capped), n_rej_index,
-              n_rej_batch, n_accepted)],
-            "epoch int, n_arrived long, arrived_id_sum long, "
-            "n_capped_shingles long, n_rejected_index long, "
-            "n_rejected_batch long, n_accepted long",
-            stats_root, ["epoch"], txid,
+            acc_sig, sig_root, bands_root, txn.txid, index_file_rows
         )
 
+        # per-shingle arrived-doc counts of this epoch.  Counts include
+        # REJECTED docs: the gate saw them, and their boilerplate is
+        # exactly the signal the cap exists for.  distinct (doc, h): two
+        # shingles hash-colliding within one doc must count that doc
+        # once (df = docs-per-hash, exactly).
+        doc_counts = (
+            hashed.dropDuplicates(["doc_id", "h"])
+            .groupBy("h")
+            .agg(F.count("*").alias("df"))
+        )
         if df_cap is not None and df_mode == "cms":
-            # fold this epoch's per-shingle arrived-doc counts into the
-            # standing count-min sketch: batch counts hash into the d×w
-            # cells and the WHOLE sketch (bounded, ≤ d·w non-zero rows)
-            # is re-summed and replaced under the epoch txid —
-            # exactly-once under replay, cost independent of vocabulary.
-            batch_counts = (
-                hashed.dropDuplicates(["doc_id", "h"])
-                .groupBy("h")
-                .agg(F.count("*").alias("df"))
-            )
-            inc = (
-                batch_counts.select(
-                    F.explode(
-                        F.array(
-                            *[
-                                F.struct(
-                                    F.lit(j).alias("j"),
-                                    _gate_cms_bucket(j, F.col("h")).alias(
-                                        "bucket"
-                                    ),
-                                    F.col("df").cast("long").alias("cnt"),
-                                )
-                                for j in range(_GATE_CMS_D)
-                            ]
-                        )
-                    ).alias("jbc")
-                )
-                .select("jbc.j", "jbc.bucket", "jbc.cnt")
-            )
-            merged = inc
-            if manifest_at(df_root, df_v)["partitions"]:
+            # fold them into the standing count-min sketch: batch counts
+            # hash into the d×w cells and the WHOLE sketch (bounded,
+            # ≤ d·w non-zero rows) is re-summed and replaced under the
+            # epoch txid — exactly-once under replay, cost independent
+            # of vocabulary.
+            merged = doc_counts.select(
+                _cms_cells(F.col("h"), F.col("df").cast("long").alias("cnt")).alias("jbc")
+            ).select("jbc.j", "jbc.bucket", "jbc.cnt")
+            standing = txn.read(df_root)
+            if standing is not None:
                 merged = merged.unionByName(
-                    read_table(spark, df_root, version=df_v).select(
+                    standing.select(
                         "j", "bucket", F.col("cnt").cast("long").alias("cnt")
                     )
                 )
             merged = merged.groupBy("j", "bucket").agg(
                 F.sum("cnt").alias("cnt")
             )
-            replace_partitions(
-                merged.repartition(F.col("j")), df_root, ["j"], txid
-            )
+            txn.replace(merged.repartition(F.col("j")), df_root, ["j"])
         elif df_cap is not None:
-            # merge this epoch's per-shingle arrived-doc counts into the
-            # standing df matview — TOUCHED BUCKETS ONLY (the
-            # write_stream_rollup_merge shape: mergeable counts, replace
-            # just the slice this batch's shingles land in, under the
-            # epoch txid — exactly-once under replay).  Counts include
-            # REJECTED docs: the gate saw them, and their boilerplate is
-            # exactly the signal the cap exists for.  distinct (doc, h):
-            # two shingles hash-colliding within one doc must count that
-            # doc once (df = docs-per-hash, exactly).
+            # merge them into the standing df matview — TOUCHED BUCKETS
+            # ONLY (the write_stream_rollup_merge shape: mergeable
+            # counts, replace just the slice this batch's shingles land
+            # in, under the epoch txid — exactly-once under replay).
             # layout comes from the TABLE, not the call (ADVICE r10):
             # a restart with a different df_buckets must not split
             # standing hashes across two bucket layouts
             eff_buckets = _df_table_buckets(df_root, df_buckets)
-            batch_counts = (
-                hashed.dropDuplicates(["doc_id", "h"])
-                .groupBy("h")
-                .agg(F.count("*").alias("df"))
-                .withColumn("bucket", F.pmod("h", F.lit(eff_buckets)))
-                .localCheckpoint()
-            )
+            batch_counts = doc_counts.withColumn(
+                "bucket", F.pmod("h", F.lit(eff_buckets))
+            ).localCheckpoint()
             touched = sorted(
                 int(r["bucket"])
                 for r in batch_counts.select("bucket").distinct().collect()
             )
             touched_set = set(touched)
             merged = batch_counts.select("h", "df")
-            if manifest_at(df_root, df_v)["partitions"]:
-                try:
-                    standing = read_table(
-                        spark, df_root, version=df_v,
-                        partition_filter=lambda kv: int(kv["bucket"]) in touched_set,
-                    )
-                    merged = merged.unionByName(
-                        standing.select(
-                            "h", F.col("df").cast("long").alias("df")
-                        )
-                    )
-                except ValueError:
-                    pass  # none of the touched buckets exist yet
+            standing = txn.read(
+                df_root,
+                partition_filter=lambda kv: int(kv["bucket"]) in touched_set,
+            )
+            if standing is not None:  # None: no touched bucket exists yet
+                merged = merged.unionByName(
+                    standing.select("h", F.col("df").cast("long").alias("df"))
+                )
             merged = (
                 merged.groupBy("h")
                 .agg(F.sum("df").alias("df"))
@@ -1034,26 +1048,35 @@ def write_stream_neardup_gate(
                 for t in ("hot", "cold")
                 for b in touched
             ]
-            replace_partitions(
-                merged, df_root, ["tier", "bucket"], txid,
-                drop_parts=droppable,
+            txn.replace(
+                merged, df_root, ["tier", "bucket"], drop_parts=droppable
             )
 
-        if compact_every and (int(epoch_id) + 1) % compact_every == 0:
+        # arrived_id_sum: a content checksum of WHICH docs this epoch
+        # saw — lets auditors (and the registry oracle) pin batch
+        # membership, not just cardinality.
+        txn.ledger(
+            stats_root,
+            "n_arrived long, arrived_id_sum long, n_capped_shingles long, "
+            "n_rejected_index long, n_rejected_batch long, n_accepted long",
+            *st["arr"], n_capped, st.get("ri", (0, 0))[0], st["rb"][0],
+            st["acc"][0],
+        )
+
+        if compact_every and (txn.epoch_id + 1) % compact_every == 0:
             # scheduled index maintenance: collapse the per-epoch append
             # dirs, re-sorting so footer-range pruning keeps its power.
-            # Maintenance runs under its own txid — snapshot-guarded
-            # (expect_dirs), so one racing an epoch commit aborts cleanly
-            # rather than erasing it; replay is a no-op.
-            mtx = f"maintenance-epoch-{epoch_id}"
-            compact_partitions(spark, sig_root, f"{mtx}-sigs",
-                               sort_by=["doc_id"])
-            compact_partitions(spark, bands_root, f"{mtx}-bands",
-                               sort_by=["band_key"])
+            # Maintenance runs under its own txid, outside the epoch
+            # transaction — snapshot-guarded (expect_dirs), so one racing
+            # an epoch commit aborts cleanly rather than erasing it;
+            # replay is a no-op.
+            mtx = f"maintenance-{txn.txid}"
+            at.compact_partitions(txn.spark, sig_root, f"{mtx}-sigs",
+                                  sort_by=["doc_id"])
+            at.compact_partitions(txn.spark, bands_root, f"{mtx}-bands",
+                                  sort_by=["band_key"])
 
-    return write_foreach_batch(
-        sdf, _commit_batch, checkpoint=checkpoint, output_mode="append"
-    )
+    return _acid_sink(sdf, _epoch, checkpoint)
 
 
 def write_stream_decontam_gate(
@@ -1085,9 +1108,9 @@ def write_stream_decontam_gate(
        CONTAMINATED (quarantined with evidence when
        ``quarantine_root`` is given — an audit needs the rejects, not
        just their count), the rest are accepted;
-    4. appends survivors, quarantined rows, and a one-row ledger
+    4. appends survivors, quarantined rows, and then a one-row ledger
        (arrived / contaminated / accepted + arrived-id checksum) —
-       all through ``append_partitions`` with txid = epoch id, so a
+       all through the epoch transaction with txid = epoch id, so a
        replayed epoch is a no-op on every table (exactly-once).
 
     Unlike the near-dup gate there is NO evolving cross-epoch state:
@@ -1096,34 +1119,25 @@ def write_stream_decontam_gate(
     — the stateful part is the exactly-once ledger and the standing
     quarantine/docs tables.
     """
-    from pyspark.sql import functions as F
 
-    from ..io.acid_table import append_partitions, append_rows
-
-    def _commit_batch(df: DataFrame, epoch_id: int) -> None:
-        spark = df.sparkSession
-        txid = f"epoch-{epoch_id}"
-        batch = df.withColumn("epoch", F.lit(int(epoch_id)))
-        contam_ids = _contaminated_ids(spark, batch, eval_root)
+    def _epoch(df: DataFrame, txn: EpochTxn) -> None:
+        batch = txn.with_epoch(df)
+        contam_ids = _contaminated_ids(txn.spark, batch, eval_root)
         accepted = batch.join(contam_ids, "doc_id", "left_anti")
         quarantined = batch.join(contam_ids, "doc_id", "left_semi")
         st = _epoch_stats(batch, {"q": contam_ids})
         (n_arrived, id_sum), n_contam = st["arr"], st["q"][0]
-        append_partitions(accepted, docs_root, ["epoch"], txid)
+        txn.append(accepted, docs_root, ["epoch"])
         if quarantine_root is not None and n_contam:
-            append_partitions(quarantined, quarantine_root, ["epoch"], txid)
-        # one-row ledger: driver-side commit, no Spark job (guide §1.2)
-        append_rows(
-            spark,
-            [(int(epoch_id), n_arrived, id_sum, n_contam, n_arrived - n_contam)],
-            "epoch int, n_arrived long, arrived_id_sum long, "
-            "n_contaminated long, n_accepted long",
-            stats_root, ["epoch"], txid,
+            txn.append(quarantined, quarantine_root, ["epoch"])
+        txn.ledger(
+            stats_root,
+            "n_arrived long, arrived_id_sum long, n_contaminated long, "
+            "n_accepted long",
+            n_arrived, id_sum, n_contam, n_arrived - n_contam,
         )
 
-    return write_foreach_batch(
-        sdf, _commit_batch, checkpoint=checkpoint, output_mode="append"
-    )
+    return _acid_sink(sdf, _epoch, checkpoint)
 
 
 def write_stream_curation_gate(
@@ -1207,9 +1221,6 @@ def write_stream_curation_gate(
     table at once.  Per-epoch cost adds Θ(batch tokens) + Θ(batch·√K)
     — still independent of every standing table's size.
     """
-    from pyspark.sql import functions as F
-
-    from ..io.acid_table import append_partitions, append_rows, version_before_txid
     from ..operators.dedup import minhash_from_hashes, shingle_hashes
 
     if bands_root is None:
@@ -1219,34 +1230,26 @@ def write_stream_curation_gate(
         # Resolve (and on first write persist) the searchable artifacts'
         # bucket layouts once, at gate construction — the same
         # restart-safety rule as write_stream_bm25_index_gate.
-        from ..io.layout import table_config
         from ..operators.retrieval_served import _CELL_BUCKETS
 
         s_tokb, s_fwdb = bm25_table_layout(
             search_roots["postings"], search_roots["forward"]
         )
         s_cellb = int(
-            table_config(
+            layout.table_config(
                 search_roots["ann"], {"cell_buckets": _CELL_BUCKETS}
             )["cell_buckets"]
         )
 
-    def _commit_batch(df: DataFrame, epoch_id: int) -> None:
-        spark = df.sparkSession
-        txid = f"epoch-{epoch_id}"
-        # Crash-replay anchor: every standing-table READ in this epoch
-        # is pinned to the last version committed BEFORE this txid.
-        sig_v = version_before_txid(sig_root, txid)
-        bands_v = version_before_txid(bands_root, txid)
-        batch = df.withColumn("epoch", F.lit(int(epoch_id)))
+    def _epoch(df: DataFrame, txn: EpochTxn) -> None:
+        batch = txn.with_epoch(df)
 
         # 1. near-dup screen (T8e core)
         sig = minhash_from_hashes(
             shingle_hashes(batch.select("doc_id", "text"))
         ).localCheckpoint()
         _, rej_index, rej_batch = _neardup_screen(
-            spark, sig, sig_root, bands_root, sig_v, bands_v,
-            min_agree, prune_key_cap,
+            txn, sig, sig_root, bands_root, min_agree, prune_key_cap
         )
         rejected = (
             rej_batch if rej_index is None
@@ -1255,7 +1258,7 @@ def write_stream_curation_gate(
         survivors = batch.join(rejected, "doc_id", "left_anti")
 
         # 2. decontamination of the survivors (T8h core)
-        contam_ids = _contaminated_ids(spark, survivors, eval_root)
+        contam_ids = _contaminated_ids(txn.spark, survivors, eval_root)
         quarantined = survivors.join(contam_ids, "doc_id", "left_semi")
         accepted = survivors.join(contam_ids, "doc_id", "left_anti").localCheckpoint()
         if search_roots is not None:
@@ -1269,89 +1272,53 @@ def write_stream_curation_gate(
             {"rb": rej_batch, "q": contam_ids, "acc": accepted, "ri": rej_index},
             {"dl": (fr["dl"], "len")} if search_roots is not None else None,
         )
-        n_rej_index = st.get("ri", (0, 0))[0]
-        n_rej_batch, n_quarantined = st["rb"][0], st["q"][0]
-        n_accepted = st["acc"][0]
+        n_quarantined, n_accepted = st["q"][0], st["acc"][0]
 
         # 3. commits — every table under the SAME epoch txid
-        append_partitions(accepted, docs_root, ["epoch"], txid)
+        txn.append(accepted, docs_root, ["epoch"])
         if n_quarantined:
-            append_partitions(quarantined, quarantine_root, ["epoch"], txid)
+            txn.append(quarantined, quarantine_root, ["epoch"])
         acc_sig = accepted.select("doc_id", "epoch").join(sig, "doc_id")
         _append_neardup_index(
-            acc_sig, sig_root, bands_root, txid, index_file_rows
+            acc_sig, sig_root, bands_root, txn.txid, index_file_rows
         )
 
         # 3b. searchable-corpus appends (same txid — see docstring)
         if search_roots is not None:
-            from ..io.layout import align_epoch_append
-            from ..operators._helpers import shuffle_parts
             from ..operators.retrieval_served import _cell_bucket
             from ..operators.similarity import _two_level_assign
 
-            sp = shuffle_parts(spark)
-            acc_lens = st["dl"][1]
             if n_accepted:
                 # Tokenize the accepted batch ONCE per epoch: checkpoint
                 # the postings rows (Θ(batch tokens), batch-bounded) and
                 # derive the forward rows from them instead of
                 # re-evaluating the tokenize+group lineage per table
                 # (guide §1.2).
-                postings = fr["postings"].withColumn(
-                    "epoch", F.lit(int(epoch_id))
-                ).localCheckpoint()
-                append_partitions(
-                    align_epoch_append(postings, ["tok_bucket"], ["tok"], sp),
-                    search_roots["postings"], ["tok_bucket"], txid,
+                _append_postings_forward(
+                    txn, txn.with_epoch(fr["postings"]).localCheckpoint(),
+                    search_roots["postings"], search_roots["forward"], s_fwdb,
                 )
-                append_partitions(
-                    align_epoch_append(
-                        postings.select(
-                            "doc_id", "tok", "tf",
-                            F.pmod(
-                                "doc_id", F.lit(int(s_fwdb))
-                            ).alias("doc_bucket"),
-                            "epoch",
-                        ),
-                        ["doc_bucket"], ["doc_id"], sp,
-                    ),
-                    search_roots["forward"], ["doc_bucket"], txid,
-                )
-            cents = _pinned_cents(spark, search_roots["cents"], txid)
+            cents = _pinned_cents(txn, search_roots["cents"])
             ann = (
-                _two_level_assign(
-                    accepted.filter(F.col("qv").isNotNull()).select(
-                        F.col("doc_id").alias("vec_id"), "qv", "nrm"
-                    ),
-                    cents,
+                txn.with_epoch(
+                    _two_level_assign(
+                        accepted.filter(F.col("qv").isNotNull()).select(
+                            F.col("doc_id").alias("vec_id"), "qv", "nrm"
+                        ),
+                        cents,
+                    ).select("vec_id", "centroid_id", "qv", "nrm")
                 )
-                .select("vec_id", "centroid_id", "qv", "nrm")
-                .withColumn("epoch", F.lit(int(epoch_id)))
                 .withColumn(
                     "cell_bucket", _cell_bucket(F.col("centroid_id"), s_cellb)
                 )
                 .localCheckpoint()
             )
             if ann.count():
-                append_partitions(
-                    align_epoch_append(ann, ["cell_bucket"], ["vec_id"], sp),
-                    search_roots["ann"], ["cell_bucket"], txid,
+                txn.append_aligned(
+                    ann, search_roots["ann"], ["cell_bucket"], ["vec_id"]
                 )
-            # BM25 stats LAST among the searchable appends (ADVICE r13):
-            # the ledger commit is the epoch's serving-pin anchor
-            # (latest_consistent_version), so it must be the final table
-            # commit of the epoch — a crash before it leaves every
-            # standing table pinned to the previous epoch, never a
-            # ledger that includes docs the ANN index lacks.  One-row
-            # frame: driver-side commit, no Spark job (guide §1.2).
-            append_rows(
-                spark,
-                [(int(epoch_id), int(n_accepted), int(acc_lens))],
-                "epoch int, n_docs long, len_sum long",
-                search_roots["bm25_stats"], ["epoch"], txid,
-            )
 
-        # 4. per-doc verdicts + the epoch ledger
+        # 4. per-doc verdicts, then the ledgers
         def tag(ids_df, verdict: str):
             return ids_df.select("doc_id").withColumn(
                 "verdict", F.lit(verdict)
@@ -1364,38 +1331,34 @@ def write_stream_curation_gate(
             verdicts = verdicts.unionByName(
                 tag(rej_index, "rejected_neardup_index")
             )
-        append_partitions(
-            verdicts.withColumn("epoch", F.lit(int(epoch_id))),
-            verdicts_root,
-            ["epoch"],
-            txid,
+        txn.append(txn.with_epoch(verdicts), verdicts_root, ["epoch"])
+        if search_roots is not None:
+            # The BM25 stats ledger follows postings, forward and ANN
+            # (ADVICE r13): it is the epoch's serving-pin anchor
+            # (latest_consistent_version), so a crash before it leaves
+            # every searchable table pinned to the previous epoch, never
+            # a ledger that includes docs the ANN index lacks.
+            txn.ledger(
+                search_roots["bm25_stats"], "n_docs long, len_sum long",
+                n_accepted, st["dl"][1],
+            )
+        txn.ledger(
+            stats_root,
+            "n_arrived long, arrived_id_sum long, n_rejected_index long, "
+            "n_rejected_batch long, n_quarantined long, n_accepted long",
+            *st["arr"], st.get("ri", (0, 0))[0], st["rb"][0], n_quarantined,
+            n_accepted,
         )
-        # one-row epoch ledger: driver-side commit, no Spark job
-        append_rows(
-            spark,
-            [(int(epoch_id), *st["arr"], n_rej_index, n_rej_batch,
-              n_quarantined, n_accepted)],
-            "epoch int, n_arrived long, arrived_id_sum long, "
-            "n_rejected_index long, n_rejected_batch long, "
-            "n_quarantined long, n_accepted long",
-            stats_root, ["epoch"], txid,
-        )
 
-    return write_foreach_batch(
-        sdf, _commit_batch, checkpoint=checkpoint, output_mode="append"
-    )
+    return _acid_sink(sdf, _epoch, checkpoint)
 
 
-def _pinned_cents(spark, cents_root: str, txid: str) -> DataFrame:
+def _pinned_cents(txn: EpochTxn, cents_root: str) -> DataFrame:
     """The standing IVF quantizer as an epoch's assignment reads it:
-    PINNED to the last version committed before ``txid``
-    (``version_before_txid``), so a crash-replayed epoch sees the same
-    centroids even if a retrain landed mid-stream."""
-    from ..io.acid_table import read_table, version_before_txid
-
-    return read_table(
-        spark, cents_root, version=version_before_txid(cents_root, txid)
-    ).select(
+    PINNED to the last version committed before the epoch's txid, so a
+    crash-replayed epoch sees the same centroids even if a retrain
+    landed mid-stream."""
+    return txn.read(cents_root).select(
         F.col("centroid_id").cast("long").alias("centroid_id"),
         F.col("cqv").cast("array<bigint>").alias("cqv"),
         F.col("cnrm").cast("long").alias("cnrm"),
@@ -1456,12 +1419,6 @@ def write_stream_ann_index_gate(
     maintenance path — ``compact_partitions``, proven in
     ``stream_neardup_index_compaction_audit``).
     """
-    from ..io.acid_table import (
-        append_partitions,
-        append_rows,
-        read_table,
-        version_before_txid,
-    )
     from ..operators.similarity import (
         _PQ_SUBS,
         _cb_row_from_entries,
@@ -1469,13 +1426,10 @@ def write_stream_ann_index_gate(
         _two_level_assign,
     )
 
-    def _commit_batch(df: DataFrame, epoch_id: int) -> None:
-        spark = df.sparkSession
-        txid = f"epoch-{epoch_id}"
-        cb_v = version_before_txid(cb_root, txid)
-        cents = _pinned_cents(spark, cents_root, txid)
+    def _epoch(df: DataFrame, txn: EpochTxn) -> None:
+        cents = _pinned_cents(txn, cents_root)
         cb_row = _cb_row_from_entries(
-            read_table(spark, cb_root, version=cb_v).select(
+            txn.read(cb_root).select(
                 F.col("s").cast("int").alias("s"),
                 F.col("c").cast("int").alias("c"),
                 F.col("cs").cast("array<bigint>").alias("cs"),
@@ -1489,16 +1443,16 @@ def write_stream_ann_index_gate(
             "qv",
         )
         enc = (
-            asg.crossJoin(F.broadcast(cb_row))
-            .select(
-                "vec_id",
-                "centroid_id",
-                "sim_e6",
-                F.array(
-                    *[_pq_code_for(F.lit(s)) for s in range(_PQ_SUBS)]
-                ).alias("codes"),
+            txn.with_epoch(
+                asg.crossJoin(F.broadcast(cb_row)).select(
+                    "vec_id",
+                    "centroid_id",
+                    "sim_e6",
+                    F.array(
+                        *[_pq_code_for(F.lit(s)) for s in range(_PQ_SUBS)]
+                    ).alias("codes"),
+                )
             )
-            .withColumn("epoch", F.lit(int(epoch_id)))
             .withColumn(
                 "cell_bucket", F.pmod("centroid_id", F.lit(index_buckets))
             )
@@ -1523,35 +1477,15 @@ def write_stream_ann_index_gate(
                 F.lit(0),
             ).alias("csum"),
         ).collect()[0]
-        from ..io.layout import align_epoch_append
-        from ..operators._helpers import shuffle_parts
-
-        append_partitions(
-            align_epoch_append(
-                enc, ["cell_bucket"], ["vec_id"], shuffle_parts(spark)
-            ),
-            index_root, ["cell_bucket"], txid,
-        )
-        # one-row epoch ledger: driver-side commit, no Spark job
-        append_rows(
-            spark,
-            [
-                (
-                    int(epoch_id),
-                    int(stats["n"]),
-                    int(stats["ids"]),
-                    int(stats["cells"]),
-                    int(stats["csum"]),
-                )
-            ],
-            "epoch int, n_arrived long, arrived_id_sum long, "
-            "n_cells_touched long, code_checksum long",
-            stats_root, ["epoch"], txid,
+        txn.append_aligned(enc, index_root, ["cell_bucket"], ["vec_id"])
+        txn.ledger(
+            stats_root,
+            "n_arrived long, arrived_id_sum long, n_cells_touched long, "
+            "code_checksum long",
+            stats["n"], stats["ids"], stats["cells"], stats["csum"],
         )
 
-    return write_foreach_batch(
-        sdf, _commit_batch, checkpoint=checkpoint, output_mode="append"
-    )
+    return _acid_sink(sdf, _epoch, checkpoint)
 
 
 # CREATION-TIME defaults only: a table's actual layout lives in its
@@ -1575,21 +1509,19 @@ def bm25_table_layout(
     tokstats vocab table shares the postings' token-bucket layout (its
     stage-0 pruning hashes the same way).  Existing records always win
     over the passed values — a restart cannot re-split standing rows."""
-    from ..io.layout import table_config
-
     tokb = int(
-        table_config(
+        layout.table_config(
             postings_root, {"tok_buckets": int(tok_buckets or _BM25_TOK_BUCKETS)}
         )["tok_buckets"]
     )
     fwdb = int(
-        table_config(
+        layout.table_config(
             forward_root, {"fwd_buckets": int(fwd_buckets or _BM25_FWD_BUCKETS)}
         )["fwd_buckets"]
     )
     if tokstats_root is not None:
         got = int(
-            table_config(tokstats_root, {"tok_buckets": tokb})["tok_buckets"]
+            layout.table_config(tokstats_root, {"tok_buckets": tokb})["tok_buckets"]
         )
         if got != tokb:
             raise ValueError(
@@ -1618,8 +1550,6 @@ def bm25_index_batch_frames(
     writing to a STANDING table must pass the table's persisted counts
     (``bm25_table_layout``), never the module defaults.
     """
-    from ..operators._helpers import md5_bucket16
-
     d = df.select("doc_id", F.split("text", " ").alias("ws"))
     dl = d.select("doc_id", F.size("ws").alias("len"))
     tok = (
@@ -1634,6 +1564,29 @@ def bm25_index_batch_frames(
         "doc_bucket", F.pmod("doc_id", F.lit(int(fwd_buckets)))
     )
     return {"postings": postings, "forward": forward, "dl": dl}
+
+
+def _append_postings_forward(
+    txn: EpochTxn,
+    postings: DataFrame,
+    postings_root: str,
+    forward_root: str,
+    fwd_buckets: int,
+) -> None:
+    """Append an epoch's (checkpointed, epoch-tagged) postings to the
+    token-bucketed postings index and, re-bucketed by doc, to the
+    forward index.  The forward rows ARE the postings rows — deriving
+    them from the checkpoint tokenizes the batch once per epoch, not
+    once per table (guide §1.2: don't compute things twice)."""
+    txn.append_aligned(postings, postings_root, ["tok_bucket"], ["tok"])
+    txn.append_aligned(
+        postings.select(
+            "doc_id", "tok", "tf",
+            F.pmod("doc_id", F.lit(int(fwd_buckets))).alias("doc_bucket"),
+            "epoch",
+        ),
+        forward_root, ["doc_bucket"], ["doc_id"],
+    )
 
 
 def write_stream_bm25_index_gate(
@@ -1666,16 +1619,15 @@ def write_stream_bm25_index_gate(
     3. Append the same rows to the FORWARD index partitioned by doc
        bucket (doc_id % 16) — the RM3 feedback step reads the top
        docs' terms from ≤ k doc buckets instead of scanning postings.
-    4. Append one ledger row — (epoch, n_docs, len_sum, doc-id
+    4. (optional, ``tokstats_root``) Append the batch's per-token df
+       DELTAS to the standing vocab table — the long-query two-stage
+       serve ranks query terms by summed df without touching postings
+       (``bm25_longdoc_two_stage_served``).
+    5. Append one ledger row LAST — (epoch, n_docs, len_sum, doc-id
        checksum, n_postings, tf_sum) — to the stats table.  N and
        avglen are never stored as mutable scalars: serving derives
        them by summing the (tiny) ledger, so a crash-replayed epoch
        cannot double-count them.
-
-    5. (optional, ``tokstats_root``) Append the batch's per-token df
-       DELTAS to the standing vocab table — the long-query two-stage
-       serve ranks query terms by summed df without touching postings
-       (``bm25_longdoc_two_stage_served``).
 
     All appends share ONE epoch txid: a replayed epoch is a
     no-op on postings, forward, and ledger at once.  They are still
@@ -1695,8 +1647,6 @@ def write_stream_bm25_index_gate(
     time from the ledger + the probed buckets, so a served score is
     always consistent with the index AS OF the read version.
     """
-    from ..io.acid_table import append_partitions, append_rows
-
     # Layout resolution happens ONCE, at gate construction: the table's
     # persisted record wins over the passed values, so a restarted gate
     # can never split standing tokens across two bucket layouts.
@@ -1705,107 +1655,40 @@ def write_stream_bm25_index_gate(
         tok_buckets=tok_buckets, fwd_buckets=fwd_buckets,
     )
 
-    def _commit_batch(df: DataFrame, epoch_id: int) -> None:
-        from ..io.layout import align_epoch_append
-        from ..operators._helpers import shuffle_parts
-
-        spark = df.sparkSession
-        txid = f"epoch-{epoch_id}"
+    def _epoch(df: DataFrame, txn: EpochTxn) -> None:
         fr = bm25_index_batch_frames(df, tokb, fwdb)
-        postings = fr["postings"].withColumn(
-            "epoch", F.lit(int(epoch_id))
-        ).localCheckpoint()
-        # ONE ledger-stats job per epoch: the postings rollup and the
-        # doc-length rollup are both single-row aggregates, so they ride
-        # one unioned collect instead of two driver round-trips (each
-        # epoch job carries the full fixed scheduling/commit overhead —
-        # guide §1.2).
-        stat_rows = {
-            r["k"]: r
-            for r in postings.agg(
-                F.countDistinct("doc_id").alias("a"),
-                F.coalesce(F.sum("tf"), F.lit(0)).alias("b"),
-                F.count("*").alias("c"),
-            )
-            .select(F.lit("post").alias("k"), "a", "b", "c")
-            .unionByName(
-                fr["dl"]
-                .agg(
-                    F.coalesce(F.sum("len"), F.lit(0)).alias("a"),
-                    F.coalesce(F.sum("doc_id"), F.lit(0)).alias("b"),
-                )
-                .select(
-                    F.lit("dl").alias("k"), "a", "b",
-                    F.lit(0).cast("long").alias("c"),
-                )
-            )
-            .collect()
-        }
-        stats = {
-            "n_docs": stat_rows["post"]["a"],
-            "tf_sum": stat_rows["post"]["b"],
-            "n_postings": stat_rows["post"]["c"],
-        }
-        dstat = {
-            "len_sum": stat_rows["dl"]["a"],
-            "id_sum": stat_rows["dl"]["b"],
-        }
-        # Bucket-align every append (align_epoch_append): one staged
-        # file per TOUCHED bucket per epoch, not one per (task ×
-        # bucket) — the difference between Θ(buckets) and
-        # Θ(tasks · buckets) small files per epoch at corpus-scaled
-        # layouts.
-        sp = shuffle_parts(spark)
-        append_partitions(
-            align_epoch_append(postings, ["tok_bucket"], ["tok"], sp),
-            postings_root, ["tok_bucket"], txid
+        postings = txn.with_epoch(fr["postings"]).localCheckpoint()
+        # ONE ledger-stats job per epoch, one aggregate per frame:
+        # postings (count, tf sum, distinct docs) and doc lengths (the
+        # doc-id checksum, len sum)
+        st = _epoch_stats(
+            fr["dl"],
+            {"post": postings},
+            {
+                "len": (fr["dl"], "len"),
+                "tf": (postings, "tf"),
+                "docs": (postings, F.countDistinct("doc_id")),
+            },
         )
-        append_partitions(
-            align_epoch_append(
-                # the forward rows ARE the postings rows re-bucketed by
-                # doc — derive them from the CHECKPOINTED postings so the
-                # batch is tokenized once per epoch, not once per table
-                # (guide §1.2: don't compute things twice)
-                postings.select(
-                    "doc_id", "tok", "tf",
-                    F.pmod("doc_id", F.lit(int(fwdb))).alias("doc_bucket"),
-                    "epoch",
-                ),
-                ["doc_bucket"], ["doc_id"], sp,
-            ),
-            forward_root, ["doc_bucket"], txid
-        )
+        _append_postings_forward(txn, postings, postings_root, forward_root, fwdb)
         if tokstats_root is not None:
             # per-epoch df DELTAS (df is additive over batches of new
             # docs): serving sums them, so a replayed epoch can't
             # double-count — the ledger rule applied to the vocab table
-            append_partitions(
-                align_epoch_append(
-                    postings.groupBy("tok", "tok_bucket")
-                    .agg(F.count("*").alias("df"))
-                    .withColumn("epoch", F.lit(int(epoch_id))),
-                    ["tok_bucket"], ["tok"], sp,
+            txn.append_aligned(
+                txn.with_epoch(
+                    postings.groupBy("tok", "tok_bucket").agg(
+                        F.count("*").alias("df")
+                    )
                 ),
-                tokstats_root, ["tok_bucket"], txid,
+                tokstats_root, ["tok_bucket"], ["tok"],
             )
-        # one-row epoch ledger: driver-side commit, no Spark job
-        append_rows(
-            spark,
-            [
-                (
-                    int(epoch_id),
-                    int(stats["n_docs"]),
-                    int(dstat["len_sum"]),
-                    int(dstat["id_sum"]),
-                    int(stats["n_postings"]),
-                    int(stats["tf_sum"]),
-                )
-            ],
-            "epoch int, n_docs long, len_sum long, doc_id_sum long, "
-            "n_postings long, tf_sum long",
-            stats_root, ["epoch"], txid,
+        txn.ledger(
+            stats_root,
+            "n_docs long, len_sum long, doc_id_sum long, n_postings long, "
+            "tf_sum long",
+            st["docs"][1], st["len"][1], st["arr"][1], st["post"][0],
+            st["tf"][1],
         )
 
-    return write_foreach_batch(
-        sdf, _commit_batch, checkpoint=checkpoint, output_mode="append"
-    )
+    return _acid_sink(sdf, _epoch, checkpoint)

@@ -1019,11 +1019,11 @@ def _neardup_probe_audit(spark, docs, bands_root) -> DataFrame:
     each epoch's append hash-repartitions on ``bj`` before the
     partitioned write.  Driver-side state is bounded: 8 × batch docs
     keys + ≤ 16 file entries."""
-    from ..io.acid_table import _dirs, manifest_at, version_before_txid
+    from ..io.acid_table import _dirs, manifest_at
     from ..operators.dedup import band_key_array, minhash_signatures
-    from .core import band_range_hits
+    from .core import EpochTxn, band_range_hits
 
-    bands_v = version_before_txid(bands_root, "epoch-2")
+    bands_v = EpochTxn(spark, 2).pinned_version(bands_root)
     man = manifest_at(bands_root, bands_v)
     sig2 = minhash_signatures(
         docs.filter(F.pmod("doc_id", F.lit(3)) == 2).select("doc_id", "text")

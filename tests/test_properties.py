@@ -424,3 +424,55 @@ def test_unimax_closed_form_matches_iterative_waterfill(tokens, budget_pct):
     want = iterative(caps, b)
     assert sum(got) <= b or got == list(caps)
     assert got == want
+
+
+# Ledger rows commit driver-side through ``append_rows``; for any
+# partition value the result must be the Spark write path's: same
+# manifest partition keys, same rows read back.  Int and string values
+# take the local writer, the rest (and strings needing hive escaping)
+# fall back to Spark.
+_part_values = st.sampled_from([
+    ("long", st.integers(min_value=-(10**12), max_value=10**12)),
+    ("string", st.text(alphabet="ab_-.z =/%", max_size=4)),
+    ("boolean", st.booleans()),
+    ("double", st.floats(allow_nan=False, allow_infinity=False)),
+]).flatmap(
+    lambda c: st.tuples(
+        st.just(c[0]), st.lists(st.one_of(st.none(), c[1]), min_size=1, max_size=4)
+    )
+)
+
+
+@given(case=_part_values)
+@_settings
+def test_append_rows_matches_append_partitions(spark, case):
+    import shutil
+    import tempfile
+
+    from data_engineer_coder_spark.io.acid_table import (
+        append_partitions,
+        append_rows,
+        current_manifest,
+        read_table,
+    )
+
+    ptype, keys = case
+    ddl = f"k {ptype}, n long"
+    rows = [(k, i) for i, k in enumerate(keys)]
+    base = tempfile.mkdtemp(prefix="ledger_prop_")
+    try:
+        local, ref = f"{base}/rows", f"{base}/spark"
+        append_rows(spark, rows, ddl, local, ["k"], "t1")
+        append_partitions(spark.createDataFrame(rows, ddl), ref, ["k"], "t1")
+        assert sorted(current_manifest(local)["partitions"]) == sorted(
+            current_manifest(ref)["partitions"]
+        )
+
+        def back(root):
+            return sorted(
+                ((r["k"], r["n"]) for r in read_table(spark, root).collect()), key=repr
+            )
+
+        assert back(local) == back(ref)
+    finally:
+        shutil.rmtree(base, ignore_errors=True)

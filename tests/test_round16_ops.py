@@ -31,6 +31,12 @@ from data_engineer_coder_spark.io.acid_table import (
 _GATE_JOB_CEILINGS = {
     "stream_decontaminate_ingest": 48,
     "stream_neardup_ingest": 109,
+    # counted the same way before the gates shared one epoch transaction
+    "stream_bm25_index_ingest": 71,
+    "stream_ann_index_ingest": 64,
+    "stream_curation_ingest": 169,
+    "stream_curation_searchable": 404,
+    "stream_rollup_matview": 23,
 }
 
 
