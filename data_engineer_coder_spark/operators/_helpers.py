@@ -169,3 +169,15 @@ def md5_bucket16(col: Column | str) -> Column:
 def sql_md5_bucket16(expr: str) -> str:
     """DuckDB twin of :func:`md5_bucket16`."""
     return f"('0x' || substring(md5(CAST(({expr}) AS VARCHAR)), 1, 4))::INT"
+
+
+def sql_materialize(sql: str, ctes) -> str:
+    """Mark each named CTE ``AS MATERIALIZED`` (its first ``<name> AS (``).
+
+    DuckDB inlines a CTE at every reference, so an oracle whose heavy
+    CTEs are referenced many times downstream re-derives them per
+    reference and can go combinatorial; materializing them evaluates
+    each once."""
+    for cte in ctes:
+        sql = sql.replace(f"{cte} AS (", f"{cte} AS MATERIALIZED (", 1)
+    return sql

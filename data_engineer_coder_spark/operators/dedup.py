@@ -12,9 +12,11 @@ Near-dup stack, Spark-first:
   the join shuffles on the shingle key, and a document-frequency cap
   (``_SHINGLE_DF_CAP``, mirrored in the oracle) drops boilerplate
   shingles before the self-join — the df² skew hazard at corpus scale.
-- MinHash+LSH: 32 seeded affine permutations over xxhash64(shingle),
-  8 bands × 4 rows, bucket self-join for candidates, exact-Jaccard
-  re-rank.  Rows-only check: LSH recall is probabilistic by design.
+- MinHash+LSH: 32 seeded affine permutations over an md5-derived
+  shingle hash, 8 bands × 4 rows, bucket self-join for candidates,
+  exact-Jaccard re-rank.  The hash is engine-portable, so DuckDB replays
+  the whole banded search; that replay is written once, as the CTE
+  fragments below, and every MinHash oracle is built from them.
 - SimHash: 64-bit signature from per-bit ±1 sums over token hashes,
   computed entirely inside array expressions (no shuffle until the
   16-bit-chunk candidate join), Hamming-distance verification.
@@ -137,11 +139,8 @@ def _shingles(words_col):
     )
 
 
-_SHINGLE_SQL = """
-WITH w AS (
-  SELECT doc_id, string_split(text, ' ') AS ws FROM documents WHERE LEN(string_split(text, ' ')) >= 3
-),
-sh AS (
+# The shingle CTE over ``w(doc_id, ws)``: distinct 3-word shingles.
+_SH_CTE = """sh AS (
   SELECT DISTINCT doc_id, s
   FROM (
     SELECT doc_id,
@@ -149,39 +148,146 @@ sh AS (
                                  i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2])) AS s
     FROM w
   )
-)
+)"""
+
+_SHINGLE_SQL = f"""
+WITH w AS (
+  SELECT doc_id, string_split(text, ' ') AS ws FROM documents WHERE LEN(string_split(text, ' ')) >= 3
+),
+{_SH_CTE}
 """
 
-# MinHash banded-search replay (appended after a shingle CTE block):
-# md5-derived 60-bit shingle hashes mod 2^31, 32 (a·h+b) mod p minima,
-# 8×4 band keys, candidate self-join, capped-intersection Jaccard
-# verification — ends at `mh_sel` = the verified near-dup pair set.
-# Shared by the minhash_lsh_neardup oracle and the end-to-end
-# dedup_clusters_minhash oracle so the two can never drift.
-_MINHASH_PAIR_CTES = f""",
-sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY 1),
-freq AS (SELECT s FROM sh GROUP BY s HAVING COUNT(*) > {_SHINGLE_DF_CAP}),
-shc AS (SELECT doc_id, s FROM sh WHERE s NOT IN (SELECT s FROM freq)),
-perms AS (
-  SELECT * FROM (VALUES {", ".join(f"({j}, {a}, {b})" for j, (a, b) in enumerate(zip(_PERM_A, _PERM_B)))})
-         AS p(j, a, b)
-),
-hv AS (
+# --------------------------------------------------------------------------
+# The MinHash SQL replay, written once.  Every near-dup oracle (the batch
+# LSH search, the cluster and calibration audits, and the streaming ingest
+# gates) builds its WITH chain from these CTE-list fragments.  A fragment
+# takes at most the name of the CTE it reads; only the epoch recursion also
+# takes its caller's accept rule.
+# --------------------------------------------------------------------------
+
+
+def _hash_cte(src: str) -> str:
+    """``hv(doc_id, h)`` over ``src(doc_id, s)``: the md5-derived 60-bit
+    shingle hash mod 2^31, bit-identical to :func:`_shingle_hash`."""
+    return f"""hv AS (
   SELECT doc_id,
          CAST(('0x' || substr(md5(s), 1, 15))::UBIGINT % 2147483648 AS BIGINT) AS h
-  FROM shc
-),
+  FROM {src}
+)"""
+
+
+def _signature_ctes(src: str) -> str:
+    """``perms``, ``sig(doc_id, j, m)`` — the 32 (a·h+b) mod p minima over
+    ``src(doc_id, h)`` — and ``bands(doc_id, band_key)``, the 8×4 band
+    keys in :func:`band_key_array`'s format."""
+    perm_rows = ", ".join(
+        f"({j}, {a}, {b})" for j, (a, b) in enumerate(zip(_PERM_A, _PERM_B))
+    )
+    return f"""perms AS (SELECT * FROM (VALUES {perm_rows}) AS p(j, a, b)),
 sig AS (
-  SELECT doc_id, p.j, MIN((p.a * hv.h + p.b) % {_MERSENNE}) AS m
-  FROM hv CROSS JOIN perms p
-  GROUP BY 1, 2
+  SELECT doc_id, p.j, MIN((p.a * x.h + p.b) % {_MERSENNE}) AS m
+  FROM {src} x CROSS JOIN perms p GROUP BY 1, 2
 ),
 bands AS (
   SELECT doc_id,
          CAST(j // {_ROWS} AS VARCHAR) || '_'
            || string_agg(CAST(m AS VARCHAR), '_' ORDER BY j) AS band_key
   FROM sig GROUP BY doc_id, j // {_ROWS}
+)"""
+
+
+# The ingest gates' near-dup verdict over ``bands``/``sig``: ordered pairs
+# that share a band key and agree on ≥16 of the 32 minima.
+_AGREEMENT_CTES = """pair AS (
+  SELECT DISTINCT a.doc_id AS da, b.doc_id AS db
+  FROM bands a JOIN bands b ON a.band_key = b.band_key AND a.doc_id <> b.doc_id
 ),
+agree AS (
+  SELECT p.da, p.db, COUNT(*) FILTER (WHERE sa.m = sb.m) AS k
+  FROM pair p
+  JOIN sig sa ON sa.doc_id = p.da
+  JOIN sig sb ON sb.doc_id = p.db AND sb.j = sa.j
+  GROUP BY 1, 2
+),
+m2 AS (SELECT da, db FROM agree WHERE k >= 16)"""
+
+
+def _epoch_ctes(src: str) -> str:
+    """``ep`` and ``e0``/``e1``/``e2``: the gates' three arrival epochs
+    (``doc_id % 3``) over ``src``'s doc ids."""
+    return f"""ep AS (SELECT doc_id, doc_id % 3 AS e FROM {src}),
+e0 AS (SELECT doc_id FROM ep WHERE e = 0),
+e1 AS (SELECT doc_id FROM ep WHERE e = 1),
+e2 AS (SELECT doc_id FROM ep WHERE e = 2)"""
+
+
+# The accept rule of a gate that only screens near-dups: every survivor.
+_ACCEPT_SURVIVORS = "a{i} AS (SELECT doc_id FROM s{i})"
+
+
+def _keep_first_ctes(accept: str, idx2_where: str = "") -> str:
+    """The gates' three-epoch keep-first recursion over ``m2`` and
+    ``e0``–``e2``.  Epoch i rejects its docs that match the standing index
+    (``ri{i}``: a0 for epoch 1, ``idx2`` for epoch 2) and then, keep-first
+    by doc_id, those that match an earlier doc of the same batch
+    (``rb{i}``); the rest are the survivors ``s{i}``.  ``accept`` is the
+    caller's CTE template (``{i}`` = epoch) that defines the accepted set
+    ``a{i}`` from ``s{i}``; ``idx2_where`` filters the index epoch 2
+    probes."""
+    a = [accept.format(i=i) for i in range(3)]
+    return f"""rb0 AS (
+  SELECT DISTINCT m.da AS doc_id FROM m2 m
+  JOIN e0 x ON x.doc_id = m.da JOIN e0 y ON y.doc_id = m.db
+  WHERE m.db < m.da
+),
+s0 AS (SELECT doc_id FROM e0 WHERE doc_id NOT IN (SELECT doc_id FROM rb0)),
+{a[0]},
+ri1 AS (
+  SELECT DISTINCT m.da AS doc_id FROM m2 m
+  JOIN e1 x ON x.doc_id = m.da JOIN a0 y ON y.doc_id = m.db
+),
+rb1 AS (
+  SELECT DISTINCT m.da AS doc_id FROM m2 m
+  JOIN e1 x ON x.doc_id = m.da JOIN e1 y ON y.doc_id = m.db
+  WHERE m.db < m.da AND m.da NOT IN (SELECT doc_id FROM ri1)
+),
+s1 AS (
+  SELECT doc_id FROM e1
+  WHERE doc_id NOT IN (SELECT doc_id FROM ri1 UNION SELECT doc_id FROM rb1)
+),
+{a[1]},
+idx2 AS (
+  SELECT doc_id FROM (SELECT doc_id FROM a0 UNION SELECT doc_id FROM a1)
+  {idx2_where}
+),
+ri2 AS (
+  SELECT DISTINCT m.da AS doc_id FROM m2 m
+  JOIN e2 x ON x.doc_id = m.da JOIN idx2 y ON y.doc_id = m.db
+),
+rb2 AS (
+  SELECT DISTINCT m.da AS doc_id FROM m2 m
+  JOIN e2 x ON x.doc_id = m.da JOIN e2 y ON y.doc_id = m.db
+  WHERE m.db < m.da AND m.da NOT IN (SELECT doc_id FROM ri2)
+),
+s2 AS (
+  SELECT doc_id FROM e2
+  WHERE doc_id NOT IN (SELECT doc_id FROM ri2 UNION SELECT doc_id FROM rb2)
+),
+{a[2]}"""
+
+
+# MinHash banded-search replay (appended after a shingle CTE block):
+# 32 minima over the capped shingle hashes, 8×4 band keys, candidate
+# self-join, capped-intersection Jaccard verification — ends at `mh_sel`
+# = the verified near-dup pair set.  Shared by the minhash_lsh_neardup
+# oracle and the end-to-end dedup_clusters_minhash oracle so the two can
+# never drift.
+_MINHASH_PAIR_CTES = f""",
+sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY 1),
+freq AS (SELECT s FROM sh GROUP BY s HAVING COUNT(*) > {_SHINGLE_DF_CAP}),
+shc AS (SELECT doc_id, s FROM sh WHERE s NOT IN (SELECT s FROM freq)),
+{_hash_cte("shc")},
+{_signature_ctes("hv")},
 cand AS (
   SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
   FROM bands a JOIN bands b ON a.band_key = b.band_key AND a.doc_id < b.doc_id
@@ -398,10 +504,18 @@ def shingle_hashes(docs: DataFrame) -> DataFrame:
         F.size("ws") >= 3
     )
     sh = w.select("doc_id", F.explode(_shingles(F.col("ws"))).alias("s"))
-    h = F.pmod(
+    return sh.select("doc_id", _shingle_hash())
+
+
+def _shingle_hash() -> "F.Column":
+    """``h`` of shingle column ``s``: the md5-derived 60-bit hash mod 2^31,
+    bit-identical in DuckDB (``('0x'||substr(md5,1,15))::UBIGINT``, see
+    :func:`_hash_cte`), which is what makes the banded search replayable
+    by the oracles.  The hash family is pluggable; xxhash64 shaves ~2× off
+    this one map-side pass in production."""
+    return F.pmod(
         F.conv(F.substring(F.md5("s"), 1, 15), 16, 10).cast("long"), F.lit(2**31)
     ).alias("h")
-    return sh.select("doc_id", h)
 
 
 def minhash_from_hashes(hashed: DataFrame) -> DataFrame:
@@ -451,22 +565,7 @@ def _minhash_prep(spark: SparkSession, sf_dir: str):
     # count-window formulation forced a useless s-shuffle here AND
     # single-tasked hot shingles).
     sh = _drop_frequent_shingles(sh)
-    # md5-derived 60-bit shingle hash mod 2^31: bit-identical in DuckDB
-    # (('0x'||substr(md5,1,15))::UBIGINT), which is what makes the full
-    # banded search replayable by the oracle.  Hash family is pluggable;
-    # xxhash64 shaves ~2× off this one map-side pass in production.
-    h = F.pmod(
-        F.conv(F.substring(F.md5("s"), 1, 15), 16, 10).cast("long"), F.lit(2**31)
-    ).alias("h")
-    hashed = sh.select("doc_id", h)
-    sig = hashed.groupBy("doc_id").agg(
-        *[
-            F.min(F.pmod(F.lit(_PERM_A[j]) * F.col("h") + F.lit(_PERM_B[j]), F.lit(_MERSENNE))).alias(
-                f"m{j}"
-            )
-            for j in range(_K)
-        ]
-    )
+    sig = minhash_from_hashes(sh.select("doc_id", _shingle_hash()))
     return w, sh, sig
 
 

@@ -111,6 +111,14 @@ _FORCE_RECHECK: tuple[str, ...] = (
     "stream_stream_join",
     "stream_stream_left_outer_join",
     "stream_static_enrich",
+    # round 18: the near-dup SQL replay is one set of CTE fragments in
+    # operators/dedup.py, and the batch MinHash prep reuses the shared
+    # shingle-hash and signature helpers.
+    "minhash_lsh_neardup",
+    "dedup_clusters_minhash",
+    "minhash_estimate_audit",
+    "minhash_lsh_recall_check",
+    "quality_dup_interaction",
 )
 
 # (The round-3/4 _CHECK_FIRST backlog queue is gone: every registered query
@@ -166,8 +174,8 @@ def _check_order(names: list[str]) -> list[str]:
       1. never reached by any driver gate (new queries).
       2. reached but never green (must stay visible until a green lands).
       3. green — STALENESS ROTATION: oldest last-green round first, so with
-         ~219 queries and a 50-slot gate every query gets re-proven roughly
-         every 5 rounds even with zero manual curation.  Ties (same round)
+         313 queries and a 50-slot gate every query gets re-proven roughly
+         every 7 rounds even with zero manual curation.  Ties (same round)
          break by registration order, which interleaves modules.
     """
     force = {n: i for i, n in enumerate(_FORCE_RECHECK)}
@@ -208,14 +216,7 @@ def load_all() -> None:
     if _loaded:
         return
     for mod in _QUERY_MODULES:
-        try:
-            importlib.import_module(mod)
-        except ModuleNotFoundError as e:
-            # Module not built yet (incremental rounds) — skip, don't break
-            # the whole registry.
-            missing = e.name or ""
-            if not mod.startswith(missing):
-                raise
+        importlib.import_module(mod)
     _loaded = True
 
 

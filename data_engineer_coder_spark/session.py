@@ -39,8 +39,14 @@ def get_spark(
     # Scratch space (shuffle files, broadcast spill) on tmpfs when
     # available: this host's block device exhibits multi-minute IO
     # stalls that block otherwise-idle JVM stages.  On a real cluster
-    # this is the local-SSD spark.local.dir, not RAM.
-    local_dir = "/dev/shm/spark-local" if os.path.isdir("/dev/shm") else None
+    # this is the local-SSD spark.local.dir, not RAM.  Spark ignores
+    # spark.local.dir when SPARK_LOCAL_DIRS is set, so then the dir is
+    # not made and the conf not set.
+    local_dir = (
+        "/dev/shm/spark-local"
+        if os.path.isdir("/dev/shm") and not os.environ.get("SPARK_LOCAL_DIRS")
+        else None
+    )
 
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")

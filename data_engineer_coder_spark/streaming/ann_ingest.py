@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..io.tables import table
+from ..operators._helpers import sql_materialize
 from ..registry import register
 
 
@@ -74,9 +75,7 @@ GROUP BY 1, 2
     # bootstrap slice feeds params/cents/picked/codes0/tr, the stream
     # slice feeds the assignment chain AND the encoder, and cents is
     # read by both two-level stages.
-    for cte in ("nall", "n", "strm", "cents", "cb"):
-        sql = sql.replace(f"{cte} AS (", f"{cte} AS MATERIALIZED (", 1)
-    return sql
+    return sql_materialize(sql, ("nall", "n", "strm", "cents", "cb"))
 
 
 @register(
@@ -268,9 +267,7 @@ FROM (
 JOIN pb ON pb.probe_id = r.probe_id
 WHERE r.rn <= 3
 """
-    for cte in ("nall", "n", "strm", "cents", "cb", "probes"):
-        sql = sql.replace(f"{cte} AS (", f"{cte} AS MATERIALIZED (", 1)
-    return sql
+    return sql_materialize(sql, ("nall", "n", "strm", "cents", "cb", "probes"))
 
 
 @register(
@@ -517,9 +514,7 @@ SELECT CAST(o.s AS INT) AS s,
        e.err <= o.err AS improved
 FROM erro o JOIN errn e ON e.s = o.s
 """
-    for cte in ("nall", "n", "strm", "old_cb", "new_cb"):
-        sql = sql.replace(f"{cte} AS (", f"{cte} AS MATERIALIZED (", 1)
-    return sql
+    return sql_materialize(sql, ("nall", "n", "strm", "old_cb", "new_cb"))
 
 
 @register(

@@ -22,7 +22,22 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..io.tables import table
+from ..operators._helpers import sql_materialize
+from ..operators.dedup import (
+    _AGREEMENT_CTES,
+    _SH_CTE,
+    _epoch_ctes,
+    _hash_cte,
+    _keep_first_ctes,
+    _signature_ctes,
+)
 from ..registry import register
+
+
+# The curation gate's accept rule: a survivor is quarantined (q_i)
+# when it carries an eval 8-gram, accepted (a_i) otherwise.
+_ACCEPT_CLEAN = """q{i} AS (SELECT doc_id FROM s{i} WHERE doc_id IN (SELECT doc_id FROM contam)),
+a{i} AS (SELECT doc_id FROM s{i} WHERE doc_id NOT IN (SELECT doc_id FROM contam))"""
 
 
 def _curation_ctes(idx2_where: str = "") -> str:
@@ -31,55 +46,18 @@ def _curation_ctes(idx2_where: str = "") -> str:
     oracles.  ``idx2_where`` optionally filters the standing index
     epoch 2 probes against (the lifecycle drill's takedown arriving
     between epochs 1 and 2 shrinks it)."""
-    from ..operators.dedup import _MERSENNE, _PERM_A, _PERM_B, _ROWS
     from ..operators.textops import _DECON_MOD, _DECON_N
 
-    perm_rows = ", ".join(
-        f"({j}, {a}, {b})" for j, (a, b) in enumerate(zip(_PERM_A, _PERM_B))
-    )
     sql = f"""
 WITH tr AS (
   SELECT doc_id, string_split(text, ' ') AS ws
   FROM documents WHERE doc_id % {_DECON_MOD} <> 0
 ),
 w AS (SELECT doc_id, ws FROM tr WHERE LEN(ws) >= 3),
-sh AS (
-  SELECT DISTINCT doc_id, s
-  FROM (
-    SELECT doc_id,
-           unnest(list_transform(range(1, LEN(ws) - 1),
-                                 i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2])) AS s
-    FROM w
-  )
-),
-perms AS (SELECT * FROM (VALUES {perm_rows}) AS p(j, a, b)),
-hv AS (
-  SELECT doc_id,
-         CAST(('0x' || substr(md5(s), 1, 15))::UBIGINT % 2147483648 AS BIGINT) AS h
-  FROM sh
-),
-sig AS (
-  SELECT doc_id, p.j, MIN((p.a * hv.h + p.b) % {_MERSENNE}) AS m
-  FROM hv CROSS JOIN perms p GROUP BY 1, 2
-),
-bands AS (
-  SELECT doc_id,
-         CAST(j // {_ROWS} AS VARCHAR) || '_'
-           || string_agg(CAST(m AS VARCHAR), '_' ORDER BY j) AS band_key
-  FROM sig GROUP BY doc_id, j // {_ROWS}
-),
-pair AS (
-  SELECT DISTINCT a.doc_id AS da, b.doc_id AS db
-  FROM bands a JOIN bands b ON a.band_key = b.band_key AND a.doc_id <> b.doc_id
-),
-agree AS (
-  SELECT p.da, p.db, COUNT(*) FILTER (WHERE sa.m = sb.m) AS k
-  FROM pair p
-  JOIN sig sa ON sa.doc_id = p.da
-  JOIN sig sb ON sb.doc_id = p.db AND sb.j = sa.j
-  GROUP BY 1, 2
-),
-m2 AS (SELECT da, db FROM agree WHERE k >= 16),
+{_SH_CTE},
+{_hash_cte("sh")},
+{_signature_ctes("hv")},
+{_AGREEMENT_CTES},
 ev AS (
   SELECT DISTINCT array_to_string(list_slice(ws, i, i + {_DECON_N - 1}), ' ') AS g
   FROM (SELECT string_split(text, ' ') AS ws
@@ -92,58 +70,12 @@ contam AS (
   WHERE array_to_string(list_slice(t.ws, i, i + {_DECON_N - 1}), ' ')
           IN (SELECT g FROM ev)
 ),
-ep AS (SELECT doc_id, doc_id % 3 AS e FROM tr),
-e0 AS (SELECT doc_id FROM ep WHERE e = 0),
-e1 AS (SELECT doc_id FROM ep WHERE e = 1),
-e2 AS (SELECT doc_id FROM ep WHERE e = 2),
-rb0 AS (
-  SELECT DISTINCT m.da AS doc_id FROM m2 m
-  JOIN e0 x ON x.doc_id = m.da JOIN e0 y ON y.doc_id = m.db
-  WHERE m.db < m.da
-),
-s0 AS (SELECT doc_id FROM e0 WHERE doc_id NOT IN (SELECT doc_id FROM rb0)),
-q0 AS (SELECT doc_id FROM s0 WHERE doc_id IN (SELECT doc_id FROM contam)),
-a0 AS (SELECT doc_id FROM s0 WHERE doc_id NOT IN (SELECT doc_id FROM contam)),
-ri1 AS (
-  SELECT DISTINCT m.da AS doc_id FROM m2 m
-  JOIN e1 x ON x.doc_id = m.da JOIN a0 y ON y.doc_id = m.db
-),
-rb1 AS (
-  SELECT DISTINCT m.da AS doc_id FROM m2 m
-  JOIN e1 x ON x.doc_id = m.da JOIN e1 y ON y.doc_id = m.db
-  WHERE m.db < m.da AND m.da NOT IN (SELECT doc_id FROM ri1)
-),
-s1 AS (
-  SELECT doc_id FROM e1
-  WHERE doc_id NOT IN (SELECT doc_id FROM ri1 UNION SELECT doc_id FROM rb1)
-),
-q1 AS (SELECT doc_id FROM s1 WHERE doc_id IN (SELECT doc_id FROM contam)),
-a1 AS (SELECT doc_id FROM s1 WHERE doc_id NOT IN (SELECT doc_id FROM contam)),
-idx2 AS (
-  SELECT doc_id FROM (SELECT doc_id FROM a0 UNION SELECT doc_id FROM a1)
-  {idx2_where}
-),
-ri2 AS (
-  SELECT DISTINCT m.da AS doc_id FROM m2 m
-  JOIN e2 x ON x.doc_id = m.da JOIN idx2 y ON y.doc_id = m.db
-),
-rb2 AS (
-  SELECT DISTINCT m.da AS doc_id FROM m2 m
-  JOIN e2 x ON x.doc_id = m.da JOIN e2 y ON y.doc_id = m.db
-  WHERE m.db < m.da AND m.da NOT IN (SELECT doc_id FROM ri2)
-),
-s2 AS (
-  SELECT doc_id FROM e2
-  WHERE doc_id NOT IN (SELECT doc_id FROM ri2 UNION SELECT doc_id FROM rb2)
-),
-q2 AS (SELECT doc_id FROM s2 WHERE doc_id IN (SELECT doc_id FROM contam)),
-a2 AS (SELECT doc_id FROM s2 WHERE doc_id NOT IN (SELECT doc_id FROM contam))"""
+{_epoch_ctes("tr")},
+{_keep_first_ctes(_ACCEPT_CLEAN, idx2_where)}"""
     # multi-referenced heavy CTEs: DuckDB inlines per reference and the
     # epoch recursion references sig/m2/contam many times (the r10
     # MATERIALIZED rule — bpe_learn_iterative / cms-gate pattern)
-    for cte in ("hv", "sig", "m2", "ev", "contam"):
-        sql = sql.replace(f"{cte} AS (", f"{cte} AS MATERIALIZED (", 1)
-    return sql
+    return sql_materialize(sql, ("hv", "sig", "m2", "ev", "contam"))
 
 
 _VERDICT_UNION = """

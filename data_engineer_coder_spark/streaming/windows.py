@@ -20,7 +20,16 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..io.tables import conf_scope, table
-from ..operators._helpers import dsum, sql_dsum, ts_str
+from ..operators._helpers import dsum, sql_dsum, sql_materialize, ts_str
+from ..operators.dedup import (
+    _ACCEPT_SURVIVORS,
+    _AGREEMENT_CTES,
+    _SHINGLE_SQL,
+    _epoch_ctes,
+    _hash_cte,
+    _keep_first_ctes,
+    _signature_ctes,
+)
 from ..registry import register
 from . import core
 from .core import run_to_memory, stream_events
@@ -431,94 +440,18 @@ def _neardup_gate_ctes() -> str:
     agreement pairs → the per-epoch accept/reject recursion (a0/a1/a2 =
     each epoch's accepted set).  The ledger oracle, the probe-pruning
     audit, and the index-compaction audit all append their own SELECT."""
-    from ..operators.dedup import _MERSENNE, _PERM_A, _PERM_B, _ROWS
-
-    perm_rows = ", ".join(
-        f"({j}, {a}, {b})" for j, (a, b) in enumerate(zip(_PERM_A, _PERM_B))
-    )
-    return f"""
-WITH w AS (
-  SELECT doc_id, string_split(text, ' ') AS ws
-  FROM documents WHERE LEN(string_split(text, ' ')) >= 3
-),
-sh AS (
-  SELECT DISTINCT doc_id, s
-  FROM (
-    SELECT doc_id,
-           unnest(list_transform(range(1, LEN(ws) - 1),
-                                 i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2])) AS s
-    FROM w
-  )
-),
-perms AS (SELECT * FROM (VALUES {perm_rows}) AS p(j, a, b)),
-hv AS (
-  SELECT doc_id,
-         CAST(('0x' || substr(md5(s), 1, 15))::UBIGINT % 2147483648 AS BIGINT) AS h
-  FROM sh
-),
-sig AS (
-  SELECT doc_id, p.j, MIN((p.a * hv.h + p.b) % {_MERSENNE}) AS m
-  FROM hv CROSS JOIN perms p GROUP BY 1, 2
-),
-bands AS (
-  SELECT doc_id,
-         CAST(j // {_ROWS} AS VARCHAR) || '_'
-           || string_agg(CAST(m AS VARCHAR), '_' ORDER BY j) AS band_key
-  FROM sig GROUP BY doc_id, j // {_ROWS}
-),
-pair AS (
-  SELECT DISTINCT a.doc_id AS da, b.doc_id AS db
-  FROM bands a JOIN bands b ON a.band_key = b.band_key AND a.doc_id <> b.doc_id
-),
-agree AS (
-  SELECT p.da, p.db, COUNT(*) FILTER (WHERE sa.m = sb.m) AS k
-  FROM pair p
-  JOIN sig sa ON sa.doc_id = p.da
-  JOIN sig sb ON sb.doc_id = p.db AND sb.j = sa.j
-  GROUP BY 1, 2
-),
-m2 AS (SELECT da, db FROM agree WHERE k >= 16),
-ep AS (SELECT doc_id, doc_id % 3 AS e FROM documents),
-e0 AS (SELECT doc_id FROM ep WHERE e = 0),
-e1 AS (SELECT doc_id FROM ep WHERE e = 1),
-e2 AS (SELECT doc_id FROM ep WHERE e = 2),
-rb0 AS (
-  SELECT DISTINCT m.da AS doc_id FROM m2 m
-  JOIN e0 x ON x.doc_id = m.da JOIN e0 y ON y.doc_id = m.db
-  WHERE m.db < m.da
-),
-a0 AS (SELECT doc_id FROM e0 WHERE doc_id NOT IN (SELECT doc_id FROM rb0)),
-ri1 AS (
-  SELECT DISTINCT m.da AS doc_id FROM m2 m
-  JOIN e1 x ON x.doc_id = m.da JOIN a0 y ON y.doc_id = m.db
-),
-rb1 AS (
-  SELECT DISTINCT m.da AS doc_id FROM m2 m
-  JOIN e1 x ON x.doc_id = m.da JOIN e1 y ON y.doc_id = m.db
-  WHERE m.db < m.da AND m.da NOT IN (SELECT doc_id FROM ri1)
-),
-a1 AS (
-  SELECT doc_id FROM e1
-  WHERE doc_id NOT IN (SELECT doc_id FROM ri1 UNION SELECT doc_id FROM rb1)
-),
-idx2 AS (SELECT doc_id FROM a0 UNION SELECT doc_id FROM a1),
-ri2 AS (
-  SELECT DISTINCT m.da AS doc_id FROM m2 m
-  JOIN e2 x ON x.doc_id = m.da JOIN idx2 y ON y.doc_id = m.db
-),
-rb2 AS (
-  SELECT DISTINCT m.da AS doc_id FROM m2 m
-  JOIN e2 x ON x.doc_id = m.da JOIN e2 y ON y.doc_id = m.db
-  WHERE m.db < m.da AND m.da NOT IN (SELECT doc_id FROM ri2)
-),
-a2 AS (
-  SELECT doc_id FROM e2
-  WHERE doc_id NOT IN (SELECT doc_id FROM ri2 UNION SELECT doc_id FROM rb2)
-)"""
+    return f"""{_SHINGLE_SQL},
+{_hash_cte("sh")},
+{_signature_ctes("hv")},
+{_AGREEMENT_CTES},
+{_epoch_ctes("documents")},
+{_keep_first_ctes(_ACCEPT_SURVIVORS)}"""
 
 
-def _neardup_gate_oracle() -> str:
-    return _neardup_gate_ctes() + """
+# The per-epoch ledger both gate oracles end with; ``nc1``/``nc2`` hold
+# the number of distinct shingles the df cap excluded in epochs 1 and 2
+# (epoch 0 has no earlier epochs, so it never excludes one).
+_GATE_LEDGER_SELECT = """
 SELECT 0 AS epoch,
        (SELECT COUNT(*) FROM e0) AS n_arrived,
        (SELECT CAST(COALESCE(SUM(doc_id), 0) AS BIGINT) FROM e0) AS arrived_id_sum,
@@ -530,7 +463,7 @@ UNION ALL
 SELECT 1,
        (SELECT COUNT(*) FROM e1),
        (SELECT CAST(COALESCE(SUM(doc_id), 0) AS BIGINT) FROM e1),
-       CAST(0 AS BIGINT),
+       (SELECT n FROM nc1),
        (SELECT COUNT(*) FROM ri1),
        (SELECT COUNT(*) FROM rb1),
        (SELECT COUNT(*) FROM a1)
@@ -538,11 +471,17 @@ UNION ALL
 SELECT 2,
        (SELECT COUNT(*) FROM e2),
        (SELECT CAST(COALESCE(SUM(doc_id), 0) AS BIGINT) FROM e2),
-       CAST(0 AS BIGINT),
+       (SELECT n FROM nc2),
        (SELECT COUNT(*) FROM ri2),
        (SELECT COUNT(*) FROM rb2),
        (SELECT COUNT(*) FROM a2)
 """
+
+
+def _neardup_gate_oracle() -> str:
+    return _neardup_gate_ctes() + """,
+nc1 AS (SELECT CAST(0 AS BIGINT) AS n),
+nc2 AS (SELECT CAST(0 AS BIGINT) AS n)""" + _GATE_LEDGER_SELECT
 
 
 @register(
@@ -773,12 +712,7 @@ def _neardup_gate_capped_oracle(cap: int, mode: str = "exact") -> str:
     estimate (cells summed over ALL strictly-earlier arrived docs, the
     exact md5-bucket construction the Spark side uses) exceeds the cap
     — the one-sided sketch can only exclude MORE than exact df."""
-    from ..operators.dedup import _MERSENNE, _PERM_A, _PERM_B, _ROWS
     from .core import _GATE_CMS_D, _GATE_CMS_W
-
-    perm_rows = ", ".join(
-        f"({j}, {a}, {b})" for j, (a, b) in enumerate(zip(_PERM_A, _PERM_B))
-    )
 
     def bsql(j: int, col: str) -> str:
         return (f"(('0x' || substring(md5('{j}|' || CAST({col} AS VARCHAR)),"
@@ -796,7 +730,7 @@ df2 AS (
   GROUP BY h
 ),
 x1 AS (SELECT h FROM df1 WHERE df > {cap}),
-x2 AS (SELECT h FROM df2 WHERE df > {cap}),"""
+x2 AS (SELECT h FROM df2 WHERE df > {cap})"""
     else:
         def probes(src: str) -> str:
             return " UNION ALL ".join(
@@ -841,49 +775,12 @@ x2 AS (
     FROM ({probes('b2')}) p
     LEFT JOIN cms2 c2 ON c2.j = p.j AND c2.bucket = p.bucket
   ) GROUP BY h HAVING MIN(cnt) > {cap}
-),"""
+)"""
 
-    sql = _capped_oracle_body(perm_rows, excl_ctes, cap)
-    if mode != "exact":
-        # The CMS exclusion subtree is deep; DuckDB inlines single-use
-        # CTEs, and ``sig``/``hvu``/``hv1`` are each referenced several
-        # times downstream — without materialization every reference
-        # re-derives the whole shingle->sketch->exclusion chain and the
-        # oracle goes combinatorial (measured: >550 s vs 0.2 s for the
-        # pieces).  Same fix as the bpe_learn_iterative oracle.
-        for cte in ("hv", "x1", "x2", "sig", "m2"):
-            sql = sql.replace(f"{cte} AS (", f"{cte} AS MATERIALIZED (", 1)
-    return sql
-
-
-def _capped_oracle_body(perm_rows: str, excl_ctes: str, cap: int) -> str:
-    from ..operators.dedup import _MERSENNE, _ROWS
-
-    return f"""
-WITH w AS (
-  SELECT doc_id, string_split(text, ' ') AS ws
-  FROM documents WHERE LEN(string_split(text, ' ')) >= 3
-),
-sh AS (
-  SELECT DISTINCT doc_id, s
-  FROM (
-    SELECT doc_id,
-           unnest(list_transform(range(1, LEN(ws) - 1),
-                                 i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2])) AS s
-    FROM w
-  )
-),
-hv AS (
-  SELECT doc_id,
-         CAST(('0x' || substr(md5(s), 1, 15))::UBIGINT % 2147483648 AS BIGINT) AS h
-  FROM sh
-),
-ep AS (SELECT doc_id, doc_id % 3 AS e FROM documents),
-e0 AS (SELECT doc_id FROM ep WHERE e = 0),
-e1 AS (SELECT doc_id FROM ep WHERE e = 1),
-e2 AS (SELECT doc_id FROM ep WHERE e = 2),
-{excl_ctes}
-perms AS (SELECT * FROM (VALUES {perm_rows}) AS p(j, a, b)),
+    sql = f"""{_SHINGLE_SQL},
+{_hash_cte("sh")},
+{_epoch_ctes("documents")},
+{excl_ctes},
 hv0 AS (SELECT hv.doc_id, h FROM hv JOIN e0 ON e0.doc_id = hv.doc_id),
 hv1 AS (
   SELECT hv.doc_id, h FROM hv JOIN e1 ON e1.doc_id = hv.doc_id
@@ -896,61 +793,9 @@ hv2 AS (
 hvu AS (
   SELECT * FROM hv0 UNION ALL SELECT * FROM hv1 UNION ALL SELECT * FROM hv2
 ),
-sig AS (
-  SELECT doc_id, p.j, MIN((p.a * hvu.h + p.b) % {_MERSENNE}) AS m
-  FROM hvu CROSS JOIN perms p GROUP BY 1, 2
-),
-bands AS (
-  SELECT doc_id,
-         CAST(j // {_ROWS} AS VARCHAR) || '_'
-           || string_agg(CAST(m AS VARCHAR), '_' ORDER BY j) AS band_key
-  FROM sig GROUP BY doc_id, j // {_ROWS}
-),
-pair AS (
-  SELECT DISTINCT a.doc_id AS da, b.doc_id AS db
-  FROM bands a JOIN bands b ON a.band_key = b.band_key AND a.doc_id <> b.doc_id
-),
-agree AS (
-  SELECT p.da, p.db, COUNT(*) FILTER (WHERE sa.m = sb.m) AS k
-  FROM pair p
-  JOIN sig sa ON sa.doc_id = p.da
-  JOIN sig sb ON sb.doc_id = p.db AND sb.j = sa.j
-  GROUP BY 1, 2
-),
-m2 AS (SELECT da, db FROM agree WHERE k >= 16),
-rb0 AS (
-  SELECT DISTINCT m.da AS doc_id FROM m2 m
-  JOIN e0 x ON x.doc_id = m.da JOIN e0 y ON y.doc_id = m.db
-  WHERE m.db < m.da
-),
-a0 AS (SELECT doc_id FROM e0 WHERE doc_id NOT IN (SELECT doc_id FROM rb0)),
-ri1 AS (
-  SELECT DISTINCT m.da AS doc_id FROM m2 m
-  JOIN e1 x ON x.doc_id = m.da JOIN a0 y ON y.doc_id = m.db
-),
-rb1 AS (
-  SELECT DISTINCT m.da AS doc_id FROM m2 m
-  JOIN e1 x ON x.doc_id = m.da JOIN e1 y ON y.doc_id = m.db
-  WHERE m.db < m.da AND m.da NOT IN (SELECT doc_id FROM ri1)
-),
-a1 AS (
-  SELECT doc_id FROM e1
-  WHERE doc_id NOT IN (SELECT doc_id FROM ri1 UNION SELECT doc_id FROM rb1)
-),
-idx2 AS (SELECT doc_id FROM a0 UNION SELECT doc_id FROM a1),
-ri2 AS (
-  SELECT DISTINCT m.da AS doc_id FROM m2 m
-  JOIN e2 x ON x.doc_id = m.da JOIN idx2 y ON y.doc_id = m.db
-),
-rb2 AS (
-  SELECT DISTINCT m.da AS doc_id FROM m2 m
-  JOIN e2 x ON x.doc_id = m.da JOIN e2 y ON y.doc_id = m.db
-  WHERE m.db < m.da AND m.da NOT IN (SELECT doc_id FROM ri2)
-),
-a2 AS (
-  SELECT doc_id FROM e2
-  WHERE doc_id NOT IN (SELECT doc_id FROM ri2 UNION SELECT doc_id FROM rb2)
-),
+{_signature_ctes("hvu")},
+{_AGREEMENT_CTES},
+{_keep_first_ctes(_ACCEPT_SURVIVORS)},
 nc1 AS (
   SELECT COUNT(DISTINCT hv.h) AS n FROM hv JOIN e1 ON e1.doc_id = hv.doc_id
   WHERE hv.h IN (SELECT h FROM x1)
@@ -958,31 +803,16 @@ nc1 AS (
 nc2 AS (
   SELECT COUNT(DISTINCT hv.h) AS n FROM hv JOIN e2 ON e2.doc_id = hv.doc_id
   WHERE hv.h IN (SELECT h FROM x2)
-)
-SELECT 0 AS epoch,
-       (SELECT COUNT(*) FROM e0) AS n_arrived,
-       (SELECT CAST(COALESCE(SUM(doc_id), 0) AS BIGINT) FROM e0) AS arrived_id_sum,
-       CAST(0 AS BIGINT) AS n_capped_shingles,
-       CAST(0 AS BIGINT) AS n_rejected_index,
-       (SELECT COUNT(*) FROM rb0) AS n_rejected_batch,
-       (SELECT COUNT(*) FROM a0) AS n_accepted
-UNION ALL
-SELECT 1,
-       (SELECT COUNT(*) FROM e1),
-       (SELECT CAST(COALESCE(SUM(doc_id), 0) AS BIGINT) FROM e1),
-       (SELECT n FROM nc1),
-       (SELECT COUNT(*) FROM ri1),
-       (SELECT COUNT(*) FROM rb1),
-       (SELECT COUNT(*) FROM a1)
-UNION ALL
-SELECT 2,
-       (SELECT COUNT(*) FROM e2),
-       (SELECT CAST(COALESCE(SUM(doc_id), 0) AS BIGINT) FROM e2),
-       (SELECT n FROM nc2),
-       (SELECT COUNT(*) FROM ri2),
-       (SELECT COUNT(*) FROM rb2),
-       (SELECT COUNT(*) FROM a2)
-"""
+)""" + _GATE_LEDGER_SELECT
+    if mode != "exact":
+        # The CMS exclusion subtree is deep; DuckDB inlines single-use
+        # CTEs, and ``sig``/``hvu``/``hv1`` are each referenced several
+        # times downstream — without materialization every reference
+        # re-derives the whole shingle->sketch->exclusion chain and the
+        # oracle goes combinatorial (measured: >550 s vs 0.2 s for the
+        # pieces).  Same fix as the bpe_learn_iterative oracle.
+        sql = sql_materialize(sql, ("hv", "x1", "x2", "sig", "m2"))
+    return sql
 
 
 @register(
@@ -1159,37 +989,37 @@ def stream_neardup_probe_prune_audit(spark: SparkSession, sf_dir: str) -> DataFr
 @register(
     "stream_neardup_index_compaction_audit",
     oracle=_neardup_gate_ctes() + """,
-s0 AS (
+ix0 AS (
   SELECT doc_id, doc_id % 8 AS sb FROM a0
   WHERE doc_id IN (SELECT doc_id FROM w)
 ),
-s1 AS (
+ix1 AS (
   SELECT doc_id, doc_id % 8 AS sb FROM a1
   WHERE doc_id IN (SELECT doc_id FROM w)
 ),
-s2 AS (
+ix2 AS (
   SELECT doc_id, doc_id % 8 AS sb FROM a2
   WHERE doc_id IN (SELECT doc_id FROM w)
 )
 SELECT 1 AS version,
-       (SELECT COUNT(DISTINCT sb) FROM s0) AS n_dirs,
-       (SELECT COUNT(*) FROM s0) AS n_rows
+       (SELECT COUNT(DISTINCT sb) FROM ix0) AS n_dirs,
+       (SELECT COUNT(*) FROM ix0) AS n_rows
 UNION ALL
 SELECT 2,
-       (SELECT COUNT(DISTINCT sb) FROM s0) + (SELECT COUNT(DISTINCT sb) FROM s1),
-       (SELECT COUNT(*) FROM s0) + (SELECT COUNT(*) FROM s1)
+       (SELECT COUNT(DISTINCT sb) FROM ix0) + (SELECT COUNT(DISTINCT sb) FROM ix1),
+       (SELECT COUNT(*) FROM ix0) + (SELECT COUNT(*) FROM ix1)
 UNION ALL
 SELECT 3,
        (SELECT COUNT(DISTINCT sb)
-        FROM (SELECT sb FROM s0 UNION SELECT sb FROM s1)),
-       (SELECT COUNT(*) FROM s0) + (SELECT COUNT(*) FROM s1)
+        FROM (SELECT sb FROM ix0 UNION SELECT sb FROM ix1)),
+       (SELECT COUNT(*) FROM ix0) + (SELECT COUNT(*) FROM ix1)
 UNION ALL
 SELECT 4,
        (SELECT COUNT(DISTINCT sb)
-        FROM (SELECT sb FROM s0 UNION SELECT sb FROM s1))
-         + (SELECT COUNT(DISTINCT sb) FROM s2),
-       (SELECT COUNT(*) FROM s0) + (SELECT COUNT(*) FROM s1)
-         + (SELECT COUNT(*) FROM s2)
+        FROM (SELECT sb FROM ix0 UNION SELECT sb FROM ix1))
+         + (SELECT COUNT(DISTINCT sb) FROM ix2),
+       (SELECT COUNT(*) FROM ix0) + (SELECT COUNT(*) FROM ix1)
+         + (SELECT COUNT(*) FROM ix2)
 """,
     tags=("streaming", "dedup", "llm", "acid", "lakehouse", "real-stream"),
     doc=(
