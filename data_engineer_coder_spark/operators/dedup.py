@@ -276,6 +276,33 @@ s2 AS (
 {a[2]}"""
 
 
+# The exact-Jaccard replay over ``sh``, written once.  ``sizes`` counts
+# each doc's shingles; ``freq`` lists the boilerplate shingles (document
+# frequency above ``_SHINGLE_DF_CAP``).  The MinHash replay takes these two.
+_SHINGLE_STATS_CTES = f"""sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY 1),
+freq AS (SELECT s FROM sh GROUP BY s HAVING COUNT(*) > {_SHINGLE_DF_CAP})"""
+
+# The exact chain: the capped intersection ``inter`` of every doc pair that
+# shares a shingle, then the near-dup ``pairs`` (doc_a < doc_b, n_common,
+# jaccard) at Jaccard ≥ 0.2.
+_JACCARD_PAIRS_CTES = f"""{_SHINGLE_STATS_CTES},
+inter AS (
+  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_common
+  FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
+  WHERE a.s NOT IN (SELECT s FROM freq)
+  GROUP BY 1, 2
+),
+pairs AS (
+  SELECT doc_a, doc_b, n_common, jaccard FROM (
+    SELECT doc_a, doc_b, n_common,
+           CAST(n_common AS DOUBLE) / (sa.n + sb.n - n_common) AS jaccard
+    FROM inter
+    JOIN sizes sa ON doc_a = sa.doc_id
+    JOIN sizes sb ON doc_b = sb.doc_id
+  ) WHERE jaccard >= 0.2
+)"""
+
+
 # MinHash banded-search replay (appended after a shingle CTE block):
 # 32 minima over the capped shingle hashes, 8×4 band keys, candidate
 # self-join, capped-intersection Jaccard verification — ends at `mh_sel`
@@ -283,8 +310,7 @@ s2 AS (
 # oracle and the end-to-end dedup_clusters_minhash oracle so the two can
 # never drift.
 _MINHASH_PAIR_CTES = f""",
-sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY 1),
-freq AS (SELECT s FROM sh GROUP BY s HAVING COUNT(*) > {_SHINGLE_DF_CAP}),
+{_SHINGLE_STATS_CTES},
 shc AS (SELECT doc_id, s FROM sh WHERE s NOT IN (SELECT s FROM freq)),
 {_hash_cte("shc")},
 {_signature_ctes("hv")},
@@ -362,20 +388,8 @@ def dedup_hash_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     "ngram_jaccard_pairs",
     oracle=_SHINGLE_SQL
     + f""",
-sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY 1),
-freq AS (SELECT s FROM sh GROUP BY s HAVING COUNT(*) > {_SHINGLE_DF_CAP}),
-inter AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_common
-  FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-  WHERE a.s NOT IN (SELECT s FROM freq)
-  GROUP BY 1, 2
-)
-SELECT doc_a, doc_b, n_common,
-       CAST(n_common AS DOUBLE) / (sa.n + sb.n - n_common) AS jaccard
-FROM inter
-JOIN sizes sa ON doc_a = sa.doc_id
-JOIN sizes sb ON doc_b = sb.doc_id
-WHERE CAST(n_common AS DOUBLE) / (sa.n + sb.n - n_common) >= 0.2
+{_JACCARD_PAIRS_CTES}
+SELECT doc_a, doc_b, n_common, jaccard FROM pairs
 """,
     tags=("dedup", "llm", "join"),
     doc="L2: exact 3-gram Jaccard ≥ 0.2 pairs via inverted shingle index.",
@@ -644,21 +658,11 @@ def minhash_lsh_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     "minhash_lsh_recall_check",
     oracle=_SHINGLE_SQL
     + f""",
-sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY 1),
-freq AS (SELECT s FROM sh GROUP BY s HAVING COUNT(*) > {_SHINGLE_DF_CAP}),
-inter AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_common
-  FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-  WHERE a.s NOT IN (SELECT s FROM freq)
-  GROUP BY 1, 2
-)
+{_JACCARD_PAIRS_CTES}
 SELECT CAST(COUNT(*) AS BIGINT) AS n_true_pairs,
        TRUE AS recall_ge_80pct,
        TRUE AS no_false_positives
-FROM inter
-JOIN sizes sa ON doc_a = sa.doc_id
-JOIN sizes sb ON doc_b = sb.doc_id
-WHERE CAST(n_common AS DOUBLE) / (sa.n + sb.n - n_common) >= 0.5
+FROM pairs WHERE jaccard >= 0.5
 """,
     tags=("dedup", "llm", "approx", "quality"),
     doc=(
@@ -1023,21 +1027,7 @@ def simhash_idf_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # `allm` = members ∪ singleton docs.  Shared by the dedup_clusters and
 # dedup_keep_best oracles so the two cannot drift.
 _CLUSTER_CTES = f""",
-sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY 1),
-freq AS (SELECT s FROM sh GROUP BY s HAVING COUNT(*) > {_SHINGLE_DF_CAP}),
-inter AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_common
-  FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-  WHERE a.s NOT IN (SELECT s FROM freq)
-  GROUP BY 1, 2
-),
-pairs AS (
-  SELECT doc_a, doc_b
-  FROM inter
-  JOIN sizes sa ON doc_a = sa.doc_id
-  JOIN sizes sb ON doc_b = sb.doc_id
-  WHERE CAST(n_common AS DOUBLE) / (sa.n + sb.n - n_common) >= 0.2
-),
+{_JACCARD_PAIRS_CTES},
 edges AS (
   SELECT doc_a AS s, doc_b AS d FROM pairs
   UNION
@@ -1572,21 +1562,7 @@ def dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     "neardup_triangles",
     oracle=_SHINGLE_SQL
     + f""",
-sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY 1),
-freq AS (SELECT s FROM sh GROUP BY s HAVING COUNT(*) > {_SHINGLE_DF_CAP}),
-inter AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_common
-  FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-  WHERE a.s NOT IN (SELECT s FROM freq)
-  GROUP BY 1, 2
-),
-pairs AS (
-  SELECT doc_a, doc_b
-  FROM inter
-  JOIN sizes sa ON doc_a = sa.doc_id
-  JOIN sizes sb ON doc_b = sb.doc_id
-  WHERE CAST(n_common AS DOUBLE) / (sa.n + sb.n - n_common) >= 0.2
-)
+{_JACCARD_PAIRS_CTES}
 SELECT e1.doc_a AS doc_a, e1.doc_b AS doc_b, e2.doc_b AS doc_c
 FROM pairs e1
 JOIN pairs e2 ON e1.doc_b = e2.doc_a
@@ -2028,23 +2004,10 @@ def source_dedup_crossover(spark: SparkSession, sf_dir: str) -> DataFrame:
     "neardup_jaccard_histogram",
     oracle=_SHINGLE_SQL
     + f""",
-sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY 1),
-freq AS (SELECT s FROM sh GROUP BY s HAVING COUNT(*) > {_SHINGLE_DF_CAP}),
-inter AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_common
-  FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-  WHERE a.s NOT IN (SELECT s FROM freq)
-  GROUP BY 1, 2
-), j AS (
-  SELECT CAST(n_common AS DOUBLE) / (sa.n + sb.n - n_common) AS jaccard
-  FROM inter
-  JOIN sizes sa ON doc_a = sa.doc_id
-  JOIN sizes sb ON doc_b = sb.doc_id
-  WHERE CAST(n_common AS DOUBLE) / (sa.n + sb.n - n_common) >= 0.2
-)
+{_JACCARD_PAIRS_CTES}
 SELECT CAST(FLOOR(jaccard * 10) AS BIGINT) AS jaccard_decile,
        COUNT(*) AS n_pairs
-FROM j GROUP BY 1
+FROM pairs GROUP BY 1
 """,
     tags=("dedup", "llm", "audit"),
     doc=(

@@ -43,19 +43,18 @@ from pyspark.sql import functions as F
 from ..io.tables import table
 from ..registry import register
 from ._helpers import md5_bucket16
-from .retrieval_served import _cell_bucket
+from .retrieval_served import _cell_bucket, _probe_index, cell_layout
 from .similarity import (
-    _SERVED_NPROBE,
+    _SQL_N,
     served_nprobe,
-    _SQL_DOT,
-    _SQL_NORM,
-    _SQL_QVEC,
-    _cosine,
     _dot,
     _ivf_cents,
     _qvec,
+    _sql_cos,
     _sql_ivf_cents,
     _sql_ivf_params,
+    _sql_probe_cells,
+    _sql_served_nprobe,
     _sql_two_level,
     _two_level_assign,
 )
@@ -188,17 +187,9 @@ def propagate_retrieval_delete(
     }
 
 
-def _sql_cos(a: str, b: str, na: str, nb: str) -> str:
-    return (
-        f"CAST({_SQL_DOT.format(a=a, b=b)} AS DOUBLE)"
-        f" / (SQRT(CAST({na} AS DOUBLE)) * SQRT(CAST({nb} AS DOUBLE)))"
-    )
-
-
 def _delete_oracle() -> str:
     from .textops import _sql_bm25_core, _sql_bm25_term_e9
 
-    pcos = _sql_cos("p.pqv", "c.cqv", "p.pnrm", "c.cnrm")
     qcos = _sql_cos("p.pqv", "a.qv", "p.pnrm", "a.nrm")
     return f"""{_sql_bm25_core()},
 del AS MATERIALIZED (
@@ -237,23 +228,14 @@ bmtop AS (
   ) WHERE rn <= 5
 ),
 nv AS MATERIALIZED (
-  SELECT vec_id, qv, {_SQL_NORM.format(a='qv')} AS nrm
-  FROM (SELECT vec_id, {_SQL_QVEC.format(e='embedding')} AS qv FROM embeddings)
+  {_SQL_N}
 ),
 nb AS MATERIALIZED (SELECT * FROM nv WHERE vec_id % 10 = 0),
 {_sql_ivf_params('nb')},
 {_sql_ivf_cents('nb')},
 {_sql_two_level('cents', 'asg', 'nv')},
 probes AS (SELECT vec_id AS pid, qv AS pqv, nrm AS pnrm FROM nv WHERE vec_id < 10),
-pcell AS (
-  SELECT pid, centroid_id FROM (
-    SELECT p.pid, c.centroid_id,
-           ROW_NUMBER() OVER (
-             PARTITION BY p.pid ORDER BY {pcos} DESC, c.centroid_id
-           ) AS crn
-    FROM probes p CROSS JOIN cents c
-  ) WHERE crn <= {_SERVED_NPROBE}
-),
+{_sql_probe_cells('probes', 'pid', 'cents', _sql_served_nprobe('cents'))},
 anntop AS (
   SELECT pid, vec_id, rn, CAST(FLOOR(qsim * 1e9) AS BIGINT) AS e9 FROM (
     SELECT pc.pid, a.vec_id, {qcos} AS qsim,
@@ -303,19 +285,16 @@ def retrieval_index_delete_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..io.acid_table import (
         compact_partitions,
         current_manifest,
-        read_table,
         replace_partitions,
         table_history,
     )
     from ..streaming.bm25_ingest import (
         _build_standing_index,
-        _ledger_snapshot,
         _probe_qt,
         _served_scores,
         _topk,
         _two_stage_served,
     )
-    from .retrieval_served import cell_layout
     from .textops import _bm25_scores
 
     tmp = tempfile.mkdtemp(prefix="rdel_")
@@ -490,56 +469,13 @@ def retrieval_index_delete_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("qv").alias("pqv"),
             F.col("nrm").alias("pnrm"),
         ).localCheckpoint()
-        w_c = Window.partitionBy("pid").orderBy(F.desc("c_sim"), F.asc("centroid_id"))
-        pcell = (
-            cents.drop("stride", "cstride")
-            .crossJoin(F.broadcast(probes))
-            .select(
-                "pid", "centroid_id",
-                _cosine(
-                    _dot(F.col("pqv"), F.col("cqv")), F.col("pnrm"), F.col("cnrm")
-                ).alias("c_sim"),
-            )
-            .withColumn("crn", F.row_number().over(w_c))
-            .filter(F.col("crn") <= served_nprobe(n_cells))
-            .select("pid", "centroid_id")
-            .localCheckpoint()
+        _, top = _probe_index(
+            spark, ann_root, cents, probes, served_nprobe(n_cells), 5, "pid"
         )
-        allowed = {
-            str(r["b"])
-            for r in pcell.select(
-                _cell_bucket(F.col("centroid_id"), cell_layout(ann_root)).alias("b")
-            ).distinct().collect()
-        }
-        idx = read_table(
-            spark, ann_root,
-            partition_filter=lambda kv: kv["cell_bucket"] in allowed,
-        ).select(
-            F.col("vec_id").cast("long").alias("vec_id"),
-            F.col("centroid_id").cast("long").alias("centroid_id"),
-            F.col("qv").cast("array<bigint>").alias("qv"),
-            F.col("nrm").cast("long").alias("nrm"),
-        )
-        w_p = Window.partitionBy("pid").orderBy(F.desc("qsim"), F.asc("vec_id"))
-        anntop = (
-            F.broadcast(probes)
-            .join(pcell, "pid")
-            .join(idx, "centroid_id")
-            .filter(F.col("vec_id") != F.col("pid"))
-            .select(
-                "pid", "vec_id",
-                _cosine(
-                    _dot(F.col("pqv"), F.col("qv")), F.col("pnrm"), F.col("nrm")
-                ).alias("qsim"),
-            )
-            .withColumn("rn", F.row_number().over(w_p))
-            .filter(F.col("rn") <= 5)
-            .select(
-                "pid", "vec_id", "rn",
-                F.floor(F.col("qsim") * F.lit(1e9)).cast("bigint").alias("e9"),
-            )
-            .localCheckpoint()
-        )
+        anntop = top.select(
+            "pid", "vec_id", "rn",
+            F.floor(F.col("qsim") * F.lit(1e9)).cast("bigint").alias("e9"),
+        ).localCheckpoint()
         if anntop.filter(F.col("vec_id").isin(del_ids)).count():
             raise RuntimeError("a deleted vector is still serveable from ANN")
         out = (

@@ -41,26 +41,29 @@ from pyspark.sql import functions as F
 from ..io.tables import table
 from ..registry import register
 from .similarity import (
-    _SERVED_NPROBE,
     _MMR_K,
     _MMR_POOL,
     _MMR_PROBES,
     _RRF_K,
     _RRF_POOL,
     _RRF_PROBES,
-    _SQL_DOT,
-    _SQL_NORM,
-    _SQL_QVEC,
+    _SQL_N,
     _cosine,
     _dot,
     _ivf_cents,
     _mmr_greedy,
+    _probe_topk,
     _qvec,
+    _sql_cos,
     _sql_ivf_cents,
     _sql_ivf_params,
     _sql_mmr_steps,
+    _sql_probe_cells,
+    _sql_served_nprobe,
     _sql_two_level,
+    _top_cells,
     _two_level_assign,
+    served_nprobe,
 )
 
 # CREATION-TIME default for the served ANN index's physical partition
@@ -105,37 +108,21 @@ def _cell_bucket(col, n_buckets: int = _CELL_BUCKETS):
     return F.pmod(md5_bucket16(col), F.lit(int(n_buckets)))
 
 
-def _sql_cos(a: str, b: str, na: str, nb: str) -> str:
-    return (
-        f"CAST({_SQL_DOT.format(a=a, b=b)} AS DOUBLE)"
-        f" / (SQRT(CAST({na} AS DOUBLE)) * SQRT(CAST({nb} AS DOUBLE)))"
-    )
-
-
 def _sql_served_pool(
     src: str, probes: str, pid: str, pool: int, out: str = "cand"
 ) -> str:
     """CTE chain (nb → params/cents → asg → pcell → ``{out}``): the
     ANN-served candidate pool — bootstrap-trained quantizer, two-level
-    assignment of the whole corpus, top-``_SERVED_NPROBE`` cells per
+    assignment of the whole corpus, top-``served_nprobe(K)`` cells per
     probe, exact cosine re-rank of the probed cells' members.
     ``{src}`` must expose (vec_id, qv, nrm), ``{probes}``
     ({pid}, pqv, pnrm)."""
-    pcos = _sql_cos("p.pqv", "c.cqv", "p.pnrm", "c.cnrm")
     qcos = _sql_cos("p.pqv", "a.qv", "p.pnrm", "a.nrm")
     return f"""nb AS MATERIALIZED (SELECT * FROM {src} WHERE vec_id % 10 = 0),
 {_sql_ivf_params('nb')},
 {_sql_ivf_cents('nb')},
 {_sql_two_level('cents', 'asg', src)},
-pcell AS (
-  SELECT {pid}, centroid_id FROM (
-    SELECT p.{pid}, c.centroid_id,
-           ROW_NUMBER() OVER (
-             PARTITION BY p.{pid} ORDER BY {pcos} DESC, c.centroid_id
-           ) AS crn
-    FROM {probes} p CROSS JOIN cents c
-  ) WHERE crn <= {_SERVED_NPROBE}
-),
+{_sql_probe_cells(probes, pid, 'cents', _sql_served_nprobe('cents'))},
 {out} AS MATERIALIZED (
   SELECT {pid}, vec_id, qv, nrm, qsim FROM (
     SELECT pc.{pid}, a.vec_id, a.qv, a.nrm, {qcos} AS qsim,
@@ -181,6 +168,72 @@ def _build_ann_index(spark: SparkSession, nv: DataFrame, index_root: str):
     return cents
 
 
+def _probe_index(
+    spark: SparkSession,
+    index_root: str,
+    cents: DataFrame,
+    probes: DataFrame,
+    nprobe: int,
+    k: int,
+    pid: str = "probe_id",
+) -> tuple[DataFrame, DataFrame]:
+    """One served probe of the standing cell-bucketed index at
+    ``index_root``: each probe of ``probes`` ({pid}, pqv, pnrm) ranks
+    the quantizer ``cents``, keeps its top-``nprobe`` cells (``cells``,
+    checkpointed), reads ONLY those cells' buckets through the manifest
+    prune, and re-ranks their members by exact cosine.  Returns
+    ``(cells, top)``: top is ({pid}, vec_id, qv, nrm, qsim, rn), ≤ ``k``
+    rows per probe, not yet materialized."""
+    from ..io.acid_table import read_table
+
+    cells = _top_cells(
+        cents.drop("stride", "cstride")
+        .crossJoin(F.broadcast(probes))
+        .select(
+            pid,
+            "centroid_id",
+            _cosine(
+                _dot(F.col("pqv"), F.col("cqv")), F.col("pnrm"), F.col("cnrm")
+            ).alias("c_sim"),
+        ),
+        nprobe,
+        pid,
+    ).localCheckpoint()
+    cellb = cell_layout(index_root)  # the persisted layout, never a guess
+    allowed = {
+        str(r["b"])
+        for r in cells.select(_cell_bucket(F.col("centroid_id"), cellb).alias("b"))
+        .distinct()
+        .collect()
+    }
+    idx = read_table(
+        spark,
+        index_root,
+        partition_filter=lambda kv: kv["cell_bucket"] in allowed,
+    ).select(
+        F.col("vec_id").cast("long").alias("vec_id"),
+        F.col("centroid_id").cast("long").alias("centroid_id"),
+        F.col("qv").cast("array<bigint>").alias("qv"),
+        F.col("nrm").cast("long").alias("nrm"),
+    )
+    scored = (
+        F.broadcast(probes)
+        .join(cells, pid)
+        .join(idx, "centroid_id")
+        .filter(F.col("vec_id") != F.col(pid))
+        .select(
+            pid,
+            "vec_id",
+            "qv",
+            "nrm",
+            _cosine(
+                _dot(F.col("pqv"), F.col("qv")), F.col("pnrm"), F.col("nrm")
+            ).alias("qsim"),
+        )
+    )
+    return cells, _probe_topk(scored, k, pid, score="qsim", nid="vec_id")
+
+
 def _ann_candidate_pool(
     spark: SparkSession,
     nv: DataFrame,
@@ -196,56 +249,21 @@ def _ann_candidate_pool(
     pool (probe_id, vec_id, qv, nrm, qsim), ≤ ``pool`` per probe."""
     import os
 
-    from ..io.acid_table import current_manifest, read_table
+    from ..io.acid_table import current_manifest
 
     index_root = os.path.join(tmp, "ann_index")
     cents = _build_ann_index(spark, nv, index_root)
-    cellb = cell_layout(index_root)  # the persisted layout, never a guess
     if nprobe is None:
         # adaptive probe width (VERDICT r13 #2): a pinned CELL FRACTION
         # of the quantizer, floored at the small-K operating point —
-        # identical to the oracles' literal 12 at every driver scale
-        from .similarity import served_nprobe
-
+        # the oracles replay the same rule from their cents CTE
         nprobe = served_nprobe(cents.count())
 
-    w_cent = Window.partitionBy("probe_id").orderBy(
-        F.desc("c_sim"), F.asc("centroid_id")
-    )
-    probe_cells = (
-        cents.drop("stride", "cstride")
-        .crossJoin(F.broadcast(probes))
-        .select(
-            "probe_id",
-            "centroid_id",
-            _cosine(
-                _dot(F.col("pqv"), F.col("cqv")), F.col("pnrm"), F.col("cnrm")
-            ).alias("c_sim"),
-        )
-        .withColumn("crn", F.row_number().over(w_cent))
-        .filter(F.col("crn") <= nprobe)
-        .select("probe_id", "centroid_id")
-        .localCheckpoint()
-    )
-    allowed = {
-        str(r["b"])
-        for r in probe_cells.select(
-            _cell_bucket(F.col("centroid_id"), cellb).alias("b")
-        )
-        .distinct()
-        .collect()
-    }
-    idx = read_table(
-        spark,
-        index_root,
-        partition_filter=lambda kv: kv["cell_bucket"] in allowed,
-    ).select(
-        F.col("vec_id").cast("long").alias("vec_id"),
-        F.col("centroid_id").cast("long").alias("centroid_id"),
-        F.col("qv").cast("array<bigint>").alias("qv"),
-        F.col("nrm").cast("long").alias("nrm"),
+    probe_cells, pool_rows = _probe_index(
+        spark, index_root, cents, probes, nprobe, pool
     )
     # single-probe pruning audit (the ann_index_bucket_probe convention)
+    cellb = cell_layout(index_root)
     one = probe_cells.orderBy("probe_id").limit(nprobe)
     one_buckets = {
         str(r["b"])
@@ -268,28 +286,7 @@ def _ann_candidate_pool(
             f"cell-bucket pruning ineffective: one probe touches "
             f"{len(one_parts)} of {len(all_parts)} partitions"
         )
-    w_pool = Window.partitionBy("probe_id").orderBy(
-        F.desc("qsim"), F.asc("vec_id")
-    )
-    return (
-        F.broadcast(probes)
-        .join(probe_cells, "probe_id")
-        .join(idx, "centroid_id")
-        .filter(F.col("vec_id") != F.col("probe_id"))
-        .select(
-            "probe_id",
-            "vec_id",
-            "qv",
-            "nrm",
-            _cosine(
-                _dot(F.col("pqv"), F.col("qv")), F.col("pnrm"), F.col("nrm")
-            ).alias("qsim"),
-        )
-        .withColumn("rn", F.row_number().over(w_pool))
-        .filter(F.col("rn") <= pool)
-        .drop("rn")
-        .localCheckpoint()
-    )
+    return pool_rows.drop("rn").localCheckpoint()
 
 
 # --------------------------------------------------------------------------
@@ -303,10 +300,9 @@ def _sql_mmr_served() -> str:
         for k in range(1, _MMR_K + 1)
     )
     return f"""
-WITH q AS (
-  SELECT vec_id, {_SQL_QVEC.format(e='embedding')} AS qv FROM embeddings
+WITH n AS MATERIALIZED (
+  {_SQL_N}
 ),
-n AS MATERIALIZED (SELECT vec_id, qv, {_SQL_NORM.format(a='qv')} AS nrm FROM q),
 probes AS (
   SELECT vec_id AS probe_id, qv AS pqv, nrm AS pnrm FROM n
   WHERE vec_id < {_MMR_PROBES}
@@ -669,8 +665,7 @@ chunks AS MATERIALIZED (
 ),
 clen AS (SELECT ck, doc_id, chunk_idx, LEN(cws) AS len FROM chunks),
 emb AS (
-  SELECT vec_id, qv, {_SQL_NORM.format(a='qv')} AS nrm
-  FROM (SELECT vec_id, {_SQL_QVEC.format(e='embedding')} AS qv FROM embeddings)
+  {_SQL_N}
 ),
 cvec AS MATERIALIZED (
   SELECT c.ck, c.doc_id, e.qv, e.nrm
@@ -769,7 +764,7 @@ def rag_chunk_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from ..io.acid_table import read_table, replace_partitions
+    from ..io.acid_table import replace_partitions
     from ..streaming.core import bm25_index_batch_frames
 
     c, s = _RAGC_LEN, _RAGC_STRIDE

@@ -80,6 +80,55 @@ _SQL_DOT = (
 _SQL_NORM = "CAST(list_sum(list_transform({a}, x -> x * x)) AS BIGINT)"
 
 
+def _sql_cos(a: str, b: str, na: str, nb: str) -> str:
+    """The oracle twin of :func:`_cosine`: the same double op-sequence
+    over the quantized vectors ``a``, ``b`` and their norms ``na``, ``nb``."""
+    return (
+        f"CAST({_SQL_DOT.format(a=a, b=b)} AS DOUBLE)"
+        f" / (SQRT(CAST({na} AS DOUBLE)) * SQRT(CAST({nb} AS DOUBLE)))"
+    )
+
+
+# The batch searches' 20 probes over ``n``.
+_SQL_PROBES = (
+    "probes AS (SELECT vec_id AS probe_id, qv AS pqv, nrm AS pnrm FROM n WHERE vec_id < 20)"
+)
+
+# The cosine of a self-join's two sides ``a`` and ``b``.
+_SQL_COS_AB = _sql_cos("a.qv", "b.qv", "a.nrm", "b.nrm")
+
+# Body of the oracles' quantized-corpus CTE: (vec_id, qv, nrm) per embedding.
+_SQL_N = f"""SELECT vec_id, qv, {_SQL_NORM.format(a='qv')} AS nrm
+  FROM (SELECT vec_id, {_SQL_QVEC.format(e='embedding')} AS qv FROM embeddings)"""
+
+
+def _probe_topk(
+    scored: DataFrame,
+    k: int,
+    pid: str = "probe_id",
+    score: str = "cos_sim",
+    nid: str = "neighbor_id",
+) -> DataFrame:
+    """Each probe's top ``k`` rows of ``scored`` by ``score`` DESC, then
+    ``nid``, numbered in ``rn`` — the exact re-rank that ends every
+    probe search."""
+    w = Window.partitionBy(pid).orderBy(F.desc(score), F.asc(nid))
+    return scored.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= k)
+
+
+def _sql_probe_topk(src: str, k: int) -> str:
+    """The oracle twin of :func:`_probe_topk` with the default columns:
+    the final SELECT over ``{src}`` (probe_id, neighbor_id, cos_sim)."""
+    return f"""SELECT probe_id, neighbor_id, rn, cos_sim
+FROM (
+  SELECT probe_id, neighbor_id, cos_sim,
+         ROW_NUMBER() OVER (PARTITION BY probe_id ORDER BY cos_sim DESC, neighbor_id) AS rn
+  FROM {src}
+)
+WHERE rn <= {k}
+"""
+
+
 # --------------------------------------------------------------------------
 # L3a: exact brute-force cosine top-k.
 # --------------------------------------------------------------------------
@@ -88,34 +137,21 @@ _SQL_NORM = "CAST(list_sum(list_transform({a}, x -> x * x)) AS BIGINT)"
 @register(
     "cosine_topk",
     oracle=f"""
-WITH q AS (
-  SELECT vec_id, {_SQL_QVEC.format(e='embedding')} AS qv FROM embeddings
+WITH n AS (
+  {_SQL_N}
 ),
-n AS (
-  SELECT vec_id, qv, {_SQL_NORM.format(a='qv')} AS nrm FROM q
-),
-probes AS (SELECT vec_id AS probe_id, qv AS pqv, nrm AS pnrm FROM n WHERE vec_id < 20),
+{_SQL_PROBES},
 scored AS (
   SELECT probe_id,
          n.vec_id AS neighbor_id,
-         CAST({_SQL_DOT.format(a='pqv', b='qv')} AS DOUBLE)
-           / (SQRT(CAST(pnrm AS DOUBLE)) * SQRT(CAST(nrm AS DOUBLE))) AS cos_sim
+         {_sql_cos('pqv', 'qv', 'pnrm', 'nrm')} AS cos_sim
   FROM probes JOIN n ON n.vec_id <> probe_id
 )
-SELECT probe_id, neighbor_id, rn, cos_sim
-FROM (
-  SELECT probe_id, neighbor_id, cos_sim,
-         ROW_NUMBER() OVER (PARTITION BY probe_id ORDER BY cos_sim DESC, neighbor_id) AS rn
-  FROM scored
-)
-WHERE rn <= 5
-""",
+{_sql_probe_topk('scored', 5)}""",
     tags=("similarity", "llm", "topk"),
     doc="L3: exact cosine top-5 neighbors for 20 probes (quantized-int math).",
 )
 def cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     emb = table(spark, sf_dir, "embeddings").select(
         "vec_id", _qvec("embedding").alias("qv")
     )
@@ -139,12 +175,7 @@ def cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
-    w = Window.partitionBy("probe_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 5)
-        .select("probe_id", "neighbor_id", "rn", "cos_sim")
-    )
+    return _probe_topk(scored, 5).select("probe_id", "neighbor_id", "rn", "cos_sim")
 
 
 # --------------------------------------------------------------------------
@@ -164,12 +195,10 @@ n AS (
 SELECT a.vec_id AS vec_a,
        b.vec_id AS vec_b,
        a.label AS label,
-       CAST({_SQL_DOT.format(a='a.qv', b='b.qv')} AS DOUBLE)
-         / (SQRT(CAST(a.nrm AS DOUBLE)) * SQRT(CAST(b.nrm AS DOUBLE))) AS cos_sim
+       {_SQL_COS_AB} AS cos_sim
 FROM n a
 JOIN n b ON a.label = b.label AND a.vec_id < b.vec_id
-WHERE CAST({_SQL_DOT.format(a='a.qv', b='b.qv')} AS DOUBLE)
-        / (SQRT(CAST(a.nrm AS DOUBLE)) * SQRT(CAST(b.nrm AS DOUBLE))) >= 0.35
+WHERE {_SQL_COS_AB} >= 0.35
 """,
     tags=("similarity", "llm", "dedup"),
     doc="L3/L2: cosine ≥ 0.35 pairs within label blocks (equi-join blocking, no O(n²)).",
@@ -208,12 +237,28 @@ def embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 _SQL_PLANES = "[" + ", ".join("[" + ", ".join(str(v) for v in p) + "]" for p in _QPLANES) + "]"
 
 
+def _lsh_sig(t: int) -> Column:
+    """Table ``t``'s signature of ``qv`` against the broadcast ``planes``
+    column: bit j is set iff the integer dot with plane t·_LSH_BITS + j
+    is positive."""
+    weights = F.array(*[F.lit(1 << j) for j in range(_LSH_BITS)])
+
+    def bit(j: Column) -> Column:
+        plane = F.get(F.col("planes"), F.lit(t * _LSH_BITS) + j)
+        return F.when(_dot(F.col("qv"), plane) > 0, F.get(weights, j)).otherwise(F.lit(0))
+
+    return F.aggregate(
+        F.sequence(F.lit(0), F.lit(_LSH_BITS - 1)),
+        F.lit(0),
+        lambda acc, j: acc + bit(j),
+    )
+
+
 @register(
     "ann_lsh_topk",
     oracle=f"""
 WITH n AS (
-  SELECT vec_id, qv, {_SQL_NORM.format(a='qv')} AS nrm
-  FROM (SELECT vec_id, {_SQL_QVEC.format(e='embedding')} AS qv FROM embeddings)
+  {_SQL_N}
 ),
 planes AS (SELECT {_SQL_PLANES} AS p),
 sigb AS (
@@ -234,20 +279,12 @@ cand AS (
 ),
 scored AS (
   SELECT cand.probe_id, cand.neighbor_id,
-         CAST({_SQL_DOT.format(a='a.qv', b='b.qv')} AS DOUBLE)
-           / (SQRT(CAST(a.nrm AS DOUBLE)) * SQRT(CAST(b.nrm AS DOUBLE))) AS cos_sim
+         {_SQL_COS_AB} AS cos_sim
   FROM cand
   JOIN n a ON a.vec_id = cand.probe_id
   JOIN n b ON b.vec_id = cand.neighbor_id
 )
-SELECT probe_id, neighbor_id, rn, cos_sim
-FROM (
-  SELECT probe_id, neighbor_id, cos_sim,
-         ROW_NUMBER() OVER (PARTITION BY probe_id ORDER BY cos_sim DESC, neighbor_id) AS rn
-  FROM scored
-)
-WHERE rn <= 3
-""",
+{_sql_probe_topk('scored', 3)}""",
     tags=("similarity", "llm", "approx"),
     doc=(
         "L3 at scale: multi-table random-hyperplane LSH (4 tables × 8 bits, "
@@ -257,8 +294,6 @@ WHERE rn <= 3
     ),
 )
 def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     # The 32 QUANTIZED hyperplanes ride along as a ONE-ROW broadcast
     # column (array<array<bigint>>), folded per row — not as 32×64
     # literal nodes, which made plan analysis alone cost more than
@@ -277,30 +312,15 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(planes_row))
     )
 
-    _WEIGHTS = F.array(*[F.lit(2**j) for j in range(_LSH_BITS)])
-
-    def table_key(t: int) -> Column:
-        def bit(j: Column) -> Column:
-            plane = F.get(F.col("planes"), F.lit(t * _LSH_BITS) + j)
-            dot = F.aggregate(
-                F.zip_with(F.col("qv"), plane, lambda x, y: x * y),
-                F.lit(0).cast("bigint"),
-                lambda acc, x: acc + x,
-            )
-            return F.when(dot > 0, F.get(_WEIGHTS, j)).otherwise(F.lit(0))
-
-        sig = F.aggregate(
-            F.sequence(F.lit(0), F.lit(_LSH_BITS - 1)),
-            F.lit(0),
-            lambda acc, j: acc + bit(j),
-        )
-        return F.concat_ws(":", F.lit(str(t)), sig.cast("string"))
-
+    keys = [
+        F.concat_ws(":", F.lit(str(t)), _lsh_sig(t).cast("string"))
+        for t in range(_LSH_TABLES)
+    ]
     sigs = emb.select(
         "vec_id",
         "qv",
         _dot(F.col("qv"), F.col("qv")).alias("nrm"),
-        F.explode(F.array(*[table_key(t) for t in range(_LSH_TABLES)])).alias("bucket"),
+        F.explode(F.array(*keys)).alias("bucket"),
     )
     probes = sigs.filter(F.col("vec_id") < 20).select(
         F.col("vec_id").alias("probe_id"),
@@ -319,12 +339,7 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         "neighbor_id",
         _cosine(_dot(F.col("pqv"), F.col("qv")), F.col("pnrm"), F.col("nrm")).alias("cos_sim"),
     )
-    w = Window.partitionBy("probe_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 3)
-        .select("probe_id", "neighbor_id", "rn", "cos_sim")
-    )
+    return _probe_topk(scored, 3).select("probe_id", "neighbor_id", "rn", "cos_sim")
 
 
 # --------------------------------------------------------------------------
@@ -359,19 +374,58 @@ _SERVED_NPROBE = 12
 # falling 0.53 → 0.27 from sf0.1 to ov-sf10 at the nprobe=12 pin.  The
 # served pools therefore probe ADAPTIVELY: nprobe(K) = max(12, ceil(K ·
 # frac)), i.e. a floor of 12 cells for small quantizers (where 12 is
-# already most or all of K — the driver-fixture regime every oracle's
-# literal 12 replays exactly: K = 4 at sf0.01, 16 at sf0.1, so
-# served_nprobe == 12 at every oracle-checked scale) and a pinned CELL
-# FRACTION at corpus scale.  frac = 1/16 re-pinned from the r14 curve
-# (scripts/served_quality_curve.py, BASELINE.md eleventh campaign):
+# already most or all of K: K = 4 at sf0.01, 16 at sf0.1) and a pinned
+# CELL FRACTION at corpus scale.  frac = 1/16 re-pinned from the r14
+# curve (scripts/served_quality_curve.py, BASELINE.md eleventh campaign):
 # at ov-sf10 (K = 1600) nprobe = 100 restores nDCG@10 ≥ 0.4 at a serve
-# latency within the flat band the r13 curve measured.
-_SERVED_CELL_FRAC = 1 / 16
+# latency within the flat band the r13 curve measured.  The oracles
+# replay the same rule from their centroid CTE's row count
+# (_sql_served_nprobe), so Spark and oracle agree at every K.
 
 
 def served_nprobe(n_cells: int) -> int:
     """The served pools' adaptive probe width: max(12, ceil(K/16))."""
     return max(_SERVED_NPROBE, -(-int(n_cells) // 16))
+
+
+def _sql_served_nprobe(cents: str) -> str:
+    """:func:`served_nprobe` over the row count K of the CTE ``{cents}``."""
+    return f"(SELECT GREATEST({_SERVED_NPROBE}, (COUNT(*) + 15) // 16) FROM {cents})"
+
+
+# --- the probe-cell step: each probe keeps its nprobe nearest cells -------
+# Written once per engine; every IVF search, served pool and serving audit
+# ranks its cells through these two, so a data-dependent stopping rule
+# replaces the fixed nprobe in one place.
+
+
+def _top_cells(scored: DataFrame, nprobe: int, pid: str = "probe_id") -> DataFrame:
+    """Each probe's ``nprobe`` best cells of ``scored`` ({pid},
+    centroid_id, c_sim, …) by c_sim DESC, then centroid_id; c_sim is
+    dropped."""
+    w = Window.partitionBy(pid).orderBy(F.desc("c_sim"), F.asc("centroid_id"))
+    return (
+        scored.withColumn("crn", F.row_number().over(w))
+        .filter(F.col("crn") <= nprobe)
+        .drop("c_sim", "crn")
+    )
+
+
+def _sql_probe_cells(probes: str, pid: str, cents: str, nprobe: int | str) -> str:
+    """The oracle twin of :func:`_top_cells`: the CTE ``pcell`` ({pid},
+    pqv, pnrm, centroid_id) keeps, for each probe of ``{probes}`` ({pid},
+    pqv, pnrm), its ``nprobe`` cells of ``{cents}`` (centroid_id, cqv,
+    cnrm) nearest by quantized cosine, ties to the smaller centroid_id."""
+    pcos = _sql_cos("p.pqv", "c.cqv", "p.pnrm", "c.cnrm")
+    return f"""pcell AS (
+  SELECT {pid}, pqv, pnrm, centroid_id FROM (
+    SELECT p.{pid}, p.pqv, p.pnrm, c.centroid_id,
+           ROW_NUMBER() OVER (
+             PARTITION BY p.{pid} ORDER BY {pcos} DESC, c.centroid_id
+           ) AS crn
+    FROM {probes} p CROSS JOIN {cents} c
+  ) WHERE crn <= {nprobe}
+)"""
 
 
 # --- corpus-scaled, data-driven centroid seeding (round 9) -----------------
@@ -551,13 +605,9 @@ def _sql_two_level(
     ex = "".join(f", {c}" for c in extra_cols)
     nex = "".join(f", n.{c}" for c in extra_cols)
     vex = "".join(f", v.{c}" for c in extra_cols)
-    cos = (
-        f"CAST({_SQL_DOT.format(a='{a}', b='{b}')} AS DOUBLE)"
-        " / (SQRT(CAST({na} AS DOUBLE)) * SQRT(CAST({nb} AS DOUBLE)))"
-    )
-    c2c = cos.format(a="c.cqv", b="g.gqv", na="c.cnrm", nb="g.gnrm")
-    v2c = cos.format(a="n.qv", b="g.gqv", na="n.nrm", nb="g.gnrm")
-    fine = cos.format(a="v.qv", b="cc.cqv", na="v.nrm", nb="cc.cnrm")
+    c2c = _sql_cos("c.cqv", "g.gqv", "c.cnrm", "g.gnrm")
+    v2c = _sql_cos("n.qv", "g.gqv", "n.nrm", "g.gnrm")
+    fine = _sql_cos("v.qv", "cc.cqv", "v.nrm", "cc.cnrm")
     return f"""{out}_coarse AS (
   SELECT centroid_id AS coarse_id, cqv AS gqv, cnrm AS gnrm
   FROM {cents}
@@ -605,77 +655,21 @@ def _sql_ivf_assign(extra_cols: tuple[str, ...] = ()) -> str:
     )
 
 
-@register(
-    "ivf_ann_topk",
-    oracle=f"""
-WITH n AS (
-  SELECT vec_id, qv, {_SQL_NORM.format(a='qv')} AS nrm
-  FROM (SELECT vec_id, {_SQL_QVEC.format(e='embedding')} AS qv FROM embeddings)
-),
-{_sql_ivf_assign()},
-probe_lists AS (
-  SELECT probe_id, pqv, pnrm, centroid_id FROM (
-    SELECT n.vec_id AS probe_id, n.qv AS pqv, n.nrm AS pnrm, cents.centroid_id,
-           ROW_NUMBER() OVER (
-             PARTITION BY n.vec_id
-             ORDER BY CAST({_SQL_DOT.format(a='n.qv', b='cents.cqv')} AS DOUBLE)
-                        / (SQRT(CAST(n.nrm AS DOUBLE)) * SQRT(CAST(cents.cnrm AS DOUBLE))) DESC,
-                      cents.centroid_id
-           ) AS crn
-    FROM n CROSS JOIN cents
-    WHERE n.vec_id < 20
-  ) WHERE crn <= {_IVF_NPROBE}
-),
-scored AS (
-  SELECT p.probe_id, a.vec_id AS neighbor_id,
-         CAST({_SQL_DOT.format(a='p.pqv', b='a.qv')} AS DOUBLE)
-           / (SQRT(CAST(p.pnrm AS DOUBLE)) * SQRT(CAST(a.nrm AS DOUBLE))) AS cos_sim
-  FROM probe_lists p
-  JOIN assigned a ON a.centroid_id = p.centroid_id AND a.vec_id <> p.probe_id
-)
-SELECT probe_id, neighbor_id, rn, cos_sim
-FROM (
-  SELECT probe_id, neighbor_id, cos_sim,
-         ROW_NUMBER() OVER (PARTITION BY probe_id ORDER BY cos_sim DESC, neighbor_id) AS rn
-  FROM scored
-)
-WHERE rn <= 3
-""",
-    tags=("similarity", "llm", "approx", "ann"),
-    doc=(
-        "L3 at scale: IVF ANN — hash-seeded K ≈ n/125 centroids "
-        "(corpus-scaled: inverted-list population stays ~125 at any n), "
-        "two-level map-side assignment, probe the 4 nearest lists per "
-        "query, exact re-rank.  Deterministic → fully oracle-checked."
-    ),
-)
-def ivf_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    emb = table(spark, sf_dir, "embeddings").select("vec_id", _qvec("embedding").alias("qv"))
-    n = emb.select("vec_id", "qv", _dot(F.col("qv"), F.col("qv")).alias("nrm"))
-    # Two-level assignment: per-row work is O(√K), never O(K) — with
-    # K ∝ n the flat broadcast argmax this replaces was O(n²/125).
-    # Checkpointed: the scored join must not re-run the assignment
-    # subtree (the r8 materialization rule, ARCHITECTURE.md).
-    assigned = _ivf_assign(n).localCheckpoint(eager=False)
-    cents = _ivf_cents(n).drop("stride", "cstride")
+def _ivf_search(n: DataFrame, cents: DataFrame, assigned: DataFrame) -> DataFrame:
+    """The batch IVF probe: the 20 probes of ``n`` rank ALL K cells of
+    ``cents`` exactly (a broadcast-probe join, 20×K scores, trivially
+    parallel at any K), keep their ``_IVF_NPROBE`` nearest, and re-rank
+    those cells' members in ``assigned`` by exact cosine to the top 3."""
     cos_to_cent = _cosine(_dot(F.col("qv"), F.col("cqv")), F.col("nrm"), F.col("cnrm"))
-    # Probes (20 rows) rank ALL K centroids exactly: 20×K scores is a
-    # broadcast-probe join, trivially parallel at any K.
-    w_cent = Window.partitionBy("probe_id").orderBy(F.desc("c_sim"), F.asc("centroid_id"))
-    probe_lists = (
-        cents.crossJoin(F.broadcast(n.filter(F.col("vec_id") < 20)))
-        .select(
+    probe_lists = _top_cells(
+        cents.crossJoin(F.broadcast(n.filter(F.col("vec_id") < 20))).select(
             F.col("vec_id").alias("probe_id"),
             F.col("qv").alias("pqv"),
             F.col("nrm").alias("pnrm"),
             "centroid_id",
             cos_to_cent.alias("c_sim"),
-        )
-        .withColumn("crn", F.row_number().over(w_cent))
-        .filter(F.col("crn") <= _IVF_NPROBE)
-        .drop("c_sim", "crn")
+        ),
+        _IVF_NPROBE,
     )
     scored = (
         F.broadcast(probe_lists)
@@ -689,12 +683,42 @@ def ivf_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
-    w = Window.partitionBy("probe_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 3)
-        .select("probe_id", "neighbor_id", "rn", "cos_sim")
-    )
+    return _probe_topk(scored, 3).select("probe_id", "neighbor_id", "rn", "cos_sim")
+
+
+@register(
+    "ivf_ann_topk",
+    oracle=f"""
+WITH n AS (
+  {_SQL_N}
+),
+{_sql_ivf_assign()},
+{_SQL_PROBES},
+{_sql_probe_cells('probes', 'probe_id', 'cents', _IVF_NPROBE)},
+scored AS (
+  SELECT p.probe_id, a.vec_id AS neighbor_id,
+         {_sql_cos('p.pqv', 'a.qv', 'p.pnrm', 'a.nrm')} AS cos_sim
+  FROM pcell p
+  JOIN assigned a ON a.centroid_id = p.centroid_id AND a.vec_id <> p.probe_id
+)
+{_sql_probe_topk('scored', 3)}""",
+    tags=("similarity", "llm", "approx", "ann"),
+    doc=(
+        "L3 at scale: IVF ANN — hash-seeded K ≈ n/125 centroids "
+        "(corpus-scaled: inverted-list population stays ~125 at any n), "
+        "two-level map-side assignment, probe the 4 nearest lists per "
+        "query, exact re-rank.  Deterministic → fully oracle-checked."
+    ),
+)
+def ivf_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    emb = table(spark, sf_dir, "embeddings").select("vec_id", _qvec("embedding").alias("qv"))
+    n = emb.select("vec_id", "qv", _dot(F.col("qv"), F.col("qv")).alias("nrm"))
+    # Two-level assignment: per-row work is O(√K), never O(K) — with
+    # K ∝ n the flat broadcast argmax this replaces was O(n²/125).
+    # Checkpointed: the scored join must not re-run the assignment
+    # subtree (the r8 materialization rule, ARCHITECTURE.md).
+    assigned = _ivf_assign(n).localCheckpoint(eager=False)
+    return _ivf_search(n, _ivf_cents(n).drop("stride", "cstride"), assigned)
 
 
 # --------------------------------------------------------------------------
@@ -734,16 +758,14 @@ _SEMDEDUP_CSIZE = 125  # legacy alias of _IVF_CSIZE (kept for the docstrings)
     "semdedup_prune",
     oracle=f"""
 WITH n AS (
-  SELECT vec_id, qv, {_SQL_NORM.format(a='qv')} AS nrm
-  FROM (SELECT vec_id, {_SQL_QVEC.format(e='embedding')} AS qv FROM embeddings)
+  {_SQL_N}
 ),
 {_sql_ivf_assign()},
 dups AS (
   SELECT DISTINCT b.vec_id
   FROM assigned a
   JOIN assigned b ON a.centroid_id = b.centroid_id AND a.vec_id < b.vec_id
-  WHERE CAST({_SQL_DOT.format(a='a.qv', b='b.qv')} AS DOUBLE)
-          / (SQRT(CAST(a.nrm AS DOUBLE)) * SQRT(CAST(b.nrm AS DOUBLE))) >= {_SEMDEDUP_TAU}
+  WHERE {_SQL_COS_AB} >= {_SEMDEDUP_TAU}
 )
 SELECT a.vec_id, a.centroid_id AS cluster_id,
        a.vec_id NOT IN (SELECT vec_id FROM dups) AS kept
@@ -866,8 +888,7 @@ def _sql_recenter(assigned_cte: str, out: str) -> str:
 _KMEANS_ORACLE = (
     f"""
 WITH n AS (
-  SELECT vec_id, qv, {_SQL_NORM.format(a='qv')} AS nrm
-  FROM (SELECT vec_id, {_SQL_QVEC.format(e='embedding')} AS qv FROM embeddings)
+  {_SQL_N}
 ),
 {_sql_ivf_params('n')},
 c0 AS (
@@ -885,34 +906,15 @@ c0 AS (
     + ","
     + _sql_two_level("c2", "af")
     + f""",
-probe_lists AS (
-  SELECT probe_id, pqv, pnrm, centroid_id FROM (
-    SELECT n.vec_id AS probe_id, n.qv AS pqv, n.nrm AS pnrm, c.centroid_id,
-           ROW_NUMBER() OVER (
-             PARTITION BY n.vec_id
-             ORDER BY CAST({_SQL_DOT.format(a='n.qv', b='c.cqv')} AS DOUBLE)
-                        / (SQRT(CAST(n.nrm AS DOUBLE)) * SQRT(CAST(c.cnrm AS DOUBLE))) DESC,
-                      c.centroid_id
-           ) AS crn
-    FROM n CROSS JOIN c2 c
-    WHERE n.vec_id < 20
-  ) WHERE crn <= {_IVF_NPROBE}
-),
+{_SQL_PROBES},
+{_sql_probe_cells('probes', 'probe_id', 'c2', _IVF_NPROBE)},
 scored AS (
   SELECT p.probe_id, a.vec_id AS neighbor_id,
-         CAST({_SQL_DOT.format(a='p.pqv', b='a.qv')} AS DOUBLE)
-           / (SQRT(CAST(p.pnrm AS DOUBLE)) * SQRT(CAST(a.nrm AS DOUBLE))) AS cos_sim
-  FROM probe_lists p
+         {_sql_cos('p.pqv', 'a.qv', 'p.pnrm', 'a.nrm')} AS cos_sim
+  FROM pcell p
   JOIN af a ON a.centroid_id = p.centroid_id AND a.vec_id <> p.probe_id
 )
-SELECT probe_id, neighbor_id, rn, cos_sim
-FROM (
-  SELECT probe_id, neighbor_id, cos_sim,
-         ROW_NUMBER() OVER (PARTITION BY probe_id ORDER BY cos_sim DESC, neighbor_id) AS rn
-  FROM scored
-)
-WHERE rn <= 3
-"""
+{_sql_probe_topk('scored', 3)}"""
 )
 
 
@@ -936,8 +938,6 @@ WHERE rn <= 3
     ),
 )
 def ivf_kmeans_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     emb = table(spark, sf_dir, "embeddings").select("vec_id", _qvec("embedding").alias("qv"))
     # (_two_level_assign repartitions before its cosine folds, so no
     # explicit repartition is needed here anymore.)
@@ -961,41 +961,7 @@ def ivf_kmeans_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         cents = with_params(_recenter(assigned)).localCheckpoint(eager=False)
     assigned = _two_level_assign(n, cents)
 
-    cos_to_cent = _cosine(_dot(F.col("qv"), F.col("cqv")), F.col("nrm"), F.col("cnrm"))
-    w_cent = Window.partitionBy("probe_id").orderBy(F.desc("c_sim"), F.asc("centroid_id"))
-    # Probes (20 rows) rank ALL K refined centroids exactly — a
-    # broadcast-probe join, 20×K scores, trivially parallel at any K.
-    probe_lists = (
-        cents.crossJoin(F.broadcast(n.filter(F.col("vec_id") < 20)))
-        .select(
-            F.col("vec_id").alias("probe_id"),
-            F.col("qv").alias("pqv"),
-            F.col("nrm").alias("pnrm"),
-            "centroid_id",
-            cos_to_cent.alias("c_sim"),
-        )
-        .withColumn("crn", F.row_number().over(w_cent))
-        .filter(F.col("crn") <= _IVF_NPROBE)
-        .drop("c_sim", "crn")
-    )
-    scored = (
-        F.broadcast(probe_lists)
-        .join(assigned, "centroid_id")
-        .filter(F.col("vec_id") != F.col("probe_id"))
-        .select(
-            "probe_id",
-            F.col("vec_id").alias("neighbor_id"),
-            _cosine(_dot(F.col("pqv"), F.col("qv")), F.col("pnrm"), F.col("nrm")).alias(
-                "cos_sim"
-            ),
-        )
-    )
-    w = Window.partitionBy("probe_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 3)
-        .select("probe_id", "neighbor_id", "rn", "cos_sim")
-    )
+    return _ivf_search(n, cents, assigned)
 
 
 # --------------------------------------------------------------------------
@@ -1182,8 +1148,7 @@ scored AS (
   SELECT anchor_id,
          n.vec_id AS cand_id,
          n.label = alabel AS is_pos,
-         CAST({_SQL_DOT.format(a='aqv', b='qv')} AS DOUBLE)
-           / (SQRT(CAST(anrm AS DOUBLE)) * SQRT(CAST(nrm AS DOUBLE))) AS cos_sim
+         {_sql_cos('aqv', 'qv', 'anrm', 'nrm')} AS cos_sim
   FROM anchors JOIN n ON n.vec_id <> anchor_id
 ),
 best AS (
@@ -1766,8 +1731,7 @@ def _semdedup_greedy_pdf(members, pairs):
     "semdedup_greedy_keep_first",
     oracle=f"""
 WITH RECURSIVE n AS (
-  SELECT vec_id, qv, {_SQL_NORM.format(a='qv')} AS nrm
-  FROM (SELECT vec_id, {_SQL_QVEC.format(e='embedding')} AS qv FROM embeddings)
+  {_SQL_N}
 ),
 {_sql_ivf_assign()},
 mem AS (
@@ -1779,8 +1743,7 @@ prs AS (
   SELECT a.centroid_id AS c, a.vec_id AS u, b.vec_id AS v
   FROM assigned a
   JOIN assigned b ON a.centroid_id = b.centroid_id AND a.vec_id < b.vec_id
-  WHERE CAST({_SQL_DOT.format(a='a.qv', b='b.qv')} AS DOUBLE)
-          / (SQRT(CAST(a.nrm AS DOUBLE)) * SQRT(CAST(b.nrm AS DOUBLE))) >= {_SEMDEDUP_TAU}
+  WHERE {_SQL_COS_AB} >= {_SEMDEDUP_TAU}
 ),
 walk AS (
   SELECT c, r, [vec_id] AS kept_list FROM mem WHERE r = 1
@@ -1965,8 +1928,7 @@ _MP_TABLES = 2  # multi-probe uses HALF the index of ann_lsh_topk
     "ann_lsh_multiprobe_topk",
     oracle=f"""
 WITH n AS (
-  SELECT vec_id, qv, {_SQL_NORM.format(a='qv')} AS nrm
-  FROM (SELECT vec_id, {_SQL_QVEC.format(e='embedding')} AS qv FROM embeddings)
+  {_SQL_N}
 ),
 planes AS (SELECT {_SQL_PLANES} AS p),
 sigb AS (
@@ -1995,20 +1957,12 @@ cand AS (
 ),
 scored AS (
   SELECT cand.probe_id, cand.neighbor_id,
-         CAST({_SQL_DOT.format(a='a.qv', b='b.qv')} AS DOUBLE)
-           / (SQRT(CAST(a.nrm AS DOUBLE)) * SQRT(CAST(b.nrm AS DOUBLE))) AS cos_sim
+         {_SQL_COS_AB} AS cos_sim
   FROM cand
   JOIN n a ON a.vec_id = cand.probe_id
   JOIN n b ON b.vec_id = cand.neighbor_id
 )
-SELECT probe_id, neighbor_id, rn, cos_sim
-FROM (
-  SELECT probe_id, neighbor_id, cos_sim,
-         ROW_NUMBER() OVER (PARTITION BY probe_id ORDER BY cos_sim DESC, neighbor_id) AS rn
-  FROM scored
-)
-WHERE rn <= 3
-""",
+{_sql_probe_topk('scored', 3)}""",
     tags=("similarity", "llm", "approx", "ann"),
     doc=(
         "L3: multi-probe LSH — 2 tables, each probed at the exact "
@@ -2018,8 +1972,6 @@ WHERE rn <= 3
     ),
 )
 def ann_lsh_multiprobe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     planes_row = spark.createDataFrame(
         [([list(p) for p in _QPLANES],)], "planes array<array<bigint>>"
     )
@@ -2030,24 +1982,6 @@ def ann_lsh_multiprobe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(planes_row))
     )
 
-    weights = F.array(*[F.lit(1 << j) for j in range(_LSH_BITS)])
-
-    def table_sig(t: int) -> Column:
-        def bit(j: Column) -> Column:
-            plane = F.get(F.col("planes"), F.lit(t * _LSH_BITS) + j)
-            dot = F.aggregate(
-                F.zip_with(F.col("qv"), plane, lambda x, y: x * y),
-                F.lit(0).cast("bigint"),
-                lambda acc, x: acc + x,
-            )
-            return F.when(dot > 0, F.get(weights, j)).otherwise(F.lit(0))
-
-        return F.aggregate(
-            F.sequence(F.lit(0), F.lit(_LSH_BITS - 1)),
-            F.lit(0),
-            lambda acc, j: acc + bit(j),
-        )
-
     sigs = emb.select(
         "vec_id",
         "qv",
@@ -2055,7 +1989,7 @@ def ann_lsh_multiprobe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.explode(
             F.array(
                 *[
-                    F.struct(F.lit(t).alias("t"), table_sig(t).alias("sig"))
+                    F.struct(F.lit(t).alias("t"), _lsh_sig(t).alias("sig"))
                     for t in range(_MP_TABLES)
                 ]
             )
@@ -2102,12 +2036,7 @@ def ann_lsh_multiprobe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         "neighbor_id",
         _cosine(_dot(F.col("pqv"), F.col("qv")), F.col("pnrm"), F.col("nrm")).alias("cos_sim"),
     )
-    w = Window.partitionBy("probe_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 3)
-        .select("probe_id", "neighbor_id", "rn", "cos_sim")
-    )
+    return _probe_topk(scored, 3).select("probe_id", "neighbor_id", "rn", "cos_sim")
 
 
 @register(
@@ -2586,20 +2515,12 @@ short AS (
 nn AS (SELECT vec_id, qv, {_SQL_NORM.format(a='qv')} AS nrm FROM n),
 rer AS (
   SELECT s.probe_id, s.neighbor_id,
-         CAST({_SQL_DOT.format(a='a.qv', b='b.qv')} AS DOUBLE)
-           / (SQRT(CAST(a.nrm AS DOUBLE)) * SQRT(CAST(b.nrm AS DOUBLE))) AS cos_sim
+         {_SQL_COS_AB} AS cos_sim
   FROM short s
   JOIN nn a ON a.vec_id = s.probe_id
   JOIN nn b ON b.vec_id = s.neighbor_id
 )
-SELECT probe_id, neighbor_id, rn, cos_sim
-FROM (
-  SELECT probe_id, neighbor_id, cos_sim,
-         ROW_NUMBER() OVER (PARTITION BY probe_id ORDER BY cos_sim DESC, neighbor_id) AS rn
-  FROM rer
-)
-WHERE rn <= 3
-""",
+{_sql_probe_topk('rer', 3)}""",
     tags=("similarity", "llm", "approx", "ann"),
     doc=(
         "L3: PQ + exact re-rank — integer-ADC top-32 shortlist, exact "
@@ -2645,12 +2566,7 @@ def pq_ann_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("cos_sim"),
         )
     )
-    w = Window.partitionBy("probe_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return (
-        rer.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 3)
-        .select("probe_id", "neighbor_id", "rn", "cos_sim")
-    )
+    return _probe_topk(rer, 3).select("probe_id", "neighbor_id", "rn", "cos_sim")
 
 
 @register(
@@ -2839,27 +2755,21 @@ def pq_codebook_drift_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 _MKNN_K = 2
 _MKNN_TAU = 0.30
 
-_MKNN_COS_AB = (
-    f"CAST({_SQL_DOT.format(a='a.qv', b='b.qv')} AS DOUBLE)"
-    " / (SQRT(CAST(a.nrm AS DOUBLE)) * SQRT(CAST(b.nrm AS DOUBLE)))"
-)
-
 
 @register(
     "mutual_knn_clusters",
     oracle=f"""
 WITH RECURSIVE n AS (
-  SELECT vec_id, qv, {_SQL_NORM.format(a='qv')} AS nrm
-  FROM (SELECT vec_id, {_SQL_QVEC.format(e='embedding')} AS qv FROM embeddings)
+  {_SQL_N}
 ),
 {_sql_ivf_assign()},
 knn AS (
   SELECT vec_id, neighbor_id FROM (
     SELECT a.vec_id, b.vec_id AS neighbor_id,
-           {_MKNN_COS_AB} AS cos_sim,
+           {_SQL_COS_AB} AS cos_sim,
            ROW_NUMBER() OVER (
              PARTITION BY a.vec_id
-             ORDER BY {_MKNN_COS_AB} DESC, b.vec_id
+             ORDER BY {_SQL_COS_AB} DESC, b.vec_id
            ) AS rn
     FROM assigned a
     JOIN assigned b ON a.centroid_id = b.centroid_id AND a.vec_id <> b.vec_id
@@ -2911,20 +2821,18 @@ def mutual_knn_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     assigned = assigned.localCheckpoint(eager=False)
     a, b = assigned.alias("a"), assigned.alias("b")
     cos = _cosine(_dot(F.col("a.qv"), F.col("b.qv")), F.col("a.nrm"), F.col("b.nrm"))
-    w = Window.partitionBy("vec_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
+    scored = a.join(
+        b,
+        (F.col("a.centroid_id") == F.col("b.centroid_id"))
+        & (F.col("a.vec_id") != F.col("b.vec_id")),
+    ).select(
+        F.col("a.vec_id").alias("vec_id"),
+        F.col("b.vec_id").alias("neighbor_id"),
+        cos.alias("cos_sim"),
+    )
     knn = (
-        a.join(
-            b,
-            (F.col("a.centroid_id") == F.col("b.centroid_id"))
-            & (F.col("a.vec_id") != F.col("b.vec_id")),
-        )
-        .select(
-            F.col("a.vec_id").alias("vec_id"),
-            F.col("b.vec_id").alias("neighbor_id"),
-            cos.alias("cos_sim"),
-        )
-        .withColumn("rn", F.row_number().over(w))
-        .filter((F.col("rn") <= _MKNN_K) & (F.col("cos_sim") >= _MKNN_TAU))
+        _probe_topk(scored, _MKNN_K, pid="vec_id")
+        .filter(F.col("cos_sim") >= _MKNN_TAU)
         .select("vec_id", "neighbor_id")
         # the mutuality self-join references knn twice, and
         # _star_contract's eager checkpoint of pairs evaluates it
@@ -2971,11 +2879,6 @@ _CSLS_CAND = 10  # retrieve-then-rescore: csls scores only each query's
 #                  the downstream r/scored/best passes run on 10n rows, not
 #                  the full ~125n within-cell candidate mass
 
-_CSLS_COS = (
-    f"CAST({_SQL_DOT.format(a='a.qv', b='b.qv')} AS DOUBLE)"
-    " / (SQRT(CAST(a.nrm AS DOUBLE)) * SQRT(CAST(b.nrm AS DOUBLE)))"
-)
-
 
 @register(
     "csls_bitext_mining",
@@ -2989,10 +2892,10 @@ WITH n AS (
 ranked AS (
   SELECT qid, qlang, cid, clang, cos_sim, rn FROM (
     SELECT a.vec_id AS qid, a.lang AS qlang, b.vec_id AS cid, b.lang AS clang,
-           {_CSLS_COS} AS cos_sim,
+           {_SQL_COS_AB} AS cos_sim,
            ROW_NUMBER() OVER (
              PARTITION BY a.vec_id
-             ORDER BY {_CSLS_COS} DESC, b.vec_id
+             ORDER BY {_SQL_COS_AB} DESC, b.vec_id
            ) AS rn
     FROM assigned a
     JOIN assigned b
@@ -3155,8 +3058,7 @@ def csls_bitext_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     "ivf_index_upsert_audit",
     oracle=f"""
 WITH n AS (
-  SELECT vec_id, qv, {_SQL_NORM.format(a='qv')} AS nrm
-  FROM (SELECT vec_id, {_SQL_QVEC.format(e='embedding')} AS qv FROM embeddings)
+  {_SQL_N}
 ),
 sn AS (SELECT * FROM n WHERE vec_id % 10 <> 0),
 bn AS (SELECT * FROM n WHERE vec_id % 10 = 0),
@@ -3268,10 +3170,6 @@ def _sql_mmr_steps() -> str:
     in-scope ``cand`` CTE (probe_id, vec_id, qv, nrm, qsim) — shared by
     the exact-pool MMR oracle and the ANN-served-pool variant
     (``retrieval_served``), so the two greedy loops can never drift."""
-    cosp = (
-        f"CAST({_SQL_DOT.format(a='a.qv', b='b.qv')} AS DOUBLE)"
-        " / (SQRT(CAST(a.nrm AS DOUBLE)) * SQRT(CAST(b.nrm AS DOUBLE)))"
-    )
     steps = []
     for k in range(2, _MMR_K + 1):
         prev = f"sel{k - 1}"
@@ -3296,7 +3194,7 @@ def _sql_mmr_steps() -> str:
 sel{k} AS (SELECT probe_id, vec_id FROM {prev}
            UNION ALL SELECT probe_id, vec_id FROM s{k})""")
     return f"""cp AS MATERIALIZED (
-  SELECT a.probe_id, a.vec_id AS da, b.vec_id AS db, {cosp} AS sim
+  SELECT a.probe_id, a.vec_id AS da, b.vec_id AS db, {_SQL_COS_AB} AS sim
   FROM cand a
   JOIN cand b ON a.probe_id = b.probe_id AND a.vec_id <> b.vec_id
 ),
@@ -3312,15 +3210,11 @@ sel1 AS (SELECT probe_id, vec_id FROM s1),
 
 
 def _sql_mmr_core() -> str:
-    cosq = (
-        f"CAST({_SQL_DOT.format(a='p.pqv', b='n.qv')} AS DOUBLE)"
-        " / (SQRT(CAST(p.pnrm AS DOUBLE)) * SQRT(CAST(n.nrm AS DOUBLE)))"
-    )
+    cosq = _sql_cos("p.pqv", "n.qv", "p.pnrm", "n.nrm")
     return f"""
-WITH q AS (
-  SELECT vec_id, {_SQL_QVEC.format(e='embedding')} AS qv FROM embeddings
+WITH n AS (
+  {_SQL_N}
 ),
-n AS (SELECT vec_id, qv, {_SQL_NORM.format(a='qv')} AS nrm FROM q),
 probes AS (
   SELECT vec_id AS probe_id, qv AS pqv, nrm AS pnrm FROM n
   WHERE vec_id < {_MMR_PROBES}
@@ -3357,19 +3251,22 @@ def _sql_mmr() -> str:
     ),
 )
 def mmr_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = table(spark, sf_dir, "embeddings").select(
+    return _mmr_greedy(_mmr_pool(spark, sf_dir))
+
+
+def _mmr_pool(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The exact relevance pool (probe_id, vec_id, qv, nrm, qsim): each
+    of the ``_MMR_PROBES`` probes' ``_MMR_POOL`` nearest vectors over a
+    broadcast-probe scan of the corpus, checkpointed."""
+    n = table(spark, sf_dir, "embeddings").select(
         "vec_id", _qvec("embedding").alias("qv")
-    )
-    n = emb.select("vec_id", "qv", _dot(F.col("qv"), F.col("qv")).alias("nrm"))
+    ).select("vec_id", "qv", _dot(F.col("qv"), F.col("qv")).alias("nrm"))
     probes = n.filter(F.col("vec_id") < _MMR_PROBES).select(
         F.col("vec_id").alias("probe_id"),
         F.col("qv").alias("pqv"),
         F.col("nrm").alias("pnrm"),
     )
-    w_pool = Window.partitionBy("probe_id").orderBy(
-        F.desc("qsim"), F.asc("vec_id")
-    )
-    cand = (
+    scored = (
         F.broadcast(probes)
         .join(n, F.col("vec_id") != F.col("probe_id"))
         .select(
@@ -3381,12 +3278,12 @@ def mmr_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                 _dot(F.col("pqv"), F.col("qv")), F.col("pnrm"), F.col("nrm")
             ).alias("qsim"),
         )
-        .withColumn("rn", F.row_number().over(w_pool))
-        .filter(F.col("rn") <= _MMR_POOL)
+    )
+    return (
+        _probe_topk(scored, _MMR_POOL, score="qsim", nid="vec_id")
         .drop("rn")
         .localCheckpoint()
     )
-    return _mmr_greedy(cand)
 
 
 def _mmr_greedy(cand: DataFrame) -> DataFrame:
@@ -3472,10 +3369,7 @@ _RRF_PROBES = 10
 
 
 def _sql_rrf_core() -> str:
-    cosq = (
-        f"CAST({_SQL_DOT.format(a='p.pqv', b='n.qv')} AS DOUBLE)"
-        " / (SQRT(CAST(p.pnrm AS DOUBLE)) * SQRT(CAST(n.nrm AS DOUBLE)))"
-    )
+    cosq = _sql_cos("p.pqv", "n.qv", "p.pnrm", "n.nrm")
     return f"""
 WITH e AS (
   SELECT vec_id AS id, {_SQL_QVEC.format(e='embedding')} AS qv FROM embeddings
@@ -3755,33 +3649,7 @@ FROM redm m JOIN redp p ON p.probe_id = m.probe_id
     ),
 )
 def mmr_diversity_check(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = table(spark, sf_dir, "embeddings").select(
-        "vec_id", _qvec("embedding").alias("qv")
-    )
-    n = emb.select("vec_id", "qv", _dot(F.col("qv"), F.col("qv")).alias("nrm"))
-    probes = n.filter(F.col("vec_id") < _MMR_PROBES).select(
-        F.col("vec_id").alias("probe_id"),
-        F.col("qv").alias("pqv"),
-        F.col("nrm").alias("pnrm"),
-    )
-    w_pool = Window.partitionBy("probe_id").orderBy(F.desc("qsim"), F.asc("vec_id"))
-    cand = (
-        F.broadcast(probes)
-        .join(n, F.col("vec_id") != F.col("probe_id"))
-        .select(
-            "probe_id",
-            "vec_id",
-            "qv",
-            "nrm",
-            _cosine(
-                _dot(F.col("pqv"), F.col("qv")), F.col("pnrm"), F.col("nrm")
-            ).alias("qsim"),
-        )
-        .withColumn("rn", F.row_number().over(w_pool))
-        .filter(F.col("rn") <= _MMR_POOL)
-        .drop("rn")
-        .localCheckpoint()
-    )
+    cand = _mmr_pool(spark, sf_dir)
 
     def red(sel, name):
         a = sel.select("probe_id", F.col("vec_id").alias("va"))
@@ -3813,18 +3681,7 @@ def mmr_diversity_check(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr("CAST(SUM(e6) div COUNT(*) AS BIGINT)").alias(name)
         )
 
-    plain = (
-        cand.withColumn(
-            "rn",
-            F.row_number().over(
-                Window.partitionBy("probe_id").orderBy(
-                    F.desc("qsim"), F.asc("vec_id")
-                )
-            ),
-        )
-        .filter(F.col("rn") <= 5)
-        .select("probe_id", "vec_id")
-    )
+    plain = _probe_topk(cand, 5, score="qsim", nid="vec_id").select("probe_id", "vec_id")
     mmr = mmr_diversified_topk(spark, sf_dir).select(
         "probe_id", F.col("neighbor_id").alias("vec_id")
     )

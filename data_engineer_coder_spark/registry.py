@@ -119,6 +119,48 @@ _FORCE_RECHECK: tuple[str, ...] = (
     "minhash_estimate_audit",
     "minhash_lsh_recall_check",
     "quality_dup_interaction",
+    # round 19: the ANN probe (quantized cosine, probe-cell ranking,
+    # bucket-pruned cell read, exact re-rank) is written once per engine
+    # in operators/similarity.py; the served oracles derive nprobe from
+    # their centroid count; the exact-Jaccard chain is one fragment.
+    # (minhash_lsh_recall_check, retrieval_lifecycle_audit,
+    # stream_ann_index_ingest and stream_curation_searchable are listed
+    # above.)
+    "ann_index_bucket_probe",
+    "ann_lsh_multiprobe_topk",
+    "ann_lsh_topk",
+    "contrastive_pair_mining",
+    "cosine_topk",
+    "csls_bitext_mining",
+    "embedding_neardup",
+    "hybrid_recall_check",
+    "hybrid_rrf_retrieval",
+    "hybrid_rrf_retrieval_served",
+    "hybrid_served_recall_check",
+    "ivf_ann_topk",
+    "ivf_index_upsert_audit",
+    "ivf_kmeans_topk",
+    "mmr_diversified_topk",
+    "mmr_diversified_topk_served",
+    "mmr_diversity_check",
+    "mutual_knn_clusters",
+    "pq_ann_rerank_topk",
+    "rag_chunk_pipeline",
+    "rag_context_pack",
+    "retrieval_index_delete_audit",
+    "retrieval_rank_metrics",
+    "retrieval_rank_metrics_served",
+    "semdedup_greedy_keep_first",
+    "semdedup_prune",
+    "ngram_jaccard_pairs",
+    "dedup_clusters",
+    "dedup_keep_best",
+    "dedup_clusters_bigstar",
+    "cluster_aware_split",
+    "neardup_triangles",
+    "neardup_jaccard_histogram",
+    # carried over from VERDICT r15
+    "embedding_covariance_topk",
 )
 
 # (The round-3/4 _CHECK_FIRST backlog queue is gone: every registered query

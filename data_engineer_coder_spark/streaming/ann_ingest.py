@@ -36,8 +36,7 @@ from ..registry import register
 
 def _ann_ingest_oracle() -> str:
     from ..operators.similarity import (
-        _SQL_NORM,
-        _SQL_QVEC,
+        _SQL_N,
         _sql_ivf_cents,
         _sql_ivf_params,
         _sql_pq_encode,
@@ -47,8 +46,7 @@ def _ann_ingest_oracle() -> str:
 
     sql = f"""
 WITH nall AS (
-  SELECT vec_id, qv, {_SQL_NORM.format(a='qv')} AS nrm
-  FROM (SELECT vec_id, {_SQL_QVEC.format(e='embedding')} AS qv FROM embeddings)
+  {_SQL_N}
 ),
 n AS (SELECT * FROM nall WHERE vec_id % 10 = 0),
 strm AS (SELECT * FROM nall WHERE vec_id % 10 <> 0),
@@ -198,26 +196,20 @@ def _bucket_probe_oracle() -> str:
     from ..operators.similarity import (
         _IVF_NPROBE,
         _PQ_SUBDIM,
-        _SQL_DOT,
-        _SQL_NORM,
+        _SQL_N,
         _SQL_PQ_L2,
-        _SQL_QVEC,
         _sql_ivf_cents,
         _sql_ivf_params,
         _sql_pq_encode,
         _sql_pq_train_cb,
+        _sql_probe_cells,
         _sql_two_level,
     )
 
-    pcos = (
-        f"CAST({_SQL_DOT.format(a='p.pqv', b='c.cqv')} AS DOUBLE)"
-        " / (SQRT(CAST(p.pnrm AS DOUBLE)) * SQRT(CAST(c.cnrm AS DOUBLE)))"
-    )
     psl = f"p.pqv[(cb.s * {_PQ_SUBDIM} + 1):((cb.s + 1) * {_PQ_SUBDIM})]"
     sql = f"""
 WITH nall AS (
-  SELECT vec_id, qv, {_SQL_NORM.format(a='qv')} AS nrm
-  FROM (SELECT vec_id, {_SQL_QVEC.format(e='embedding')} AS qv FROM embeddings)
+  {_SQL_N}
 ),
 n AS (SELECT * FROM nall WHERE vec_id % 10 = 0),
 strm AS (SELECT * FROM nall WHERE vec_id % 10 <> 0),
@@ -229,15 +221,7 @@ strm AS (SELECT * FROM nall WHERE vec_id % 10 <> 0),
 probes AS (
   SELECT vec_id AS probe_id, qv AS pqv, nrm AS pnrm FROM strm WHERE vec_id < 25
 ),
-pcell AS (
-  SELECT probe_id, centroid_id FROM (
-    SELECT p.probe_id, c.centroid_id,
-           ROW_NUMBER() OVER (
-             PARTITION BY p.probe_id ORDER BY {pcos} DESC, c.centroid_id
-           ) AS crn
-    FROM probes p CROSS JOIN cents c
-  ) WHERE crn <= {_IVF_NPROBE}
-),
+{_sql_probe_cells('probes', 'probe_id', 'cents', _IVF_NPROBE)},
 pb AS (
   SELECT probe_id,
          CAST(COUNT(DISTINCT centroid_id % 16) AS BIGINT) AS n_buckets_read
@@ -306,6 +290,7 @@ def ann_index_bucket_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         _pq_sub,
         _pq_train_entries,
         _qvec,
+        _top_cells,
         _two_level_assign,
     )
 
@@ -344,10 +329,7 @@ def ann_index_bucket_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         replace_partitions(enc, index_root, ["cell_bucket"], "bulk-load")
 
         probes = strm.filter(F.col("vec_id") < 25).localCheckpoint(eager=False)
-        w_cent = Window.partitionBy("probe_id").orderBy(
-            F.desc("c_sim"), F.asc("centroid_id")
-        )
-        probe_cells = (
+        probe_cells = _top_cells(
             cents.drop("stride", "cstride")
             .crossJoin(F.broadcast(probes))
             .select(
@@ -356,12 +338,9 @@ def ann_index_bucket_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
                 _cosine(
                     _dot(F.col("qv"), F.col("cqv")), F.col("nrm"), F.col("cnrm")
                 ).alias("c_sim"),
-            )
-            .withColumn("crn", F.row_number().over(w_cent))
-            .filter(F.col("crn") <= _IVF_NPROBE)
-            .select("probe_id", "centroid_id")
-            .localCheckpoint()
-        )
+            ),
+            _IVF_NPROBE,
+        ).localCheckpoint()
         # THE SERVING READ: prune the index to the probed cells' buckets
         # at the MANIFEST — unprobed buckets are never listed or scanned.
         allowed = {

@@ -540,25 +540,20 @@ _LC_DEL_REM = 5
 
 
 def _lifecycle_oracle() -> str:
-    from ..operators.similarity import _SERVED_NPROBE, _SQL_DOT
-    from ..operators.textops import _sql_bm25_term_e9
-
-    del_pred = f"doc_id % {_LC_DEL_MOD} = {_LC_DEL_REM}"
-    pcos = (
-        f"CAST({_SQL_DOT.format(a='p.pqv', b='c.cqv')} AS DOUBLE)"
-        " / (SQRT(CAST(p.pnrm AS DOUBLE)) * SQRT(CAST(c.cnrm AS DOUBLE)))"
-    )
-    qcos = (
-        f"CAST({_SQL_DOT.format(a='p.pqv', b='a.qv')} AS DOUBLE)"
-        " / (SQRT(CAST(p.pnrm AS DOUBLE)) * SQRT(CAST(a.nrm AS DOUBLE)))"
-    )
     from ..operators.similarity import (
         _SQL_NORM,
         _SQL_QVEC,
+        _sql_cos,
         _sql_ivf_cents,
         _sql_ivf_params,
+        _sql_probe_cells,
+        _sql_served_nprobe,
         _sql_two_level,
     )
+    from ..operators.textops import _sql_bm25_term_e9
+
+    del_pred = f"doc_id % {_LC_DEL_MOD} = {_LC_DEL_REM}"
+    qcos = _sql_cos("p.pqv", "a.qv", "p.pnrm", "a.nrm")
 
     return f"""{_curation_ctes(idx2_where=f"WHERE NOT ({del_pred})")},
 corp AS MATERIALIZED (
@@ -614,15 +609,7 @@ nb AS MATERIALIZED (SELECT * FROM n2 WHERE vec_id % 10 = 0),
 av AS (SELECT n2.* FROM n2 JOIN corp c ON c.doc_id = n2.vec_id),
 {_sql_two_level('cents', 'asg', 'av')},
 probes AS (SELECT vec_id AS pid, qv AS pqv, nrm AS pnrm FROM n2 WHERE vec_id < 10),
-pcell AS (
-  SELECT pid, centroid_id FROM (
-    SELECT p.pid, c.centroid_id,
-           ROW_NUMBER() OVER (
-             PARTITION BY p.pid ORDER BY {pcos} DESC, c.centroid_id
-           ) AS crn
-    FROM probes p CROSS JOIN cents c
-  ) WHERE crn <= {_SERVED_NPROBE}
-),
+{_sql_probe_cells('probes', 'pid', 'cents', _sql_served_nprobe('cents'))},
 anntop AS (
   SELECT pid, vec_id, rn, CAST(FLOOR(qsim * 1e9) AS BIGINT) AS e9 FROM (
     SELECT pc.pid, a.vec_id, {qcos} AS qsim,
@@ -683,9 +670,8 @@ def retrieval_lifecycle_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from ..operators._helpers import md5_bucket16
     from ..operators.retrieval_delete import propagate_retrieval_delete
-    from ..operators.retrieval_served import _cell_bucket, cell_layout
+    from ..operators.retrieval_served import _cell_bucket, _probe_index, cell_layout
     from ..operators.similarity import (
-        _cosine,
         _dot,
         _ivf_cents,
         _qvec,
@@ -909,56 +895,13 @@ def retrieval_lifecycle_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("qv").alias("pqv"),
             F.col("nrm").alias("pnrm"),
         ).localCheckpoint()
-        w_c = Window.partitionBy("pid").orderBy(F.desc("c_sim"), F.asc("centroid_id"))
-        pcell = (
-            cents.drop("stride", "cstride")
-            .crossJoin(F.broadcast(probes))
-            .select(
-                "pid", "centroid_id",
-                _cosine(
-                    _dot(F.col("pqv"), F.col("cqv")), F.col("pnrm"), F.col("cnrm")
-                ).alias("c_sim"),
-            )
-            .withColumn("crn", F.row_number().over(w_c))
-            .filter(F.col("crn") <= served_nprobe(n_cells))
-            .select("pid", "centroid_id")
-            .localCheckpoint()
+        _, top = _probe_index(
+            spark, roots["ann"], cents, probes, served_nprobe(n_cells), 5, "pid"
         )
-        allowed = {
-            str(r["b"])
-            for r in pcell.select(
-                _cell_bucket(F.col("centroid_id"), cellb).alias("b")
-            ).distinct().collect()
-        }
-        idx = read_table(
-            spark, roots["ann"],
-            partition_filter=lambda kv: kv["cell_bucket"] in allowed,
-        ).select(
-            F.col("vec_id").cast("long").alias("vec_id"),
-            F.col("centroid_id").cast("long").alias("centroid_id"),
-            F.col("qv").cast("array<bigint>").alias("qv"),
-            F.col("nrm").cast("long").alias("nrm"),
-        )
-        w_p = Window.partitionBy("pid").orderBy(F.desc("qsim"), F.asc("vec_id"))
-        anntop = (
-            F.broadcast(probes)
-            .join(pcell, "pid")
-            .join(idx, "centroid_id")
-            .filter(F.col("vec_id") != F.col("pid"))
-            .select(
-                "pid", "vec_id",
-                _cosine(
-                    _dot(F.col("pqv"), F.col("qv")), F.col("pnrm"), F.col("nrm")
-                ).alias("qsim"),
-            )
-            .withColumn("rn", F.row_number().over(w_p))
-            .filter(F.col("rn") <= 5)
-            .select(
-                "pid", "rn", "vec_id",
-                F.floor(F.col("qsim") * F.lit(1e9)).cast("bigint").alias("e9"),
-            )
-            .localCheckpoint()
-        )
+        anntop = top.select(
+            "pid", "rn", "vec_id",
+            F.floor(F.col("qsim") * F.lit(1e9)).cast("bigint").alias("e9"),
+        ).localCheckpoint()
         if anntop.filter(F.col("vec_id").isin(del_ids)).count():
             raise RuntimeError("a deleted vector is still serveable from ANN")
 

@@ -39,6 +39,18 @@ _GATE_JOB_CEILINGS = {
     "stream_rollup_matview": 23,
 }
 
+# Batch ANN and clustering queries at sf0.001, counted the same way.
+_BATCH_JOB_CEILINGS = {
+    "cosine_topk": 4,
+    "ann_lsh_topk": 7,
+    "ann_lsh_multiprobe_topk": 7,
+    "ivf_ann_topk": 16,
+    "ivf_kmeans_topk": 30,
+    "ann_index_bucket_probe": 30,
+    "mmr_diversified_topk_served": 71,
+    "mutual_knn_clusters": 72,
+}
+
 
 def _ordered_src(spark, tmp_path, epochs):
     """Write the given row lists as ordered single-file stream epochs."""
@@ -155,7 +167,8 @@ def test_decontam_gate_crash_mid_epoch_converges(spark, tmp_path, monkeypatch):
 
 def test_gate_drill_job_count_ceiling(spark, sf_dir):
     """Job counts do not depend on the host: each drill may run at most
-    the jobs it ran before its gate's steps were shared."""
+    the jobs it ran before its gate's steps were shared, and each batch
+    ANN query at most the jobs it ran before its probe steps were."""
     sc = spark.sparkContext._jsc.sc()
     store, bus = sc.statusStore(), sc.listenerBus()
 
@@ -165,14 +178,13 @@ def test_gate_drill_job_count_ceiling(spark, sf_dir):
         return [int(jobs.apply(i).jobId()) for i in range(jobs.size())]
 
     q = registry.queries()
+    ceilings = {**_GATE_JOB_CEILINGS, **_BATCH_JOB_CEILINGS}
     got = {}
-    for name in _GATE_JOB_CEILINGS:
+    for name in ceilings:
         last = max(job_ids(), default=-1)
         q[name](spark, sf_dir).collect()
         got[name] = sum(i > last for i in job_ids())
-    assert all(got[n] <= c for n, c in _GATE_JOB_CEILINGS.items()), (
-        got, _GATE_JOB_CEILINGS,
-    )
+    assert all(got[n] <= c for n, c in ceilings.items()), (got, ceilings)
 
 
 def test_partition_values_come_from_below_the_table_root(spark, tmp_path):
