@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 from ..io.tables import table
 from ..registry import register
 from ._helpers import md5_bucket, shuffle_parts
+from .textops import _sql_ngrams, ngram_array
 
 # Seeded MinHash permutation parameters (public technique: Broder '97).
 _MERSENNE = 2147483647  # 2^31 - 1
@@ -132,22 +133,14 @@ def _pair_budget_guard(df: DataFrame, key: str, budget: int, hint: str) -> DataF
 
 
 def _shingles(words_col):
-    """Distinct 3-word shingles as an array column (requires size>=3)."""
-    idx = F.sequence(F.lit(1), F.size(words_col) - 2)
-    return F.array_distinct(
-        F.transform(idx, lambda i: F.array_join(F.slice(words_col, i, 3), " "))
-    )
+    """Distinct 3-word shingles as an array column (empty under 3 words)."""
+    return F.array_distinct(ngram_array(words_col, 3))
 
 
 # The shingle CTE over ``w(doc_id, ws)``: distinct 3-word shingles.
-_SH_CTE = """sh AS (
+_SH_CTE = f"""sh AS (
   SELECT DISTINCT doc_id, s
-  FROM (
-    SELECT doc_id,
-           unnest(list_transform(range(1, LEN(ws) - 1),
-                                 i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2])) AS s
-    FROM w
-  )
+  FROM (SELECT doc_id, unnest({_sql_ngrams("ws", 3)}) AS s FROM w)
 )"""
 
 _SHINGLE_SQL = f"""
@@ -1409,16 +1402,13 @@ def fuzzy_name_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "decontaminate_overlap",
-    oracle="""
+    oracle=f"""
 WITH w AS (
   SELECT doc_id, string_split(text, ' ') AS ws FROM documents
   WHERE LEN(string_split(text, ' ')) >= 3
 ),
 sh AS (
-  SELECT doc_id,
-         list_distinct(list_transform(range(1, LEN(ws) - 1),
-                       i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2])) AS shs
-  FROM w
+  SELECT doc_id, list_distinct({_sql_ngrams("ws", 3)}) AS shs FROM w
 ),
 bench AS (
   SELECT DISTINCT unnest(shs) AS s FROM sh WHERE doc_id < 20
@@ -1657,11 +1647,7 @@ WITH w AS (
   SELECT doc_id, source, string_split(text, ' ') AS ws FROM documents
 ),
 seg AS (
-  -- integer division (//): CAST(x/8 AS INT) ROUNDS in DuckDB and would
-  -- invent a trailing partial segment
-  SELECT doc_id, source,
-         unnest(list_transform(range(1, CAST(len(ws) // {_SEG_WORDS} AS INT) + 1),
-                               i -> array_to_string(ws[(i-1)*{_SEG_WORDS}+1:i*{_SEG_WORDS}], ' '))) AS seg
+  SELECT doc_id, source, unnest({_sql_ngrams("ws", _SEG_WORDS, _SEG_WORDS)}) AS seg
   FROM w
 ),
 df AS (
@@ -1688,17 +1674,8 @@ def segment_dedup_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = docs.repartition(shuffle_parts(docs), F.col("doc_id")).select(
         "doc_id", "source", _words(F.col("text")).alias("ws")
     )
-    k = _SEG_WORDS
-    n_full = F.floor(F.size("ws") / k).cast("int")
-    segs_arr = F.transform(
-        # guard: sequence(1, 0) counts DOWN in Spark — short docs must
-        # yield an empty array, not bogus [1, 0] segments
-        F.when(n_full >= 1, F.sequence(F.lit(1), n_full)).otherwise(
-            F.array().cast("array<int>")
-        ),
-        lambda i: F.array_join(F.slice(F.col("ws"), (i - 1) * k + 1, k), " "),
-    )
-    seg = w.select("doc_id", "source", F.explode(segs_arr).alias("seg"))
+    segs = ngram_array(F.col("ws"), _SEG_WORDS, _SEG_WORDS)
+    seg = w.select("doc_id", "source", F.explode(segs).alias("seg"))
     df_ = seg.groupBy("seg").agg(F.count_distinct("doc_id").alias("n_docs"))
     dup_occ = F.count(F.when(F.col("n_docs") > 1, F.lit(1)))
     return (
@@ -1735,9 +1712,8 @@ WITH w AS (
   SELECT doc_id, string_split(text, ' ') AS ws FROM documents
 ),
 seg AS (
-  SELECT doc_id, g.i AS pos,
-         array_to_string(ws[(g.i-1)*{_SEG_WORDS}+1:g.i*{_SEG_WORDS}], ' ') AS seg
-  FROM w, unnest(range(1, CAST(len(ws) // {_SEG_WORDS} AS INT) + 1)) AS g(i)
+  SELECT doc_id, generate_subscripts(ss, 1) - 1 AS pos, unnest(ss) AS seg
+  FROM (SELECT doc_id, {_sql_ngrams("ws", _SEG_WORDS, _SEG_WORDS)} AS ss FROM w)
 ),
 keep AS (
   SELECT seg, MIN({{'doc_id': doc_id, 'pos': pos}}) AS keeper FROM seg GROUP BY seg
@@ -1771,18 +1747,9 @@ def segment_dedup_keep_first(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = docs.repartition(shuffle_parts(docs), F.col("doc_id")).select(
         "doc_id", _words(F.col("text")).alias("ws")
     )
-    k = _SEG_WORDS
-    n_full = F.floor(F.size("ws") / k).cast("int")
-    segs_arr = F.transform(
-        F.when(n_full >= 1, F.sequence(F.lit(1), n_full)).otherwise(
-            F.array().cast("array<int>")
-        ),
-        lambda i: F.struct(
-            i.alias("pos"), F.array_join(F.slice(F.col("ws"), (i - 1) * k + 1, k), " ").alias("seg")
-        ),
-    )
-    seg = w.select("doc_id", F.explode(segs_arr).alias("s")).select(
-        "doc_id", "s.pos", "s.seg"
+    seg = w.select(
+        "doc_id",
+        F.posexplode(ngram_array(F.col("ws"), _SEG_WORDS, _SEG_WORDS)).alias("pos", "seg"),
     )
     # first-occurrence keeper per segment: partial-agg min over a
     # (doc_id, pos) struct — lexicographic, collision-free at any doc
@@ -2274,16 +2241,11 @@ _SPAN_K = 15  # span threshold (tokens); Lee et al. use 50 on BPE tokens
     oracle=f"""
 WITH t AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
 occ AS (
-  SELECT doc_id,
-         unnest(list_transform(
-           range(1, LEN(ws) - {_SPAN_K - 2}),
-           i -> {{'pos': i,
-                  'g': array_to_string(list_slice(ws, i, i + {_SPAN_K - 1}), ' ')}}
-         )) AS u
-  FROM t WHERE LEN(ws) >= {_SPAN_K}
-), o2 AS (SELECT doc_id, u.pos AS pos, u.g AS g FROM occ),
-dupg AS (SELECT g FROM o2 GROUP BY g HAVING COUNT(*) > 1),
-ds AS (SELECT doc_id, pos FROM o2 WHERE g IN (SELECT g FROM dupg)),
+  SELECT doc_id, generate_subscripts(gs, 1) AS pos, unnest(gs) AS g
+  FROM (SELECT doc_id, {_sql_ngrams("ws", _SPAN_K)} AS gs FROM t)
+),
+dupg AS (SELECT g FROM occ GROUP BY g HAVING COUNT(*) > 1),
+ds AS (SELECT doc_id, pos FROM occ WHERE g IN (SELECT g FROM dupg)),
 marked AS (
   SELECT doc_id, pos,
          LEAST({_SPAN_K},
@@ -2323,8 +2285,6 @@ FROM t LEFT JOIN cov ON cov.doc_id = t.doc_id
     ),
 )
 def exact_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .textops import ngram_array
-
     k = _SPAN_K
     docs = table(spark, sf_dir, "documents").select("doc_id", "text")
     # single-file fixture: spread before the per-row gram explode
@@ -2416,8 +2376,6 @@ def exact_substring_rewrite(docs: DataFrame, k: int = _SPAN_K) -> DataFrame:
     with clean_text = surviving tokens joined by ' ' (empty when the
     whole doc was removed).  Composable: pretraining_corpus_build uses
     it as an optional post-dedup stage."""
-    from .textops import ngram_array
-
     t = docs.select("doc_id", _words(F.col("text")).alias("ws"))
     occ = (
         t.filter(F.size("ws") >= k)
@@ -2500,16 +2458,8 @@ def exact_substring_rewrite(docs: DataFrame, k: int = _SPAN_K) -> DataFrame:
     oracle=f"""
 WITH t AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
 occ AS (
-  SELECT doc_id, u.pos AS pos, u.g AS g
-  FROM (
-    SELECT doc_id,
-           unnest(list_transform(
-             range(1, LEN(ws) - {_SPAN_K - 2}),
-             i -> {{'pos': i,
-                    'g': array_to_string(list_slice(ws, i, i + {_SPAN_K - 1}), ' ')}}
-           )) AS u
-    FROM t WHERE LEN(ws) >= {_SPAN_K}
-  )
+  SELECT doc_id, generate_subscripts(gs, 1) AS pos, unnest(gs) AS g
+  FROM (SELECT doc_id, {_sql_ngrams("ws", _SPAN_K)} AS gs FROM t)
 ),
 keep AS (
   SELECT g, MIN({{'doc_id': doc_id, 'pos': pos}}) AS keeper

@@ -21,8 +21,17 @@ from pyspark.sql import functions as F
 from ..io.tables import table
 from ..registry import register
 from ._helpers import davg, shuffle_parts, sql_davg
+from .dedup import _SEG_WORDS
 from .packing import _PACK_BUDGET
-from .textops import _DECON_MOD, _DECON_N, _QUALITY_SQL_CTE, ngram_array, with_quality
+from .textops import (
+    _DECON_MOD,
+    _DECON_N,
+    _QUALITY_SQL_CTE,
+    _sql_eval_probe,
+    _sql_ngrams,
+    ngram_array,
+    with_quality,
+)
 
 _SAMPLE_HEX = "80"  # keep ≈ 50% of deduped survivors
 
@@ -110,18 +119,10 @@ surv AS (
   FROM corpus c JOIN canon n USING (doc_id)
   WHERE c.keep AND n.rn = 1
 ),
-evg AS (
-  SELECT DISTINCT array_to_string(list_slice(ws2, i, i + {_BUILD_NGRAM - 1}), ' ') AS g
-  FROM (SELECT string_split(text, ' ') AS ws2 FROM b WHERE is_eval),
-       unnest(range(1, LEN(ws2) - {_BUILD_NGRAM - 2})) AS u(i)
-),
-contam AS (
-  SELECT DISTINCT doc_id
-  FROM (SELECT doc_id, string_split(text, ' ') AS ws3 FROM surv),
-       unnest(range(1, LEN(ws3) - {_BUILD_NGRAM - 2})) AS u(i)
-  WHERE array_to_string(list_slice(ws3, i, i + {_BUILD_NGRAM - 1}), ' ')
-          IN (SELECT g FROM evg)
-),
+{_sql_eval_probe(
+    "(SELECT string_split(text, ' ') AS ws FROM b WHERE is_eval)",
+    "(SELECT doc_id, string_split(text, ' ') AS ws FROM surv)",
+)},
 f AS (
   SELECT c.source, c.doc_id, c.keep, c.n_tokens,
          COALESCE(n.rn = 1, FALSE) AS canon,
@@ -348,9 +349,8 @@ surv AS (
 ),
 w AS (SELECT doc_id, source, string_split(text, ' ') AS ws FROM surv),
 seg AS (
-  SELECT doc_id, source, g.i AS pos,
-         array_to_string(ws[(g.i-1)*8+1:g.i*8], ' ') AS seg
-  FROM w, unnest(range(1, CAST(len(ws) // 8 AS INT) + 1)) AS g(i)
+  SELECT doc_id, source, generate_subscripts(ss, 1) - 1 AS pos, unnest(ss) AS seg
+  FROM (SELECT doc_id, source, {_sql_ngrams("ws", _SEG_WORDS, _SEG_WORDS)} AS ss FROM w)
 ),
 keep AS (SELECT seg, MIN({{'doc_id': doc_id, 'pos': pos}}) AS keeper FROM seg GROUP BY seg),
 kept AS (
@@ -375,7 +375,7 @@ t AS (
   SELECT src.source, src.n_docs_kept,
          COALESCE(dropped.n_tail_dropped, 0) AS n_tail_dropped,
          src.n_segments_in, src.n_segments_kept,
-         CAST(src.n_segments_kept * 8 AS BIGINT) AS tokens
+         CAST(src.n_segments_kept * {_SEG_WORDS} AS BIGINT) AS tokens
   FROM src LEFT JOIN dropped ON src.source = dropped.source
 ),
 g AS (
@@ -426,21 +426,10 @@ def curation_funnel_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     marked = docs.join(ranked, "doc_id")
     surv = marked.filter(F.col("tercile") < 3)
 
-    k = 8
-    ws = F.split("text", " ")
-    n_full = F.floor(F.size(ws) / k).cast("int")
-    segs_arr = F.transform(
-        F.when(n_full >= 1, F.sequence(F.lit(1), n_full)).otherwise(
-            F.array().cast("array<int>")
-        ),
-        lambda i: F.struct(
-            i.alias("pos"),
-            F.array_join(F.slice(ws, (i - 1) * k + 1, k), " ").alias("seg"),
-        ),
-    )
+    segs = ngram_array(F.split("text", " "), _SEG_WORDS, _SEG_WORDS)
     seg = surv.repartition(shuffle_parts(surv), F.col("doc_id")).select(
-        "doc_id", "source", F.explode(segs_arr).alias("s")
-    ).select("doc_id", "source", "s.pos", "s.seg")
+        "doc_id", "source", F.posexplode(segs).alias("pos", "seg")
+    )
     keep = seg.groupBy("seg").agg(
         F.min(F.struct(F.col("doc_id"), F.col("pos"))).alias("keeper")
     )
@@ -471,7 +460,7 @@ def curation_funnel_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.coalesce("n_tail_dropped", F.lit(0)).alias("n_tail_dropped"),
             F.coalesce("n_segments_in", F.lit(0)).alias("n_segments_in"),
             F.coalesce("n_segments_kept", F.lit(0)).alias("n_segments_kept"),
-            (F.coalesce("n_segments_kept", F.lit(0)) * k)
+            (F.coalesce("n_segments_kept", F.lit(0)) * _SEG_WORDS)
             .cast("bigint")
             .alias("tokens"),
         )

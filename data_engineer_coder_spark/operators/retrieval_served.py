@@ -65,6 +65,7 @@ from .similarity import (
     _two_level_assign,
     served_nprobe,
 )
+from .textops import _sql_chunks, chunk_array
 
 # CREATION-TIME default for the served ANN index's physical partition
 # key.  Round 13: hash-mixed and widened 16 → 64 after the quality-curve
@@ -638,8 +639,6 @@ def hybrid_served_recall_check(spark: SparkSession, sf_dir: str) -> DataFrame:
 # greedy steps, and the prefix pack.
 # --------------------------------------------------------------------------
 
-_RAGC_LEN = 32       # chunk window (the doc_chunk_windows geometry)
-_RAGC_STRIDE = 24
 _RAGC_POOL = 10      # fused chunks entering the MMR pool per probe
 _RAGC_BUDGET = 96    # context budget in tokens (3 full windows)
 _RAGC_KEY = 1000     # chunk key = doc_id * _RAGC_KEY + chunk_idx
@@ -650,18 +649,12 @@ def _sql_rag_chunk_pipeline() -> str:
     return f"""
 WITH d AS MATERIALIZED (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
 x AS (
-  SELECT doc_id, ws, LEN(ws) AS n,
-         CAST(1 + CEIL(GREATEST(LEN(ws) - {_RAGC_LEN}, 0) / {_RAGC_STRIDE}.0)
-              AS BIGINT) AS nc
-  FROM d
+  SELECT doc_id, generate_subscripts(cs, 1) - 1 AS k, unnest(cs) AS cws
+  FROM (SELECT doc_id, {_sql_chunks("ws")} AS cs FROM d)
 ),
 chunks AS MATERIALIZED (
-  SELECT doc_id,
-         CAST(u.k AS INT) AS chunk_idx,
-         doc_id * {_RAGC_KEY} + u.k AS ck,
-         list_slice(ws, 1 + u.k * {_RAGC_STRIDE},
-                    LEAST(1 + u.k * {_RAGC_STRIDE} + {_RAGC_LEN - 1}, n)) AS cws
-  FROM x, unnest(range(0, nc)) AS u(k)
+  SELECT doc_id, CAST(k AS INT) AS chunk_idx, doc_id * {_RAGC_KEY} + k AS ck, cws
+  FROM x
 ),
 clen AS (SELECT ck, doc_id, chunk_idx, LEN(cws) AS len FROM chunks),
 emb AS (
@@ -767,30 +760,16 @@ def rag_chunk_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..io.acid_table import replace_partitions
     from ..streaming.core import bm25_index_batch_frames
 
-    c, s = _RAGC_LEN, _RAGC_STRIDE
     docs = table(spark, sf_dir, "documents").select(
         "doc_id", F.split("text", " ").alias("ws")
     )
-    x = docs.select(
-        "doc_id",
-        "ws",
-        F.size("ws").alias("n"),
-        (
-            F.lit(1) + F.ceil(F.greatest(F.size("ws") - c, F.lit(0)) / float(s))
-        ).cast("int").alias("nc"),
-    )
-    chunks = x.select(
-        "doc_id",
-        "ws",
-        "n",
-        F.explode(F.sequence(F.lit(0), F.col("nc") - 1)).alias("k"),
+    chunks = docs.select(
+        "doc_id", F.posexplode(chunk_array(F.col("ws"))).alias("k", "cws")
     ).select(
         "doc_id",
         F.col("k").cast("int").alias("chunk_idx"),
         (F.col("doc_id") * _RAGC_KEY + F.col("k")).alias("ck"),
-        F.expr(f"slice(ws, 1 + k * {s}, least({c}, n - (1 + k * {s}) + 1))").alias(
-            "cws"
-        ),
+        "cws",
     ).localCheckpoint(eager=False)
     clen = chunks.select("ck", "doc_id", "chunk_idx", F.size("cws").alias("len"))
     emb = table(spark, sf_dir, "embeddings").select(
@@ -966,7 +945,8 @@ def rag_chunk_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         # probe-doc chunk leaks through.
         n_probes = probes.count()
         if n_chunks != int(
-            x.agg(F.coalesce(F.sum("nc"), F.lit(0)).alias("s")).collect()[0]["s"]
+            docs.agg(F.coalesce(F.sum(F.size(chunk_array(F.col("ws")))), F.lit(0)).alias("s"))
+            .collect()[0]["s"]
         ):
             raise RuntimeError("chunking funnel lost or invented chunks")
         if sel.count() != n_probes * _MMR_K:

@@ -26,6 +26,79 @@ _SQL_STOPWORDS = ", ".join(f"'{w}'" for w in _STOPWORDS)
 
 
 # --------------------------------------------------------------------------
+# The word window, written once per engine.  Every LLM-pipeline operator
+# that cuts a document's words into windows (dedup shingles,
+# decontamination and containment grams, 8-word segments, exact-substring
+# spans, the quality bigrams/trigrams) goes through ``ngram_array`` in
+# Spark and ``_sql_ngrams`` in the oracle SQL; RAG chunks go through
+# ``chunk_array``/``_sql_chunks``.  A caller that needs a window's
+# position takes it from the same list (``posexplode`` /
+# ``generate_subscripts``).
+# --------------------------------------------------------------------------
+
+
+def ngram_array(ws, n: int, step: int = 1):
+    """The word window, the one Spark cut of a token-array column into
+    full ``n``-word windows at stride ``step``, each joined by a space.
+
+    Every overlapping gram in the engine (dedup shingles, decontamination
+    8-grams, containment and exact-substring k-grams, the bigram and
+    trigram quality signals) is ``step=1``; the 8-word segment tiles are
+    ``step=n``.  A doc shorter than ``n`` yields an empty array: the guard
+    is needed because ``sequence(1, 0)`` counts DOWN in Spark.
+    :func:`_sql_ngrams` is the DuckDB twin.
+    """
+    last = F.size(ws) - (n - 1)
+    starts = (
+        F.sequence(F.lit(1), last)
+        if step == 1
+        else F.sequence(F.lit(1), last, F.lit(step))
+    )
+    return F.transform(
+        F.when(F.size(ws) >= n, starts).otherwise(F.array().cast("array<int>")),
+        lambda i: F.array_join(F.slice(ws, i, n), " "),
+    )
+
+
+def _sql_ngrams(ws: str, n: int, step: int = 1) -> str:
+    """DuckDB twin of :func:`ngram_array` over the list expression ``ws``.
+
+    ``range`` stops before its start when ``LEN(ws) < n``, so a short doc
+    yields an empty list; there is no division, so DuckDB's ``//``
+    (truncating toward zero) cannot invent a window.  The words are
+    joined with ``concat_ws``, which DuckDB runs several times faster
+    than ``array_to_string(list_slice(…))``."""
+    words = ", ".join(f"{ws}[i + {k}]" for k in range(n))
+    return f"list_transform(range(1, LEN({ws}) - {n} + 2, {step}), i -> concat_ws(' ', {words}))"
+
+
+_CHUNK_LEN = 32
+_CHUNK_STRIDE = 24
+
+
+def chunk_array(ws):
+    """RAG chunks of a token-array column: ``_CHUNK_LEN``-word windows at
+    stride ``_CHUNK_STRIDE``, 1 + ⌈max(len−32, 0)/24⌉ of them, so the
+    trailing window may run short (it is empty only for an empty ``ws``).
+    :func:`_sql_chunks` is the DuckDB twin."""
+    c, s = _CHUNK_LEN, _CHUNK_STRIDE
+    nc = (F.lit(1) + F.ceil(F.greatest(F.size(ws) - c, F.lit(0)) / float(s))).cast("int")
+    return F.transform(
+        F.sequence(F.lit(0), nc - 1),
+        lambda k: F.slice(ws, k * s + 1, F.least(F.lit(c), F.size(ws) - k * s)),
+    )
+
+
+def _sql_chunks(ws: str) -> str:
+    """DuckDB twin of :func:`chunk_array` over the list expression ``ws``."""
+    c, s = _CHUNK_LEN, _CHUNK_STRIDE
+    return (
+        f"list_transform(range(0, CAST(1 + CEIL(GREATEST(LEN({ws}) - {c}, 0) / {s}.0) AS BIGINT)), "
+        f"k -> list_slice({ws}, 1 + k * {s}, LEAST(1 + k * {s} + {c - 1}, LEN({ws}))))"
+    )
+
+
+# --------------------------------------------------------------------------
 # L4a: token counting + type-token ratio + word-length stats.
 # --------------------------------------------------------------------------
 
@@ -379,7 +452,7 @@ def tfidf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "repetition_ratio",
-    oracle="""
+    oracle=f"""
 WITH w AS (
   SELECT doc_id, string_split(text, ' ') AS ws FROM documents
   WHERE LEN(string_split(text, ' ')) >= 2
@@ -387,7 +460,7 @@ WITH w AS (
   SELECT doc_id,
          LEN(ws) AS n_tokens,
          LEN(list_distinct(ws)) AS n_uni_distinct,
-         list_transform(range(1, LEN(ws)), i -> ws[i] || ' ' || ws[i+1]) AS bg
+         {_sql_ngrams("ws", 2)} AS bg
   FROM w
 )
 SELECT doc_id,
@@ -409,13 +482,11 @@ def repetition_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents")
     ws = F.split("text", " ")
     w = docs.select("doc_id", ws.alias("ws")).where(F.size("ws") >= 2)
-    idx = F.sequence(F.lit(1), F.size("ws") - 1)
-    bg = F.transform(idx, lambda i: F.array_join(F.slice("ws", i, 2), " "))
     b = w.select(
         "doc_id",
         F.size("ws").alias("n_tokens"),
         F.size(F.array_distinct("ws")).alias("n_uni_distinct"),
-        bg.alias("bg"),
+        ngram_array(F.col("ws"), 2).alias("bg"),
     )
     dup_uni = (F.col("n_tokens") - F.col("n_uni_distinct")).cast("double") / F.col("n_tokens")
     dup_bi = (F.size("bg") - F.size(F.array_distinct("bg"))).cast("double") / F.size("bg")
@@ -858,10 +929,7 @@ WITH w AS (
   FROM documents WHERE len(string_split(text, ' ')) >= 3
 ),
 occ AS (
-  SELECT doc_id, source,
-         unnest(list_transform(range(1, len(ws) - 1),
-                               i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2])) AS g
-  FROM w
+  SELECT doc_id, source, unnest({_sql_ngrams("ws", 3)}) AS g FROM w
 ),
 df AS (
   SELECT g, COUNT(DISTINCT doc_id) AS n_docs FROM occ GROUP BY g
@@ -888,10 +956,7 @@ def boilerplate_ngram_density(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "source", F.split("text", " ").alias("ws"))
         .filter(F.size("ws") >= 3)
     )
-    grams = F.transform(
-        F.sequence(F.lit(1), F.size("ws") - 2),
-        lambda i: F.array_join(F.slice(F.col("ws"), i, 3), " "),
-    )
+    grams = ngram_array(F.col("ws"), 3)
     occ = w.select("doc_id", "source", F.explode(grams).alias("g"))
     df_ = occ.groupBy("g").agg(F.count_distinct("doc_id").alias("n_docs"))
     boiler = F.count(F.when(F.col("n_docs") >= _BOILER_DF, F.lit(1)))
@@ -970,21 +1035,21 @@ _DECON_N = 8  # n-gram width
 _DECON_MOD = 97  # doc_id % 97 == 0 marks the held-out eval docs
 
 
-def ngram_array(ws, n: int):
-    """Word n-grams of a token-array column as an array column.
-
-    Shared by ngram_decontaminate and pretraining_corpus_build so the
-    gram construction (including the short-doc guard: ``sequence(1, 0)``
-    counts DOWN in Spark, so short docs must yield an empty array — the
-    same guard segment_dedup_report carries) cannot drift between the
-    standalone op and the fused funnel.
-    """
-    return F.transform(
-        F.when(F.size(ws) >= n, F.sequence(F.lit(1), F.size(ws) - (n - 1))).otherwise(
-            F.array().cast("array<int>")
-        ),
-        lambda i: F.array_join(F.slice(ws, i, n), " "),
-    )
+def _sql_eval_probe(eval_rel: str, train_rel: str) -> str:
+    """The eval 8-gram probe as two CTEs: ``ev``, the distinct word
+    8-grams of ``eval_rel``'s ``ws``, and ``contam``, the distinct
+    ``doc_id`` of the ``train_rel`` rows that share one of them.  Each
+    argument is what follows ``FROM``: a relation, optionally with a
+    ``WHERE``, or a parenthesized subquery."""
+    grams = _sql_ngrams("ws", _DECON_N)
+    return f"""ev AS (
+  SELECT DISTINCT unnest({grams}) AS g FROM {eval_rel}
+),
+contam AS (
+  SELECT DISTINCT doc_id
+  FROM (SELECT doc_id, unnest({grams}) AS g FROM {train_rel})
+  WHERE g IN (SELECT g FROM ev)
+)"""
 
 
 @register(
@@ -994,16 +1059,8 @@ WITH t AS (
   SELECT doc_id, source, doc_id % {_DECON_MOD} = 0 AS is_eval,
          string_split(text, ' ') AS ws
   FROM documents
-), g AS (
-  SELECT doc_id, source, is_eval,
-         array_to_string(list_slice(ws, i, i + {_DECON_N - 1}), ' ') AS g
-  FROM t, unnest(range(1, LEN(ws) - {_DECON_N - 2})) AS u(i)
-), ev AS (
-  SELECT DISTINCT g FROM g WHERE is_eval
-), contam AS (
-  SELECT DISTINCT doc_id FROM g
-  WHERE NOT is_eval AND g IN (SELECT g FROM ev)
-)
+),
+{_sql_eval_probe("t WHERE is_eval", "t WHERE NOT is_eval")}
 SELECT source,
        COUNT(*) AS n_train,
        COUNT(c.doc_id) AS n_contaminated,
@@ -1871,19 +1928,14 @@ def psi_ingest_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "source_overlap_matrix",
-    oracle="""
+    oracle=f"""
 WITH w AS (
   SELECT source, string_split(text, ' ') AS ws FROM documents
   WHERE LEN(string_split(text, ' ')) >= 3
 ),
 sh AS (
   SELECT DISTINCT source, s
-  FROM (
-    SELECT source,
-           unnest(list_transform(range(1, LEN(ws) - 1),
-                                 i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2])) AS s
-    FROM w
-  )
+  FROM (SELECT source, unnest({_sql_ngrams("ws", 3)}) AS s FROM w)
 ),
 na AS (SELECT source, COUNT(*) AS n FROM sh GROUP BY 1),
 inter AS (
@@ -2691,11 +2743,11 @@ def linear_probe_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "doc_dup_ngram_coverage",
-    oracle="""
+    oracle=f"""
 WITH t AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
 g AS (
-  SELECT doc_id, i - 1 AS pos, array_to_string(list_slice(ws, i, i + 7), ' ') AS g
-  FROM t, unnest(range(1, LEN(ws) - 6)) AS u(i)
+  SELECT doc_id, generate_subscripts(gs, 1) - 1 AS pos, unnest(gs) AS g
+  FROM (SELECT doc_id, {_sql_ngrams("ws", 8)} AS gs FROM t)
 ),
 dup AS (
   SELECT g FROM (SELECT g, COUNT(DISTINCT doc_id) AS dd FROM g GROUP BY g)
@@ -2799,9 +2851,7 @@ WITH t AS (
   FROM documents
 ),
 g AS (
-  SELECT DISTINCT doc_id, is_eval,
-         array_to_string(list_slice(ws, i, i + {_CONTAIN_K - 1}), ' ') AS g
-  FROM t, unnest(range(1, LEN(ws) - {_CONTAIN_K - 2})) AS u(i)
+  SELECT DISTINCT doc_id, is_eval, unnest({_sql_ngrams("ws", _CONTAIN_K)}) AS g FROM t
 ),
 ev AS (SELECT doc_id AS eval_doc, g FROM g WHERE is_eval),
 esz AS (SELECT eval_doc, CAST(COUNT(*) AS BIGINT) AS e_size FROM ev GROUP BY eval_doc),
@@ -2900,9 +2950,7 @@ WITH t AS (
   FROM documents
 ),
 g AS (
-  SELECT DISTINCT doc_id, is_eval,
-         array_to_string(list_slice(ws, i, i + {_CONTAIN_K - 1}), ' ') AS g
-  FROM t, unnest(range(1, LEN(ws) - {_CONTAIN_K - 2})) AS u(i)
+  SELECT DISTINCT doc_id, is_eval, unnest({_sql_ngrams("ws", _CONTAIN_K)}) AS g FROM t
 ),
 gh AS (SELECT doc_id, is_eval, g, md5(g) AS h FROM g),
 ev AS (SELECT doc_id AS eval_doc, g, h FROM gh WHERE is_eval),
@@ -3028,30 +3076,20 @@ def containment_sketch_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # chunk CONTENT, not just the arithmetic.
 # --------------------------------------------------------------------------
 
-_CHUNK_LEN = 32
-_CHUNK_STRIDE = 24
-
-
 @register(
     "doc_chunk_windows",
     oracle=f"""
 WITH d AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
 x AS (
-  SELECT doc_id, ws, LEN(ws) AS n,
-         CAST(1 + CEIL(GREATEST(LEN(ws) - {_CHUNK_LEN}, 0) / {_CHUNK_STRIDE}.0)
-              AS BIGINT) AS nc
-  FROM d
+  SELECT doc_id, generate_subscripts(cs, 1) - 1 AS k, unnest(cs) AS cw
+  FROM (SELECT doc_id, {_sql_chunks("ws")} AS cs FROM d)
 )
 SELECT doc_id,
-       CAST(u.k AS INT) AS chunk_idx,
-       CAST(1 + u.k * {_CHUNK_STRIDE} AS INT) AS start_tok,
-       CAST(LEAST({_CHUNK_LEN}, n - (1 + u.k * {_CHUNK_STRIDE}) + 1) AS INT)
-         AS chunk_tokens,
-       md5(array_to_string(
-             list_slice(ws, 1 + u.k * {_CHUNK_STRIDE},
-                        LEAST(1 + u.k * {_CHUNK_STRIDE} + {_CHUNK_LEN - 1}, n)),
-             ' ')) AS chunk_md5
-FROM x, unnest(range(0, nc)) AS u(k)
+       CAST(k AS INT) AS chunk_idx,
+       CAST(1 + k * {_CHUNK_STRIDE} AS INT) AS start_tok,
+       CAST(LEN(cw) AS INT) AS chunk_tokens,
+       md5(array_to_string(cw, ' ')) AS chunk_md5
+FROM x
 """,
     tags=("text", "llm", "rag"),
     doc=(
@@ -3062,37 +3100,15 @@ FROM x, unnest(range(0, nc)) AS u(k)
 )
 def doc_chunk_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents").select("doc_id", "text")
-    c, s = _CHUNK_LEN, _CHUNK_STRIDE
     x = docs.select(
-        "doc_id",
-        F.split("text", " ").alias("ws"),
-    ).select(
-        "doc_id",
-        "ws",
-        F.size("ws").alias("n"),
-        (
-            F.lit(1)
-            + F.ceil(F.greatest(F.size("ws") - c, F.lit(0)) / float(s))
-        ).cast("int").alias("nc"),
+        "doc_id", F.posexplode(chunk_array(F.split("text", " "))).alias("k", "cw")
     )
-    out = x.select(
-        "doc_id",
-        "ws",
-        "n",
-        F.explode(F.sequence(F.lit(0), F.col("nc") - 1)).alias("k"),
-    )
-    start = 1 + F.col("k") * s
-    return out.select(
+    return x.select(
         "doc_id",
         F.col("k").cast("int").alias("chunk_idx"),
-        start.cast("int").alias("start_tok"),
-        F.least(F.lit(c), F.col("n") - start + 1).cast("int").alias("chunk_tokens"),
-        F.md5(
-            F.array_join(
-                F.expr(f"slice(ws, 1 + k * {s}, least({c}, n - (1 + k * {s}) + 1))"),
-                " ",
-            )
-        ).alias("chunk_md5"),
+        (1 + F.col("k") * _CHUNK_STRIDE).cast("int").alias("start_tok"),
+        F.size("cw").cast("int").alias("chunk_tokens"),
+        F.md5(F.array_join("cw", " ")).alias("chunk_md5"),
     )
 
 

@@ -161,6 +161,29 @@ _FORCE_RECHECK: tuple[str, ...] = (
     "neardup_jaccard_histogram",
     # carried over from VERDICT r15
     "embedding_covariance_topk",
+    # round 20: every word window (n-grams, 8-word segments, exact-substring
+    # spans, RAG chunks) is cut by one helper per engine in
+    # operators/textops.py, and the eval 8-gram probe is one SQL fragment.
+    # Changed: these oracle strings and Spark plans (the bigram, trigram,
+    # segment and chunk transforms, plus the short-doc guard that
+    # dedup._shingles now carries).  The other changed oracles (the MinHash
+    # and Jaccard chains through _SH_CTE, the gate and curation replays,
+    # rag_chunk_pipeline) are listed above.
+    "boilerplate_ngram_density",
+    "containment_decontaminate",
+    "containment_sketch_audit",
+    "curation_funnel_v2",
+    "decontaminate_overlap",
+    "doc_chunk_windows",
+    "doc_dup_ngram_coverage",
+    "exact_substring_dedup",
+    "exact_substring_dedup_rewrite",
+    "ngram_decontaminate",
+    "pretraining_corpus_build",
+    "repetition_ratio",
+    "segment_dedup_keep_first",
+    "segment_dedup_report",
+    "source_overlap_matrix",
 )
 
 # (The round-3/4 _CHECK_FIRST backlog queue is gone: every registered query

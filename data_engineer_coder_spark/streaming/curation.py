@@ -46,7 +46,7 @@ def _curation_ctes(idx2_where: str = "") -> str:
     oracles.  ``idx2_where`` optionally filters the standing index
     epoch 2 probes against (the lifecycle drill's takedown arriving
     between epochs 1 and 2 shrinks it)."""
-    from ..operators.textops import _DECON_MOD, _DECON_N
+    from ..operators.textops import _DECON_MOD, _sql_eval_probe
 
     sql = f"""
 WITH tr AS (
@@ -58,18 +58,10 @@ w AS (SELECT doc_id, ws FROM tr WHERE LEN(ws) >= 3),
 {_hash_cte("sh")},
 {_signature_ctes("hv")},
 {_AGREEMENT_CTES},
-ev AS (
-  SELECT DISTINCT array_to_string(list_slice(ws, i, i + {_DECON_N - 1}), ' ') AS g
-  FROM (SELECT string_split(text, ' ') AS ws
-        FROM documents WHERE doc_id % {_DECON_MOD} = 0),
-       unnest(range(1, LEN(ws) - {_DECON_N - 2})) AS u(i)
-),
-contam AS (
-  SELECT DISTINCT t.doc_id
-  FROM tr t, unnest(range(1, LEN(t.ws) - {_DECON_N - 2})) AS u(i)
-  WHERE array_to_string(list_slice(t.ws, i, i + {_DECON_N - 1}), ' ')
-          IN (SELECT g FROM ev)
-),
+{_sql_eval_probe(
+    f"(SELECT string_split(text, ' ') AS ws FROM documents WHERE doc_id % {_DECON_MOD} = 0)",
+    "tr",
+)},
 {_epoch_ctes("tr")},
 {_keep_first_ctes(_ACCEPT_CLEAN, idx2_where)}"""
     # multi-referenced heavy CTEs: DuckDB inlines per reference and the

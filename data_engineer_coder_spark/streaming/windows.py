@@ -1048,23 +1048,16 @@ def stream_neardup_index_compaction_audit(
 
 
 def _decontam_gate_oracle() -> str:
-    from ..operators.textops import _DECON_MOD, _DECON_N
+    from ..operators.textops import _DECON_MOD, _sql_eval_probe
 
     return f"""
 WITH t AS (
   SELECT doc_id, doc_id % {_DECON_MOD} = 0 AS is_eval,
          string_split(text, ' ') AS ws
   FROM documents
-), g AS (
-  SELECT doc_id, is_eval,
-         array_to_string(list_slice(ws, i, i + {_DECON_N - 1}), ' ') AS g
-  FROM t, unnest(range(1, LEN(ws) - {_DECON_N - 2})) AS u(i)
-), ev AS (
-  SELECT DISTINCT g FROM g WHERE is_eval
-), contam AS (
-  SELECT DISTINCT doc_id FROM g
-  WHERE NOT is_eval AND g IN (SELECT g FROM ev)
-), tr AS (
+),
+{_sql_eval_probe("t WHERE is_eval", "t WHERE NOT is_eval")},
+tr AS (
   SELECT doc_id, CAST(doc_id % 3 AS INT) AS e FROM t WHERE NOT is_eval
 )
 SELECT e AS epoch,

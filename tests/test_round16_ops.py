@@ -39,7 +39,7 @@ _GATE_JOB_CEILINGS = {
     "stream_rollup_matview": 23,
 }
 
-# Batch ANN and clustering queries at sf0.001, counted the same way.
+# Batch ANN, clustering, dedup and text queries at sf0.001, counted the same way.
 _BATCH_JOB_CEILINGS = {
     "cosine_topk": 4,
     "ann_lsh_topk": 7,
@@ -49,6 +49,15 @@ _BATCH_JOB_CEILINGS = {
     "ann_index_bucket_probe": 30,
     "mmr_diversified_topk_served": 71,
     "mutual_knn_clusters": 72,
+    # counted before the word window was written once
+    "ngram_decontaminate": 9,
+    "decontaminate_overlap": 7,
+    "segment_dedup_keep_first": 6,
+    "doc_chunk_windows": 2,
+    "exact_substring_dedup": 8,
+    # the exact-Jaccard clusters and the served BM25 top-k
+    "dedup_clusters": 28,
+    "bm25_topk_served": 44,
 }
 
 
@@ -168,7 +177,8 @@ def test_decontam_gate_crash_mid_epoch_converges(spark, tmp_path, monkeypatch):
 def test_gate_drill_job_count_ceiling(spark, sf_dir):
     """Job counts do not depend on the host: each drill may run at most
     the jobs it ran before its gate's steps were shared, and each batch
-    ANN query at most the jobs it ran before its probe steps were."""
+    query at most the jobs it ran before its probe steps or word windows
+    were."""
     sc = spark.sparkContext._jsc.sc()
     store, bus = sc.statusStore(), sc.listenerBus()
 
