@@ -69,6 +69,17 @@ Round 8 adds the two remaining lakehouse table services:
   dir LIST for the single compacted dir — logically a no-op (same
   rows), physically the difference between millions of file opens and
   one.  Pre-compaction versions stay time-travelable until ``vacuum``.
+
+One commit path.  Every write verb reaches disk the same way:
+``_stage_and_commit`` is the only staging tail (txid no-op, clean
+re-stage, partition discovery, footer stats, snapshot-guard extension,
+the ``_crash_before_commit`` seam, commit) and ``_commit`` the only
+manifest publisher (merge, temp file + fsync, ``os.link``, rebase on a
+version collision, ``expect_dirs`` conflict guard).  The verbs differ
+only in how they stage: one Spark partitioned write, the driver-side
+pyarrow writer for small already-collected row sets, or compaction's
+rewrite.  ``adopt_partitions`` stages nothing and calls ``_commit``
+with the source's directories.
 """
 
 from __future__ import annotations
@@ -76,6 +87,7 @@ from __future__ import annotations
 import json
 import os
 import re
+import shutil
 import uuid
 from collections.abc import Callable
 
@@ -198,6 +210,22 @@ def _dirs(val) -> list[str]:
     return [val] if isinstance(val, str) else list(val)
 
 
+def _part_values(pkey: str) -> dict[str, str]:
+    """``a=1/b=2`` → ``{"a": "1", "b": "2"}`` (hive-encoded strings)."""
+    return dict(seg.split("=", 1) for seg in pkey.split("/"))
+
+
+def _matching(man: dict, partition_filter: Callable[[dict[str, str]], bool] | None
+              ) -> dict[str, list[str]]:
+    """The manifest's live partitions that ``partition_filter`` selects
+    (all of them when None), each with its staging dirs."""
+    return {
+        pkey: _dirs(val)
+        for pkey, val in man["partitions"].items()
+        if partition_filter is None or partition_filter(_part_values(pkey))
+    }
+
+
 def _discover_partition_dirs(base: str, n_cols: int) -> list[str]:
     """Relative hive-style partition paths (``a=1/b=2``) under ``base``."""
     found: list[str] = []
@@ -273,25 +301,25 @@ def _collect_file_stats(stage_abs: str, stage_rel: str,
     return out
 
 
-def _merge(prev: dict, new_parts: list[str], stage_rel: str, txid: str,
+def _merge(prev: dict, delta: dict[str, list[str]], txid: str,
            mode: str, partition_cols: list[str], schema_json: str,
            file_stats: dict[str, list[dict]] | None = None,
            drop_parts: list[str] | None = None,
            neutral: bool = False) -> dict:
-    """Build the next manifest from ``prev`` + this transaction's delta."""
+    """Build the next manifest from ``prev`` + this transaction's delta
+    (``{partition key: [dirs this transaction contributes]}``)."""
     partitions = {k: _dirs(v) for k, v in prev["partitions"].items()}
     # drop_parts: partitions the transaction REWROTE but which ended up
     # with zero surviving rows (a DELETE emptying a partition) — without
     # this, replace semantics would leave their old directories live.
     for p in drop_parts or []:
-        if p not in new_parts:
+        if p not in delta:
             partitions.pop(p, None)
-    for p in new_parts:
-        loc = f"{stage_rel}/{p}"
+    for p, dirs in delta.items():
         if mode == "replace":
-            partitions[p] = [loc]
+            partitions[p] = list(dirs)
         else:  # append: accumulate epochs, never erase earlier ones
-            partitions.setdefault(p, []).append(loc)
+            partitions.setdefault(p, []).extend(dirs)
     dir_files = dict(prev.get("dir_files", {}))
     dir_files.update(file_stats or {})
     # Prune stats for directories no live partition references (replaced,
@@ -315,13 +343,14 @@ def _merge(prev: dict, new_parts: list[str], stage_rel: str, txid: str,
     }
 
 
-def _commit(root: str, prev: dict, new_parts: list[str], stage_rel: str,
+def _commit(root: str, prev: dict, delta: dict[str, list[str]],
             txid: str, mode: str, partition_cols: list[str],
             schema_json: str, file_stats: dict[str, list[dict]] | None = None,
             expect_dirs: dict[str, list[str]] | None = None,
             drop_parts: list[str] | None = None,
             neutral: bool = False) -> dict:
-    """Atomically publish the next manifest version.
+    """Atomically publish the next manifest version — the only place a
+    manifest is built or written.
 
     Write to a temp file, hard-link to the final name (fails with
     EEXIST if another writer claimed the version), unlink the temp —
@@ -351,9 +380,8 @@ def _commit(root: str, prev: dict, new_parts: list[str], stage_rel: str,
                         "since this transaction's snapshot; re-run against "
                         "the current table state"
                     )
-        manifest = _merge(prev, new_parts, stage_rel, txid, mode,
-                          partition_cols, schema_json, file_stats, drop_parts,
-                          neutral=neutral)
+        manifest = _merge(prev, delta, txid, mode, partition_cols,
+                          schema_json, file_stats, drop_parts, neutral=neutral)
         tmp = os.path.join(mdir, f".tmp-{uuid.uuid4().hex}")
         with open(tmp, "w") as fh:
             json.dump(manifest, fh, indent=1, sort_keys=True)
@@ -370,16 +398,25 @@ def _commit(root: str, prev: dict, new_parts: list[str], stage_rel: str,
 
 
 def _stage_and_commit(
-    df: DataFrame,
     root: str,
     partition_cols: list[str],
     txid: str,
     mode: str,
+    stage: Callable[[str], str],
     _crash_before_commit: Callable[[], None] | None,
     prev: dict | None = None,
     expect_dirs: dict[str, list[str]] | None = None,
     drop_parts: list[str] | None = None,
+    neutral: bool = False,
 ) -> dict:
+    """The staging tail every data-writing verb ends in.
+
+    ``stage(stage_abs)`` writes this transaction's hive-partitioned files
+    under ``stage_abs`` and returns the committed schema json.  The tail
+    owns everything around it: the exactly-once txid no-op, a clean
+    re-stage after a pre-commit crash, partition discovery, footer
+    stats, the snapshot-guard extension, the crash seam and the commit.
+    """
     if not partition_cols:
         raise ValueError("at least one partition column is required")
     if prev is None:
@@ -388,11 +425,8 @@ def _stage_and_commit(
         return prev  # re-run of a committed write: exactly-once no-op
     stage_rel = f"{_STAGING_DIR}/{txid}"
     stage_abs = os.path.join(root, stage_rel)
-    (
-        df.write.partitionBy(*partition_cols)
-        .mode("overwrite")  # a re-STAGE after a pre-commit crash restages cleanly
-        .parquet(stage_abs)
-    )
+    shutil.rmtree(stage_abs, ignore_errors=True)  # re-stage after a pre-commit crash
+    schema_json = stage(stage_abs)
     new_parts = _discover_partition_dirs(stage_abs, len(partition_cols))
     file_stats = _collect_file_stats(stage_abs, stage_rel, new_parts)
     if expect_dirs is not None:
@@ -405,10 +439,20 @@ def _stage_and_commit(
             expect_dirs.setdefault(p, _dirs(prev["partitions"].get(p, [])))
     if _crash_before_commit is not None:
         _crash_before_commit()
-    schema_json = df.drop(*partition_cols).schema.json()
-    return _commit(root, prev, new_parts, stage_rel, txid, mode,
-                   partition_cols, schema_json, file_stats,
-                   expect_dirs=expect_dirs, drop_parts=drop_parts)
+    return _commit(root, prev, {p: [f"{stage_rel}/{p}"] for p in new_parts},
+                   txid, mode, partition_cols, schema_json, file_stats,
+                   expect_dirs=expect_dirs, drop_parts=drop_parts,
+                   neutral=neutral)
+
+
+def _spark_stage(df: DataFrame, partition_cols: list[str]) -> Callable[[str], str]:
+    """Stage ``df`` with one partitioned Spark write."""
+
+    def stage(stage_abs: str) -> str:
+        df.write.partitionBy(*partition_cols).mode("overwrite").parquet(stage_abs)
+        return df.drop(*partition_cols).schema.json()
+
+    return stage
 
 
 # Driver-side commit fast path (round 15, VERDICT r14 #1): every gate
@@ -418,11 +462,10 @@ def _stage_and_commit(
 # task launch + commit protocol — per epoch per table, which the r14
 # per-epoch phase profile measured at 0.3–2 s/job of pure fixed
 # overhead.  These helpers write the staged parquet file directly with
-# pyarrow on the driver (bytes-equivalent rows, same footer stats
-# machinery, same hive dir layout) and run the IDENTICAL manifest/txid
-# commit protocol — _commit is shared, so atomicity, rebase-on-race,
-# exactly-once replay and zone-map stats are byte-for-byte the Spark
-# path's.  Unsupported types/values fall back to the Spark write.
+# pyarrow on the driver (bytes-equivalent rows, same hive dir layout)
+# and hand it to the same staging tail as the Spark write, so the txid
+# check, footer stats, crash seam and commit are the Spark path's.
+# Unsupported types/values fall back to the Spark write.
 
 _PA_TYPE_BY_SPARK = {
     "byte": "int8", "short": "int16", "integer": "int32", "long": "int64",
@@ -461,6 +504,43 @@ def _rows_local_plan(schema, partition_cols: list[str]):
     return schema, data_fields, part_idx, pa.schema(pa_fields)
 
 
+def _arrow_stage(rows: list[tuple], plan, partition_cols: list[str]
+                 ) -> Callable[[str], str]:
+    """Stage ``rows`` with pyarrow on the driver: one file per partition,
+    in the hive layout a Spark write of the same rows would produce."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from pyspark.sql.types import StructType
+
+    sch, data_fields, part_idx, pa_schema = plan
+    names = [f.name for f in sch.fields]
+    data_idx = [names.index(f.name) for f in data_fields]
+
+    def stage(stage_abs: str) -> str:
+        os.makedirs(stage_abs, exist_ok=True)
+        groups: dict[str, list[tuple]] = {}
+        for r in rows:
+            pkey = "/".join(
+                f"{c}={r[i]}" for c, i in zip(partition_cols, part_idx)
+            )
+            groups.setdefault(pkey, []).append(tuple(r[i] for i in data_idx))
+        for pkey, grp in groups.items():
+            pdir = os.path.join(stage_abs, pkey)
+            os.makedirs(pdir, exist_ok=True)
+            cols = [
+                pa.array([g[k] for g in grp], type=pa_schema.field(k).type)
+                for k in range(len(data_fields))
+            ]
+            pq.write_table(
+                pa.Table.from_arrays(cols, schema=pa_schema),
+                os.path.join(pdir, f"part-00000-{uuid.uuid4().hex}.parquet"),
+            )
+        return StructType(data_fields).json()
+
+    return stage
+
+
 def _commit_rows_local(
     spark: SparkSession,
     rows: list[tuple],
@@ -471,57 +551,20 @@ def _commit_rows_local(
     mode: str,
     _crash_before_commit: Callable[[], None] | None = None,
 ) -> dict:
-    import shutil
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
+    """Stage with pyarrow when :func:`_rows_local_plan` and every
+    partition value allow it, else with a Spark write; commit either way
+    through the one staging tail."""
     plan = _rows_local_plan(schema, partition_cols)
-    fallback_vals = plan is None or any(
+    if plan is None or any(
         r[i] is None or not _SAFE_PART_VAL.match(str(r[i]))
         for r in rows
-        for i in (plan[2] if plan else [])
-    )
-    if fallback_vals:
-        df = spark.createDataFrame(rows, schema)
-        return _stage_and_commit(df, root, partition_cols, txid, mode,
-                                 _crash_before_commit)
-    sch, data_fields, part_idx, pa_schema = plan
-    prev = current_manifest(root)
-    if txid in prev["txids"]:
-        return prev  # re-run of a committed write: exactly-once no-op
-    stage_rel = f"{_STAGING_DIR}/{txid}"
-    stage_abs = os.path.join(root, stage_rel)
-    if os.path.isdir(stage_abs):
-        shutil.rmtree(stage_abs)  # re-stage after a pre-commit crash
-    names = [f.name for f in sch.fields]
-    data_idx = [names.index(f.name) for f in data_fields]
-    groups: dict[str, list[tuple]] = {}
-    for r in rows:
-        pkey = "/".join(
-            f"{c}={r[i]}" for c, i in zip(partition_cols, part_idx)
-        )
-        groups.setdefault(pkey, []).append(tuple(r[i] for i in data_idx))
-    for pkey, grp in groups.items():
-        pdir = os.path.join(stage_abs, pkey)
-        os.makedirs(pdir, exist_ok=True)
-        cols = [
-            pa.array([g[k] for g in grp], type=pa_schema.field(k).type)
-            for k in range(len(data_fields))
-        ]
-        pq.write_table(
-            pa.Table.from_arrays(cols, schema=pa_schema),
-            os.path.join(pdir, f"part-00000-{uuid.uuid4().hex}.parquet"),
-        )
-    new_parts = sorted(groups)
-    file_stats = _collect_file_stats(stage_abs, stage_rel, new_parts)
-    if _crash_before_commit is not None:
-        _crash_before_commit()
-    from pyspark.sql.types import StructType
-
-    schema_json = StructType(data_fields).json()
-    return _commit(root, prev, new_parts, stage_rel, txid, mode,
-                   partition_cols, schema_json, file_stats)
+        for i in plan[2]
+    ):
+        stage = _spark_stage(spark.createDataFrame(rows, schema), partition_cols)
+    else:
+        stage = _arrow_stage(rows, plan, partition_cols)
+    return _stage_and_commit(root, partition_cols, txid, mode, stage,
+                             _crash_before_commit)
 
 
 def append_rows(
@@ -578,7 +621,8 @@ def replace_partitions(
     ``_crash_before_commit`` is a test seam: raising from it simulates
     a writer dying after staging but before the commit rename.
     """
-    return _stage_and_commit(df, root, partition_cols, txid, "replace",
+    return _stage_and_commit(root, partition_cols, txid, "replace",
+                             _spark_stage(df, partition_cols),
                              _crash_before_commit, drop_parts=drop_parts)
 
 
@@ -597,7 +641,8 @@ def append_partitions(
     micro-batch sink needs (``write_stream_exactly_once``).  Idempotent
     under txid replay exactly like :func:`replace_partitions`.
     """
-    return _stage_and_commit(df, root, partition_cols, txid, "append",
+    return _stage_and_commit(root, partition_cols, txid, "append",
+                             _spark_stage(df, partition_cols),
                              _crash_before_commit)
 
 
@@ -640,11 +685,8 @@ def read_table(
     # strings the manifest keys hold, so semantics are unchanged.
     paths: list[str] = []
     txids: set[str] = set()
-    for pkey, val in sorted(man["partitions"].items()):
-        kv = dict(seg.split("=", 1) for seg in pkey.split("/"))
-        if partition_filter is not None and not partition_filter(kv):
-            continue
-        for rel in _dirs(val):
+    for _, rels in sorted(_matching(man, partition_filter).items()):
+        for rel in rels:
             if stats_filter is not None and rel in dir_files:
                 kept = [
                     os.path.join(root, rel, f["path"])
@@ -745,8 +787,6 @@ def compact_partitions(
     }
     if not targets:
         return prev
-    stage_rel = f"{_STAGING_DIR}/{txid}"
-    stage_abs = os.path.join(root, stage_rel)
 
     def _part_bytes(rels: list[str]) -> int:
         return sum(
@@ -778,58 +818,56 @@ def compact_partitions(
     # per-partition path — correctness first, the fast path covers
     # every production layout (int buckets, sorted maintenance).
     plain = bool(pcols) and all(
-        _SAFE_PART_VAL.match(seg.split("=", 1)[1])
+        _SAFE_PART_VAL.match(v)
         for pkey in targets
-        for seg in pkey.split("/")
+        for v in _part_values(pkey).values()
     )
     one_job = plain and (bool(sort_by) or max(n_files.values()) == 1)
-    if one_job:
-        merged = _with_path_partitions(
-            spark.read.option("mergeSchema", "true").parquet(
-                *[os.path.join(root, rel) for pkey in targets for rel in targets[pkey]]
-            ),
-            pcols,
-        )
-        total = sum(n_files.values())
-        if sort_by:
-            # Sort-on-compact (linear Z-order): range-split + sort on
-            # (partition, sort_by) so each compacted file's footer
-            # min/max stay TIGHT within its partition — the zone-map
-            # pruning power the gates' probes depend on.  Splits beyond
-            # one-per-partition land INSIDE partitions as disjoint
-            # sort_by ranges.
-            merged = merged.repartitionByRange(
-                total, *[F.col(c) for c in (*pcols, *sort_by)]
-            ).sortWithinPartitions(*pcols, *sort_by)
-        else:
-            merged = merged.repartition(len(targets), *pcols)
-        merged.write.partitionBy(*pcols).mode("overwrite").parquet(stage_abs)
-    else:
-        for pkey, rels in sorted(targets.items()):
-            merged = None
-            for rel in rels:
-                pdf = spark.read.parquet(os.path.join(root, rel))
-                merged = pdf if merged is None else merged.unionByName(
-                    pdf, allowMissingColumns=True
-                )
-            if sort_by:
-                merged = merged.repartitionByRange(
-                    n_files[pkey], *[F.col(c) for c in sort_by]
-                ).sortWithinPartitions(*sort_by)
-            else:
-                merged = merged.coalesce(n_files[pkey])
-            merged.write.mode("overwrite").parquet(
-                os.path.join(stage_abs, pkey)
+
+    def stage(stage_abs: str) -> str:
+        if one_job:
+            merged = _with_path_partitions(
+                spark.read.option("mergeSchema", "true").parquet(
+                    *[os.path.join(root, rel) for rels in targets.values() for rel in rels]
+                ),
+                pcols,
             )
-    new_parts = sorted(targets)
-    file_stats = _collect_file_stats(stage_abs, stage_rel, new_parts)
-    if _crash_before_commit is not None:
-        _crash_before_commit()
-    return _commit(
-        root, prev, new_parts, stage_rel, txid, "replace",
-        prev.get("partition_cols", []), prev.get("schema", ""), file_stats,
-        expect_dirs=targets, neutral=True,
-    )
+            total = sum(n_files.values())
+            if sort_by:
+                # Sort-on-compact (linear Z-order): range-split + sort on
+                # (partition, sort_by) so each compacted file's footer
+                # min/max stay TIGHT within its partition — the zone-map
+                # pruning power the gates' probes depend on.  Splits beyond
+                # one-per-partition land INSIDE partitions as disjoint
+                # sort_by ranges.
+                merged = merged.repartitionByRange(
+                    total, *[F.col(c) for c in (*pcols, *sort_by)]
+                ).sortWithinPartitions(*pcols, *sort_by)
+            else:
+                merged = merged.repartition(len(targets), *pcols)
+            merged.write.partitionBy(*pcols).mode("overwrite").parquet(stage_abs)
+        else:
+            for pkey, rels in sorted(targets.items()):
+                merged = None
+                for rel in rels:
+                    pdf = spark.read.parquet(os.path.join(root, rel))
+                    merged = pdf if merged is None else merged.unionByName(
+                        pdf, allowMissingColumns=True
+                    )
+                if sort_by:
+                    merged = merged.repartitionByRange(
+                        n_files[pkey], *[F.col(c) for c in sort_by]
+                    ).sortWithinPartitions(*sort_by)
+                else:
+                    merged = merged.coalesce(n_files[pkey])
+                merged.write.mode("overwrite").parquet(
+                    os.path.join(stage_abs, pkey)
+                )
+        return prev.get("schema", "")
+
+    return _stage_and_commit(root, pcols, txid, "replace", stage,
+                             _crash_before_commit, prev=prev,
+                             expect_dirs=targets, neutral=True)
 
 
 def table_history(spark: SparkSession, root: str) -> DataFrame:
@@ -864,8 +902,6 @@ def vacuum(root: str) -> list[str]:
     removed relative paths.  Safe only under the single-writer
     assumption; invalidates time travel to versions whose data lived
     only in the removed directories (the Delta ``VACUUM`` trade)."""
-    import shutil
-
     man = current_manifest(root)
     live = {
         rel.split("/")[1]
@@ -915,9 +951,6 @@ def adopt_partitions(
             f"adopt_partitions: partition columns differ "
             f"({src.get('partition_cols')} vs {partition_cols})"
         )
-    mdir = os.path.join(dst_root, _MANIFEST_DIR)
-    os.makedirs(mdir, exist_ok=True)
-    src_files = src.get("dir_files", {})
     prev = current_manifest(dst_root)
     if prev["partitions"]:
         # Untouched dst partitions keep their OLD data directories, so a
@@ -939,46 +972,20 @@ def adopt_partitions(
                 "retains partitions the adopt does not cover — a partial "
                 "adopt would declare a schema its retained files don't have"
             )
-    while True:
-        if txid in prev["txids"]:
-            return prev  # replayed swap: exactly-once no-op
-        partitions = {k: _dirs(v) for k, v in prev["partitions"].items()}
-        dir_files = dict(prev.get("dir_files", {}))
-        for p, val in src["partitions"].items():
-            rels = [
-                os.path.relpath(os.path.join(src_root, d), dst_root)
-                for d in _dirs(val)
-            ]
-            partitions[p] = rels
-            for d, rel in zip(_dirs(val), rels):
-                if d in src_files:
-                    dir_files[rel] = src_files[d]
-        live = {rel for ds in partitions.values() for rel in ds}
-        dir_files = {rel: v for rel, v in dir_files.items() if rel in live}
-        manifest = {
-            "version": prev["version"] + 1,
-            "partitions": partitions,
-            "txids": prev["txids"] + [txid],
-            # an adopt changes logical rows (the staged rewrite it swaps
-            # in) — never neutral; carry the dst's prior neutral record
-            "neutral_txids": prev.get("neutral_txids", []),
-            "partition_cols": partition_cols,
-            "schema": src.get("schema") or prev.get("schema"),
-            "dir_files": dir_files,
-        }
-        tmp = os.path.join(mdir, f".tmp-{uuid.uuid4().hex}")
-        with open(tmp, "w") as fh:
-            json.dump(manifest, fh, indent=1, sort_keys=True)
-            fh.flush()
-            os.fsync(fh.fileno())
-        final = os.path.join(mdir, f"v{manifest['version']:06d}.json")
-        try:
-            os.link(tmp, final)
-            os.unlink(tmp)
-            return manifest
-        except FileExistsError:
-            os.unlink(tmp)
-            prev = current_manifest(dst_root)  # rebase on the racing winner
+    src_files = src.get("dir_files", {})
+    delta: dict[str, list[str]] = {}
+    file_stats: dict[str, list[dict]] = {}
+    for p, val in src["partitions"].items():
+        delta[p] = []
+        for d in _dirs(val):
+            rel = os.path.relpath(os.path.join(src_root, d), dst_root)
+            delta[p].append(rel)
+            if d in src_files:
+                file_stats[rel] = src_files[d]
+    # An adopt changes logical rows (the staged rewrite it swaps in), so
+    # it is never neutral.
+    return _commit(dst_root, prev, delta, txid, "replace", partition_cols,
+                   src.get("schema") or prev.get("schema"), file_stats)
 
 
 def merge_into(
@@ -1021,7 +1028,8 @@ def merge_into(
     pruning).  Both paths abort on a racing write to any rewritten
     partition (snapshot ``expect_dirs`` guard).
     """
-    if not set(partition_cols) <= set(key_cols) and not allow_partition_move:
+    moves = not set(partition_cols) <= set(key_cols)
+    if moves and not allow_partition_move:
         raise ValueError(
             "merge_into is partition-local: partition_cols must be a subset "
             "of key_cols (an update could otherwise move a row across "
@@ -1048,140 +1056,60 @@ def merge_into(
             "merge_into: updates batch has multiple rows for the same "
             f"{key_cols} key; deduplicate the source before merging"
         )
-    if not set(partition_cols) <= set(key_cols):
-        return _merge_with_move(
-            spark, df, root, partition_cols, key_cols, txid, prev,
-            search_filter, _crash_before_commit,
-        )
-    existing = None
-    expect_dirs: dict[str, list[str]] = {}
-    if prev["partitions"]:
-        touched = {
+    dtypes = dict(df.dtypes)
+    keys = df.select(*key_cols).distinct()
+
+    def at_snapshot(partition_filter):
+        # Pinned to prev["version"]: the probe, the rewrite and the
+        # expect_dirs guard must all describe the SAME snapshot, or a
+        # racing commit landing after current_manifest() could contribute
+        # rows the guard never defends (a stale copy left live, or rows
+        # read and then partially erased).
+        try:
+            existing = read_table(spark, root, partition_filter=partition_filter,
+                                  version=prev["version"])
+        except ValueError:
+            return None  # the filter selects no live partition
+        for c in partition_cols:
+            existing = existing.withColumn(c, F.col(c).cast(dtypes[c]))
+        return existing
+
+    def part_values(frame: DataFrame) -> set[tuple[str, ...]]:
+        return {
             tuple(str(r[c]) for c in partition_cols)
-            for r in df.select(*partition_cols).distinct().collect()
+            for r in frame.select(*partition_cols).distinct().collect()
         }
+
+    selected: dict[str, list[str]] = {}
+    merged = df
+    if prev["partitions"]:
+        touched: set[tuple[str, ...]] = set()
+        if moves:
+            # Probe pass: WHERE does each matched key live today?
+            # Column-pruned to key+partition columns; the collect is
+            # bounded by the partition count, never the row count.
+            probe = at_snapshot(search_filter)
+            if probe is not None:
+                probe_cols = list(dict.fromkeys([*key_cols, *partition_cols]))
+                touched = part_values(
+                    probe.select(*probe_cols).join(keys, key_cols, "left_semi")
+                )
+        touched |= part_values(df)
 
         def pf(kv: dict[str, str]) -> bool:
             return tuple(kv[c] for c in partition_cols) in touched
 
-        # Snapshot guard: every touched partition's dir list as of THIS
-        # read.  _commit aborts if a racing writer changes one before we
-        # land (the rebase keeps untouched partitions, but a touched one
-        # would otherwise be replaced from stale state — a lost update).
-        for pkey, val in prev["partitions"].items():
-            kv = dict(seg.split("=", 1) for seg in pkey.split("/"))
-            if pf(kv):
-                expect_dirs[pkey] = _dirs(val)
-        try:
-            # Pinned to prev["version"]: the expect_dirs guard defends THAT
-            # snapshot — a racing commit landing between current_manifest()
-            # and this read would otherwise be read (then partially erased)
-            # without tripping the guard.
-            existing = read_table(spark, root, partition_filter=pf,
-                                  version=prev["version"])
-        except ValueError:
-            existing = None  # all touched partitions are new
-    if existing is not None:
-        dtypes = dict(df.dtypes)
-        for c in partition_cols:
-            existing = existing.withColumn(c, F.col(c).cast(dtypes[c]))
-        survivors = existing.join(
-            df.select(*key_cols).distinct(), key_cols, "left_anti"
-        )
-        merged = survivors.unionByName(df, allowMissingColumns=True)
-    else:
-        merged = df
+        # Snapshot guard + droppable set: every touched partition is
+        # rewritten; one emptied by a move must not keep its old dir live.
+        selected = _matching(prev, pf)
+        existing = at_snapshot(pf)
+        if existing is not None:
+            survivors = existing.join(keys, key_cols, "left_anti")
+            merged = survivors.unionByName(df, allowMissingColumns=True)
     return _stage_and_commit(
-        merged, root, partition_cols, txid, "replace", _crash_before_commit,
-        prev=prev, expect_dirs=expect_dirs,
-    )
-
-
-def _merge_with_move(
-    spark: SparkSession,
-    df: DataFrame,
-    root: str,
-    partition_cols: list[str],
-    key_cols: list[str],
-    txid: str,
-    prev: dict,
-    search_filter: Callable[[dict[str, str]], bool] | None,
-    _crash_before_commit: Callable[[], None] | None,
-) -> dict:
-    """Cross-partition MERGE: delete matched keys from the partitions
-    that currently hold them + insert the updates into their (possibly
-    different) target partitions, as ONE atomic commit.  See
-    :func:`merge_into` (``allow_partition_move=True``)."""
-    if not prev["partitions"]:
-        return _stage_and_commit(
-            df, root, partition_cols, txid, "replace", _crash_before_commit,
-            prev=prev, expect_dirs={},
-        )
-    dtypes = dict(df.dtypes)
-    # Probe pass: WHERE does each matched key live today?  Column-pruned
-    # to key+partition columns; collect is bounded by the partition
-    # count, never the row count.
-    probe_cols = list(dict.fromkeys([*key_cols, *partition_cols]))
-    # Pinned to prev["version"] — the probe, the rewrite, and the
-    # expect_dirs guard must all describe the SAME snapshot, or a racing
-    # commit between current_manifest() and these reads could contribute
-    # rows that the guard never defends (stale copy + moved copy both
-    # live after commit).
-    try:
-        probe = read_table(spark, root, partition_filter=search_filter,
-                           version=prev["version"])
-    except ValueError:
-        probe = None  # conservative filter matched no live partition
-    if probe is not None:
-        for c in partition_cols:
-            probe = probe.withColumn(c, F.col(c).cast(dtypes[c]))
-        old_parts = {
-            tuple(str(r[c]) for c in partition_cols)
-            for r in probe.select(*probe_cols)
-            .join(df.select(*key_cols).distinct(), key_cols, "left_semi")
-            .select(*partition_cols)
-            .distinct()
-            .collect()
-        }
-    else:
-        old_parts = set()
-    new_part_vals = {
-        tuple(str(r[c]) for c in partition_cols)
-        for r in df.select(*partition_cols).distinct().collect()
-    }
-    touched = old_parts | new_part_vals
-
-    def pf(kv: dict[str, str]) -> bool:
-        return tuple(kv[c] for c in partition_cols) in touched
-
-    # Snapshot guard + droppable set: every touched partition is
-    # rewritten; one emptied by the move must not keep its old dir live.
-    expect_dirs: dict[str, list[str]] = {}
-    selected: list[str] = []
-    for pkey, val in prev["partitions"].items():
-        kv = dict(seg.split("=", 1) for seg in pkey.split("/"))
-        if pf(kv):
-            expect_dirs[pkey] = _dirs(val)
-            selected.append(pkey)
-    # Rewrite pass: ONLY the touched partitions, as survivors ∪ updates —
-    # read at the same pinned snapshot as the probe.
-    try:
-        existing = read_table(spark, root, partition_filter=pf,
-                              version=prev["version"])
-    except ValueError:
-        existing = None  # every touched partition is new
-    if existing is not None:
-        for c in partition_cols:
-            existing = existing.withColumn(c, F.col(c).cast(dtypes[c]))
-        survivors = existing.join(
-            df.select(*key_cols).distinct(), key_cols, "left_anti"
-        )
-        merged = survivors.unionByName(df, allowMissingColumns=True)
-    else:
-        merged = df
-    return _stage_and_commit(
-        merged, root, partition_cols, txid, "replace", _crash_before_commit,
-        prev=prev, expect_dirs=expect_dirs, drop_parts=selected,
+        root, partition_cols, txid, "replace", _spark_stage(merged, partition_cols),
+        _crash_before_commit, prev=prev, expect_dirs=selected,
+        drop_parts=list(selected),
     )
 
 
@@ -1225,29 +1153,11 @@ def delete_rows(
     # surviving rows would be absent from the staged write — replace
     # semantics would then keep their OLD directories live.  Name every
     # selected partition as droppable; _merge un-drops the ones the
-    # staged write repopulates.
-    selected = []
-    for pkey in prev["partitions"]:
-        kv = dict(seg.split("=", 1) for seg in pkey.split("/"))
-        if partition_filter is None or partition_filter(kv):
-            selected.append(pkey)
-    stage_rel = f"{_STAGING_DIR}/{txid}"
-    stage_abs = os.path.join(root, stage_rel)
-    (
-        kept.write.partitionBy(*partition_cols)
-        .mode("overwrite")
-        .parquet(stage_abs)
+    # staged write repopulates.  The selection is also the snapshot
+    # guard: abort if a racing writer changed any of them since our read.
+    selected = _matching(prev, partition_filter)
+    return _stage_and_commit(
+        root, partition_cols, txid, "replace", _spark_stage(kept, partition_cols),
+        _crash_before_commit, prev=prev, expect_dirs=selected,
+        drop_parts=list(selected),
     )
-    new_parts = _discover_partition_dirs(stage_abs, len(partition_cols))
-    file_stats = _collect_file_stats(stage_abs, stage_rel, new_parts)
-    if _crash_before_commit is not None:
-        _crash_before_commit()
-    schema_json = kept.drop(*partition_cols).schema.json()
-    # Snapshot guard (same reasoning as merge_into): abort if a racing
-    # writer changed any selected partition between our read and commit.
-    expect = {
-        pkey: _dirs(prev["partitions"][pkey]) for pkey in selected
-    }
-    return _commit(root, prev, new_parts, stage_rel, txid, "replace",
-                   partition_cols, schema_json, file_stats,
-                   expect_dirs=expect, drop_parts=selected)

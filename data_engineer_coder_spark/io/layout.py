@@ -7,8 +7,8 @@ directories.  Round 13 shipped that count as module constants duplicated
 across three modules (`streaming/bm25_ingest._TOK_BUCKETS`,
 `streaming/core._BM25_TOK_BUCKETS`, `operators/retrieval_delete` — the
 VERDICT r13 #1 hazard); this module makes the layout TABLE METADATA
-instead, extending the ``_df_table_buckets`` precedent (ADVICE r10, the
-exact-df matview) to every bucketed retrieval artifact:
+instead, for the exact-df matview (ADVICE r10) and every bucketed
+retrieval artifact:
 
 - ``table_config(root, defaults)`` — read the table's ``_config.json``
   sidecar, creating it atomically from ``defaults`` on first write.

@@ -2290,14 +2290,9 @@ def exact_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # single-file fixture: spread before the per-row gram explode
     docs = docs.repartition(shuffle_parts(docs), F.col("doc_id"))
     t = docs.select("doc_id", _words(F.col("text")).alias("ws"))
-    occ = (
-        t.filter(F.size("ws") >= k)
-        .select(
-            "doc_id",
-            F.posexplode(ngram_array(F.col("ws"), k)).alias("p0", "g"),
-        )
-        .select("doc_id", (F.col("p0") + 1).alias("pos"), "g")
-    )
+    occ = t.select(
+        "doc_id", F.posexplode(ngram_array(F.col("ws"), k)).alias("p0", "g")
+    ).select("doc_id", (F.col("p0") + 1).alias("pos"), "g")
     # repeated windows: >=2 occurrences corpus-wide (map-side partial agg;
     # no task buffers a hot gram's rows)
     dupg = (
@@ -2377,14 +2372,9 @@ def exact_substring_rewrite(docs: DataFrame, k: int = _SPAN_K) -> DataFrame:
     whole doc was removed).  Composable: pretraining_corpus_build uses
     it as an optional post-dedup stage."""
     t = docs.select("doc_id", _words(F.col("text")).alias("ws"))
-    occ = (
-        t.filter(F.size("ws") >= k)
-        .select(
-            "doc_id",
-            F.posexplode(ngram_array(F.col("ws"), k)).alias("p0", "g"),
-        )
-        .select("doc_id", (F.col("p0") + 1).alias("pos"), "g")
-    )
+    occ = t.select(
+        "doc_id", F.posexplode(ngram_array(F.col("ws"), k)).alias("p0", "g")
+    ).select("doc_id", (F.col("p0") + 1).alias("pos"), "g")
     # keeper per repeated gram: partial-agg min over a (doc_id, pos)
     # struct — skew-proof for boilerplate grams, collision-free at any
     # doc length (the segment_dedup_keep_first argmin)

@@ -821,17 +821,11 @@ def rag_chunk_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         # bucket would grow unbounded with the chunk corpus; write_parts
         # switches to intra-bucket range splits once files would exceed
         # the rows-per-file target — same rule as _build_standing_index.
-        # The count job the query already ran now also carries the token
-        # sum (one fused job, no extra pass).
-        cstat = chunks.agg(
-            F.count("*").alias("n"),
-            F.coalesce(F.sum(F.size("cws")), F.lit(0)).alias("toks"),
-        ).collect()[0]
-        n_chunks = int(cstat["n"])
+        toks = chunks.agg(F.coalesce(F.sum(F.size("cws")), F.lit(0))).collect()[0][0]
         replace_partitions(
             align_bucketed_write(
                 fr["postings"], ["tok_bucket"], ["tok"],
-                write_parts(int(cstat["toks"]), tokb), n_buckets=tokb,
+                write_parts(int(toks), tokb), n_buckets=tokb,
             ),
             post_root,
             ["tok_bucket"],
@@ -944,11 +938,6 @@ def rag_chunk_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         # every stage's membership nests, counts are exact, and no
         # probe-doc chunk leaks through.
         n_probes = probes.count()
-        if n_chunks != int(
-            docs.agg(F.coalesce(F.sum(F.size(chunk_array(F.col("ws")))), F.lit(0)).alias("s"))
-            .collect()[0]["s"]
-        ):
-            raise RuntimeError("chunking funnel lost or invented chunks")
         if sel.count() != n_probes * _MMR_K:
             raise RuntimeError("MMR selected a wrong per-probe count")
         if sel.join(cand, ["probe_id", "vec_id"], "left_anti").count():

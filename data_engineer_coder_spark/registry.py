@@ -184,6 +184,15 @@ _FORCE_RECHECK: tuple[str, ...] = (
     "segment_dedup_keep_first",
     "segment_dedup_report",
     "source_overlap_matrix",
+    # round 21: every io/acid_table.py write verb stages through one tail
+    # and publishes through one manifest writer, and merge_into is one
+    # body; exact_substring_dedup_rewrite (listed above) lost its
+    # redundant short-doc filter.
+    "acid_compaction_audit",
+    "acid_merge_upsert_audit",
+    "acid_delete_audit",
+    "acid_partition_move_audit",
+    "ann_index_retrain_swap_audit",
 )
 
 # (The round-3/4 _CHECK_FIRST backlog queue is gone: every registered query

@@ -663,31 +663,6 @@ def _append_neardup_index(
     at.append_partitions(staged_bands, bands_root, ["bj"], txid)
 
 
-def _df_table_buckets(df_root: str, requested: int) -> int:
-    """The exact df matview's bucket count is TABLE metadata, not a call
-    parameter (ADVICE r10): the hash layout is baked into the standing
-    rows, so a caller re-tuning ``df_buckets`` across restarts would
-    split the same shingle hash across two bucket dirs — touched-bucket
-    pruning then merges against only one of them, df undercounts, and
-    the boilerplate cap silently weakens.  The value is persisted in a
-    ``_config.json`` sidecar at table creation (atomic write-then-rename,
-    like the manifest itself); every later run derives the layout from
-    the table, and ``requested`` only applies to a table that does not
-    exist yet."""
-    import json
-
-    cfg_path = os.path.join(df_root, "_config.json")
-    if os.path.exists(cfg_path):
-        with open(cfg_path) as f:
-            return int(json.load(f)["df_buckets"])
-    os.makedirs(df_root, exist_ok=True)
-    fd, tmp = tempfile.mkstemp(dir=df_root, prefix="_config.")
-    with os.fdopen(fd, "w") as f:
-        json.dump({"df_buckets": int(requested)}, f)
-    os.replace(tmp, cfg_path)
-    return int(requested)
-
-
 def _epoch_stats(
     batch: DataFrame, counts: dict, sums: dict | None = None
 ) -> dict[str, tuple[int, int]]:
@@ -852,7 +827,7 @@ def write_stream_neardup_gate(
       scales with data, but it is CREATION-TIME metadata: the first
       commit persists it in the df table's ``_config.json`` and every
       later run derives the layout from the table
-      (``_df_table_buckets``), so a restart passing a different value
+      (``layout.table_config``), so a restart passing a different value
       cannot split standing hashes across two bucket layouts and
       silently undercount df (ADVICE r10);
     - the hot set (df > cap) is PHYSICALLY segregated into a ``hot``
@@ -1010,7 +985,9 @@ def write_stream_neardup_gate(
             # layout comes from the TABLE, not the call (ADVICE r10):
             # a restart with a different df_buckets must not split
             # standing hashes across two bucket layouts
-            eff_buckets = _df_table_buckets(df_root, df_buckets)
+            eff_buckets = int(
+                layout.table_config(df_root, {"df_buckets": df_buckets})["df_buckets"]
+            )
             batch_counts = doc_counts.withColumn(
                 "bucket", F.pmod("h", F.lit(eff_buckets))
             ).localCheckpoint()

@@ -54,10 +54,15 @@ _BATCH_JOB_CEILINGS = {
     "decontaminate_overlap": 7,
     "segment_dedup_keep_first": 6,
     "doc_chunk_windows": 2,
-    "exact_substring_dedup": 8,
+    "exact_substring_dedup": 7,
     # the exact-Jaccard clusters and the served BM25 top-k
     "dedup_clusters": 28,
     "bm25_topk_served": 44,
+    # the ACID table verbs, counted before they shared one commit path
+    "acid_merge_upsert_audit": 22,
+    "acid_partition_move_audit": 22,
+    "acid_compaction_audit": 27,
+    "bm25_index_compaction_audit": 227,
 }
 
 

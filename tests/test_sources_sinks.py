@@ -647,9 +647,9 @@ def test_acid_commit_version_race_rebases(tmp_path):
 
     root = str(tmp_path / "t")
     stale = _empty_manifest()  # both writers snapshot the empty table
-    _commit(root, stale, ["day=1"], "_staging/a", "a", "replace", ["day"], "{}")
+    _commit(root, stale, {"day=1": ["_staging/a/day=1"]}, "a", "replace", ["day"], "{}")
     # writer B commits from the SAME stale snapshot → version collision
-    _commit(root, stale, ["day=2"], "_staging/b", "b", "append", ["day"], "{}")
+    _commit(root, stale, {"day=2": ["_staging/b/day=2"]}, "b", "append", ["day"], "{}")
     man = current_manifest(root)
     assert man["version"] == 2
     assert man["txids"] == ["a", "b"]  # neither writer's commit was dropped

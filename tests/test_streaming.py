@@ -713,15 +713,16 @@ def test_df_table_buckets_is_table_metadata(spark, tmp_path):
     import os as _os
     import time as _time
 
+    from data_engineer_coder_spark.io import layout
     from data_engineer_coder_spark.io.acid_table import read_table
-    from data_engineer_coder_spark.streaming.core import (
-        _df_table_buckets,
-        write_stream_neardup_gate,
-    )
+    from data_engineer_coder_spark.streaming.core import write_stream_neardup_gate
+
+    def df_buckets(root, requested):  # the gate's own lookup
+        return int(layout.table_config(root, {"df_buckets": requested})["df_buckets"])
 
     root = str(tmp_path / "dfs_meta")
-    assert _df_table_buckets(root, 8) == 8       # creates the config
-    assert _df_table_buckets(root, 64) == 8      # table layout wins
+    assert df_buckets(root, 8) == 8       # creates the config
+    assert df_buckets(root, 64) == 8      # table layout wins
     with open(_os.path.join(root, "_config.json")) as f:
         assert json.load(f) == {"df_buckets": 8}
 
@@ -759,4 +760,4 @@ def test_df_table_buckets_is_table_metadata(spark, tmp_path):
     dfs = read_table(spark, df_root)
     assert dfs.filter(F.col("bucket").cast("int") >= 4).count() == 0
     # and a scale-up request on the standing table is ignored
-    assert _df_table_buckets(df_root, 1024) == 4
+    assert df_buckets(df_root, 1024) == 4
