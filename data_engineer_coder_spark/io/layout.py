@@ -12,8 +12,9 @@ retrieval artifact:
 
 - ``table_config(root, defaults)`` — read the table's ``_config.json``
   sidecar, creating it atomically from ``defaults`` on first write.
-  Creation is write-to-temp + ``os.replace`` (atomic like the manifest
-  commit); a concurrent creator losing the race re-reads the winner.
+  Creation is write-to-temp + ``os.link`` (EEXIST on collision, like the
+  manifest commit), so a concurrent creator losing the race cannot
+  overwrite the winner and re-reads its record.
 - ``read_table_config(root)`` — read-only lookup for paths that must
   never create a table (readers, deletes); raises if the table has no
   layout record, because GUESSING a bucket count is exactly the silent
@@ -39,34 +40,23 @@ _CONFIG = "_config.json"
 
 def table_config(root: str, defaults: dict) -> dict:
     """The table's layout record, creating it from ``defaults`` if the
-    table has none yet.  Existing records win entirely — a caller
-    re-tuning a default across restarts cannot re-split standing rows
-    across two layouts.  New keys in ``defaults`` that an existing
-    record lacks are added (schema-evolving the sidecar is safe; the
-    keys a layout already pinned never change)."""
+    table has none yet.  An existing record is returned as stored — a
+    caller re-tuning a default across restarts cannot re-split standing
+    rows across two layouts."""
     cfg_path = os.path.join(root, _CONFIG)
-    if os.path.exists(cfg_path):
-        with open(cfg_path) as f:
-            cfg = json.load(f)
-        missing = {k: v for k, v in defaults.items() if k not in cfg}
-        if missing:
-            cfg.update(missing)
-            _atomic_write(root, cfg_path, cfg)
-        return cfg
-    os.makedirs(root, exist_ok=True)
-    _atomic_write(root, cfg_path, dict(defaults))
-    with open(cfg_path) as f:  # re-read: a racing creator may have won
+    if not os.path.exists(cfg_path):
+        os.makedirs(root, exist_ok=True)
+        fd, tmp = tempfile.mkstemp(dir=root, prefix="_config.")
+        with os.fdopen(fd, "w") as f:
+            json.dump(defaults, f, indent=1, sort_keys=True)
+        try:
+            os.link(tmp, cfg_path)
+        except FileExistsError:
+            pass  # a racing creator won — its layout stands
+        finally:
+            os.unlink(tmp)
+    with open(cfg_path) as f:
         return json.load(f)
-
-
-def _atomic_write(root: str, cfg_path: str, cfg: dict) -> None:
-    fd, tmp = tempfile.mkstemp(dir=root, prefix="_config.")
-    with os.fdopen(fd, "w") as f:
-        json.dump(cfg, f, indent=1, sort_keys=True)
-    if os.path.exists(cfg_path):
-        os.unlink(tmp)  # lost the race — the winner's layout stands
-    else:
-        os.replace(tmp, cfg_path)
 
 
 def read_table_config(root: str) -> dict:

@@ -235,7 +235,7 @@ def acid_change_data_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from ..io.acid_table import manifest_at, read_table, replace_partitions
+    from ..io.acid_table import _part_values, manifest_at, read_table, replace_partitions
 
     src = table(spark, sf_dir, "orders").select(
         F.col("o_orderkey").alias("key"),
@@ -275,7 +275,7 @@ def acid_change_data_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
             if m1["partitions"].get(p) != m2["partitions"].get(p)
         )
         changed_prios = {
-            dict(s.split("=", 1) for s in p.split("/"))["prio"]
+            _part_values(p)["prio"]
             for p in changed
         }
         # Strict equality, not subset: a touched partition left with zero
@@ -391,7 +391,7 @@ def cdf_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from ..io.acid_table import manifest_at, read_table, replace_partitions
+    from ..io.acid_table import _part_values, manifest_at, read_table, replace_partitions
 
     src = table(spark, sf_dir, "orders").select(
         F.col("o_orderkey").alias("key"),
@@ -434,7 +434,7 @@ def cdf_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         m1, m2 = manifest_at(root, v1), manifest_at(root, v2)
         all_parts = set(m1["partitions"]) | set(m2["partitions"])
         changed_prios = {
-            dict(s.split("=", 1) for s in p.split("/"))["prio"]
+            _part_values(p)["prio"]
             for p in all_parts
             if m1["partitions"].get(p) != m2["partitions"].get(p)
         }
@@ -515,7 +515,7 @@ def cdf_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         mv_m1 = manifest_at(mv_root, mv_v1)["partitions"]
         mv_m2 = manifest_at(mv_root)["partitions"]
         for p in mv_m1:
-            prio = dict(s.split("=", 1) for s in p.split("/"))["prio"]
+            prio = _part_values(p)["prio"]
             if prio not in changed_prios and mv_m1[p] != mv_m2.get(p):
                 raise RuntimeError(f"untouched matview partition rewritten: {p}")
         mv_now = read_table(spark, mv_root).select(

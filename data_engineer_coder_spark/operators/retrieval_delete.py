@@ -283,6 +283,7 @@ def retrieval_index_delete_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from ..io.acid_table import (
+        _part_values,
         compact_partitions,
         current_manifest,
         replace_partitions,
@@ -377,7 +378,7 @@ def retrieval_index_delete_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         ):
             post = current_manifest(root)["partitions"]
             for pkey, dirs in man_pre[nm].items():
-                kv = dict(s.split("=", 1) for s in pkey.split("/"))
+                kv = _part_values(pkey)
                 if kv[col] not in tset and post.get(pkey) != dirs:
                     raise RuntimeError(
                         f"untouched {nm} bucket {pkey} was rewritten by the delete"

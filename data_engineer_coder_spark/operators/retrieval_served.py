@@ -44,25 +44,37 @@ from .similarity import (
     _MMR_K,
     _MMR_POOL,
     _MMR_PROBES,
-    _RRF_K,
     _RRF_POOL,
-    _RRF_PROBES,
+    _SQL_HYBRID_VIEW,
     _SQL_N,
     _cosine,
     _dot,
+    _hybrid_view,
     _ivf_cents,
+    _lexical_leg,
     _mmr_greedy,
+    _probe_tokens,
     _probe_topk,
     _qvec,
+    _retention,
+    _rrf_fuse,
+    _rrf_fused,
     _sql_cos,
     _sql_ivf_cents,
     _sql_ivf_params,
+    _sql_lexical_leg,
     _sql_mmr_steps,
     _sql_probe_cells,
+    _sql_probe_topk,
+    _sql_retention,
+    _sql_rrf_core,
+    _sql_rrf_fuse,
     _sql_served_nprobe,
     _sql_two_level,
+    _sql_vector_leg,
     _top_cells,
     _two_level_assign,
+    _vector_leg,
     served_nprobe,
 )
 from .textops import _sql_chunks, chunk_array
@@ -250,7 +262,7 @@ def _ann_candidate_pool(
     pool (probe_id, vec_id, qv, nrm, qsim), ≤ ``pool`` per probe."""
     import os
 
-    from ..io.acid_table import current_manifest
+    from ..io.acid_table import _part_values, current_manifest
 
     index_root = os.path.join(tmp, "ann_index")
     cents = _build_ann_index(spark, nv, index_root)
@@ -275,7 +287,7 @@ def _ann_candidate_pool(
     all_parts = list(current_manifest(index_root)["partitions"])
     one_parts = [
         p for p in all_parts
-        if dict(s.split("=", 1) for s in p.split("/"))["cell_bucket"]
+        if _part_values(p)["cell_bucket"]
         in one_buckets
     ]
     # Reachable tripwires: the per-probe cell fan-out grew past nprobe
@@ -362,39 +374,28 @@ def _sql_rrf_served_chain() -> str:
     svnv → pool ``svcand`` → ``svvrank`` → ``svfused``.  Emitted
     alongside the exact core so the recall gate can rank both."""
     pool = _sql_served_pool("svnv", "probes", "pid", _RRF_POOL, out="svcand")
-    # _sql_served_pool emits probe columns as (pid, pqv, pnrm) — the
-    # rrf core's probes CTE already matches that shape.
+    vrank = _sql_probe_topk(
+        "(SELECT pid, vec_id AS id, qsim FROM svcand)", _RRF_POOL,
+        "pid", "qsim", "id", "vr", "pid, id, vr",
+    )
     return f"""svnv AS MATERIALIZED (SELECT id AS vec_id, qv, nrm FROM n),
 {pool},
 svvrank AS (
-  SELECT pid, vec_id AS id,
-         ROW_NUMBER() OVER (PARTITION BY pid ORDER BY qsim DESC, vec_id) AS vr
-  FROM svcand
+  {vrank}
 ),
 svfused AS (
-  SELECT COALESCE(v.pid, l.pid) AS pid,
-         COALESCE(v.id, l.id) AS id,
-         COALESCE(CAST(1.0 AS DOUBLE) / ({_RRF_K} + v.vr), CAST(0.0 AS DOUBLE))
-           + COALESCE(CAST(1.0 AS DOUBLE) / ({_RRF_K} + l.lr), CAST(0.0 AS DOUBLE))
-           AS rrf
-  FROM svvrank v
-  FULL OUTER JOIN lrank l ON l.pid = v.pid AND l.id = v.id
+  {_sql_rrf_fuse('svvrank', 'lrank')}
 )"""
 
 
 def _sql_rrf_served() -> str:
-    from .similarity import _sql_rrf_core
-
+    top = _sql_probe_topk(
+        "svfused", 5, "pid", "rrf", "id",
+        cols="pid AS probe_id, id AS doc_id, rn, rrf AS rrf_score",
+    )
     return f"""{_sql_rrf_core()},
 {_sql_rrf_served_chain()}
-SELECT pid AS probe_id, id AS doc_id, rn, rrf AS rrf_score
-FROM (
-  SELECT pid, id, rrf,
-         ROW_NUMBER() OVER (PARTITION BY pid ORDER BY rrf DESC, id) AS rn
-  FROM svfused
-)
-WHERE rn <= 5
-"""
+{top}"""
 
 
 def _rrf_served_fused(
@@ -403,64 +404,36 @@ def _rrf_served_fused(
     nprobe: int | None = None,
     pool: int = _RRF_POOL,
     tmp: str | None = None,
+    view=None,
 ) -> DataFrame:
-    """The served fused hybrid ranking (pid, id, rrf): vector leg from
-    the standing ANN index pool, lexical leg from the standing
-    token-bucketed postings — both manifest-pruned reads.  ``nprobe``/
-    ``pool`` parametrize the vector leg for the quality-curve sweep
-    (``scripts/served_quality_curve.py``); pass a caller-managed
-    ``tmp`` to reuse the standing indexes across sweep points (both
-    builds are idempotent bulk-load txns)."""
+    """The served fused hybrid ranking (pid, id, vr, rrf) over ``view``
+    (as in ``_rrf_fused``): vector leg from the standing ANN index
+    pool, lexical leg from the standing token-bucketed postings — both
+    manifest-pruned reads.  ``nprobe``/``pool`` parametrize the vector
+    leg for the quality-curve sweep (``scripts/served_quality_curve.py``);
+    pass a caller-managed ``tmp`` to reuse the standing indexes across
+    sweep points (both builds are idempotent bulk-load txns)."""
     import os
     import shutil
     import tempfile
 
-    from ..streaming.bm25_ingest import _build_standing_index
+    from ..streaming.bm25_ingest import _build_standing_index, read_pruned_postings
 
-    docs = table(spark, sf_dir, "documents").select("doc_id", "text")
-    emb = table(spark, sf_dir, "embeddings").select(
-        F.col("vec_id").alias("id"), _qvec("embedding").alias("qv")
-    )
-    n = (
-        emb.join(docs, emb["id"] == docs["doc_id"])
-        .select(
-            "id",
-            "qv",
-            _dot(F.col("qv"), F.col("qv")).alias("nrm"),
-            F.split("text", " ").alias("ws"),
-        )
-        .localCheckpoint(eager=False)
-    )
+    n, probes = view or _hybrid_view(spark, sf_dir)
+    probes = probes.localCheckpoint()  # read by both legs
     nv = n.select(F.col("id").alias("vec_id"), "qv", "nrm")
-    probes = n.filter(F.col("id") < _RRF_PROBES).select(
-        F.col("id").alias("probe_id"),
-        F.col("qv").alias("pqv"),
-        F.col("nrm").alias("pnrm"),
-        F.col("ws").alias("pws"),
-    ).localCheckpoint()
     own_tmp = tmp is None
     tmp = tmp or tempfile.mkdtemp(prefix="rrfserve_")
     try:
         # VECTOR LEG: the ANN-served pool, exact-re-ranked
         cand = _ann_candidate_pool(
-            spark, nv, probes.drop("pws"), pool, tmp, nprobe=nprobe
+            spark, nv, probes.withColumnRenamed("pid", "probe_id").drop("pws"),
+            pool, tmp, nprobe=nprobe,
         )
-        vrank = (
-            cand.select(
-                F.col("probe_id").alias("pid"),
-                F.col("vec_id").alias("id"),
-                "qsim",
-            )
-            .withColumn(
-                "vr",
-                F.row_number().over(
-                    Window.partitionBy("pid").orderBy(
-                        F.desc("qsim"), F.asc("id")
-                    )
-                ),
-            )
-            .select("pid", "id", "vr")
-        )
+        vrank = _probe_topk(
+            cand.select(F.col("probe_id").alias("pid"), F.col("vec_id").alias("id"), "qsim"),
+            pool, "pid", "qsim", "id", "vr",
+        ).select("pid", "id", "vr")
         # LEXICAL LEG: the standing postings, token-bucket-pruned.
         # Only the postings table is served from here (the overlap leg
         # reads no forward index, tokstats, or ledger), so only it is
@@ -468,15 +441,7 @@ def _rrf_served_fused(
         post_roots = _build_standing_index(
             spark, sf_dir, os.path.join(tmp, "lex"), tables=("postings",)
         )
-        ptok = (
-            probes.select(
-                F.col("probe_id").alias("pid"), F.explode("pws").alias("tok")
-            )
-            .distinct()
-            .localCheckpoint()
-        )
-        from ..streaming.bm25_ingest import read_pruned_postings
-
+        ptok = _probe_tokens(probes).localCheckpoint()
         lex_toks = sorted(r["tok"] for r in ptok.select("tok").distinct().collect())
         post = read_pruned_postings(
             spark, post_roots["postings"], lex_toks
@@ -484,41 +449,9 @@ def _rrf_served_fused(
             F.col("doc_id").cast("long").alias("id"),
             F.col("tok").cast("string").alias("tok"),
         )
-        ov = (
-            F.broadcast(ptok)
-            .join(post, "tok")
-            .filter(F.col("id") != F.col("pid"))
-            # the vector corpus view: docs without embeddings never rank
-            .join(nv.select(F.col("vec_id").alias("id")), "id", "left_semi")
-            .groupBy("pid", "id")
-            .agg(F.count("*").alias("novl"))
-        )
-        lrank = (
-            ov.withColumn(
-                "lr",
-                F.row_number().over(
-                    Window.partitionBy("pid").orderBy(
-                        F.desc("novl"), F.asc("id")
-                    )
-                ),
-            )
-            .filter(F.col("lr") <= _RRF_POOL)
-            .select("pid", "id", "lr")
-        )
-        one = F.lit(1.0)
-        zero = F.lit(0.0)
-        fused = (
-            vrank.join(lrank, ["pid", "id"], "full")
-            .select(
-                "pid",
-                "id",
-                (
-                    F.coalesce(one / (F.lit(_RRF_K) + F.col("vr")), zero)
-                    + F.coalesce(one / (F.lit(_RRF_K) + F.col("lr")), zero)
-                ).alias("rrf"),
-            )
-            .localCheckpoint()
-        )
+        # the vector corpus view: docs without embeddings never rank
+        post = post.join(nv.select(F.col("vec_id").alias("id")), "id", "left_semi")
+        fused = _rrf_fuse(vrank, _lexical_leg(ptok, post)).localCheckpoint()
     finally:
         if own_tmp:
             shutil.rmtree(tmp, ignore_errors=True)
@@ -538,49 +471,24 @@ def _rrf_served_fused(
     ),
 )
 def hybrid_rrf_retrieval_served(spark: SparkSession, sf_dir: str) -> DataFrame:
-    fused = _rrf_served_fused(spark, sf_dir)
-    w = Window.partitionBy("pid").orderBy(F.desc("rrf"), F.asc("id"))
-    return (
-        fused.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 5)
-        .select(
-            F.col("pid").alias("probe_id"),
-            F.col("id").alias("doc_id"),
-            "rn",
-            F.col("rrf").alias("rrf_score"),
-        )
+    return _probe_topk(_rrf_served_fused(spark, sf_dir), 5, "pid", "rrf", "id").select(
+        F.col("pid").alias("probe_id"),
+        F.col("id").alias("doc_id"),
+        "rn",
+        F.col("rrf").alias("rrf_score"),
     )
 
 
 def _sql_rrf_served_recall() -> str:
-    from .similarity import _sql_rrf_core
-
     return f"""{_sql_rrf_core()},
 {_sql_rrf_served_chain()},
 extop AS (
-  SELECT pid, id FROM (
-    SELECT pid, id,
-           ROW_NUMBER() OVER (PARTITION BY pid ORDER BY rrf DESC, id) AS rn
-    FROM fused
-  ) WHERE rn <= 5
+  {_sql_probe_topk('fused', 5, 'pid', 'rrf', 'id', cols='pid, id')}
 ),
 svtop AS (
-  SELECT pid, id FROM (
-    SELECT pid, id,
-           ROW_NUMBER() OVER (PARTITION BY pid ORDER BY rrf DESC, id) AS rn
-    FROM svfused
-  ) WHERE rn <= 5
-),
-hits AS (
-  SELECT s.pid, s.id,
-         CASE WHEN t.id IS NULL THEN 0 ELSE 1 END AS hit
-  FROM svtop s LEFT JOIN extop t ON t.pid = s.pid AND t.id = s.id
+  {_sql_probe_topk('svfused', 5, 'pid', 'rrf', 'id', cols='pid, id')}
 )
-SELECT CAST(SUM(hit) AS BIGINT) AS n_hits,
-       COUNT(*) AS n_slots,
-       CAST((10000 * CAST(SUM(hit) AS BIGINT)) // COUNT(*) AS BIGINT) AS recall_e4
-FROM hits
-"""
+{_sql_retention('svtop', 'extop')}"""
 
 
 @register(
@@ -597,31 +505,10 @@ FROM hits
     ),
 )
 def hybrid_served_recall_check(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .similarity import _rrf_fused
-
-    def top5(fused: DataFrame) -> DataFrame:
-        w = Window.partitionBy("pid").orderBy(F.desc("rrf"), F.asc("id"))
-        return (
-            fused.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") <= 5)
-            .select("pid", "id")
-        )
-
-    served = top5(_rrf_served_fused(spark, sf_dir))
-    exact = top5(_rrf_fused(spark, sf_dir)).withColumnRenamed("id", "tid")
-    hits = served.join(
-        exact,
-        (exact["pid"] == served["pid"]) & (exact["tid"] == served["id"]),
-        "left",
-    ).select(
-        F.when(F.col("tid").isNull(), F.lit(0)).otherwise(F.lit(1)).alias("hit")
-    )
-    return hits.agg(
-        F.sum("hit").cast("bigint").alias("n_hits"),
-        F.count("*").alias("n_slots"),
-        F.expr("CAST(10000 * sum(hit) AS BIGINT) div count(*)").alias(
-            "recall_e4"
-        ),
+    view = _hybrid_view(spark, sf_dir)
+    return _retention(
+        _probe_topk(_rrf_served_fused(spark, sf_dir, view=view), 5, "pid", "rrf", "id"),
+        _probe_topk(_rrf_fused(spark, sf_dir, view), 5, "pid", "rrf", "id"),
     )
 
 
@@ -645,7 +532,11 @@ _RAGC_KEY = 1000     # chunk key = doc_id * _RAGC_KEY + chunk_idx
 
 
 def _sql_rag_chunk_pipeline() -> str:
-    cosq = _sql_cos("p.pqv", "v.qv", "p.pnrm", "v.nrm")
+    owner = f"c.id // {_RAGC_KEY}"
+    pool = _sql_probe_topk(
+        "(SELECT f.pid, f.id, f.rrf, v.qv, v.nrm FROM fused f JOIN cvec v ON v.id = f.id)",
+        _RAGC_POOL, "pid", "rrf", "id", cols="pid AS probe_id, id AS vec_id, qv, nrm, rn",
+    )
     return f"""
 WITH d AS MATERIALIZED (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
 x AS (
@@ -657,60 +548,25 @@ chunks AS MATERIALIZED (
   FROM x
 ),
 clen AS (SELECT ck, doc_id, chunk_idx, LEN(cws) AS len FROM chunks),
-emb AS (
-  {_SQL_N}
-),
+{_SQL_HYBRID_VIEW},
 cvec AS MATERIALIZED (
-  SELECT c.ck, c.doc_id, e.qv, e.nrm
-  FROM clen c JOIN emb e ON e.vec_id = c.doc_id
+  SELECT c.ck AS id, n.qv, n.nrm
+  FROM clen c JOIN n ON n.id = c.doc_id
 ),
-probes AS MATERIALIZED (
-  SELECT d.doc_id AS pid, e.qv AS pqv, e.nrm AS pnrm, d.ws AS pws
-  FROM d JOIN emb e ON e.vec_id = d.doc_id
-  WHERE d.doc_id < 10
-),
-ptok AS (SELECT DISTINCT pid, unnest(pws) AS tok FROM probes),
-cktok AS (SELECT DISTINCT ck, doc_id, unnest(cws) AS tok FROM chunks),
-ov AS (
-  SELECT p.pid, c.ck, COUNT(*) AS novl
-  FROM ptok p JOIN cktok c ON c.tok = p.tok AND c.doc_id <> p.pid
-  GROUP BY p.pid, c.ck
-),
+cktok AS (SELECT DISTINCT ck AS id, unnest(cws) AS tok FROM chunks),
 lrank AS (
-  SELECT pid, ck, lr FROM (
-    SELECT pid, ck,
-           ROW_NUMBER() OVER (PARTITION BY pid ORDER BY novl DESC, ck) AS lr
-    FROM ov
-  ) WHERE lr <= {_RRF_POOL}
+  {_sql_lexical_leg('cktok', owner)}
 ),
 vrank AS (
-  SELECT pid, ck, vr FROM (
-    SELECT p.pid, v.ck,
-           ROW_NUMBER() OVER (
-             PARTITION BY p.pid ORDER BY {cosq} DESC, v.ck
-           ) AS vr
-    FROM probes p JOIN cvec v ON v.doc_id <> p.pid
-  ) WHERE vr <= {_RRF_POOL}
+  {_sql_vector_leg('probes', 'cvec', _RRF_POOL, owner)}
 ),
 fused AS (
-  SELECT COALESCE(v.pid, l.pid) AS pid,
-         COALESCE(v.ck, l.ck) AS ck,
-         COALESCE(CAST(1.0 AS DOUBLE) / ({_RRF_K} + v.vr), CAST(0.0 AS DOUBLE))
-           + COALESCE(CAST(1.0 AS DOUBLE) / ({_RRF_K} + l.lr), CAST(0.0 AS DOUBLE))
-           AS rrf
-  FROM vrank v
-  FULL OUTER JOIN lrank l ON l.pid = v.pid AND l.ck = v.ck
+  {_sql_rrf_fuse('vrank', 'lrank')}
 ),
 cand AS MATERIALIZED (
   SELECT probe_id, vec_id, qv, nrm,
          CAST(1.0 AS DOUBLE) - CAST(rn - 1 AS DOUBLE) / {_RAGC_POOL}.0 AS qsim
-  FROM (
-    SELECT f.pid AS probe_id, f.ck AS vec_id, v.qv, v.nrm,
-           ROW_NUMBER() OVER (
-             PARTITION BY f.pid ORDER BY f.rrf DESC, f.ck
-           ) AS rn
-    FROM fused f JOIN cvec v ON v.ck = f.ck
-  ) WHERE rn <= {_RAGC_POOL}
+  FROM ({pool})
 ),
 {_sql_mmr_steps()},
 sel AS (
@@ -758,6 +614,7 @@ def rag_chunk_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from ..io.acid_table import replace_partitions
+    from ..streaming.bm25_ingest import read_pruned_postings
     from ..streaming.core import bm25_index_batch_frames
 
     docs = table(spark, sf_dir, "documents").select(
@@ -772,23 +629,12 @@ def rag_chunk_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         "cws",
     ).localCheckpoint(eager=False)
     clen = chunks.select("ck", "doc_id", "chunk_idx", F.size("cws").alias("len"))
-    emb = table(spark, sf_dir, "embeddings").select(
-        "vec_id", _qvec("embedding").alias("qv")
-    ).select("vec_id", "qv", _dot(F.col("qv"), F.col("qv")).alias("nrm"))
-    cvec = clen.select("ck", "doc_id").join(
-        emb, clen["doc_id"] == emb["vec_id"]
-    ).select("ck", "doc_id", "qv", "nrm")
-    probes = (
-        docs.filter(F.col("doc_id") < 10)
-        .join(emb, docs["doc_id"] == emb["vec_id"])
-        .select(
-            F.col("doc_id").alias("pid"),
-            F.col("qv").alias("pqv"),
-            F.col("nrm").alias("pnrm"),
-            F.col("ws").alias("pws"),
-        )
-        .localCheckpoint()
+    n, probes = _hybrid_view(spark, sf_dir)
+    probes = probes.localCheckpoint()  # read by both legs
+    cvec = clen.join(n, clen["doc_id"] == n["id"]).select(
+        F.col("ck").alias("id"), "qv", "nrm"
     )
+    owner = F.floor(F.col("id") / _RAGC_KEY)
     tmp = tempfile.mkdtemp(prefix="ragchunk_")
     try:
         # STANDING CHUNK-POSTINGS INDEX (token-bucketed, one bulk txn);
@@ -832,66 +678,16 @@ def rag_chunk_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
             "bulk-load",
         )
         # LEXICAL LEG from the standing index, pruned to probe-term buckets
-        ptok = (
-            probes.select("pid", F.explode("pws").alias("tok"))
-            .distinct()
-            .localCheckpoint()
-        )
-        from ..streaming.bm25_ingest import read_pruned_postings
-
+        ptok = _probe_tokens(probes).localCheckpoint()
         lex_toks = sorted(r["tok"] for r in ptok.select("tok").distinct().collect())
         post = read_pruned_postings(spark, post_root, lex_toks).select(
-            F.col("doc_id").cast("long").alias("ck"),
+            F.col("doc_id").cast("long").alias("id"),
             F.col("tok").cast("string").alias("tok"),
         )
-        ov = (
-            F.broadcast(ptok)
-            .join(post, "tok")
-            .filter(F.floor(F.col("ck") / _RAGC_KEY) != F.col("pid"))
-            .groupBy("pid", "ck")
-            .agg(F.count("*").alias("novl"))
-        )
-        lrank = (
-            ov.withColumn(
-                "lr",
-                F.row_number().over(
-                    Window.partitionBy("pid").orderBy(F.desc("novl"), F.asc("ck"))
-                ),
-            )
-            .filter(F.col("lr") <= _RRF_POOL)
-            .select("pid", "ck", "lr")
-        )
-        # VECTOR LEG over chunk-inherited embeddings
-        vrank = (
-            F.broadcast(probes.drop("pws"))
-            .join(cvec, cvec["doc_id"] != F.col("pid"))
-            .select(
-                "pid",
-                "ck",
-                _cosine(
-                    _dot(F.col("pqv"), F.col("qv")), F.col("pnrm"), F.col("nrm")
-                ).alias("cos"),
-            )
-            .withColumn(
-                "vr",
-                F.row_number().over(
-                    Window.partitionBy("pid").orderBy(F.desc("cos"), F.asc("ck"))
-                ),
-            )
-            .filter(F.col("vr") <= _RRF_POOL)
-            .select("pid", "ck", "vr")
-        )
-        one, zero = F.lit(1.0), F.lit(0.0)
-        fused = (
-            vrank.join(lrank, ["pid", "ck"], "full")
-            .select(
-                "pid",
-                "ck",
-                (
-                    F.coalesce(one / (F.lit(_RRF_K) + F.col("vr")), zero)
-                    + F.coalesce(one / (F.lit(_RRF_K) + F.col("lr")), zero)
-                ).alias("rrf"),
-            )
+        # fused with the VECTOR LEG over chunk-inherited embeddings
+        fused = _rrf_fuse(
+            _vector_leg(probes, cvec, _RRF_POOL, owner),
+            _lexical_leg(ptok, post, owner),
         )
         # Rank-normalize the fused score into the MMR pool: raw RRF tops
         # out near 2/(k+1) ≈ 0.033 while the redundancy term is a cosine
@@ -901,26 +697,10 @@ def rag_chunk_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         # objective terms are commensurate and the pool ORDER is exactly
         # the fused ranking.
         cand = (
-            fused.join(cvec.select("ck", "qv", "nrm"), "ck")
+            _probe_topk(fused.join(cvec, "id"), _RAGC_POOL, "pid", "rrf", "id")
             .select(
                 F.col("pid").alias("probe_id"),
-                F.col("ck").alias("vec_id"),
-                "qv",
-                "nrm",
-                "rrf",
-            )
-            .withColumn(
-                "rn",
-                F.row_number().over(
-                    Window.partitionBy("probe_id").orderBy(
-                        F.desc("rrf"), F.asc("vec_id")
-                    )
-                ),
-            )
-            .filter(F.col("rn") <= _RAGC_POOL)
-            .select(
-                "probe_id",
-                "vec_id",
+                F.col("id").alias("vec_id"),
                 "qv",
                 "nrm",
                 (
@@ -1003,11 +783,7 @@ def _sql_rank_metrics_body(fused_cte: str) -> str:
         " / LN(CAST(vr + 1 AS DOUBLE)) * 1e9) AS BIGINT)"
     )
     return f"""rk AS (
-  SELECT pid, id, rn FROM (
-    SELECT pid, id,
-           ROW_NUMBER() OVER (PARTITION BY pid ORDER BY rrf DESC, id) AS rn
-    FROM {fused_cte}
-  ) WHERE rn <= {_RANKM_K}
+  {_sql_probe_topk(fused_cte, _RANKM_K, 'pid', 'rrf', 'id', cols='pid, id, rn')}
 ),
 truth AS (SELECT pid, id, vr FROM vrank WHERE vr <= {_RANKM_K}),
 scored AS (
@@ -1035,15 +811,11 @@ GROUP BY s.pid, i.idcg_e9
 
 
 def _sql_rank_metrics() -> str:
-    from .similarity import _sql_rrf_core
-
     return f"""{_sql_rrf_core()},
 {_sql_rank_metrics_body('fused')}"""
 
 
 def _sql_rank_metrics_served() -> str:
-    from .similarity import _sql_rrf_core
-
     return f"""{_sql_rrf_core()},
 {_sql_rrf_served_chain()},
 {_sql_rank_metrics_body('svfused')}"""
@@ -1063,9 +835,8 @@ def _sql_rank_metrics_served() -> str:
     ),
 )
 def retrieval_rank_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .similarity import _rrf_fused
-
-    return _rank_metrics_over(spark, sf_dir, _rrf_fused(spark, sf_dir))
+    view = _hybrid_view(spark, sf_dir)
+    return _rank_metrics_over(spark, sf_dir, _rrf_fused(spark, sf_dir, view), view)
 
 
 @register(
@@ -1083,47 +854,22 @@ def retrieval_rank_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
 )
 def retrieval_rank_metrics_served(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _rank_metrics_over(spark, sf_dir, _rrf_served_fused(spark, sf_dir))
+    view = _hybrid_view(spark, sf_dir)
+    return _rank_metrics_over(
+        spark, sf_dir, _rrf_served_fused(spark, sf_dir, view=view), view
+    )
 
 
 def _rank_metrics_over(
-    spark: SparkSession, sf_dir: str, fused: DataFrame
+    spark: SparkSession, sf_dir: str, fused: DataFrame, view=None
 ) -> DataFrame:
     """MRR + nDCG@10 of the ranking ``fused`` (pid, id, rrf) against
-    the exact-cosine ground truth — the Spark twin of
-    :func:`_sql_rank_metrics_body`, shared by the exact and served
-    metric queries."""
-    w = Window.partitionBy("pid").orderBy(F.desc("rrf"), F.asc("id"))
-    rk = (
-        fused.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= _RANKM_K)
-        .select("pid", "id", "rn")
-    )
-    emb = table(spark, sf_dir, "embeddings").select(
-        F.col("vec_id").alias("id"), _qvec("embedding").alias("qv")
-    )
-    n = emb.select("id", "qv", _dot(F.col("qv"), F.col("qv")).alias("nrm"))
-    probes = n.filter(F.col("id") < _RRF_PROBES).select(
-        F.col("id").alias("pid"),
-        F.col("qv").alias("pqv"),
-        F.col("nrm").alias("pnrm"),
-    )
-    w_v = Window.partitionBy("pid").orderBy(F.desc("cos"), F.asc("id"))
-    truth = (
-        F.broadcast(probes)
-        .join(n, F.col("id") != F.col("pid"))
-        .select(
-            "pid",
-            "id",
-            _cosine(
-                _dot(F.col("pqv"), F.col("qv")), F.col("pnrm"), F.col("nrm")
-            ).alias("cos"),
-        )
-        .withColumn("vr", F.row_number().over(w_v))
-        .filter(F.col("vr") <= _RANKM_K)
-        .select("pid", F.col("id").alias("tid"), "vr")
-        .localCheckpoint(eager=False)
-    )
+    the exact-cosine ground truth, the vector leg over ``view`` (as in
+    ``_rrf_fused``) — the Spark twin of :func:`_sql_rank_metrics_body`,
+    shared by the exact and served metric queries."""
+    rk = _probe_topk(fused, _RANKM_K, "pid", "rrf", "id").select("pid", "id", "rn")
+    n, probes = view or _hybrid_view(spark, sf_dir)
+    truth = _vector_leg(probes, n, _RANKM_K).select("pid", F.col("id").alias("tid"), "vr")
     ln2 = F.log(F.lit(2.0))
     dcg_term = F.floor(
         (F.lit(11) - F.col("vr")).cast("double")

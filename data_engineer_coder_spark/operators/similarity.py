@@ -108,24 +108,196 @@ def _probe_topk(
     pid: str = "probe_id",
     score: str = "cos_sim",
     nid: str = "neighbor_id",
+    rank: str = "rn",
 ) -> DataFrame:
     """Each probe's top ``k`` rows of ``scored`` by ``score`` DESC, then
-    ``nid``, numbered in ``rn`` — the exact re-rank that ends every
-    probe search."""
+    ``nid``, numbered in ``rank`` — the exact re-rank that ends every
+    probe search, and every per-probe ranking of the hybrid family."""
     w = Window.partitionBy(pid).orderBy(F.desc(score), F.asc(nid))
-    return scored.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= k)
+    return scored.withColumn(rank, F.row_number().over(w)).filter(F.col(rank) <= k)
 
 
-def _sql_probe_topk(src: str, k: int) -> str:
-    """The oracle twin of :func:`_probe_topk` with the default columns:
-    the final SELECT over ``{src}`` (probe_id, neighbor_id, cos_sim)."""
-    return f"""SELECT probe_id, neighbor_id, rn, cos_sim
+def _sql_probe_topk(
+    src: str,
+    k: int,
+    pid: str = "probe_id",
+    score: str = "cos_sim",
+    nid: str = "neighbor_id",
+    rank: str = "rn",
+    cols: str | None = None,
+) -> str:
+    """The oracle twin of :func:`_probe_topk`: a SELECT of ``cols``
+    (default: pid, nid, rank, score) over the rows of ``{src}`` (a CTE
+    name or a parenthesized subquery) ranked the same way."""
+    return f"""SELECT {cols or f"{pid}, {nid}, {rank}, {score}"}
 FROM (
-  SELECT probe_id, neighbor_id, cos_sim,
-         ROW_NUMBER() OVER (PARTITION BY probe_id ORDER BY cos_sim DESC, neighbor_id) AS rn
+  SELECT *,
+         ROW_NUMBER() OVER (PARTITION BY {pid} ORDER BY {score} DESC, {nid}) AS {rank}
   FROM {src}
 )
-WHERE rn <= {k}
+WHERE {rank} <= {k}
+"""
+
+
+# --------------------------------------------------------------------------
+# Hybrid retrieval steps (reciprocal rank fusion, Cormack, Clarke &
+# Buettcher, SIGIR '09), each written once per engine: the vector leg,
+# the lexical leg, the fuse and the retention aggregate.  Every probe is
+# a (pid, pqv, pnrm, pws) row, every leg ranks (pid, id) rows.
+# --------------------------------------------------------------------------
+
+_RRF_K = 60
+_RRF_POOL = 20
+_RRF_PROBES = 10
+
+
+def _hybrid_view(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """The hybrid corpus ``n`` (id, qv, nrm, ws) — every embedding that
+    has a document, lazily checkpointed — and its first
+    ``_RRF_PROBES`` rows as probes (pid, pqv, pnrm, pws)."""
+    docs = table(spark, sf_dir, "documents").select("doc_id", "text")
+    emb = table(spark, sf_dir, "embeddings").select(
+        F.col("vec_id").alias("id"), _qvec("embedding").alias("qv")
+    )
+    n = (
+        emb.join(docs, emb["id"] == docs["doc_id"])
+        .select(
+            "id",
+            "qv",
+            _dot(F.col("qv"), F.col("qv")).alias("nrm"),
+            F.split("text", " ").alias("ws"),
+        )
+        .localCheckpoint(eager=False)
+    )
+    probes = n.filter(F.col("id") < _RRF_PROBES).select(
+        F.col("id").alias("pid"),
+        F.col("qv").alias("pqv"),
+        F.col("nrm").alias("pnrm"),
+        F.col("ws").alias("pws"),
+    )
+    return n, probes
+
+
+# The oracle twin of :func:`_hybrid_view` (``n``, ``probes``) plus the
+# probes' distinct tokens ``ptok`` (pid, tok).
+_SQL_HYBRID_VIEW = f"""n AS MATERIALIZED (
+  SELECT e.vec_id AS id, e.qv, e.nrm, string_split(d.text, ' ') AS ws
+  FROM ({_SQL_N}) e JOIN documents d ON d.doc_id = e.vec_id
+),
+probes AS MATERIALIZED (
+  SELECT id AS pid, qv AS pqv, nrm AS pnrm, ws AS pws FROM n
+  WHERE id < {_RRF_PROBES}
+),
+ptok AS (SELECT DISTINCT pid, unnest(pws) AS tok FROM probes)"""
+
+
+def _probe_tokens(probes: DataFrame) -> DataFrame:
+    """The probes' distinct tokens (pid, tok)."""
+    return probes.select("pid", F.explode("pws").alias("tok")).distinct()
+
+
+def _vector_leg(probes: DataFrame, corpus: DataFrame, k: int, owner=None) -> DataFrame:
+    """(pid, id, vr): each probe's top ``k`` rows of ``corpus`` (id, qv,
+    nrm) by exact cosine over a broadcast-probe scan, skipping rows
+    whose ``owner`` (default: the id) is the probe."""
+    owner = F.col("id") if owner is None else owner
+    scored = (
+        F.broadcast(probes.select("pid", "pqv", "pnrm"))
+        .join(corpus, owner != F.col("pid"))
+        .select(
+            "pid",
+            "id",
+            _cosine(
+                _dot(F.col("pqv"), F.col("qv")), F.col("pnrm"), F.col("nrm")
+            ).alias("cos"),
+        )
+    )
+    return _probe_topk(scored, k, "pid", "cos", "id", "vr").select("pid", "id", "vr")
+
+
+def _sql_vector_leg(probes: str, corpus: str, k: int, owner: str = "c.id") -> str:
+    """The oracle twin of :func:`_vector_leg`: a SELECT of (pid, id, vr)
+    over ``{probes}`` and ``{corpus}`` (aliased ``c`` in ``owner``)."""
+    cos = _sql_cos("p.pqv", "c.qv", "p.pnrm", "c.nrm")
+    scored = f"""(SELECT p.pid, c.id, {cos} AS cos
+        FROM {probes} p JOIN {corpus} c ON {owner} <> p.pid)"""
+    return _sql_probe_topk(scored, k, "pid", "cos", "id", "vr", "pid, id, vr")
+
+
+def _lexical_leg(ptok: DataFrame, cands: DataFrame, owner=None) -> DataFrame:
+    """(pid, id, lr): each probe's top ``_RRF_POOL`` candidates by the
+    number of distinct probe tokens they hold — an inverted-index join
+    of the probe tokens ``ptok`` (pid, tok) with the candidates' (id,
+    tok) rows, skipping candidates whose ``owner`` (default: the id) is
+    the probe."""
+    owner = F.col("id") if owner is None else owner
+    ov = (
+        F.broadcast(ptok)
+        .join(cands, "tok")
+        .filter(owner != F.col("pid"))
+        .groupBy("pid", "id")
+        .agg(F.count("*").alias("novl"))
+    )
+    return _probe_topk(ov, _RRF_POOL, "pid", "novl", "id", "lr").select("pid", "id", "lr")
+
+
+def _sql_lexical_leg(cands: str, owner: str = "c.id") -> str:
+    """The oracle twin of :func:`_lexical_leg`: a SELECT of (pid, id,
+    lr) over the in-scope ``ptok`` and ``{cands}`` (id, tok), aliased
+    ``c`` in ``owner``."""
+    ov = f"""(SELECT p.pid, c.id, COUNT(*) AS novl
+        FROM ptok p JOIN {cands} c ON c.tok = p.tok AND {owner} <> p.pid
+        GROUP BY p.pid, c.id)"""
+    return _sql_probe_topk(ov, _RRF_POOL, "pid", "novl", "id", "lr", "pid, id, lr")
+
+
+def _rrf_fuse(vrank: DataFrame, lrank: DataFrame) -> DataFrame:
+    """(pid, id, vr, rrf): the two legs fused, rrf = Σ_legs 1/(60 + rank)
+    over each leg's shortlist; ``vr`` is null for lexical-only rows."""
+    def term(r):
+        return F.coalesce(F.lit(1.0) / (F.lit(_RRF_K) + F.col(r)), F.lit(0.0))
+
+    return vrank.join(lrank, ["pid", "id"], "full").select(
+        "pid", "id", "vr", (term("vr") + term("lr")).alias("rrf")
+    )
+
+
+def _sql_rrf_fuse(vrank: str, lrank: str) -> str:
+    """The oracle twin of :func:`_rrf_fuse`: a SELECT of (pid, id, rrf)."""
+    def term(r):
+        return f"COALESCE(CAST(1.0 AS DOUBLE) / ({_RRF_K} + {r}), CAST(0.0 AS DOUBLE))"
+
+    return f"""SELECT COALESCE(v.pid, l.pid) AS pid,
+         COALESCE(v.id, l.id) AS id,
+         {term("v.vr")} + {term("l.lr")} AS rrf
+  FROM {vrank} v
+  FULL OUTER JOIN {lrank} l ON l.pid = v.pid AND l.id = v.id"""
+
+
+def _retention(top: DataFrame, truth: DataFrame) -> DataFrame:
+    """(n_hits, n_slots, recall_e4): how many of the (pid, id) slots of
+    ``top`` the (pid, id) set ``truth`` holds."""
+    hits = top.select("pid", "id").join(
+        truth.select("pid", "id", F.lit(1).alias("hit")), ["pid", "id"], "left"
+    ).select(F.coalesce(F.col("hit"), F.lit(0)).alias("hit"))
+    return hits.agg(
+        F.sum("hit").cast("bigint").alias("n_hits"),
+        F.count("*").alias("n_slots"),
+        F.expr("CAST((10000 * CAST(SUM(hit) AS BIGINT)) div COUNT(*) AS BIGINT)").alias(
+            "recall_e4"
+        ),
+    )
+
+
+def _sql_retention(top: str, truth: str) -> str:
+    """The oracle twin of :func:`_retention`."""
+    return f"""SELECT CAST(SUM(hit) AS BIGINT) AS n_hits,
+       COUNT(*) AS n_slots,
+       CAST((10000 * CAST(SUM(hit) AS BIGINT)) // COUNT(*) AS BIGINT) AS recall_e4
+FROM (
+  SELECT CASE WHEN t.id IS NULL THEN 0 ELSE 1 END AS hit
+  FROM {top} r LEFT JOIN {truth} t ON t.pid = r.pid AND t.id = r.id
+)
 """
 
 
@@ -3360,145 +3532,45 @@ def _mmr_greedy(cand: DataFrame) -> DataFrame:
 # inverted-index join (probe tokens × posting lists — never all-pairs),
 # the vector leg is the broadcast-probe scan, and the fusion joins two
 # 20-row shortlists per probe.  Ranks are integers and the RRF doubles
-# are the same op-sequence in both engines → exact oracle parity.
+# are the same op-sequence in both engines → exact oracle parity.  The
+# steps themselves are the shared helpers beside _probe_topk above.
 # --------------------------------------------------------------------------
-
-_RRF_K = 60
-_RRF_POOL = 20
-_RRF_PROBES = 10
 
 
 def _sql_rrf_core() -> str:
-    cosq = _sql_cos("p.pqv", "n.qv", "p.pnrm", "n.nrm")
     return f"""
-WITH e AS (
-  SELECT vec_id AS id, {_SQL_QVEC.format(e='embedding')} AS qv FROM embeddings
-),
-n AS MATERIALIZED (
-  SELECT e.id, e.qv, {_SQL_NORM.format(a='e.qv')} AS nrm,
-         string_split(d.text, ' ') AS ws
-  FROM e JOIN documents d ON d.doc_id = e.id
-),
-probes AS MATERIALIZED (
-  SELECT id AS pid, qv AS pqv, nrm AS pnrm, ws AS pws FROM n
-  WHERE id < {_RRF_PROBES}
-),
+WITH {_SQL_HYBRID_VIEW},
 vrank AS (
-  SELECT pid, id, vr FROM (
-    SELECT p.pid, n.id,
-           ROW_NUMBER() OVER (
-             PARTITION BY p.pid ORDER BY {cosq} DESC, n.id
-           ) AS vr
-    FROM probes p JOIN n ON n.id <> p.pid
-  ) WHERE vr <= {_RRF_POOL}
+  {_sql_vector_leg('probes', 'n', _RRF_POOL)}
 ),
-ptok AS (SELECT DISTINCT pid, unnest(pws) AS tok FROM probes),
 ctok AS (SELECT DISTINCT id, unnest(ws) AS tok FROM n),
-ov AS (
-  SELECT p.pid, c.id, COUNT(*) AS novl
-  FROM ptok p JOIN ctok c ON c.tok = p.tok AND c.id <> p.pid
-  GROUP BY p.pid, c.id
-),
 lrank AS (
-  SELECT pid, id, lr FROM (
-    SELECT pid, id,
-           ROW_NUMBER() OVER (
-             PARTITION BY pid ORDER BY novl DESC, id
-           ) AS lr
-    FROM ov
-  ) WHERE lr <= {_RRF_POOL}
+  {_sql_lexical_leg('ctok')}
 ),
 fused AS (
-  SELECT COALESCE(v.pid, l.pid) AS pid,
-         COALESCE(v.id, l.id) AS id,
-         COALESCE(CAST(1.0 AS DOUBLE) / ({_RRF_K} + v.vr), CAST(0.0 AS DOUBLE))
-           + COALESCE(CAST(1.0 AS DOUBLE) / ({_RRF_K} + l.lr), CAST(0.0 AS DOUBLE))
-           AS rrf
-  FROM vrank v
-  FULL OUTER JOIN lrank l ON l.pid = v.pid AND l.id = v.id
+  {_sql_rrf_fuse('vrank', 'lrank')}
 )"""
 
 
-def _sql_rrf() -> str:
-    return f"""{_sql_rrf_core()}
-SELECT pid AS probe_id, id AS doc_id, rn, rrf AS rrf_score
-FROM (
-  SELECT pid, id, rrf,
-         ROW_NUMBER() OVER (PARTITION BY pid ORDER BY rrf DESC, id) AS rn
-  FROM fused
-)
-WHERE rn <= 5
-"""
-
-
-def _rrf_fused(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The fused hybrid ranking (pid, id, rrf) — the Spark twin of
+def _rrf_fused(spark: SparkSession, sf_dir: str, view=None) -> DataFrame:
+    """The fused hybrid ranking (pid, id, vr, rrf) — the Spark twin of
     ``_sql_rrf_core``'s ``fused`` CTE, shared by the retrieval query,
-    the recall gate, and the context packer."""
-    docs = table(spark, sf_dir, "documents").select("doc_id", "text")
-    emb = table(spark, sf_dir, "embeddings").select(
-        F.col("vec_id").alias("id"), _qvec("embedding").alias("qv")
-    )
-    n = (
-        emb.join(docs, emb["id"] == docs["doc_id"])
-        .select(
-            "id",
-            "qv",
-            _dot(F.col("qv"), F.col("qv")).alias("nrm"),
-            F.split("text", " ").alias("ws"),
-        )
-        .localCheckpoint(eager=False)
-    )
-    probes = n.filter(F.col("id") < _RRF_PROBES).select(
-        F.col("id").alias("pid"),
-        F.col("qv").alias("pqv"),
-        F.col("nrm").alias("pnrm"),
-        F.col("ws").alias("pws"),
-    )
-    w_v = Window.partitionBy("pid").orderBy(F.desc("cos"), F.asc("id"))
-    vrank = (
-        F.broadcast(probes.drop("pws"))
-        .join(n.drop("ws"), F.col("id") != F.col("pid"))
-        .select(
-            "pid",
-            "id",
-            _cosine(
-                _dot(F.col("pqv"), F.col("qv")), F.col("pnrm"), F.col("nrm")
-            ).alias("cos"),
-        )
-        .withColumn("vr", F.row_number().over(w_v))
-        .filter(F.col("vr") <= _RRF_POOL)
-        .select("pid", "id", "vr")
-    )
-    ptok = (
-        probes.select("pid", F.explode("pws").alias("tok")).distinct()
-    )
+    the recall gates, the rank metrics and the context packer — over
+    ``view`` (:func:`_hybrid_view`'s pair; a fresh one by default)."""
+    n, probes = view or _hybrid_view(spark, sf_dir)
     ctok = n.select("id", F.explode("ws").alias("tok")).distinct()
-    ov = (
-        F.broadcast(ptok)
-        .join(ctok, (ctok["tok"] == ptok["tok"]) & (ctok["id"] != ptok["pid"]))
-        .groupBy("pid", "id")
-        .agg(F.count("*").alias("novl"))
+    return _rrf_fuse(
+        _vector_leg(probes, n, _RRF_POOL),
+        _lexical_leg(_probe_tokens(probes), ctok),
     )
-    w_l = Window.partitionBy("pid").orderBy(F.desc("novl"), F.asc("id"))
-    lrank = (
-        ov.withColumn("lr", F.row_number().over(w_l))
-        .filter(F.col("lr") <= _RRF_POOL)
-        .select("pid", "id", "lr")
+
+
+def _sql_rrf() -> str:
+    top = _sql_probe_topk(
+        "fused", 5, "pid", "rrf", "id",
+        cols="pid AS probe_id, id AS doc_id, rn, rrf AS rrf_score",
     )
-    one = F.lit(1.0)
-    zero = F.lit(0.0)
-    return (
-        vrank.join(lrank, ["pid", "id"], "full")
-        .select(
-            "pid",
-            "id",
-            (
-                F.coalesce(one / (F.lit(_RRF_K) + F.col("vr")), zero)
-                + F.coalesce(one / (F.lit(_RRF_K) + F.col("lr")), zero)
-            ).alias("rrf"),
-        )
-    )
+    return f"{_sql_rrf_core()}\n{top}"
 
 
 @register(
@@ -3513,17 +3585,11 @@ def _rrf_fused(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
 )
 def hybrid_rrf_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    fused = _rrf_fused(spark, sf_dir)
-    w = Window.partitionBy("pid").orderBy(F.desc("rrf"), F.asc("id"))
-    return (
-        fused.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 5)
-        .select(
-            F.col("pid").alias("probe_id"),
-            F.col("id").alias("doc_id"),
-            "rn",
-            F.col("rrf").alias("rrf_score"),
-        )
+    return _probe_topk(_rrf_fused(spark, sf_dir), 5, "pid", "rrf", "id").select(
+        F.col("pid").alias("probe_id"),
+        F.col("id").alias("doc_id"),
+        "rn",
+        F.col("rrf").alias("rrf_score"),
     )
 
 
@@ -3539,25 +3605,12 @@ def hybrid_rrf_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "hybrid_recall_check",
-    oracle=_sql_rrf_core() + """,
+    oracle=f"""{_sql_rrf_core()},
 rtop AS (
-  SELECT pid, id FROM (
-    SELECT pid, id,
-           ROW_NUMBER() OVER (PARTITION BY pid ORDER BY rrf DESC, id) AS rn
-    FROM fused
-  ) WHERE rn <= 5
+  {_sql_probe_topk('fused', 5, 'pid', 'rrf', 'id', cols='pid, id')}
 ),
-truth AS (SELECT pid, id FROM vrank WHERE vr <= 5),
-hits AS (
-  SELECT r.pid, r.id,
-         CASE WHEN t.id IS NULL THEN 0 ELSE 1 END AS hit
-  FROM rtop r LEFT JOIN truth t ON t.pid = r.pid AND t.id = r.id
-)
-SELECT CAST(SUM(hit) AS BIGINT) AS n_hits,
-       COUNT(*) AS n_slots,
-       CAST((10000 * CAST(SUM(hit) AS BIGINT)) // COUNT(*) AS BIGINT) AS recall_e4
-FROM hits
-""",
+truth AS (SELECT pid, id FROM vrank WHERE vr <= 5)
+{_sql_retention('rtop', 'truth')}""",
     tags=("similarity", "text", "llm", "quality-gate"),
     doc=(
         "L32 quality gate: vector-ground-truth retention of the "
@@ -3569,42 +3622,9 @@ FROM hits
     ),
 )
 def hybrid_recall_check(spark: SparkSession, sf_dir: str) -> DataFrame:
-    rrf = hybrid_rrf_retrieval(spark, sf_dir).select(
-        F.col("probe_id").alias("pid"), F.col("doc_id").alias("id")
-    )
-    emb = table(spark, sf_dir, "embeddings").select(
-        F.col("vec_id").alias("id"), _qvec("embedding").alias("qv")
-    )
-    n = emb.select("id", "qv", _dot(F.col("qv"), F.col("qv")).alias("nrm"))
-    probes = n.filter(F.col("id") < _RRF_PROBES).select(
-        F.col("id").alias("pid"),
-        F.col("qv").alias("pqv"),
-        F.col("nrm").alias("pnrm"),
-    )
-    w = Window.partitionBy("pid").orderBy(F.desc("cos"), F.asc("id"))
-    truth = (
-        F.broadcast(probes)
-        .join(n, F.col("id") != F.col("pid"))
-        .select(
-            "pid",
-            "id",
-            _cosine(
-                _dot(F.col("pqv"), F.col("qv")), F.col("pnrm"), F.col("nrm")
-            ).alias("cos"),
-        )
-        .withColumn("vr", F.row_number().over(w))
-        .filter(F.col("vr") <= 5)
-        .select("pid", "id", F.lit(1).alias("hit"))
-    )
-    hits = rrf.join(truth, ["pid", "id"], "left").select(
-        F.coalesce(F.col("hit"), F.lit(0)).alias("hit")
-    )
-    return hits.agg(
-        F.sum("hit").cast("bigint").alias("n_hits"),
-        F.count("*").alias("n_slots"),
-        F.expr("CAST((10000 * CAST(SUM(hit) AS BIGINT)) div COUNT(*) AS BIGINT)").alias(
-            "recall_e4"
-        ),
+    fused = _rrf_fused(spark, sf_dir)
+    return _retention(
+        _probe_topk(fused, 5, "pid", "rrf", "id"), fused.filter(F.col("vr") <= 5)
     )
 
 
@@ -3713,11 +3733,9 @@ _CTX_BUDGET = 256
 
 @register(
     "rag_context_pack",
-    oracle=_sql_rrf_core() + f""",
+    oracle=f"""{_sql_rrf_core()},
 ranked AS (
-  SELECT pid, id, rrf,
-         ROW_NUMBER() OVER (PARTITION BY pid ORDER BY rrf DESC, id) AS rn
-  FROM fused
+  {_sql_probe_topk('fused', 2 * _RRF_POOL, 'pid', 'rrf', 'id', cols='pid, id, rn')}
 ),
 withlen AS (
   SELECT r.pid, r.id, r.rn, l.len,
@@ -3748,14 +3766,14 @@ def rag_context_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     lens = docs.select(
         F.col("doc_id").alias("id"), F.size(F.split("text", " ")).alias("len")
     )
-    w = Window.partitionBy("pid").orderBy(F.desc("rrf"), F.asc("id"))
     wc = (
         Window.partitionBy("pid")
         .orderBy("rn")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
+    # every fused row: a probe holds at most both legs' pools
     return (
-        fused.withColumn("rn", F.row_number().over(w))
+        _probe_topk(fused, 2 * _RRF_POOL, "pid", "rrf", "id")
         .join(lens, "id")
         .withColumn("cum_tokens", F.sum("len").over(wc))
         .filter(F.col("cum_tokens") <= _CTX_BUDGET)

@@ -193,6 +193,14 @@ _FORCE_RECHECK: tuple[str, ...] = (
     "acid_delete_audit",
     "acid_partition_move_audit",
     "ann_index_retrain_swap_audit",
+    # round 22: the hybrid retrieval family (per-probe rank, vector leg,
+    # lexical leg, RRF fuse, retention aggregate) is written once per
+    # engine in operators/similarity.py, and the Spark ground truth ranks
+    # only embeddings that have a document, as the oracles do.  The eight
+    # hybrid queries and the probe searches whose oracle now ends in the
+    # widened _sql_probe_topk (cosine_topk, ann_lsh_topk,
+    # ann_lsh_multiprobe_topk, ivf_ann_topk, ivf_kmeans_topk,
+    # pq_ann_rerank_topk) are all listed in the round-19 cohort above.
 )
 
 # (The round-3/4 _CHECK_FIRST backlog queue is gone: every registered query

@@ -275,7 +275,7 @@ def ann_index_bucket_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pyspark.sql import Window
 
-    from ..io.acid_table import current_manifest, read_table, replace_partitions
+    from ..io.acid_table import _part_values, current_manifest, read_table, replace_partitions
     from ..operators.similarity import (
         _IVF_NPROBE,
         _PQ_K,
@@ -371,7 +371,7 @@ def ann_index_bucket_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         all_parts = list(current_manifest(index_root)["partitions"])
         one_parts = [
             p for p in all_parts
-            if dict(s.split("=", 1) for s in p.split("/"))["cell_bucket"]
+            if _part_values(p)["cell_bucket"]
             in one_buckets
         ]
         if len(one_parts) > _IVF_NPROBE or (

@@ -511,14 +511,14 @@ def _audit_bucket_pruning(spark: SparkSession, roots: dict, qt: DataFrame) -> No
     holds.  (A whole-document probe can legitimately touch every
     bucket; per-term locality is the property that makes the serving
     cost probe-local, so that is what the audit pins.)"""
-    from ..io.acid_table import current_manifest
+    from ..io.acid_table import _part_values, current_manifest
 
     one_tok = qt.select("tok").orderBy("tok").limit(1).collect()[0]["tok"]
     one_bucket = {str(_py_tok_bucket(one_tok, _tok_layout(roots["postings"])))}
     all_parts = list(current_manifest(roots["postings"])["partitions"])
     one_parts = [
         p for p in all_parts
-        if dict(s.split("=", 1) for s in p.split("/"))["tok_bucket"] in one_bucket
+        if _part_values(p)["tok_bucket"] in one_bucket
     ]
     # Two REACHABLE failure modes: the term's bucket arithmetic drifted
     # between engines/build (≠ 1 partition selected), or the table

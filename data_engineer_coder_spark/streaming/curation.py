@@ -655,6 +655,7 @@ def retrieval_lifecycle_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     import time as _time
 
     from ..io.acid_table import (
+        _part_values,
         current_manifest,
         delete_rows,
         read_table,
@@ -833,7 +834,7 @@ def retrieval_lifecycle_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         ):
             post_man = current_manifest(roots[nm])["partitions"]
             for pkey, dirs in man_pre[nm].items():
-                kv = dict(s.split("=", 1) for s in pkey.split("/"))
+                kv = _part_values(pkey)
                 if kv[col] not in tset and post_man.get(pkey) != dirs:
                     raise RuntimeError(
                         f"untouched {nm} bucket {pkey} was rewritten by the takedown"

@@ -44,6 +44,7 @@ from data_engineer_coder_spark.operators.similarity import (  # noqa: E402
     _cosine,
     _dot,
     _ivf_cents,
+    _probe_topk,
     _qvec,
     _rrf_fused,
 )
@@ -63,14 +64,7 @@ WIDE_NPROBES = (32, 64, 100, 160)
 
 
 def _top5(fused):
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("pid").orderBy(F.desc("rrf"), F.asc("id"))
-    return (
-        fused.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 5)
-        .select("pid", "id")
-    )
+    return _probe_topk(fused, 5, "pid", "rrf", "id").select("pid", "id")
 
 
 def _nv(spark, sf_dir):

@@ -63,6 +63,15 @@ _BATCH_JOB_CEILINGS = {
     "acid_partition_move_audit": 22,
     "acid_compaction_audit": 27,
     "bm25_index_compaction_audit": 227,
+    # the hybrid retrieval family, counted before its steps were written once
+    "hybrid_rrf_retrieval": 14,
+    "hybrid_recall_check": 19,
+    "rag_context_pack": 16,
+    "retrieval_rank_metrics": 21,
+    "hybrid_rrf_retrieval_served": 54,
+    "hybrid_served_recall_check": 70,
+    "retrieval_rank_metrics_served": 61,
+    "rag_chunk_pipeline": 88,
 }
 
 
