@@ -22,6 +22,8 @@ timestamp representations can't diverge.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -172,12 +174,13 @@ def sql_md5_bucket16(expr: str) -> str:
 
 
 def sql_materialize(sql: str, ctes) -> str:
-    """Mark each named CTE ``AS MATERIALIZED`` (its first ``<name> AS (``).
+    """Mark each named CTE ``AS MATERIALIZED`` (its first ``<name> AS (``,
+    matched as a whole word, so ``tok`` never marks ``atok``).
 
     DuckDB inlines a CTE at every reference, so an oracle whose heavy
     CTEs are referenced many times downstream re-derives them per
     reference and can go combinatorial; materializing them evaluates
     each once."""
     for cte in ctes:
-        sql = sql.replace(f"{cte} AS (", f"{cte} AS MATERIALIZED (", 1)
+        sql = re.sub(rf"\b{cte} AS \(", f"{cte} AS MATERIALIZED (", sql, count=1)
     return sql

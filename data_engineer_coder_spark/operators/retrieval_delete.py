@@ -37,23 +37,25 @@ engine-north-star extension the r12 verdict ranked top-missing.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..io.tables import table
 from ..registry import register
-from ._helpers import md5_bucket16
+from ._helpers import md5_bucket16, sql_materialize
 from .retrieval_served import _cell_bucket, _probe_index, cell_layout
 from .similarity import (
     _SQL_N,
     served_nprobe,
     _dot,
     _ivf_cents,
+    _probe_topk,
     _qvec,
     _sql_cos,
     _sql_ivf_cents,
     _sql_ivf_params,
     _sql_probe_cells,
+    _sql_probe_topk,
     _sql_served_nprobe,
     _sql_two_level,
     _two_level_assign,
@@ -188,49 +190,23 @@ def propagate_retrieval_delete(
 
 
 def _delete_oracle() -> str:
-    from .textops import _sql_bm25_core, _sql_bm25_term_e9
+    from .textops import _sql_bm25_core, _sql_bm25_corpus, _sql_bm25_scores
 
     qcos = _sql_cos("p.pqv", "a.qv", "p.pnrm", "a.nrm")
-    return f"""{_sql_bm25_core()},
-del AS MATERIALIZED (
-  SELECT DISTINCT id FROM (
-    SELECT pid, id,
-           ROW_NUMBER() OVER (PARTITION BY pid ORDER BY bm25_e9 DESC, id) AS rn
-    FROM sc
-  ) WHERE rn = 1
+    sql = f"""{_sql_bm25_core()},
+del AS (
+  SELECT DISTINCT id FROM ({_sql_probe_topk("sc", 1, "pid", "bm25_e9", "id", cols="id")})
 ),
-tok2 AS MATERIALIZED (
-  SELECT * FROM tok WHERE doc_id NOT IN (SELECT id FROM del)
-),
-dl2 AS MATERIALIZED (
-  SELECT * FROM dl WHERE doc_id NOT IN (SELECT id FROM del)
-),
-dfreq2 AS (SELECT tok, COUNT(*) AS df FROM tok2 GROUP BY tok),
-stats2 AS (
-  SELECT COUNT(*) AS n,
-         CAST(SUM(len) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE) AS avglen
-  FROM dl2
-),
-m2 AS (
-  SELECT q.pid, t.doc_id AS id, {_sql_bm25_term_e9()} AS e9
-  FROM qt q
-  JOIN tok2 t ON t.tok = q.tok AND t.doc_id <> q.pid
-  JOIN dfreq2 f ON f.tok = q.tok
-  JOIN dl2 l ON l.doc_id = t.doc_id
-  CROSS JOIN stats2 s
-),
-sc2 AS (SELECT pid, id, CAST(SUM(e9) AS BIGINT) AS e9 FROM m2 GROUP BY pid, id),
+d2 AS (SELECT * FROM d WHERE doc_id NOT IN (SELECT id FROM del)),
+{_sql_bm25_corpus("d2", "2")},
+sc2 AS ({_sql_bm25_scores("qt", "e9", "2")}),
 bmtop AS (
-  SELECT pid, id, rn, e9 FROM (
-    SELECT pid, id, e9,
-           ROW_NUMBER() OVER (PARTITION BY pid ORDER BY e9 DESC, id) AS rn
-    FROM sc2
-  ) WHERE rn <= 5
+  {_sql_probe_topk("sc2", 5, "pid", "e9", "id", cols="pid, id, rn, e9")}
 ),
-nv AS MATERIALIZED (
+nv AS (
   {_SQL_N}
 ),
-nb AS MATERIALIZED (SELECT * FROM nv WHERE vec_id % 10 = 0),
+nb AS (SELECT * FROM nv WHERE vec_id % 10 = 0),
 {_sql_ivf_params('nb')},
 {_sql_ivf_cents('nb')},
 {_sql_two_level('cents', 'asg', 'nv')},
@@ -254,6 +230,7 @@ FROM bmtop
 UNION ALL
 SELECT 'ann', pid, vec_id, CAST(rn AS INT), e9 FROM anntop
 """
+    return sql_materialize(sql, ("del", "tok2", "dl2", "nv", "nb"))
 
 
 @register(
@@ -290,13 +267,13 @@ def retrieval_index_delete_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         table_history,
     )
     from ..streaming.bm25_ingest import (
+        _assert_bit_parity,
         _build_standing_index,
         _probe_qt,
         _served_scores,
-        _topk,
         _two_stage_served,
     )
-    from .textops import _bm25_scores
+    from .textops import _bm25_corpus, _bm25_scores
 
     tmp = tempfile.mkdtemp(prefix="rdel_")
     try:
@@ -334,14 +311,10 @@ def retrieval_index_delete_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         pre = _served_scores(
             spark, roots, qt.withColumn("w", F.lit(1.0)), "bm25_e9"
         )
-        w1 = Window.partitionBy("pid").orderBy(F.desc("bm25_e9"), F.asc("id"))
         del_ids = sorted(
             {
                 int(r["id"])
-                for r in pre.withColumn("rn", F.row_number().over(w1))
-                .filter(F.col("rn") == 1)
-                .select("id")
-                .collect()
+                for r in _probe_topk(pre, 1, "pid", "bm25_e9", "id").select("id").collect()
             }
         )
 
@@ -410,41 +383,14 @@ def retrieval_index_delete_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         # bit-parity vs the from-scratch recompute on the REDUCED corpus
         docs2 = (
             table(spark, sf_dir, "documents")
-            .select("doc_id", F.split("text", " ").alias("ws"))
+            .select("doc_id", "text")
             .filter(~F.col("doc_id").isin(del_ids))
         )
-        dl2 = docs2.select("doc_id", F.size("ws").alias("len"))
-        tok2 = (
-            docs2.select("doc_id", F.explode("ws").alias("tok"))
-            .groupBy("doc_id", "tok")
-            .agg(F.count("*").alias("tf"))
+        recheck = _bm25_scores(
+            _bm25_corpus(docs2), qt.withColumn("w", F.lit(1.0)), "bm25_e9"
         )
-        fr2 = {
-            "dl": dl2,
-            "tok": tok2,
-            "dfreq": tok2.groupBy("tok").agg(F.count("*").alias("df")),
-            "stats": dl2.agg(
-                F.count("*").alias("n"),
-                (F.sum("len").cast("double") / F.count("*").cast("double")).alias(
-                    "avglen"
-                ),
-            ),
-        }
-        recheck = _bm25_scores(fr2, qt.withColumn("w", F.lit(1.0)), "bm25_e9")
-        bad = (
-            sc2.withColumnRenamed("bm25_e9", "a")
-            .join(recheck.withColumnRenamed("bm25_e9", "b"), ["pid", "id"], "full")
-            .filter(
-                F.col("a").isNull() | F.col("b").isNull() | (F.col("a") != F.col("b"))
-            )
-            .count()
-        )
-        if bad:
-            raise RuntimeError(
-                f"post-delete served BM25 diverged from the reduced-corpus "
-                f"recompute on {bad} scores"
-            )
-        bmtop = _topk(sc2, "bm25_e9")
+        _assert_bit_parity(sc2, recheck, "bm25_e9")
+        bmtop = _probe_topk(sc2, 5, "pid", "bm25_e9", "id")
 
         # ---- the TOKSTATS correction is live: the two-stage serve
         # reads the vocab df at stage 0 (rarest-term cut) and stage 2
@@ -482,8 +428,8 @@ def retrieval_index_delete_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         out = (
             bmtop.select(
                 F.lit("bm25").alias("leg"),
-                F.col("probe_id"),
-                F.col("doc_id"),
+                F.col("pid").alias("probe_id"),
+                F.col("id").alias("doc_id"),
                 F.col("rn").cast("int").alias("rn"),
                 F.col("bm25_e9").alias("score_e9"),
             )

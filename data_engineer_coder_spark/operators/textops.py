@@ -17,7 +17,8 @@ from pyspark.sql import functions as F
 
 from ..io.tables import table
 from ..registry import register
-from ._helpers import shuffle_parts
+from ._helpers import shuffle_parts, sql_materialize
+from .similarity import _probe_topk, _sql_probe_topk
 
 # A small English stopword list (public domain).  The fixture vocabulary
 # is synthetic; the *operator* is what matters.
@@ -3142,48 +3143,63 @@ def _sql_bm25_term_e9(w: str = "1.0") -> str:
          ) AS BIGINT)"""
 
 
-def _sql_bm25_core() -> str:
-    """Corpus-statistics + base-query-scoring CTE chain shared by
-    ``bm25_topk`` and the RM3 expansion query: d/dl/tok/dfreq/stats,
-    the probes' distinct-token queries ``qt``, and the base per-doc
-    scores ``sc`` (pid, id, bm25_e9)."""
-    return f"""
-WITH d AS MATERIALIZED (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-dl AS MATERIALIZED (SELECT doc_id, LEN(ws) AS len FROM d),
-tok AS MATERIALIZED (
+def _sql_bm25_corpus(src: str, sfx: str = "") -> str:
+    """The corpus-statistics CTEs over the (doc_id, ws) relation
+    ``{src}``: ``dl{sfx}`` (doc_id, len), ``tok{sfx}`` (doc_id, tok, tf),
+    ``dfreq{sfx}`` (tok, df) and ``stats{sfx}`` (n, avglen) — the oracle
+    twin of :func:`_bm25_corpus`."""
+    return f"""dl{sfx} AS (SELECT doc_id, LEN(ws) AS len FROM {src}),
+tok{sfx} AS (
   SELECT doc_id, tok, COUNT(*) AS tf
-  FROM (SELECT doc_id, unnest(ws) AS tok FROM d)
+  FROM (SELECT doc_id, unnest(ws) AS tok FROM {src})
   GROUP BY doc_id, tok
 ),
-dfreq AS MATERIALIZED (SELECT tok, COUNT(*) AS df FROM tok GROUP BY tok),
-stats AS MATERIALIZED (
+dfreq{sfx} AS (SELECT tok, COUNT(*) AS df FROM tok{sfx} GROUP BY tok),
+stats{sfx} AS (
   SELECT COUNT(*) AS n,
          CAST(SUM(len) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE) AS avglen
-  FROM dl
-),
-qt AS MATERIALIZED (SELECT DISTINCT doc_id AS pid, tok FROM tok WHERE doc_id < 10),
-m AS (
-  SELECT q.pid, t.doc_id AS id, {_sql_bm25_term_e9()} AS e9
-  FROM qt q
-  JOIN tok t ON t.tok = q.tok AND t.doc_id <> q.pid
-  JOIN dfreq f ON f.tok = q.tok
-  JOIN dl l ON l.doc_id = t.doc_id
-  CROSS JOIN stats s
-),
-sc AS (SELECT pid, id, CAST(SUM(e9) AS BIGINT) AS bm25_e9 FROM m GROUP BY pid, id)"""
+  FROM dl{sfx}
+)"""
+
+
+def _sql_bm25_scores(q: str, name: str, sfx: str = "", w: str = "1.0") -> str:
+    """Per-(pid, id) BM25 score ``{name}`` of the query relation ``{q}``
+    (pid, tok[, w]) over the ``{sfx}`` corpus statistics: postings with
+    doc ≠ probe, × df, × len, × (n, avglen), each term quantized with
+    weight ``{w}`` and summed as an exact integer — the oracle twin of
+    :func:`_bm25_scores`."""
+    return f"""SELECT pid, id, CAST(SUM(e9) AS BIGINT) AS {name} FROM (
+  SELECT q.pid, t.doc_id AS id, {_sql_bm25_term_e9(w)} AS e9
+  FROM {q} q
+  JOIN tok{sfx} t ON t.tok = q.tok AND t.doc_id <> q.pid
+  JOIN dfreq{sfx} f ON f.tok = q.tok
+  JOIN dl{sfx} l ON l.doc_id = t.doc_id
+  CROSS JOIN stats{sfx} s
+) GROUP BY pid, id"""
+
+
+def _sql_bm25_core() -> str:
+    """The corpus statistics of ``documents``, the probes' distinct-token
+    queries ``qt`` and their base scores ``sc`` (pid, id, bm25_e9) —
+    the CTE chain every BM25 oracle starts from."""
+    return sql_materialize(
+        f"""
+WITH d AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
+{_sql_bm25_corpus("d")},
+qt AS (SELECT DISTINCT doc_id AS pid, tok FROM tok WHERE doc_id < 10),
+sc AS ({_sql_bm25_scores("qt", "bm25_e9")})""",
+        ("d", "dl", "tok", "dfreq", "stats", "qt"),
+    )
+
+
+_BM25_TOPK_SQL = _sql_bm25_core() + "\n" + _sql_probe_topk(
+    "sc", 5, "pid", "bm25_e9", "id", cols="pid AS probe_id, id AS doc_id, rn, bm25_e9"
+)
 
 
 @register(
     "bm25_topk",
-    oracle=_sql_bm25_core() + """
-SELECT pid AS probe_id, id AS doc_id, rn, bm25_e9
-FROM (
-  SELECT pid, id, bm25_e9,
-         ROW_NUMBER() OVER (PARTITION BY pid ORDER BY bm25_e9 DESC, id) AS rn
-  FROM sc
-)
-WHERE rn <= 5
-""",
+    oracle=_BM25_TOPK_SQL,
     tags=("text", "llm", "topk", "rag"),
     doc=(
         "L34: BM25 top-5 per probe (k1=1.2, b=0.75) — inverted-index "
@@ -3194,54 +3210,58 @@ WHERE rn <= 5
 def bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     fr = _bm25_frames(spark, sf_dir)
     sc = _bm25_scores(fr, fr["qt"].withColumn("w", F.lit(1.0)), "bm25_e9")
-    w = Window.partitionBy("pid").orderBy(F.desc("bm25_e9"), F.asc("id"))
-    return (
-        sc.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 5)
-        .select(
-            F.col("pid").alias("probe_id"),
-            F.col("id").alias("doc_id"),
-            "rn",
-            "bm25_e9",
-        )
+    return _probe_topk(sc, 5, "pid", "bm25_e9", "id").select(
+        F.col("pid").alias("probe_id"), F.col("id").alias("doc_id"), "rn", "bm25_e9"
     )
 
 
-def _bm25_frames(spark: SparkSession, sf_dir: str) -> dict:
-    """Shared corpus statistics for the BM25 family: per-doc lengths,
-    (doc, token) term frequencies, document frequencies, the corpus
-    (n, avglen) scalars, and the probes' distinct-token queries."""
-    d = table(spark, sf_dir, "documents").select(
-        "doc_id", F.split("text", " ").alias("ws")
-    )
-    dl = d.select("doc_id", F.size("ws").alias("len")).localCheckpoint(eager=False)
+def _bm25_corpus(docs: DataFrame, checkpoint: bool = False) -> dict:
+    """Corpus statistics of the (doc_id, text) frame ``docs``: ``dl``
+    (doc_id, len), ``tok`` (doc_id, tok, tf), ``dfreq`` (tok, df) and
+    ``stats`` (n, avglen).  ``checkpoint`` lazily checkpoints ``dl`` and
+    ``tok`` for a query that reads them more than once.  The Spark twin
+    of :func:`_sql_bm25_corpus`."""
+    d = docs.select("doc_id", F.split("text", " ").alias("ws"))
+    dl = d.select("doc_id", F.size("ws").alias("len"))
     tok = (
         d.select("doc_id", F.explode("ws").alias("tok"))
         .groupBy("doc_id", "tok")
         .agg(F.count("*").alias("tf"))
-        .localCheckpoint(eager=False)
     )
-    dfreq = tok.groupBy("tok").agg(F.count("*").alias("df"))
-    stats = dl.agg(
-        F.count("*").alias("n"),
-        (
-            F.sum("len").cast("double") / F.count("*").cast("double")
-        ).alias("avglen"),
+    if checkpoint:
+        dl, tok = dl.localCheckpoint(eager=False), tok.localCheckpoint(eager=False)
+    return {
+        "dl": dl,
+        "tok": tok,
+        "dfreq": tok.groupBy("tok").agg(F.count("*").alias("df")),
+        "stats": dl.agg(
+            F.count("*").alias("n"),
+            (F.sum("len").cast("double") / F.count("*").cast("double")).alias("avglen"),
+        ),
+    }
+
+
+def _bm25_frames(spark: SparkSession, sf_dir: str) -> dict:
+    """The documents table's checkpointed corpus statistics
+    (:func:`_bm25_corpus`) and the probes' distinct-token queries ``qt``
+    (pid, tok)."""
+    fr = _bm25_corpus(
+        table(spark, sf_dir, "documents").select("doc_id", "text"), checkpoint=True
     )
-    qt = (
-        tok.filter(F.col("doc_id") < 10)
+    fr["qt"] = (
+        fr["tok"].filter(F.col("doc_id") < 10)
         .select(F.col("doc_id").alias("pid"), "tok")
         .distinct()
     )
-    return {"dl": dl, "tok": tok, "dfreq": dfreq, "stats": stats, "qt": qt}
+    return fr
 
 
 def bm25_term_e9_col() -> Column:
     """The quantized per-term BM25 score column over in-scope columns
     ``w, tf, df, len, n, avglen`` — ONE op-sequence shared by the
-    in-plan recompute (``_bm25_scores``) and the served-from-standing-
-    index path (``streaming/bm25_ingest``), so the two are bit-identical
-    by construction (the Spark twin of ``_sql_bm25_term_e9``)."""
+    in-plan recompute and the served-from-standing-index path
+    (``streaming/bm25_ingest``), so the two are bit-identical by
+    construction (the Spark twin of ``_sql_bm25_term_e9``)."""
     idf = F.log(
         ((F.col("n") - F.col("df")).cast("double") + F.lit(0.5))
         / (F.col("df").cast("double") + F.lit(0.5))
@@ -3256,25 +3276,27 @@ def bm25_term_e9_col() -> Column:
 
 
 def _bm25_scores(fr: dict, q: DataFrame, name: str) -> DataFrame:
-    """Per-(probe, doc) BM25 score for the weighted query ``q``
-    (pid, tok, w): each term's idf×saturation double is scaled by its
-    query weight INSIDE the e9 quantization, then the per-doc sum runs
-    on exact integers (order-independent)."""
+    """Per-(probe, doc) BM25 score ``name`` for the weighted query ``q``
+    (pid, tok, w) — the score join of every BM25 query, in-plan or
+    served: ``q`` × the postings ``fr["tok"]`` (doc_id, tok, tf, plus len
+    unless ``fr["dl"]`` supplies it) with doc ≠ probe, × ``fr["dfreq"]``
+    (tok, df), × ``fr["stats"]`` (n, avglen).  Each term's e9 is
+    quantized with its weight inside (:func:`bm25_term_e9_col`) and the
+    per-doc sum runs on exact integers, so join order cannot change a
+    score.  Broadcast hints ride on the frames the caller passes."""
     m = (
         F.broadcast(q)
         .join(fr["tok"], ["tok"])
         .filter(F.col("doc_id") != F.col("pid"))
         .join(fr["dfreq"], ["tok"])
-        .join(
+    )
+    if "dl" in fr:
+        m = m.join(
             fr["dl"].withColumnRenamed("doc_id", "_d"),
             F.col("_d") == F.col("doc_id"),
         )
-        .crossJoin(F.broadcast(fr["stats"]))
-        .select(
-            "pid",
-            F.col("doc_id").alias("id"),
-            bm25_term_e9_col().alias("e9"),
-        )
+    m = m.crossJoin(F.broadcast(fr["stats"])).select(
+        "pid", F.col("doc_id").alias("id"), bm25_term_e9_col().alias("e9")
     )
     return m.groupBy("pid", "id").agg(F.sum("e9").cast("bigint").alias(name))
 
@@ -3293,16 +3315,27 @@ def _bm25_scores(fr: dict, q: DataFrame, name: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
-@register(
-    "bm25_rm3_expansion",
-    oracle=_sql_bm25_core() + """,
-fb AS (
-  SELECT pid, id FROM (
-    SELECT pid, id,
-           ROW_NUMBER() OVER (PARTITION BY pid ORDER BY bm25_e9 DESC, id) AS rn
-    FROM sc
-  ) WHERE rn <= 3
-),
+def _rm3_query(qt: DataFrame, fb: DataFrame, ftok: DataFrame) -> DataFrame:
+    """The RM3 expanded query (pid, tok, w): each probe's terms ``qt``
+    (pid, tok) at weight 1.0, plus at 0.5 the 5 heaviest other terms
+    (summed tf, then tok) of its feedback docs ``fb`` (pid, doc_id).
+    ``ftok`` holds the feedback docs' (doc_id, tok, tf) rows: the in-plan
+    ``tok`` frame or a forward-index read."""
+    w = Window.partitionBy("pid").orderBy(F.desc("tfsum"), F.asc("tok"))
+    expt = (
+        ftok.join(fb, "doc_id")
+        .groupBy("pid", "tok")
+        .agg(F.sum("tf").alias("tfsum"))
+        .join(qt, ["pid", "tok"], "left_anti")
+        .withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= 5)
+        .select("pid", "tok")
+    )
+    return qt.withColumn("w", F.lit(1.0)).unionByName(expt.withColumn("w", F.lit(0.5)))
+
+
+_BM25_RM3_SQL = _sql_bm25_core() + f""",
+fb AS ({_sql_probe_topk("sc", 3, "pid", "bm25_e9", "id", cols="pid, id")}),
 expt AS (
   SELECT pid, tok FROM (
     SELECT fb.pid, t.tok,
@@ -3321,23 +3354,13 @@ q2 AS (
   UNION ALL
   SELECT pid, tok, CAST(0.5 AS DOUBLE) FROM expt
 ),
-m2 AS (
-  SELECT q.pid, t.doc_id AS id, """ + _sql_bm25_term_e9("q.w") + """ AS e9
-  FROM q2 q
-  JOIN tok t ON t.tok = q.tok AND t.doc_id <> q.pid
-  JOIN dfreq f ON f.tok = q.tok
-  JOIN dl l ON l.doc_id = t.doc_id
-  CROSS JOIN stats s
-),
-sc2 AS (SELECT pid, id, CAST(SUM(e9) AS BIGINT) AS rm3_e9 FROM m2 GROUP BY pid, id)
-SELECT pid AS probe_id, id AS doc_id, rn, rm3_e9
-FROM (
-  SELECT pid, id, rm3_e9,
-         ROW_NUMBER() OVER (PARTITION BY pid ORDER BY rm3_e9 DESC, id) AS rn
-  FROM sc2
-)
-WHERE rn <= 5
-""",
+sc2 AS ({_sql_bm25_scores("q2", "rm3_e9", w="q.w")})
+{_sql_probe_topk("sc2", 5, "pid", "rm3_e9", "id", cols="pid AS probe_id, id AS doc_id, rn, rm3_e9")}"""
+
+
+@register(
+    "bm25_rm3_expansion",
+    oracle=_BM25_RM3_SQL,
     tags=("text", "llm", "topk", "rag"),
     doc=(
         "L34b: RM3 pseudo-relevance feedback — the base BM25 top-3 "
@@ -3351,36 +3374,10 @@ def bm25_rm3_expansion(spark: SparkSession, sf_dir: str) -> DataFrame:
     fr = _bm25_frames(spark, sf_dir)
     qt = fr["qt"]
     base = _bm25_scores(fr, qt.withColumn("w", F.lit(1.0)), "bm25_e9")
-    w_fb = Window.partitionBy("pid").orderBy(F.desc("bm25_e9"), F.asc("id"))
-    fb = (
-        base.withColumn("rn", F.row_number().over(w_fb))
-        .filter(F.col("rn") <= 3)
-        .select("pid", "id")
+    fb = _probe_topk(base, 3, "pid", "bm25_e9", "id").select(
+        "pid", F.col("id").alias("doc_id")
     )
-    w_t = Window.partitionBy("pid").orderBy(F.desc("wsum"), F.asc("tok"))
-    expt = (
-        fb.join(
-            fr["tok"].withColumnRenamed("doc_id", "id"), "id"
-        )
-        .groupBy("pid", "tok")
-        .agg(F.sum("tf").alias("wsum"))
-        .join(qt, ["pid", "tok"], "left_anti")
-        .withColumn("rn", F.row_number().over(w_t))
-        .filter(F.col("rn") <= 5)
-        .select("pid", "tok")
-    )
-    q2 = qt.withColumn("w", F.lit(1.0)).unionByName(
-        expt.withColumn("w", F.lit(0.5))
-    )
-    sc2 = _bm25_scores(fr, q2, "rm3_e9")
-    w = Window.partitionBy("pid").orderBy(F.desc("rm3_e9"), F.asc("id"))
-    return (
-        sc2.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 5)
-        .select(
-            F.col("pid").alias("probe_id"),
-            F.col("id").alias("doc_id"),
-            "rn",
-            "rm3_e9",
-        )
+    sc2 = _bm25_scores(fr, _rm3_query(qt, fb, fr["tok"]), "rm3_e9")
+    return _probe_topk(sc2, 5, "pid", "rm3_e9", "id").select(
+        F.col("pid").alias("probe_id"), F.col("id").alias("doc_id"), "rn", "rm3_e9"
     )

@@ -201,6 +201,19 @@ _FORCE_RECHECK: tuple[str, ...] = (
     # widened _sql_probe_topk (cosine_topk, ann_lsh_topk,
     # ann_lsh_multiprobe_topk, ivf_ann_topk, ivf_kmeans_topk,
     # pq_ann_rerank_topk) are all listed in the round-19 cohort above.
+    # round 23: the BM25 chain (corpus statistics, score join, RM3
+    # expansion, per-probe rank) is written once per engine in
+    # operators/textops.py, and each served query's oracle is its batch
+    # query's string.  (retrieval_index_delete_audit,
+    # retrieval_lifecycle_audit and stream_curation_searchable are listed
+    # above.)
+    "bm25_topk",
+    "bm25_rm3_expansion",
+    "bm25_topk_served",
+    "bm25_rm3_expansion_served",
+    "bm25_longdoc_two_stage_served",
+    "bm25_two_stage_retention_check",
+    "bm25_serve_dispatch",
 )
 
 # (The round-3/4 _CHECK_FIRST backlog queue is gone: every registered query

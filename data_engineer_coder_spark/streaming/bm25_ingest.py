@@ -39,7 +39,19 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..io.tables import table
-from ..operators._helpers import md5_bucket16, sql_md5_bucket16
+from ..operators._helpers import md5_bucket16, sql_materialize, sql_md5_bucket16
+from ..operators.similarity import _probe_topk, _retention, _sql_probe_topk, _sql_retention
+from ..operators.textops import (
+    _BM25_RM3_SQL,
+    _BM25_TOPK_SQL,
+    _bm25_frames,
+    _bm25_scores,
+    _rm3_query,
+    _sql_bm25_core,
+    _sql_bm25_scores,
+    _sql_bm25_term_e9,
+    bm25_term_e9_col,
+)
 from ..registry import register
 
 # The ORACLE-REPLAYABLE layout: every driver fixture (sf ≤ 0.1) resolves
@@ -428,6 +440,16 @@ def _ledger_snapshot(
     return n, lens / n, txids
 
 
+def _ledger_frame(spark: SparkSession, roots: dict) -> tuple[DataFrame, set[str]]:
+    """The ledger snapshot as the one-row (n, avglen) frame the served
+    score join crosses with, plus the ledger's txids.  Python long/long
+    division and Spark's double division of the same ints are the same
+    IEEE double."""
+    n_docs, avglen, led_txids = _ledger_snapshot(spark, roots)
+    led = spark.createDataFrame([(int(n_docs), float(avglen))], "n long, avglen double")
+    return led, led_txids
+
+
 def read_pruned_postings(
     spark: SparkSession, postings_root: str, toks: list[str],
     version: int | None = None,
@@ -465,12 +487,11 @@ def _served_scores(
     those buckets, N/avglen summed from the ledger.  The postings read
     is PINNED to the newest version consistent with the ledger's txids
     (``_ledger_snapshot``) so a crash between the gate's postings and
-    ledger commits can never serve a torn snapshot.  Same op-sequence
-    as the in-plan ``_bm25_scores`` (``bm25_term_e9_col``)."""
+    ledger commits can never serve a torn snapshot.  Scored by the
+    in-plan score join, ``textops._bm25_scores``."""
     from ..io.acid_table import latest_consistent_version
-    from ..operators.textops import bm25_term_e9_col
 
-    n_docs, avglen, led_txids = _ledger_snapshot(spark, roots)
+    led, led_txids = _ledger_frame(spark, roots)
     pin = latest_consistent_version(roots["postings"], led_txids)
     # One driver round-trip for the query's term set (a serving query is
     # tens of terms, KBs of strings) — it feeds BOTH the pruned read's
@@ -488,21 +509,9 @@ def _served_scores(
         F.col("len").cast("long").alias("len"),
     ).localCheckpoint(eager=False)
     dfreq = post_q.groupBy("tok").agg(F.count("*").alias("df"))
-    # N/avglen from the ledger snapshot collected above (tiny — one row
-    # per epoch); Python long/long division and Spark's double division
-    # of the same ints are the same IEEE double.
-    led = spark.createDataFrame(
-        [(int(n_docs), float(avglen))], "n long, avglen double"
+    return _bm25_scores(
+        {"tok": post_q, "dfreq": F.broadcast(dfreq), "stats": led}, q, name
     )
-    m = (
-        F.broadcast(q)
-        .join(post_q, ["tok"])
-        .filter(F.col("doc_id") != F.col("pid"))
-        .join(F.broadcast(dfreq), ["tok"])
-        .crossJoin(F.broadcast(led))
-        .select("pid", F.col("doc_id").alias("id"), bm25_term_e9_col().alias("e9"))
-    )
-    return m.groupBy("pid", "id").agg(F.sum("e9").cast("bigint").alias(name))
 
 
 def _audit_bucket_pruning(spark: SparkSession, roots: dict, qt: DataFrame) -> None:
@@ -553,37 +562,9 @@ def _assert_bit_parity(
         )
 
 
-def _topk(sc: DataFrame, name: str, k: int = 5) -> DataFrame:
-    w = Window.partitionBy("pid").orderBy(F.desc(name), F.asc("id"))
-    return (
-        sc.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select(
-            F.col("pid").alias("probe_id"),
-            F.col("id").alias("doc_id"),
-            "rn",
-            name,
-        )
-    )
-
-
-def _bm25_served_oracle() -> str:
-    from ..operators.textops import _sql_bm25_core
-
-    return _sql_bm25_core() + """
-SELECT pid AS probe_id, id AS doc_id, rn, bm25_e9
-FROM (
-  SELECT pid, id, bm25_e9,
-         ROW_NUMBER() OVER (PARTITION BY pid ORDER BY bm25_e9 DESC, id) AS rn
-  FROM sc
-)
-WHERE rn <= 5
-"""
-
-
 @register(
     "bm25_topk_served",
-    oracle=_bm25_served_oracle(),
+    oracle=_BM25_TOPK_SQL,
     tags=("text", "llm", "topk", "rag", "acid"),
     doc=(
         "L34 SERVED: BM25 top-5 per probe read from the STANDING "
@@ -599,8 +580,6 @@ def bm25_topk_served(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from ..operators.textops import _bm25_frames, _bm25_scores
-
     tmp = tempfile.mkdtemp(prefix="bm25serve_")
     try:
         roots = _build_standing_index(spark, sf_dir, tmp)
@@ -615,63 +594,17 @@ def bm25_topk_served(spark: SparkSession, sf_dir: str) -> DataFrame:
             _bm25_scores(fr, fr["qt"].withColumn("w", F.lit(1.0)), "bm25_e9"),
             "bm25_e9",
         )
-        out = _topk(sc, "bm25_e9").localCheckpoint()
+        out = _probe_topk(sc, 5, "pid", "bm25_e9", "id").select(
+            F.col("pid").alias("probe_id"), F.col("id").alias("doc_id"), "rn", "bm25_e9"
+        ).localCheckpoint()
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
     return out
 
 
-def _rm3_served_oracle() -> str:
-    from ..operators.textops import _sql_bm25_core, _sql_bm25_term_e9
-
-    return _sql_bm25_core() + """,
-fb AS (
-  SELECT pid, id FROM (
-    SELECT pid, id,
-           ROW_NUMBER() OVER (PARTITION BY pid ORDER BY bm25_e9 DESC, id) AS rn
-    FROM sc
-  ) WHERE rn <= 3
-),
-expt AS (
-  SELECT pid, tok FROM (
-    SELECT fb.pid, t.tok,
-           ROW_NUMBER() OVER (
-             PARTITION BY fb.pid ORDER BY SUM(t.tf) DESC, t.tok
-           ) AS rn
-    FROM fb
-    JOIN tok t ON t.doc_id = fb.id
-    LEFT JOIN qt q ON q.pid = fb.pid AND q.tok = t.tok
-    WHERE q.tok IS NULL
-    GROUP BY fb.pid, t.tok
-  ) WHERE rn <= 5
-),
-q2 AS (
-  SELECT pid, tok, CAST(1.0 AS DOUBLE) AS w FROM qt
-  UNION ALL
-  SELECT pid, tok, CAST(0.5 AS DOUBLE) FROM expt
-),
-m2 AS (
-  SELECT q.pid, t.doc_id AS id, """ + _sql_bm25_term_e9("q.w") + """ AS e9
-  FROM q2 q
-  JOIN tok t ON t.tok = q.tok AND t.doc_id <> q.pid
-  JOIN dfreq f ON f.tok = q.tok
-  JOIN dl l ON l.doc_id = t.doc_id
-  CROSS JOIN stats s
-),
-sc2 AS (SELECT pid, id, CAST(SUM(e9) AS BIGINT) AS rm3_e9 FROM m2 GROUP BY pid, id)
-SELECT pid AS probe_id, id AS doc_id, rn, rm3_e9
-FROM (
-  SELECT pid, id, rm3_e9,
-         ROW_NUMBER() OVER (PARTITION BY pid ORDER BY rm3_e9 DESC, id) AS rn
-  FROM sc2
-)
-WHERE rn <= 5
-"""
-
-
 @register(
     "bm25_rm3_expansion_served",
-    oracle=_rm3_served_oracle(),
+    oracle=_BM25_RM3_SQL,
     tags=("text", "llm", "topk", "rag", "acid"),
     doc=(
         "L34b SERVED: RM3 expansion from the standing artifacts — the "
@@ -686,8 +619,7 @@ def bm25_rm3_expansion_served(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from ..io.acid_table import read_table
-    from ..operators.textops import _bm25_frames, _bm25_scores
+    from ..io.acid_table import latest_consistent_version, read_table
 
     tmp = tempfile.mkdtemp(prefix="rm3serve_")
     try:
@@ -697,17 +629,13 @@ def bm25_rm3_expansion_served(spark: SparkSession, sf_dir: str) -> DataFrame:
         base = _served_scores(
             spark, roots, qt.withColumn("w", F.lit(1.0)), "bm25_e9"
         ).localCheckpoint()
-        w_fb = Window.partitionBy("pid").orderBy(F.desc("bm25_e9"), F.asc("id"))
         fb = (
-            base.withColumn("rn", F.row_number().over(w_fb))
-            .filter(F.col("rn") <= 3)
+            _probe_topk(base, 3, "pid", "bm25_e9", "id")
             .select("pid", F.col("id").alias("doc_id"))
             .localCheckpoint()
         )
         # FORWARD-INDEX read: the ≤ 30 feedback docs' buckets only,
         # pinned to the ledger-consistent version like the postings read.
-        from ..io.acid_table import latest_consistent_version
-
         _, _, led_txids = _ledger_snapshot(spark, roots)
         fb_buckets = {
             str(r["b"])
@@ -727,19 +655,7 @@ def bm25_rm3_expansion_served(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("tok").cast("string").alias("tok"),
             F.col("tf").cast("long").alias("tf"),
         )
-        w_ex = Window.partitionBy("pid").orderBy(F.desc("tfsum"), F.asc("tok"))
-        expt = (
-            fwd.join(F.broadcast(fb), "doc_id")
-            .join(qt, ["pid", "tok"], "left_anti")
-            .groupBy("pid", "tok")
-            .agg(F.sum("tf").alias("tfsum"))
-            .withColumn("rn", F.row_number().over(w_ex))
-            .filter(F.col("rn") <= 5)
-            .select("pid", "tok")
-        )
-        q2 = qt.withColumn("w", F.lit(1.0)).unionByName(
-            expt.withColumn("w", F.lit(0.5))
-        ).localCheckpoint()
+        q2 = _rm3_query(qt, fb, fwd).localCheckpoint()
         sc2 = _served_scores(spark, roots, q2, "rm3_e9").localCheckpoint()
         # bit-parity vs the in-plan chain for BOTH scoring passes: the
         # base query against the in-plan base scores, and the expanded
@@ -754,7 +670,9 @@ def bm25_rm3_expansion_served(spark: SparkSession, sf_dir: str) -> DataFrame:
             "bm25_e9",
         )
         _assert_bit_parity(sc2, _bm25_scores(fr, q2, "rm3_e9"), "rm3_e9")
-        out = _topk(sc2, "rm3_e9").localCheckpoint()
+        out = _probe_topk(sc2, 5, "pid", "rm3_e9", "id").select(
+            F.col("pid").alias("probe_id"), F.col("id").alias("doc_id"), "rn", "rm3_e9"
+        ).localCheckpoint()
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
     return out
@@ -1058,11 +976,10 @@ _TS_K = 5
 def _two_stage_ctes() -> str:
     """Oracle CTE chain for the two-stage serve over the in-scope BM25
     core CTEs (tok/dfreq/dl/stats/qt): term selection → partial scores
-    → candidate cut → exact re-rank → ``ts_top``."""
-    from ..operators.textops import _sql_bm25_term_e9
-
+    → candidate cut → exact re-rank → ``ts_top``.  The re-rank joins
+    the candidate pool on (doc, tok), so it keeps its own term join."""
     pool = _TS_OVERFETCH * _TS_K
-    return f"""qsel AS (
+    return sql_materialize(f"""qsel AS (
   SELECT pid, tok FROM (
     SELECT q.pid, q.tok,
            ROW_NUMBER() OVER (
@@ -1071,21 +988,9 @@ def _two_stage_ctes() -> str:
     FROM qt q JOIN dfreq f ON f.tok = q.tok
   ) WHERE trn <= {_TS_TERMS}
 ),
-pm AS (
-  SELECT q.pid, t.doc_id AS id, {_sql_bm25_term_e9()} AS e9
-  FROM qsel q
-  JOIN tok t ON t.tok = q.tok AND t.doc_id <> q.pid
-  JOIN dfreq f ON f.tok = q.tok
-  JOIN dl l ON l.doc_id = t.doc_id
-  CROSS JOIN stats s
-),
-psc AS (SELECT pid, id, CAST(SUM(e9) AS BIGINT) AS p9 FROM pm GROUP BY pid, id),
-tcand AS MATERIALIZED (
-  SELECT pid, id FROM (
-    SELECT pid, id,
-           ROW_NUMBER() OVER (PARTITION BY pid ORDER BY p9 DESC, id) AS crn
-    FROM psc
-  ) WHERE crn <= {pool}
+psc AS ({_sql_bm25_scores("qsel", "p9")}),
+tcand AS (
+  {_sql_probe_topk("psc", pool, "pid", "p9", "id", "crn", "pid, id")}
 ),
 tm2 AS (
   SELECT q.pid, t.doc_id AS id, {_sql_bm25_term_e9()} AS e9
@@ -1098,12 +1003,8 @@ tm2 AS (
 ),
 tsc AS (SELECT pid, id, CAST(SUM(e9) AS BIGINT) AS bm25_e9 FROM tm2 GROUP BY pid, id),
 ts_top AS (
-  SELECT pid, id, rn, bm25_e9 FROM (
-    SELECT pid, id, bm25_e9,
-           ROW_NUMBER() OVER (PARTITION BY pid ORDER BY bm25_e9 DESC, id) AS rn
-    FROM tsc
-  ) WHERE rn <= {_TS_K}
-)"""
+  {_sql_probe_topk("tsc", _TS_K, "pid", "bm25_e9", "id", cols="pid, id, rn, bm25_e9")}
+)""", ("tcand",))
 
 
 def _query_dfreq(
@@ -1147,12 +1048,8 @@ def _two_stage_served(
     per-probe top-k (pid, id, rn, bm25_e9).  Every read is pinned to
     the ledger-consistent snapshot."""
     from ..io.acid_table import latest_consistent_version, read_table
-    from ..operators.textops import bm25_term_e9_col
 
-    n_docs, avglen, led_txids = _ledger_snapshot(spark, roots)
-    led = spark.createDataFrame(
-        [(int(n_docs), float(avglen))], "n long, avglen double"
-    )
+    led, led_txids = _ledger_frame(spark, roots)
     # stage 0: df for ALL query terms from the standing vocab table
     toks = sorted(r["tok"] for r in qt.select("tok").distinct().collect())
     dfreq = _query_dfreq(spark, roots, toks, led_txids)
@@ -1175,24 +1072,19 @@ def _two_stage_served(
         F.col("tf").cast("long").alias("tf"),
         F.col("len").cast("long").alias("len"),
     )
-    pm = (
-        F.broadcast(qsel.withColumn("w", F.lit(1.0)))
-        .join(idx, "tok")
-        .filter(F.col("doc_id") != F.col("pid"))
-        .join(F.broadcast(dfreq), "tok")
-        .crossJoin(F.broadcast(led))
-        .select("pid", F.col("doc_id").alias("id"), bm25_term_e9_col().alias("e9"))
-        .groupBy("pid", "id")
-        .agg(F.sum("e9").cast("bigint").alias("p9"))
+    pm = _bm25_scores(
+        {"tok": idx, "dfreq": F.broadcast(dfreq), "stats": led},
+        qsel.withColumn("w", F.lit(1.0)),
+        "p9",
     )
-    w_c = Window.partitionBy("pid").orderBy(F.desc("p9"), F.asc("id"))
     cand = (
-        pm.withColumn("crn", F.row_number().over(w_c))
-        .filter(F.col("crn") <= overfetch * _TS_K)
+        _probe_topk(pm, overfetch * _TS_K, "pid", "p9", "id", "crn")
         .select("pid", "id")
         .localCheckpoint()
     )
-    # stage 2: exact re-rank off the FORWARD index (len = Σtf per doc)
+    # stage 2: exact re-rank off the FORWARD index (len = Σtf per doc);
+    # it joins the candidate pool on (doc, tok), not the score join's
+    # postings on tok, so it keeps its own term join
     cand_buckets = {
         str(r["b"])
         for r in cand.select(
@@ -1225,17 +1117,12 @@ def _two_stage_served(
         .groupBy("pid", "id")
         .agg(F.sum("e9").cast("bigint").alias("bm25_e9"))
     )
-    return _topk(m2, "bm25_e9", k=_TS_K).select(
-        F.col("probe_id").alias("pid"),
-        F.col("doc_id").alias("id"),
-        "rn",
-        "bm25_e9",
+    return _probe_topk(m2, _TS_K, "pid", "bm25_e9", "id").select(
+        "pid", "id", "rn", "bm25_e9"
     )
 
 
 def _two_stage_oracle() -> str:
-    from ..operators.textops import _sql_bm25_core
-
     return f"""{_sql_bm25_core()},
 {_two_stage_ctes()}
 SELECT pid AS probe_id, id AS doc_id, rn, bm25_e9 FROM ts_top
@@ -1282,27 +1169,12 @@ def bm25_longdoc_two_stage_served(spark: SparkSession, sf_dir: str) -> DataFrame
 
 
 def _two_stage_retention_oracle() -> str:
-    from ..operators.textops import _sql_bm25_core
-
     return f"""{_sql_bm25_core()},
 {_two_stage_ctes()},
 extop AS (
-  SELECT pid, id FROM (
-    SELECT pid, id,
-           ROW_NUMBER() OVER (PARTITION BY pid ORDER BY bm25_e9 DESC, id) AS rn
-    FROM sc
-  ) WHERE rn <= {_TS_K}
-),
-hits AS (
-  SELECT s.pid, s.id,
-         CASE WHEN t.id IS NULL THEN 0 ELSE 1 END AS hit
-  FROM ts_top s LEFT JOIN extop t ON t.pid = s.pid AND t.id = s.id
+  {_sql_probe_topk("sc", _TS_K, "pid", "bm25_e9", "id", cols="pid, id")}
 )
-SELECT CAST(SUM(hit) AS BIGINT) AS n_hits,
-       COUNT(*) AS n_slots,
-       CAST((10000 * CAST(SUM(hit) AS BIGINT)) // COUNT(*) AS BIGINT) AS recall_e4
-FROM hits
-"""
+{_sql_retention("ts_top", "extop")}"""
 
 
 @register(
@@ -1321,34 +1193,16 @@ def bm25_two_stage_retention_check(spark: SparkSession, sf_dir: str) -> DataFram
     import shutil
     import tempfile
 
-    from ..operators.textops import _bm25_frames, _bm25_scores
-
     tmp = tempfile.mkdtemp(prefix="bm25tsr_")
     try:
         roots = _build_standing_index(spark, sf_dir, tmp)
         qt = _probe_qt(spark, sf_dir).localCheckpoint()
-        served = _two_stage_served(spark, roots, qt).select("pid", "id")
         fr = _bm25_frames(spark, sf_dir)
-        exact = _topk(
+        exact = _probe_topk(
             _bm25_scores(fr, fr["qt"].withColumn("w", F.lit(1.0)), "bm25_e9"),
-            "bm25_e9", k=_TS_K,
-        ).select(
-            F.col("probe_id").alias("pid"), F.col("doc_id").alias("tid")
+            _TS_K, "pid", "bm25_e9", "id",
         )
-        hits = served.join(
-            exact,
-            (exact["pid"] == served["pid"]) & (exact["tid"] == served["id"]),
-            "left",
-        ).select(
-            F.when(F.col("tid").isNull(), F.lit(0)).otherwise(F.lit(1)).alias("hit")
-        )
-        out = hits.agg(
-            F.sum("hit").cast("bigint").alias("n_hits"),
-            F.count("*").alias("n_slots"),
-            F.expr("CAST(10000 * sum(hit) AS BIGINT) div count(*)").alias(
-                "recall_e4"
-            ),
-        ).localCheckpoint()
+        out = _retention(_two_stage_served(spark, roots, qt), exact).localCheckpoint()
         rec = out.collect()[0]
         if int(rec["recall_e4"]) < 9000:
             raise RuntimeError(
@@ -1410,11 +1264,9 @@ def _dispatched_serve(
             "bm25_e9",
         )
         parts.append(
-            _topk(sc, "bm25_e9", k=_TS_K).select(
-                F.col("probe_id").alias("pid"),
-                F.col("doc_id").alias("id"),
-                "rn", "bm25_e9",
-            ).withColumn("leg", F.lit("exact"))
+            _probe_topk(sc, _TS_K, "pid", "bm25_e9", "id").withColumn(
+                "leg", F.lit("exact")
+            )
         )
     if ts_pids:
         parts.append(
@@ -1429,8 +1281,6 @@ def _dispatched_serve(
 
 
 def _dispatch_oracle() -> str:
-    from ..operators.textops import _sql_bm25_core
-
     return f"""{_sql_bm25_core()},
 {_two_stage_ctes()},
 qload AS (
@@ -1440,11 +1290,7 @@ qload AS (
   GROUP BY q.pid
 ),
 extop AS (
-  SELECT pid, id, rn, bm25_e9 FROM (
-    SELECT pid, id, bm25_e9,
-           ROW_NUMBER() OVER (PARTITION BY pid ORDER BY bm25_e9 DESC, id) AS rn
-    FROM sc
-  ) WHERE rn <= {_TS_K}
+  {_sql_probe_topk("sc", _TS_K, "pid", "bm25_e9", "id", cols="pid, id, rn, bm25_e9")}
 ),
 dials AS (SELECT * FROM (VALUES (0), ({_DISPATCH_CUTOFF})) AS d(dial)),
 pick AS (

@@ -1527,13 +1527,10 @@ def bm25_index_batch_frames(
     writing to a STANDING table must pass the table's persisted counts
     (``bm25_table_layout``), never the module defaults.
     """
-    d = df.select("doc_id", F.split("text", " ").alias("ws"))
-    dl = d.select("doc_id", F.size("ws").alias("len"))
-    tok = (
-        d.select("doc_id", F.explode("ws").alias("tok"))
-        .groupBy("doc_id", "tok")
-        .agg(F.count("*").alias("tf"))
-    )
+    from ..operators.textops import _bm25_corpus
+
+    fr = _bm25_corpus(df)
+    tok, dl = fr["tok"], fr["dl"]
     postings = tok.join(dl, "doc_id").withColumn(
         "tok_bucket", F.pmod(md5_bucket16("tok"), F.lit(int(tok_buckets)))
     )

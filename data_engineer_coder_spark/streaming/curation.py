@@ -291,8 +291,8 @@ def stream_curation_searchable(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..io.acid_table import current_manifest, read_table, replace_partitions
     from ..operators._helpers import md5_bucket16
     from ..operators.similarity import _dot, _ivf_cents, _qvec
-    from ..operators.textops import _bm25_scores
-    from .bm25_ingest import _keyword_probe, _served_scores
+    from ..operators.textops import _bm25_corpus, _bm25_scores
+    from .bm25_ingest import _assert_bit_parity, _keyword_probe, _served_scores
     from .core import write_stream_curation_gate
     from .windows import _eval_index_split, _ordered_epoch_stream, _run_gate
 
@@ -374,38 +374,10 @@ def stream_curation_searchable(spark: SparkSession, sf_dir: str) -> DataFrame:
         served = _served_scores(
             spark, sroots, qk.withColumn("w", F.lit(1.0)), "bm25_e9"
         ).localCheckpoint()
-        d2 = acc_docs.select("doc_id", F.split("text", " ").alias("ws"))
-        dl2 = d2.select("doc_id", F.size("ws").alias("len"))
-        tok2 = (
-            d2.select("doc_id", F.explode("ws").alias("tok"))
-            .groupBy("doc_id", "tok")
-            .agg(F.count("*").alias("tf"))
+        want = _bm25_scores(
+            _bm25_corpus(acc_docs), qk.withColumn("w", F.lit(1.0)), "bm25_e9"
         )
-        fr2 = {
-            "dl": dl2,
-            "tok": tok2,
-            "dfreq": tok2.groupBy("tok").agg(F.count("*").alias("df")),
-            "stats": dl2.agg(
-                F.count("*").alias("n"),
-                (F.sum("len").cast("double") / F.count("*").cast("double")).alias(
-                    "avglen"
-                ),
-            ),
-        }
-        want = _bm25_scores(fr2, qk.withColumn("w", F.lit(1.0)), "bm25_e9")
-        bad = (
-            served.withColumnRenamed("bm25_e9", "a")
-            .join(want.withColumnRenamed("bm25_e9", "b"), ["pid", "id"], "full")
-            .filter(
-                F.col("a").isNull() | F.col("b").isNull() | (F.col("a") != F.col("b"))
-            )
-            .count()
-        )
-        if bad:
-            raise RuntimeError(
-                f"gate-built BM25 index diverged from the accepted-corpus "
-                f"recompute on {bad} scores"
-            )
+        _assert_bit_parity(served, want, "bm25_e9")
 
         # ---- a full stream replay is a no-op on EVERY standing table
         vers = {
@@ -540,62 +512,40 @@ def _lifecycle_oracle() -> str:
         _sql_ivf_params,
         _sql_probe_cells,
         _sql_served_nprobe,
+        _sql_probe_topk,
         _sql_two_level,
     )
-    from ..operators.textops import _sql_bm25_term_e9
+    from ..operators.textops import _sql_bm25_corpus, _sql_bm25_scores
 
     del_pred = f"doc_id % {_LC_DEL_MOD} = {_LC_DEL_REM}"
     qcos = _sql_cos("p.pqv", "a.qv", "p.pnrm", "a.nrm")
 
-    return f"""{_curation_ctes(idx2_where=f"WHERE NOT ({del_pred})")},
-corp AS MATERIALIZED (
+    sql = f"""{_curation_ctes(idx2_where=f"WHERE NOT ({del_pred})")},
+corp AS (
   SELECT doc_id FROM idx2 UNION SELECT doc_id FROM a2
 ),
-cd AS MATERIALIZED (
+cd AS (
   SELECT t.doc_id, t.ws FROM tr t JOIN corp c ON c.doc_id = t.doc_id
 ),
-cdl AS (SELECT doc_id, LEN(ws) AS len FROM cd),
-ctok AS MATERIALIZED (
-  SELECT doc_id, tok, COUNT(*) AS tf
-  FROM (SELECT doc_id, unnest(ws) AS tok FROM cd)
-  GROUP BY doc_id, tok
-),
-cdf AS (SELECT tok, COUNT(*) AS df FROM ctok GROUP BY tok),
-cstats AS (
-  SELECT COUNT(*) AS n,
-         CAST(SUM(len) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE) AS avglen
-  FROM cdl
-),
-qk AS MATERIALIZED (
+{_sql_bm25_corpus("cd", "_c")},
+qk AS (
   SELECT CAST(0 AS BIGINT) AS pid, tok FROM (
     SELECT DISTINCT unnest(string_split(text, ' ')) AS tok
     FROM documents WHERE doc_id < 5
   ) ORDER BY tok LIMIT 3
 ),
-bm AS (
-  SELECT q.pid, t.doc_id AS id, {_sql_bm25_term_e9()} AS e9
-  FROM qk q
-  JOIN ctok t ON t.tok = q.tok AND t.doc_id <> q.pid
-  JOIN cdf f ON f.tok = q.tok
-  JOIN cdl l ON l.doc_id = t.doc_id
-  CROSS JOIN cstats s
-),
-bsc AS (SELECT pid, id, CAST(SUM(e9) AS BIGINT) AS e9 FROM bm GROUP BY pid, id),
+bsc AS ({_sql_bm25_scores("qk", "e9", "_c")}),
 bmtop AS (
-  SELECT pid, id, rn, e9 FROM (
-    SELECT pid, id, e9,
-           ROW_NUMBER() OVER (PARTITION BY pid ORDER BY e9 DESC, id) AS rn
-    FROM bsc
-  ) WHERE rn <= 5
+  {_sql_probe_topk("bsc", 5, "pid", "e9", "id", cols="pid, id, rn, e9")}
 ),
-n2 AS MATERIALIZED (
+n2 AS (
   SELECT vec_id, qv, {_SQL_NORM.format(a='qv')} AS nrm
   FROM (
     SELECT e.vec_id, {_SQL_QVEC.format(e='e.embedding')} AS qv
     FROM embeddings e JOIN tr t ON t.doc_id = e.vec_id
   )
 ),
-nb AS MATERIALIZED (SELECT * FROM n2 WHERE vec_id % 10 = 0),
+nb AS (SELECT * FROM n2 WHERE vec_id % 10 = 0),
 {_sql_ivf_params('nb')},
 {_sql_ivf_cents('nb')},
 av AS (SELECT n2.* FROM n2 JOIN corp c ON c.doc_id = n2.vec_id),
@@ -622,6 +572,7 @@ SELECT 'bm25', pid, CAST(rn AS BIGINT), '', CAST(id AS BIGINT), e9 FROM bmtop
 UNION ALL
 SELECT 'ann', pid, CAST(rn AS BIGINT), '', CAST(vec_id AS BIGINT), e9 FROM anntop
 """
+    return sql_materialize(sql, ("corp", "cd", "tok_c", "qk", "n2", "nb"))
 
 
 @register(
@@ -667,6 +618,7 @@ def retrieval_lifecycle_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.similarity import (
         _dot,
         _ivf_cents,
+        _probe_topk,
         _qvec,
         _two_level_assign,
         served_nprobe,
@@ -674,8 +626,6 @@ def retrieval_lifecycle_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .bm25_ingest import _keyword_probe, _served_scores
     from .core import write_stream_curation_gate
     from .windows import _eval_index_split, _run_gate
-
-    from pyspark.sql import Window
 
     docs = table(spark, sf_dir, "documents").select("doc_id", "text")
     emb = (
@@ -877,12 +827,7 @@ def retrieval_lifecycle_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).localCheckpoint()
         if bsc.filter(F.col("id").isin(del_ids)).count():
             raise RuntimeError("a deleted doc is still serveable from BM25")
-        w_b = Window.partitionBy("pid").orderBy(F.desc("bm25_e9"), F.asc("id"))
-        bmtop = (
-            bsc.withColumn("rn", F.row_number().over(w_b))
-            .filter(F.col("rn") <= 5)
-            .select("pid", "rn", F.col("id"), F.col("bm25_e9"))
-        )
+        bmtop = _probe_topk(bsc, 5, "pid", "bm25_e9", "id")
         probes = nvt.filter(F.col("vec_id") < 10).select(
             F.col("vec_id").alias("pid"),
             F.col("qv").alias("pqv"),

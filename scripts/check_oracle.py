@@ -12,11 +12,12 @@ Usage: python scripts/check_oracle.py [sf_dir] [name ...]
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 import traceback
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from data_engineer_coder_spark import registry  # noqa: E402
 from data_engineer_coder_spark.session import get_spark  # noqa: E402

@@ -41,13 +41,13 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from data_engineer_coder_spark.io.acid_table import files_selected  # noqa: E402
 from data_engineer_coder_spark.io.tables import table  # noqa: E402
+from data_engineer_coder_spark.operators.similarity import _probe_topk  # noqa: E402
 from data_engineer_coder_spark.session import get_spark  # noqa: E402
 from data_engineer_coder_spark.streaming.bm25_ingest import (  # noqa: E402
     _build_standing_index,
     _probe_qt,
     _served_scores,
     _term_range_filter,
-    _topk,
 )
 
 
@@ -69,7 +69,7 @@ def _scenario(spark, sf_dir: str, passes: int) -> dict:
             sc = _served_scores(
                 spark, roots, qt.withColumn("w", F.lit(1.0)), "bm25_e9"
             )
-            n_rows = _topk(sc, "bm25_e9").count()
+            n_rows = _probe_topk(sc, 5, "pid", "bm25_e9", "id").count()
             t_serve = min(t_serve, time.time() - t0)
 
         audit = files_selected(roots["postings"], stats_filter=_term_range_filter(toks))

@@ -26,17 +26,17 @@ import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
 from data_engineer_coder_spark.io.tables import table  # noqa: E402
+from data_engineer_coder_spark.operators.similarity import _probe_topk  # noqa: E402
 from data_engineer_coder_spark.session import get_spark  # noqa: E402
 from data_engineer_coder_spark.streaming.bm25_ingest import (  # noqa: E402
     _build_standing_index,
     _probe_qt,
     _served_scores,
-    _topk,
     _two_stage_served,
 )
 
@@ -75,7 +75,7 @@ def _scenario(spark, sf_dir: str, passes: int) -> dict:
             sc = _served_scores(
                 spark, roots, qt.withColumn("w", F.lit(1.0)), "bm25_e9"
             )
-            exact5 = _topk(sc, "bm25_e9").localCheckpoint()
+            exact5 = _probe_topk(sc, 5, "pid", "bm25_e9", "id").localCheckpoint()
             exact5.count()
             t_exact = min(t_exact, time.time() - t0)
 
@@ -88,9 +88,7 @@ def _scenario(spark, sf_dir: str, passes: int) -> dict:
             t_two = min(t_two, time.time() - t0)
 
         hits = two5.select("pid", "id").join(
-            exact5.select(
-                F.col("probe_id").alias("pid"), F.col("doc_id").alias("id")
-            ),
+            exact5.select("pid", "id"),
             ["pid", "id"],
             "left_semi",
         ).count()

@@ -16,7 +16,6 @@ Three ordered micro-batches (maxFilesPerTrigger=1):
 from __future__ import annotations
 
 import os
-import tempfile
 import time
 
 from pyspark.sql import functions as F
@@ -29,8 +28,8 @@ _BATCHES = [
 ]
 
 
-def test_late_event_dropped_after_state_eviction(spark):
-    base = tempfile.mkdtemp(prefix="late_")
+def test_late_event_dropped_after_state_eviction(spark, tmp_path):
+    base = str(tmp_path)
     land = os.path.join(base, "land")
     os.makedirs(land)
     for i, rows in enumerate(_BATCHES):
@@ -58,7 +57,7 @@ def test_late_event_dropped_after_state_eviction(spark):
     def sink(df, eid):
         epochs[eid] = [tuple(r) for r in df.collect()]
 
-    ckpt = tempfile.mkdtemp(prefix="ckpt_")
+    ckpt = os.path.join(base, "ckpt")
     q = (
         agg.writeStream.foreachBatch(sink)
         .outputMode("update")

@@ -446,7 +446,6 @@ _part_values = st.sampled_from([
 @given(case=_part_values)
 @_settings
 def test_append_rows_matches_append_partitions(spark, case):
-    import shutil
     import tempfile
 
     from data_engineer_coder_spark.io.acid_table import (
@@ -459,8 +458,7 @@ def test_append_rows_matches_append_partitions(spark, case):
     ptype, keys = case
     ddl = f"k {ptype}, n long"
     rows = [(k, i) for i, k in enumerate(keys)]
-    base = tempfile.mkdtemp(prefix="ledger_prop_")
-    try:
+    with tempfile.TemporaryDirectory(prefix="ledger_prop_") as base:
         local, ref = f"{base}/rows", f"{base}/spark"
         append_rows(spark, rows, ddl, local, ["k"], "t1")
         append_partitions(spark.createDataFrame(rows, ddl), ref, ["k"], "t1")
@@ -474,5 +472,3 @@ def test_append_rows_matches_append_partitions(spark, case):
             )
 
         assert back(local) == back(ref)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)

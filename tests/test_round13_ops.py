@@ -136,9 +136,9 @@ def test_bm25_serving_pins_to_ledger_snapshot(spark, tmp_path):
 
 def test_two_stage_equals_exact_when_terms_cover_vocab(spark, tmp_path):
     from data_engineer_coder_spark.io.acid_table import replace_partitions
+    from data_engineer_coder_spark.operators.similarity import _probe_topk
     from data_engineer_coder_spark.streaming.bm25_ingest import (
         _served_scores,
-        _topk,
         _two_stage_served,
     )
     from data_engineer_coder_spark.streaming.core import bm25_index_batch_frames
@@ -186,10 +186,10 @@ def test_two_stage_equals_exact_when_terms_cover_vocab(spark, tmp_path):
         F.col("doc_id").alias("pid"), F.explode(F.split("text", " ")).alias("tok")
     ).distinct()
     exact = sorted(
-        (int(r["probe_id"]), int(r["doc_id"]), int(r["rn"]), int(r["bm25_e9"]))
-        for r in _topk(
+        (int(r["pid"]), int(r["id"]), int(r["rn"]), int(r["bm25_e9"]))
+        for r in _probe_topk(
             _served_scores(spark, roots, qt.withColumn("w", F.lit(1.0)), "bm25_e9"),
-            "bm25_e9",
+            5, "pid", "bm25_e9", "id",
         ).collect()
     )
     two = sorted(

@@ -72,6 +72,16 @@ _BATCH_JOB_CEILINGS = {
     "hybrid_served_recall_check": 70,
     "retrieval_rank_metrics_served": 61,
     "rag_chunk_pipeline": 88,
+    # the BM25 family, counted before its chain was written once; the
+    # retention check and the delete audit ran 63-64 and 190-191 jobs
+    # across passes, so they carry the higher count
+    "bm25_topk": 12,
+    "bm25_rm3_expansion": 17,
+    "bm25_rm3_expansion_served": 77,
+    "bm25_longdoc_two_stage_served": 50,
+    "bm25_two_stage_retention_check": 64,
+    "bm25_serve_dispatch": 96,
+    "retrieval_index_delete_audit": 191,
 }
 
 

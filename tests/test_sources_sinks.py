@@ -3,7 +3,6 @@
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import functions as F
 
@@ -53,8 +52,8 @@ def test_jdbc_column_types_mapping(spark, sf_dir):
     assert "o_orderdate TIMESTAMP" in ddl
 
 
-def test_partitioned_parquet_roundtrip_prunes(spark, sf_dir):
-    out = os.path.join(tempfile.mkdtemp(prefix="sink_"), "orders")
+def test_partitioned_parquet_roundtrip_prunes(spark, sf_dir, tmp_path):
+    out = str(tmp_path / "orders")
     df = table(spark, sf_dir, "orders").withColumn("yr", F.year("o_orderdate"))
     write_partitioned_parquet(df, out, ["yr"])
     back = spark.read.parquet(out)
@@ -102,23 +101,22 @@ def test_jdbc_options_from_env(tmp_path):
         jdbc_options_from_env({"DB_HOST": "x"})  # missing required vars
 
 
-def test_write_compacted_parquet_bounds_file_count(spark, sf_dir):
+def test_write_compacted_parquet_bounds_file_count(spark, sf_dir, tmp_path):
     """Both knobs: coalesce bounds files from below (no per-task dust),
     maxRecordsPerFile splits oversized tasks from above."""
     import glob
-    import tempfile
 
     from data_engineer_coder_spark.sinks import write_compacted_parquet
 
     li = table(spark, sf_dir, "lineitem").repartition(16)
     n = li.count()
 
-    out = tempfile.mkdtemp(prefix="compact_") + "/t"
+    out = str(tmp_path / "c1" / "t")
     write_compacted_parquet(li, out, max_records_per_file=n, num_partitions=2)
     files = glob.glob(out + "/*.parquet")
     assert len(files) == 2, files
 
-    out2 = tempfile.mkdtemp(prefix="compact_") + "/t"
+    out2 = str(tmp_path / "c2" / "t")
     cap = n // 4 + 1
     write_compacted_parquet(li, out2, max_records_per_file=cap, num_partitions=1)
     files2 = glob.glob(out2 + "/*.parquet")
@@ -164,14 +162,11 @@ def test_custom_source_streams_deterministic_rows(spark):
     assert got == want
 
 
-def test_merge_schema_read_across_evolved_writes(spark, sf_dir):
+def test_merge_schema_read_across_evolved_writes(spark, sf_dir, tmp_path):
     """Schema evolution: a second writer adds a column; mergeSchema reads
     both generations with the union schema and NULLs for the old files —
     the append-only data-lake contract."""
-    import glob
-    import tempfile
-
-    out = tempfile.mkdtemp(prefix="evolve_") + "/t"
+    out = str(tmp_path / "t")
     o = table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
     o.limit(100).write.mode("append").parquet(out)
     o.limit(50).withColumn("o_discounted", F.col("o_totalprice") * 0.9).write.mode(
@@ -184,14 +179,13 @@ def test_merge_schema_read_across_evolved_writes(spark, sf_dir):
     assert merged.filter(F.col("o_discounted").isNull()).count() == 100
 
 
-def test_clustered_write_enables_file_skipping(spark, sf_dir):
+def test_clustered_write_enables_file_skipping(spark, sf_dir, tmp_path):
     """Range-clustered files must hold near-disjoint key ranges: a
     selective range predicate should find matching rows in only a few
     files (row-group stats make the others skippable)."""
     import glob
-    import tempfile
 
-    out = tempfile.mkdtemp(prefix="cluster_") + "/t"
+    out = str(tmp_path / "t")
     o = table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
     from data_engineer_coder_spark.sinks import write_clustered_parquet
 
@@ -216,17 +210,15 @@ def test_clustered_write_enables_file_skipping(spark, sf_dir):
     assert got == o.count()
 
 
-def test_jdbc_roundtrip_via_embedded_derby(spark, sf_dir):
+def test_jdbc_roundtrip_via_embedded_derby(spark, sf_dir, tmp_path):
     """S4 end-to-end: a REAL JDBC write + read-back through the embedded
     Derby engine Spark already ships (the sandbox has no network DB).
     Exercises the same codepath as the reference's postgres load
     (my_data_pipeline.py:91-116): Spark derives DDL from
     createTableColumnTypes, batches inserts, one txn per partition."""
-    import tempfile
-
     from data_engineer_coder_spark.sinks import write_jdbc
 
-    db = tempfile.mkdtemp(prefix="derby_") + "/db"
+    db = str(tmp_path / "db")
     url = f"jdbc:derby:{db};create=true"
     props = {"driver": "org.apache.derby.jdbc.EmbeddedDriver"}
     src = (
@@ -247,7 +239,7 @@ def test_jdbc_roundtrip_via_embedded_derby(spark, sf_dir):
     assert got == want
 
 
-def test_jdbc_partitioned_write_and_read_via_derby(spark, sf_dir):
+def test_jdbc_partitioned_write_and_read_via_derby(spark, sf_dir, tmp_path):
     """S4 at scale (VERDICT r4 item 7): the parallel JDBC paths.
 
     Write side: one transaction PER DATAFRAME PARTITION — a 4-partition
@@ -260,11 +252,9 @@ def test_jdbc_partitioned_write_and_read_via_derby(spark, sf_dir):
     Also pins the createTableColumnTypes DDL mapping (the reference's
     dtype→SQL map, my_data_pipeline.py:101-106, with VARCHAR widened
     50→256) against Derby's own catalog."""
-    import tempfile
-
     from data_engineer_coder_spark.sinks import jdbc_column_types, write_jdbc
 
-    db = tempfile.mkdtemp(prefix="derby_part_") + "/db"
+    db = str(tmp_path / "db")
     url = f"jdbc:derby:{db};create=true"
     props = {"driver": "org.apache.derby.jdbc.EmbeddedDriver"}
     src = table(spark, sf_dir, "customer").select(
@@ -876,7 +866,7 @@ def test_acid_compaction_merges_evolved_schemas(spark, tmp_path):
     assert got["src"].tolist()[1] == "api"
 
 
-def test_zorder_layout_prunes_both_dimensions(spark, sf_dir):
+def test_zorder_layout_prunes_both_dimensions(spark, sf_dir, tmp_path):
     """Z-order vs single-column sort, measured on the actual parquet
     footers: under an x-only sort the per-file y-range spans ~the whole
     domain (zero skip power on y); under Z-order every file covers a
@@ -897,7 +887,7 @@ def test_zorder_layout_prunes_both_dimensions(spark, sf_dir):
         F.col("l_orderkey").alias("x"), F.col("l_partkey").alias("y")
     )
     n_files = 16
-    base = tempfile.mkdtemp(prefix="zorder_")
+    base = str(tmp_path)
     write_clustered_parquet(li, f"{base}/xsort", ["x"], num_files=n_files)
     write_zordered_parquet(li, f"{base}/zord", "x", "y", num_files=n_files)
 

@@ -4,7 +4,6 @@ transformation over readStream (availableNow) must equal the batch run."""
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import functions as F
 
@@ -62,9 +61,8 @@ def test_stateful_counters_match_batch_agg(spark, sf_dir):
     assert got == want
 
 
-def test_foreach_batch_parquet_sink(spark, sf_dir):
-    out = tempfile.mkdtemp(prefix="sink_")
-    target = os.path.join(out, "agg")
+def test_foreach_batch_parquet_sink(spark, sf_dir, tmp_path):
+    target = str(tmp_path / "agg")
 
     def sink(df, epoch_id):
         df.write.mode("overwrite").parquet(target)
@@ -78,14 +76,13 @@ def test_foreach_batch_parquet_sink(spark, sf_dir):
     assert _sorted_rows(written) == _sorted_rows(batch)
 
 
-def test_foreach_batch_merge_upsert_state(spark, sf_dir):
+def test_foreach_batch_merge_upsert_state(spark, sf_dir, tmp_path):
     """Streaming CDC: each micro-batch MERGEs its latest-per-key rows into
     a parquet state table (the foreachBatch upsert-sink pattern).  The
     merge step is associative (max over a totally-ordered struct), so the
     final state must equal the batch latest-per-key regardless of how the
     stream was split into micro-batches."""
-    out = tempfile.mkdtemp(prefix="merge_")
-    target = os.path.join(out, "state")
+    target = str(tmp_path / "state")
 
     latest = F.max(F.struct("ts", "event_id", "value")).alias("latest")
 
@@ -121,15 +118,13 @@ def test_foreach_batch_merge_upsert_state(spark, sf_dir):
     assert _sorted_rows(got) == _sorted_rows(want)
 
 
-def test_checkpoint_resume_processes_new_data_exactly_once(spark, sf_dir):
+def test_checkpoint_resume_processes_new_data_exactly_once(spark, sf_dir, tmp_path):
     """Durability: stop a checkpointed file-stream, add a new file, restart
     with the same checkpoint — the old data must not be re-emitted and the
     new file must be picked up (offset tracking across restarts)."""
-    import shutil
-
-    src = tempfile.mkdtemp(prefix="ckpt_src_")
-    ckpt = tempfile.mkdtemp(prefix="ckpt_loc_")
-    out = tempfile.mkdtemp(prefix="ckpt_out_") + "/data"
+    src = str(tmp_path / "src")
+    ckpt = str(tmp_path / "ckpt")
+    out = str(tmp_path / "out" / "data")
 
     ev = table(spark, sf_dir, "events").select("event_id", "user_id", "value")
     ev.filter(F.col("event_id") < 500).write.parquet(src + "/part1")
@@ -162,7 +157,6 @@ def test_checkpoint_resume_processes_new_data_exactly_once(spark, sf_dir):
     want = ev.filter(F.col("event_id") < 800)
     assert got.count() == want.count()  # no duplicates, nothing missed
     assert _sorted_rows(got) == _sorted_rows(want)
-    shutil.rmtree(src)
 
 
 def test_tws_counters_match_batch_agg(spark, sf_dir):
@@ -205,7 +199,7 @@ def test_stream_documents_directory_layout(spark, sf_dir, tmp_path):
     assert out.collect()[0][0] == docs.count()
 
 
-def test_stream_exactly_once_sink_survives_epoch_replay(spark, sf_dir):
+def test_stream_exactly_once_sink_survives_epoch_replay(spark, sf_dir, tmp_path):
     """T8b: the ACID-table foreachBatch sink must make a replayed epoch a
     no-op (at-least-once foreachBatch + txid idempotence = exactly-once).
     Run the stream, capture an epoch's batch, re-commit it manually (the
@@ -221,7 +215,7 @@ def test_stream_exactly_once_sink_survives_epoch_replay(spark, sf_dir):
         write_stream_exactly_once,
     )
 
-    root = os.path.join(tempfile.mkdtemp(prefix="eos_"), "t")
+    root = str(tmp_path / "t")
     src = stream_documents(spark, sf_dir).select("doc_id", "lang", "n_chars")
     q = write_stream_exactly_once(src, root, ["lang"])
     q.awaitTermination(300)
@@ -322,7 +316,7 @@ def test_stream_append_then_compact_roundtrip(spark, sf_dir, tmp_path):
     assert read_table(spark, root).count() == docs.count() + 7
 
 
-def test_stream_quarantine_splits_and_conserves_rows(spark, sf_dir):
+def test_stream_quarantine_splits_and_conserves_rows(spark, sf_dir, tmp_path):
     """T8c: the streaming DQ gate must conserve rows exactly (good +
     quarantined == source), tag each quarantined row with the rules it
     broke, and stay exactly-once under epoch replay on BOTH tables."""
@@ -334,7 +328,7 @@ def test_stream_quarantine_splits_and_conserves_rows(spark, sf_dir):
         write_stream_with_quarantine,
     )
 
-    base = tempfile.mkdtemp(prefix="quar_")
+    base = str(tmp_path)
     good_root, bad_root = f"{base}/good", f"{base}/bad"
     src = stream_documents(spark, sf_dir).select("doc_id", "lang", "n_chars")
     rules = {

@@ -24,7 +24,6 @@ Pinned facts:
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import Window
 from pyspark.sql import functions as F
@@ -37,9 +36,9 @@ _WINDOW = "6 hours"
 _WATERMARK = "1 hour"
 
 
-def _land_chunks(spark, sf_dir: str) -> tuple[str, int]:
-    """Re-land the events fixture as N time-ordered single-file chunks."""
-    base = tempfile.mkdtemp(prefix="replay_")
+def _land_chunks(spark, sf_dir: str, base: str) -> tuple[str, int]:
+    """Re-land the events fixture under ``base`` as N time-ordered
+    single-file chunks."""
     land = os.path.join(base, "land")
     os.makedirs(land)
     ev = table(spark, sf_dir, "events").select("event_id", "ts", "value")
@@ -58,8 +57,8 @@ def _land_chunks(spark, sf_dir: str) -> tuple[str, int]:
     return land, total
 
 
-def test_watermark_eviction_under_fixture_replay(spark, sf_dir):
-    land, n_events = _land_chunks(spark, sf_dir)
+def test_watermark_eviction_under_fixture_replay(spark, sf_dir, tmp_path):
+    land, n_events = _land_chunks(spark, sf_dir, str(tmp_path))
     schema = spark.read.parquet(land).schema
 
     agg = (
