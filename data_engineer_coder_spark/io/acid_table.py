@@ -35,11 +35,17 @@ rename — no extra jars):
    "task succeeded but the scheduler retried it anyway" rerun that
    duplicates the reference's table becomes a no-op here.
 
-Each manifest also records the write's SCHEMA (json) — later writes
-may add columns (schema evolution; ``read_table`` unions by name with
-nulls for missing columns) — and every version stays on disk, so
-``read_table(..., version=N)`` is a pinned time-travel read and
-``table_history`` exposes the commit log as a DataFrame.
+Each manifest also holds the table's SCHEMA OF RECORD (json): the
+add-column union of every commit's schema up to that version, in
+first-seen order, nullability OR-ed.  Later writes may add columns
+(schema evolution); a write whose column type conflicts with the record
+raises at commit time.  No read infers a schema: ``read_table`` and
+compaction hand the record to ``spark.read.schema`` — files written
+before a column was added read it as null, and no footer is opened to
+plan a scan (the Delta log's schema, for the same reason).  Every
+version stays on disk, so ``read_table(..., version=N)`` is a pinned
+time-travel read under that version's record, and ``table_history``
+exposes the commit log as a DataFrame.
 
 ``read_table`` resolves the requested manifest and reads ONLY the
 referenced directories (manifest-level partition pruning: a
@@ -301,6 +307,88 @@ def _collect_file_stats(stage_abs: str, stage_rel: str,
     return out
 
 
+def _union_type(rec, new, column: str):
+    """``rec`` widened by ``new`` (Spark type json): structs add fields,
+    nested nullability is OR-ed, any other difference is a conflict."""
+    if isinstance(rec, dict) and isinstance(new, dict) and rec["type"] == new["type"]:
+        if rec["type"] == "struct":
+            return {**rec, "fields": _union_fields(rec["fields"], new["fields"], column + ".")}
+        if rec["type"] == "array":
+            return {
+                **rec,
+                "elementType": _union_type(rec["elementType"], new["elementType"], column),
+                "containsNull": rec["containsNull"] or new["containsNull"],
+            }
+        if rec["type"] == "map":
+            return {
+                **rec,
+                "keyType": _union_type(rec["keyType"], new["keyType"], column),
+                "valueType": _union_type(rec["valueType"], new["valueType"], column),
+                "valueContainsNull": rec["valueContainsNull"] or new["valueContainsNull"],
+            }
+    if rec != new:
+        raise ValueError(
+            f"schema conflict on column {column!r}: the table's schema of record "
+            f"has {json.dumps(rec)}, this commit writes {json.dumps(new)}"
+        )
+    return rec
+
+
+def _union_fields(rec: list[dict], new: list[dict], prefix: str = "") -> list[dict]:
+    """Add-column union of two field lists, in first-seen order."""
+    out = list(rec)
+    pos = {f["name"]: i for i, f in enumerate(out)}
+    for f in new:
+        i = pos.get(f["name"])
+        if i is None:
+            pos[f["name"]] = len(out)
+            out.append(f)
+        else:
+            out[i] = {
+                **out[i],
+                "type": _union_type(out[i]["type"], f["type"], prefix + f["name"]),
+                "nullable": out[i]["nullable"] or f["nullable"],
+            }
+    return out
+
+
+# Spark's internal field-metadata keys (catalyst.util.INTERNAL_METADATA_KEYS).
+# A Spark write drops them from the parquet footer, so the record drops
+# them too: a column still marked ``__metadata_col`` would hide the scan's
+# ``_metadata`` column that ``_with_path_partitions`` reads.
+_INTERNAL_METADATA_KEYS = frozenset({
+    "__autoGeneratedAlias", "__metadata_col", "__qualified_access_only",
+    "__file_source_metadata_col", "__file_source_constant_metadata_col",
+    "__file_source_generated_metadata_col", "__preserve_on_delete",
+    "__preserve_on_update", "__preserve_on_reinsert",
+})
+
+
+def _union_schema(record: str | None, commit: str | None) -> str | None:
+    """The schema of record after a commit writing ``commit``: every
+    column either ever had, in first-seen order, nullability OR-ed.  A
+    column whose type differs from the record's raises — the commit
+    fails instead of a later read."""
+    if not commit:
+        return record
+    fields = [
+        {**f, "metadata": {k: v for k, v in f.get("metadata", {}).items()
+                           if k not in _INTERNAL_METADATA_KEYS}}
+        for f in json.loads(commit).get("fields", [])
+    ]
+    if record:
+        fields = _union_fields(json.loads(record).get("fields", []), fields)
+    return json.dumps({"type": "struct", "fields": fields},
+                      separators=(",", ":"), sort_keys=True)
+
+
+def _record_schema(man: dict):
+    """The manifest's schema of record as a ``StructType``."""
+    from pyspark.sql.types import StructType
+
+    return StructType.fromJson(json.loads(man["schema"]))
+
+
 def _merge(prev: dict, delta: dict[str, list[str]], txid: str,
            mode: str, partition_cols: list[str], schema_json: str,
            file_stats: dict[str, list[dict]] | None = None,
@@ -338,7 +426,7 @@ def _merge(prev: dict, delta: dict[str, list[str]], txid: str,
         # row-preserving (compaction), never a txid naming convention.
         "neutral_txids": prev.get("neutral_txids", []) + ([txid] if neutral else []),
         "partition_cols": partition_cols,
-        "schema": schema_json,
+        "schema": _union_schema(prev.get("schema"), schema_json),
         "dir_files": dir_files,
     }
 
@@ -659,9 +747,10 @@ def read_table(
     ``partition_filter`` receives each partition's ``{col: value}``
     dict (hive-encoded strings) and prunes AT THE MANIFEST — directories
     it rejects are never listed, let alone scanned.  Partition columns
-    come back as string columns (cast downstream as needed).  Reads
-    union by name with null fill, so versions written before a column
-    was added surface it as null — add-column schema evolution.
+    come back as string columns (cast downstream as needed).  The scan
+    takes the version's schema of record, so files written before a
+    column was added surface it as null — add-column schema evolution —
+    and no Spark job runs to infer a schema.
 
     ``stats_filter`` is the zone-map hook: it receives a file's
     ``{col: (min, max)}`` footer stats and returns whether the file
@@ -684,7 +773,6 @@ def read_table(
     # hive-encoded path segments (`col=value`) — the same literal
     # strings the manifest keys hold, so semantics are unchanged.
     paths: list[str] = []
-    txids: set[str] = set()
     for _, rels in sorted(_matching(man, partition_filter).items()):
         for rel in rels:
             if stats_filter is not None and rel in dir_files:
@@ -699,17 +787,13 @@ def read_table(
                 paths.extend(kept)
             else:
                 paths.append(os.path.join(root, rel))
-            txids.add(rel.split("/")[1] if "/" in rel else rel)
     if not paths:
         raise ValueError(f"no partitions selected from {root} (v{man['version']})")
-    reader = spark.read
-    if len(txids) > 1:
-        # dirs from >1 commit may carry evolved schemas: merge unions
-        # by name with null fill (same semantics the unionByName chain
-        # had).  Single-commit reads skip the footer-merge pass.
-        reader = reader.option("mergeSchema", "true")
+    # The schema of record at this version: files written before a column
+    # was added read it as null, and no footer is opened to plan the scan.
     return _with_path_partitions(
-        reader.parquet(*paths), man.get("partition_cols", [])
+        spark.read.schema(_record_schema(man)).parquet(*paths),
+        man.get("partition_cols", []),
     )
 
 
@@ -770,12 +854,13 @@ def compact_partitions(
     under ``_staging/<txid>/`` and commit the swap as a new version.
 
     Logically a no-op: the compacted version holds exactly the rows of
-    the current version (schema-evolved dirs union by name with null
-    fill, so the compacted files carry the widest schema).  Physically
-    it collapses one-dir-per-epoch into one dir per partition.  Crash
-    before commit leaves unreferenced files (invisible, vacuumable);
-    ``txid`` replay is an exactly-once no-op; pre-compaction versions
-    remain time-travelable until ``vacuum`` removes their dirs.
+    the current version (every dir is read under the schema of record,
+    so the compacted files carry it, with nulls for columns an older dir
+    lacks).  Physically it collapses one-dir-per-epoch into one dir per
+    partition.  Crash before commit leaves unreferenced files (invisible,
+    vacuumable); ``txid`` replay is an exactly-once no-op;
+    pre-compaction versions remain time-travelable until ``vacuum``
+    removes their dirs.
     """
     prev = current_manifest(root)
     if txid in prev["txids"]:
@@ -808,9 +893,8 @@ def compact_partitions(
     # Spark job PER PARTITION — at the lexical index's 16-bucket layout
     # that is 16 fixed-cost jobs per table per maintenance pass (48 for
     # the 3-table family), and at a corpus-scaled 4096-bucket layout it
-    # would be thousands.  All target dirs are read in one mergeSchema
-    # scan (union-by-name semantics, same as the old per-dir
-    # unionByName chain), partition values are recovered from the hive
+    # would be thousands.  All target dirs are read in one scan under
+    # the schema of record, partition values are recovered from the hive
     # path segments exactly as read_table does, and one
     # range-partitioned write stages every partition's sorted files in
     # a single job.  Partitions whose values need hive escaping (or
@@ -824,10 +908,12 @@ def compact_partitions(
     )
     one_job = plain and (bool(sort_by) or max(n_files.values()) == 1)
 
+    reader = spark.read.schema(_record_schema(prev))
+
     def stage(stage_abs: str) -> str:
         if one_job:
             merged = _with_path_partitions(
-                spark.read.option("mergeSchema", "true").parquet(
+                reader.parquet(
                     *[os.path.join(root, rel) for rels in targets.values() for rel in rels]
                 ),
                 pcols,
@@ -848,12 +934,7 @@ def compact_partitions(
             merged.write.partitionBy(*pcols).mode("overwrite").parquet(stage_abs)
         else:
             for pkey, rels in sorted(targets.items()):
-                merged = None
-                for rel in rels:
-                    pdf = spark.read.parquet(os.path.join(root, rel))
-                    merged = pdf if merged is None else merged.unionByName(
-                        pdf, allowMissingColumns=True
-                    )
+                merged = reader.parquet(*[os.path.join(root, rel) for rel in rels])
                 if sort_by:
                     merged = merged.repartitionByRange(
                         n_files[pkey], *[F.col(c) for c in sort_by]
@@ -863,7 +944,7 @@ def compact_partitions(
                 merged.write.mode("overwrite").parquet(
                     os.path.join(stage_abs, pkey)
                 )
-        return prev.get("schema", "")
+        return prev["schema"]
 
     return _stage_and_commit(root, pcols, txid, "replace", stage,
                              _crash_before_commit, prev=prev,

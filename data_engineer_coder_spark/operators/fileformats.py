@@ -19,6 +19,7 @@ reprs (Java ``Double.toString``).
 from __future__ import annotations
 
 import os
+import shutil
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
@@ -63,16 +64,21 @@ def csv_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("event_id", "user_id", "event_type", "value", ts_str("ts").alias("ts_s"))
     )
     out = tempfile.mkdtemp(prefix="fmt_rt_")
-    csv_dir, json_dir = os.path.join(out, "csv"), os.path.join(out, "json")
-    sample.write.mode("overwrite").option("header", "true").csv(csv_dir)
-    sample.write.mode("overwrite").json(json_dir)
-    csv = spark.read.schema(_RT_SCHEMA).option("header", "true").csv(csv_dir)
-    js = spark.read.schema(_RT_SCHEMA).json(json_dir)
-    return (
-        csv.unionByName(js)
-        .groupBy("event_id", "user_id", "event_type", "value", "ts_s")
-        .agg(F.count("*").alias("n_copies"))
-    )
+    try:
+        csv_dir, json_dir = os.path.join(out, "csv"), os.path.join(out, "json")
+        sample.write.mode("overwrite").option("header", "true").csv(csv_dir)
+        sample.write.mode("overwrite").json(json_dir)
+        csv = spark.read.schema(_RT_SCHEMA).option("header", "true").csv(csv_dir)
+        js = spark.read.schema(_RT_SCHEMA).json(json_dir)
+        # computed before the finally deletes the files it reads
+        return (
+            csv.unionByName(js)
+            .groupBy("event_id", "user_id", "event_type", "value", "ts_s")
+            .agg(F.count("*").alias("n_copies"))
+            .localCheckpoint()
+        )
+    finally:
+        shutil.rmtree(out, ignore_errors=True)
 
 
 # --------------------------------------------------------------------------
@@ -118,18 +124,20 @@ FROM (VALUES
 )
 def csv_malformed_robustness(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = tempfile.mkdtemp(prefix="csv_bad_")
-    path = os.path.join(out, "rows.csv")
-    with open(path, "w") as f:
-        f.write("\n".join(_CSV_LINES) + "\n")
-    df = (
-        spark.read.schema(_CSV_SCHEMA)
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", "_corrupt")
-        .csv(out)
-    )
-    return df.select(
-        "id", "name", "qty", F.col("_corrupt").isNotNull().alias("is_corrupt")
-    )
+    try:
+        with open(os.path.join(out, "rows.csv"), "w") as f:
+            f.write("\n".join(_CSV_LINES) + "\n")
+        df = (
+            spark.read.schema(_CSV_SCHEMA)
+            .option("mode", "PERMISSIVE")
+            .option("columnNameOfCorruptRecord", "_corrupt")
+            .csv(out)
+        )
+        return df.select(
+            "id", "name", "qty", F.col("_corrupt").isNotNull().alias("is_corrupt")
+        ).localCheckpoint()
+    finally:
+        shutil.rmtree(out, ignore_errors=True)
 
 
 # --------------------------------------------------------------------------
@@ -159,8 +167,11 @@ def orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("event_id", "user_id", "event_type", "value", ts_str("ts").alias("ts_s"))
     )
     out = tempfile.mkdtemp(prefix="orc_rt_")
-    sample.write.mode("overwrite").orc(out)
-    return spark.read.schema(_RT_SCHEMA).orc(out)
+    try:
+        sample.write.mode("overwrite").orc(out)
+        return spark.read.schema(_RT_SCHEMA).orc(out).localCheckpoint()
+    finally:
+        shutil.rmtree(out, ignore_errors=True)
 
 
 # --------------------------------------------------------------------------
@@ -194,11 +205,16 @@ def partition_pruned_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("event_id", "user_id", "event_type", "value")
     )
     out = tempfile.mkdtemp(prefix="part_prune_")
-    sample.write.partitionBy("event_type").mode("overwrite").parquet(out)
-    back = spark.read.parquet(out)
-    return back.filter(F.col("event_type").isin("purchase", "signup")).select(
-        "event_id", "user_id", "event_type", F.col("value").cast("double").alias("value")
-    )
+    try:
+        sample.write.partitionBy("event_type").mode("overwrite").parquet(out)
+        # Schema and partitions discovered from the files: the reader's
+        # partition discovery is what this query exercises.
+        back = spark.read.parquet(out)
+        return back.filter(F.col("event_type").isin("purchase", "signup")).select(
+            "event_id", "user_id", "event_type", F.col("value").cast("double").alias("value")
+        ).localCheckpoint()
+    finally:
+        shutil.rmtree(out, ignore_errors=True)
 
 
 # --------------------------------------------------------------------------

@@ -214,6 +214,19 @@ _FORCE_RECHECK: tuple[str, ...] = (
     "bm25_longdoc_two_stage_served",
     "bm25_two_stage_retention_check",
     "bm25_serve_dispatch",
+    # round 24: no scan infers its schema.  ACID reads and compaction take
+    # the manifest's schema of record (the add-column union of every
+    # commit), fixture reads and stream sources reuse the schema inferred
+    # once, the served BM25 builds stage only the tables they read, and
+    # the capped near-dup oracle materializes its exclusion CTEs in exact
+    # mode too.  Every query that reads an ACID table not listed above:
+    "acid_change_data_feed",
+    "acid_table_history",
+    "acid_zone_map_skipping",
+    "cdf_incremental_rollup",
+    "pq_ann_recall_check",
+    "pq_ann_topk",
+    "pq_codebook_drift_audit",
 )
 
 # (The round-3/4 _CHECK_FIRST backlog queue is gone: every registered query

@@ -582,7 +582,7 @@ def bm25_topk_served(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     tmp = tempfile.mkdtemp(prefix="bm25serve_")
     try:
-        roots = _build_standing_index(spark, sf_dir, tmp)
+        roots = _build_standing_index(spark, sf_dir, tmp, tables=("postings", "stats"))
         qt = _probe_qt(spark, sf_dir).localCheckpoint()
         _audit_bucket_pruning(spark, roots, qt)
         sc = _served_scores(
@@ -623,7 +623,9 @@ def bm25_rm3_expansion_served(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     tmp = tempfile.mkdtemp(prefix="rm3serve_")
     try:
-        roots = _build_standing_index(spark, sf_dir, tmp)
+        roots = _build_standing_index(
+            spark, sf_dir, tmp, tables=("postings", "forward", "stats")
+        )
         qt = _probe_qt(spark, sf_dir).localCheckpoint()
         _audit_bucket_pruning(spark, roots, qt)
         base = _served_scores(

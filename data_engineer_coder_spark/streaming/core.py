@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 
 from ..io import acid_table as at
 from ..io import layout
-from ..io.tables import _NANOS_AS_LONG, conf_scope
+from ..io.tables import _NANOS_AS_LONG, conf_scope, fixture_schema
 from ..operators._helpers import md5_bucket16, shuffle_parts
 
 
@@ -60,11 +60,12 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Mirrors ``io.tables.table``'s TIMESTAMP(NANOS) handling: the stream
     reader needs an explicit schema, so we take the raw (nanos-as-long)
-    schema from a static read and convert ts to a real timestamp.
+    schema from the fixture schema cache and convert ts to a real
+    timestamp.
     """
     path = os.path.join(sf_dir, "events.parquet")
+    raw_schema = fixture_schema(spark, path, nanos_as_long=True)
     with conf_scope(spark, _NANOS_AS_LONG, "true"):
-        raw_schema = spark.read.parquet(path).schema
         sdf = _stream_parquet(spark, sf_dir, "events.parquet", raw_schema)
     ts_type = dict((f.name, f.dataType.simpleString()) for f in raw_schema.fields).get("ts")
     if ts_type == "bigint":
@@ -266,8 +267,7 @@ def stream_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     source requires.  The fixture is one parquet file, and the file
     source processes whole files, so an ``availableNow`` run sees the
     table as a single deterministic micro-batch."""
-    path = os.path.join(sf_dir, "documents.parquet")
-    schema = spark.read.parquet(path).schema
+    schema = fixture_schema(spark, os.path.join(sf_dir, "documents.parquet"))
     return _stream_parquet(spark, sf_dir, "documents.parquet", schema)
 
 

@@ -681,7 +681,6 @@ def retrieval_lifecycle_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
                     if f.endswith(".parquet")
                 )
             )
-        schema = spark.read.parquet(os.path.dirname(part_files[0])).schema
 
         def _feed(e: int) -> None:
             dst = os.path.join(src_dir, f"e{e}.parquet")
@@ -690,7 +689,7 @@ def retrieval_lifecycle_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         def _run_stream() -> None:
             sdf = (
-                spark.readStream.schema(schema)
+                spark.readStream.schema(train.schema)
                 .option("maxFilesPerTrigger", "1")
                 .parquet(src_dir)
             )

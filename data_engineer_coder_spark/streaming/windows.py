@@ -386,9 +386,8 @@ def stream_rollup_matview(spark: SparkSession, sf_dir: str) -> DataFrame:
     try:
         src_dir = os.path.join(tmp, "src")
         ev.repartition(3).write.parquet(src_dir)  # 3 files → 3 epochs
-        schema = spark.read.parquet(src_dir).schema
         sdf = (
-            spark.readStream.schema(schema)
+            spark.readStream.schema(ev.schema)
             .option("maxFilesPerTrigger", "1")
             .parquet(src_dir)
         )
@@ -615,9 +614,8 @@ def _ordered_epoch_stream(spark, df, tmp, n_epochs: int = 3, key: str = "doc_id"
             )
             shutil.move(src_file, dst)
         os.utime(dst, (now + 30 * e, now + 30 * e))
-    schema = spark.read.parquet(src_dir).schema
     return (
-        spark.readStream.schema(schema)
+        spark.readStream.schema(df.schema)
         .option("maxFilesPerTrigger", "1")
         .parquet(src_dir)
     )
@@ -804,15 +802,13 @@ nc2 AS (
   SELECT COUNT(DISTINCT hv.h) AS n FROM hv JOIN e2 ON e2.doc_id = hv.doc_id
   WHERE hv.h IN (SELECT h FROM x2)
 )""" + _GATE_LEDGER_SELECT
-    if mode != "exact":
-        # The CMS exclusion subtree is deep; DuckDB inlines single-use
-        # CTEs, and ``sig``/``hvu``/``hv1`` are each referenced several
-        # times downstream — without materialization every reference
-        # re-derives the whole shingle->sketch->exclusion chain and the
-        # oracle goes combinatorial (measured: >550 s vs 0.2 s for the
-        # pieces).  Same fix as the bpe_learn_iterative oracle.
-        sql = sql_materialize(sql, ("hv", "x1", "x2", "sig", "m2"))
-    return sql
+    # The exclusion subtree is deep; DuckDB inlines single-use CTEs, and
+    # ``sig``/``hvu``/``hv1`` are each referenced several times downstream
+    # — without materialization every reference re-derives the whole
+    # shingle->df/sketch->exclusion chain and the oracle goes
+    # combinatorial (measured at sf0.001: cms >550 s, exact 47-72 s, vs
+    # under 1 s materialized).  Same fix as the bpe_learn_iterative oracle.
+    return sql_materialize(sql, ("hv", "x1", "x2", "sig", "m2"))
 
 
 @register(

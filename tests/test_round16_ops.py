@@ -16,6 +16,7 @@ import tempfile
 from pyspark.sql import functions as F
 
 from data_engineer_coder_spark import registry
+from data_engineer_coder_spark.io.tables import TABLES, table
 from data_engineer_coder_spark.io.acid_table import (
     append_partitions,
     compact_partitions,
@@ -24,64 +25,59 @@ from data_engineer_coder_spark.io.acid_table import (
     replace_partitions,
 )
 
-# Spark jobs each drill ran at sf0.001 on local[8] before the gates
-# shared their epoch steps (status-store counts; they repeat exactly
-# run to run).  A refactor that adds a job per epoch fails here without
-# timing anything.
+# Spark jobs each drill ran at sf0.001 on local[8] once no read inferred
+# a schema (status-store counts, every fixture table read once first;
+# they repeat exactly run to run).  A refactor that adds a job per epoch
+# fails here without timing anything.
 _GATE_JOB_CEILINGS = {
-    "stream_decontaminate_ingest": 48,
-    "stream_neardup_ingest": 109,
-    # counted the same way before the gates shared one epoch transaction
-    "stream_bm25_index_ingest": 71,
-    "stream_ann_index_ingest": 64,
-    "stream_curation_ingest": 169,
-    "stream_curation_searchable": 404,
-    "stream_rollup_matview": 23,
+    "stream_decontaminate_ingest": 40,
+    "stream_neardup_ingest": 102,
+    "stream_bm25_index_ingest": 65,
+    "stream_ann_index_ingest": 54,
+    "stream_curation_ingest": 156,
+    "stream_curation_searchable": 370,
+    "stream_rollup_matview": 18,
 }
 
-# Batch ANN, clustering, dedup and text queries at sf0.001, counted the same way.
+# Batch ANN, clustering, dedup, text, ACID, hybrid and BM25 queries at
+# sf0.001, counted the same way.  The retention check ran 55 or 56 jobs
+# from one JVM to the next, and the delete audit ran one job more on some
+# passes before, so each carries the higher count.
 _BATCH_JOB_CEILINGS = {
-    "cosine_topk": 4,
-    "ann_lsh_topk": 7,
-    "ann_lsh_multiprobe_topk": 7,
-    "ivf_ann_topk": 16,
-    "ivf_kmeans_topk": 30,
-    "ann_index_bucket_probe": 30,
-    "mmr_diversified_topk_served": 71,
-    "mutual_knn_clusters": 72,
-    # counted before the word window was written once
-    "ngram_decontaminate": 9,
-    "decontaminate_overlap": 7,
-    "segment_dedup_keep_first": 6,
-    "doc_chunk_windows": 2,
-    "exact_substring_dedup": 7,
-    # the exact-Jaccard clusters and the served BM25 top-k
-    "dedup_clusters": 28,
-    "bm25_topk_served": 44,
-    # the ACID table verbs, counted before they shared one commit path
-    "acid_merge_upsert_audit": 22,
-    "acid_partition_move_audit": 22,
-    "acid_compaction_audit": 27,
-    "bm25_index_compaction_audit": 227,
-    # the hybrid retrieval family, counted before its steps were written once
-    "hybrid_rrf_retrieval": 14,
-    "hybrid_recall_check": 19,
-    "rag_context_pack": 16,
-    "retrieval_rank_metrics": 21,
-    "hybrid_rrf_retrieval_served": 54,
-    "hybrid_served_recall_check": 70,
-    "retrieval_rank_metrics_served": 61,
-    "rag_chunk_pipeline": 88,
-    # the BM25 family, counted before its chain was written once; the
-    # retention check and the delete audit ran 63-64 and 190-191 jobs
-    # across passes, so they carry the higher count
-    "bm25_topk": 12,
-    "bm25_rm3_expansion": 17,
-    "bm25_rm3_expansion_served": 77,
-    "bm25_longdoc_two_stage_served": 50,
-    "bm25_two_stage_retention_check": 64,
-    "bm25_serve_dispatch": 96,
-    "retrieval_index_delete_audit": 191,
+    "cosine_topk": 3,
+    "ann_lsh_topk": 6,
+    "ann_lsh_multiprobe_topk": 6,
+    "ivf_ann_topk": 15,
+    "ivf_kmeans_topk": 29,
+    "ann_index_bucket_probe": 28,
+    "mmr_diversified_topk_served": 69,
+    "mutual_knn_clusters": 71,
+    "ngram_decontaminate": 8,
+    "decontaminate_overlap": 6,
+    "segment_dedup_keep_first": 5,
+    "doc_chunk_windows": 1,
+    "exact_substring_dedup": 6,
+    "dedup_clusters": 26,
+    "bm25_topk_served": 33,
+    "acid_merge_upsert_audit": 18,
+    "acid_partition_move_audit": 17,
+    "acid_compaction_audit": 21,
+    "bm25_index_compaction_audit": 190,
+    "hybrid_rrf_retrieval": 12,
+    "hybrid_recall_check": 17,
+    "rag_context_pack": 13,
+    "retrieval_rank_metrics": 15,
+    "hybrid_rrf_retrieval_served": 49,
+    "hybrid_served_recall_check": 62,
+    "retrieval_rank_metrics_served": 55,
+    "rag_chunk_pipeline": 84,
+    "bm25_topk": 11,
+    "bm25_rm3_expansion": 16,
+    "bm25_rm3_expansion_served": 64,
+    "bm25_longdoc_two_stage_served": 43,
+    "bm25_two_stage_retention_check": 56,
+    "bm25_serve_dispatch": 83,
+    "retrieval_index_delete_audit": 172,
 }
 
 
@@ -199,10 +195,12 @@ def test_decontam_gate_crash_mid_epoch_converges(spark, tmp_path, monkeypatch):
 
 
 def test_gate_drill_job_count_ceiling(spark, sf_dir):
-    """Job counts do not depend on the host: each drill may run at most
-    the jobs it ran before its gate's steps were shared, and each batch
-    query at most the jobs it ran before its probe steps or word windows
-    were."""
+    """Job counts do not depend on the host: each drill and batch query
+    may run at most the jobs it ran once no scan inferred a schema.
+    Every fixture table is read once first, so no count depends on
+    whether an earlier test already inferred that table's schema."""
+    for t in TABLES:
+        table(spark, sf_dir, t)
     sc = spark.sparkContext._jsc.sc()
     store, bus = sc.statusStore(), sc.listenerBus()
 
